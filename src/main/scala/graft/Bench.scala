@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main: times every registered query at the given
   * scale factor and prints ONE JSON line (driver contract).
   *
@@ -49,19 +47,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadAtLaunch = loadAvg1m()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // managed tables (join_smb's bucketed sides) go to tmp, not ./spark-warehouse
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     // JVM/IO warmup outside any per-query timing (shared, not per-query)
@@ -83,7 +69,7 @@ object Bench {
     val repeats = math.max(1, sys.env.get("SPARK_GRAFT_REPEATS").map(_.toInt).getOrElse(3))
     val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     // Each query keeps its FULL repeat vector (empty = failed): the
-    // contract line reports [median, min, max] per headline query so the
+    // BENCH-FULL line reports [median, min, max] per query so the
     // driver artifact carries its own error bars — a driver-box reading
     // whose max/min ratio is 2-3x on identical code proves scheduling
     // weather in the artifact itself, where a bare median left three
@@ -116,16 +102,7 @@ object Bench {
       // query's caches while keeping per-repeat semantics identical to
       // prior rounds (repeats 2+ reuse the canonical-plan cache entry, so
       // medians stay round-over-round comparable).
-      spark.catalog.clearCache()
-      // clearCache() empties only the Dataset CacheManager; the iterative
-      // graph/cc queries' localCheckpoint() blocks are RDD-level persists
-      // it never touches, and they accumulated in the block manager for
-      // the rest of the session (r20: with the betweenness/harmonic
-      // additions the leak grew measurable — the late-alphabet v3 capstone
-      // read 11.3 s in-suite vs 3.9 standalone). Nothing legitimately
-      // persists ACROSS queries, so drop every surviving RDD block too.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Pipeline.releaseCaches(spark)
       name -> (if (times.exists(_ < 0)) Seq.empty[Double] else times)
     }
     // Full per-query detail for humans — prefix-tagged so the driver's
@@ -164,7 +141,7 @@ object Bench {
     // twin instead of a slot: llm_suffix_scrub shares llm_suffix_dedup's
     // slice-gram kernel, graph_cc shares llm_dedup_cc's CC core. Line
     // budget re-checked in BenchFormatSpec: 36 legacy + 6 additions at
-    // worst-case spreads + full wide/failed caps stays under the
+    // worst-case medians + full wide/failed caps stays under the
     // driver's 2000-char tail capture with the sbt epilogue.
     "llm_suffix_dedup", "llm_cdc_chunks", "llm_charngram_langid",
     "llm_winnow", "llm_dedup_threshold_curve", "llm_corpus_pipeline_v3")
@@ -183,10 +160,7 @@ object Bench {
     "[" + num(median(ts)) + "," + num(ts.min) + "," + num(ts.max) + "]"
 
   /** A failed query's entry: same 3-element shape as a healthy spread
-    * (consumers index [0] for the median without type-branching; the
-    * "failed" list is the authoritative failure signal). Compact
-    * integer form keeps the all-failed worst-case line inside the
-    * driver's tail window. */
+    * (consumers index [0] for the median without type-branching). */
   private val failedSpread = "[-1,-1,-1]"
 
   /** All query timings with spreads, one JSON object (informational,
@@ -201,21 +175,17 @@ object Bench {
     * stay well under 2000 chars INCLUDING sbt's trailing "[success]"
     * line, or the driver's tail capture truncates it (see `headline`).
     * "value" totals ALL queries' medians (n = how many); "queries"
-    * lists the headline subset as `[median, min, max]` over that
-    * query's repeats — the error bars that let a reader separate a
-    * real regression (tight spread around a high median) from
-    * scheduler weather (max/min of 2-3x on identical code) without
-    * another round of forensics. Failed queries report the same
-    * 3-element shape filled with -1 (and a "failed" list) rather than
-    * a wall time, so a broken query can't read as fast and consumers
-    * never type-branch on entry shape.
+    * maps the headline subset to scalar medians, the shape a per-query
+    * comparison of two runs reads (the `[median, min, max]` error bars
+    * are in BENCH-FULL). A failed query reads -1 (and is named in
+    * "failed") rather than a wall time, so it can't read as fast.
     *
     * Self-adjudication fields (r17, verdict item 5): "load" = 1-minute
     * load averages [launch, finish] (-1 = unreadable), and "wide" = the
     * registered queries whose max/min repeat ratio exceeded 2.5× — the
     * empirical weather signature (r11–r16: spreads of 2–3× on identical
     * code were always box interference, tight spreads around a high
-    * median were always real) — capped at 6 names so a stormy run can't
+    * median were always real) — capped at 3 names so a stormy run can't
     * push the line past the driver's 2000-char tail capture. A future
     * `join_salted`-style spike now carries its own adjudication: in
     * "wide" + elevated load ⇒ weather; tight spread at quiet load ⇒
@@ -224,7 +194,7 @@ object Bench {
                loadLaunch: Double = -1.0, loadFinish: Double = -1.0): String = {
     val byName = results.toMap
     val qs = headline.flatMap(k => byName.get(k).map(ts =>
-        "\"" + k + "\":" + (if (ts.isEmpty) failedSpread else spread(ts))))
+        "\"" + k + "\":" + (if (ts.isEmpty) "-1" else num(median(ts)))))
       .mkString("{", ",", "}")
     val failedNames = results.collect { case (k, ts) if ts.isEmpty => k }
     // Cap the failed list so a mass failure can't push the line past the
@@ -234,9 +204,8 @@ object Bench {
       .mkString("[", ",", "]")
     val wideNames = results.collect {
       case (k, ts) if ts.nonEmpty && ts.min > 0 && ts.max / ts.min > 2.5 => k }
-    // cap 6 → 3 in r22: the cap exists ONLY to bound the line in stormy
-    // runs, and the 8 headline additions need that budget back — the
-    // full wide list still lands in BENCH-FULL via the spreads
+    // the cap exists ONLY to bound the line in stormy runs — the full
+    // wide list still lands in BENCH-FULL via the spreads
     val wide = (wideNames.take(3).map("\"" + _ + "\"") ++
       (if (wideNames.size > 3) Seq("\"(+" + (wideNames.size - 3) + " more)\"") else Nil))
       .mkString("[", ",", "]")

@@ -30,10 +30,10 @@ import graft.queries.{MmFeat, MmRow, Text}
   * .clearCache()` alone never frees (it empties only the Dataset
   * CacheManager). Nothing unpersists either kind when your terminal
   * action completes. Long-lived sessions invoking these in a loop
-  * should call [[releaseCaches]] between invocations, exactly as
-  * graft's own Bench/Verify drivers do — a bare `clearCache()` is NOT
-  * sufficient for the checkpointing operators and accumulates
-  * block-manager blocks without bound.
+  * should call [[releaseCaches]] between invocations, as graft's own
+  * Bench, Verify and Profile mains do between queries — a bare
+  * `clearCache()` is NOT sufficient for the checkpointing operators
+  * and accumulates block-manager blocks without bound.
   */
 object Pipeline {
 
@@ -43,8 +43,8 @@ object Pipeline {
     * blocks live there, invisible to `clearCache()` — the r20
     * measurement-harness finding, a 3× late-query inflation in-suite).
     * Call between loop iterations in long-lived sessions; see the
-    * cache contract above. Safe by the same argument as Bench/Verify:
-    * no graft operator legitimately persists ACROSS invocations. */
+    * cache contract above. Safe because no graft operator legitimately
+    * persists ACROSS invocations. */
   def releaseCaches(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values

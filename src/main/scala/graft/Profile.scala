@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Stage-level profiling harness for optimization work (guide §1: measure
@@ -19,21 +18,10 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names = sys.env.getOrElse("SPARK_GRAFT_PROFILE",
       args.headOption.getOrElse("")).split(",").filter(_.nonEmpty)
     val repeats = sys.env.get("SPARK_GRAFT_REPEATS").map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     val stages = mutable.ArrayBuffer[StageRec]()
@@ -73,9 +61,7 @@ object Profile {
               f"in=${s.inB / 1e6}%8.1fMB sr=${s.shufR / 1e6}%7.1fMB sw=${s.shufW / 1e6}%7.1fMB")
           }
         }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        Pipeline.releaseCaches(spark)
       }
     }
     spark.stop()

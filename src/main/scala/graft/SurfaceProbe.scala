@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc SQL-surface round-trip probe: for each query name passed as an
   * argument (or every surface entry with none), run the SQL-text entry
   * and the registered builder over the fixture dir and print OK/DIFF —
@@ -10,14 +8,7 @@ import org.apache.spark.sql.SparkSession
 object SurfaceProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.local(8)
     spark.sparkContext.setLogLevel("WARN")
     Tables.registerAll(spark, sfDir)
     graft.queries.SqlSurface.registerCompat(spark)

@@ -1,27 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores ts as TIMESTAMP(NANOS); read as long, converted
-      // to a µs timestamp in Tables.events (matches DuckDB's ns→µs cast).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // write µs (not INT96) so the driver's reader sees the same values
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // managed tables (join_smb's bucketed sides) go to tmp, not ./spark-warehouse
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated subset for local iteration (unset = all;
@@ -34,15 +18,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Release this query's persisted intermediates (the load-bearing
-      // cache barriers in the gram/signature queries are never
-      // unpersisted) so a full-surface dump doesn't accumulate
-      // MEMORY_AND_DISK entries across all ~130 queries. RDD-level
-      // localCheckpoint blocks are NOT in the Dataset CacheManager —
-      // drop them too (the Bench cleanup twin).
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Pipeline.releaseCaches(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -150,8 +150,11 @@ object TextHashOps {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /** Minimal open-addressing long set for the distinct-gram path (values
-    * are gram ids in [0, P), so -1L is a free empty sentinel). */
+  /** Minimal open-addressing long set for the distinct-gram path, in
+    * first-occurrence order (array_distinct's). -1L marks an empty slot:
+    * graft's own gram ids lie in [0, P), but `hash_grams` is a session
+    * function and negative user input yields negative grams, so a -1
+    * gram is tracked by a flag instead of in the table. */
   private def distinctLongs(in: Array[Long], m: Int): Array[Long] = {
     var cap = 8
     while (cap < m * 2) cap <<= 1
@@ -159,20 +162,25 @@ object TextHashOps {
     java.util.Arrays.fill(table, -1L)
     val mask = cap - 1
     val out = new Array[Long](m)
+    var seenMinusOne = false
     var k = 0
     var i = 0
     while (i < m) {
       val v = in(i)
-      var slot = (java.lang.Long.hashCode(v) & Int.MaxValue) & mask
-      var seen = false
-      var probing = true
-      while (probing) {
-        val t = table(slot)
-        if (t == -1L) probing = false
-        else if (t == v) { seen = true; probing = false }
-        else slot = (slot + 1) & mask
+      if (v == -1L) {
+        if (!seenMinusOne) { seenMinusOne = true; out(k) = v; k += 1 }
+      } else {
+        var slot = (java.lang.Long.hashCode(v) & Int.MaxValue) & mask
+        var seen = false
+        var probing = true
+        while (probing) {
+          val t = table(slot)
+          if (t == -1L) probing = false
+          else if (t == v) { seen = true; probing = false }
+          else slot = (slot + 1) & mask
+        }
+        if (!seen) { table(slot) = v; out(k) = v; k += 1 }
       }
-      if (!seen) { table(slot) = v; out(k) = v; k += 1 }
       i += 1
     }
     if (k == m) out else java.util.Arrays.copyOf(out, k)

@@ -17,8 +17,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   * that was truncated mid-line and recorded as "parsed": null. */
 class BenchFormatSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("bench JSON line is parseable, locale-stable, headline-only") {
-    // headline entries carry [median, min, max] over the repeats; the
-    // total sums medians; non-headline queries fold into the total only.
+    // headline entries carry the scalar median of the repeats (the
+    // [median, min, max] spreads are in BENCH-FULL only); the total sums
+    // medians; non-headline queries fold into the total only.
     // "load" = [launch, finish] 1-min load averages; "wide" = queries
     // whose max/min repeat ratio > 2.5 (the weather flag) — both default
     // to the unknown/-1 form when the caller has no readings.
@@ -26,21 +27,25 @@ class BenchFormatSpec extends org.scalatest.funsuite.AnyFunSuite {
       Seq("q1_pricing_summary" -> Seq(1.23456, 1.0, 1.5),
         "not_a_headline" -> Seq(0.0004)), "/data/sf0.1", 0.05, 1.2)
     assert(line ==
-      """{"metric":"total","value":1.235,"unit":"sec","n":2,"queries":{"q1_pricing_summary":[1.235,1.000,1.500]},"failed":[],"wide":[],"load":[0.050,1.200],"sf":"/data/sf0.1"}""")
+      """{"metric":"total","value":1.235,"unit":"sec","n":2,"queries":{"q1_pricing_summary":1.235},"failed":[],"wide":[],"load":[0.050,1.200],"sf":"/data/sf0.1"}""")
     val empty = Bench.jsonLine(Nil, "/x")
     assert(empty == """{"metric":"total","value":0.000,"unit":"sec","n":0,"queries":{},"failed":[],"wide":[],"load":[-1.000,-1.000],"sf":"/x"}""")
     // a failed query (empty repeat vector) is excluded from the total,
-    // keeps the uniform 3-element shape (all -1), and is named in "failed"
+    // reads -1, and is named in "failed"
     val withFail = Bench.jsonLine(
       Seq("ok" -> Seq(2.0), "join_smb" -> Seq.empty), "/x")
     assert(withFail ==
-      """{"metric":"total","value":2.000,"unit":"sec","n":2,"queries":{"join_smb":[-1,-1,-1]},"failed":["join_smb"],"wide":[],"load":[-1.000,-1.000],"sf":"/x"}""")
+      """{"metric":"total","value":2.000,"unit":"sec","n":2,"queries":{"join_smb":-1},"failed":["join_smb"],"wide":[],"load":[-1.000,-1.000],"sf":"/x"}""")
     // the weather flag: a 3.8x max/min spread lands in "wide" (even for a
     // non-headline query — the flag adjudicates the whole registry), a
     // tight spread does not; a -1 failure sentinel never divides by zero
     val withWide = Bench.jsonLine(
       Seq("join_salted" -> Seq(3.05, 1.0, 3.83), "ok" -> Seq(1.0, 0.9, 1.1)), "/x")
     assert(withWide.contains(""""wide":["join_salted"]"""), withWide)
+    // the spreads live on in the BENCH-FULL detail, failures as all -1
+    assert(Bench.fullDetail(Seq("join_salted" -> Seq(3.05, 1.0, 3.83),
+      "join_smb" -> Seq.empty)) ==
+      """{"join_salted":[3.050,1.000,3.830],"join_smb":[-1,-1,-1]}""")
   }
 
   test("contract line from the FULL registry stays under the tail window") {
@@ -52,9 +57,9 @@ class BenchFormatSpec extends org.scalatest.funsuite.AnyFunSuite {
     // strict-JSON check with an independent parser
     val parsed = org.json4s.jackson.JsonMethods.parse(line)
     assert((parsed \ "metric") == org.json4s.JString("total"))
-    // Worst healthy case: every headline query carries a 3-element
-    // spread AND every registered query trips the 2.5x weather flag
-    // (wide list hits its 6-name cap + overflow marker) AND both load
+    // Worst healthy case: every headline query carries a 6-char
+    // median AND every registered query trips the 2.5x weather flag
+    // (wide list hits its 3-name cap + overflow marker) AND both load
     // readings are present — the longest line the contract can emit.
     // Must clear the driver's 2000-char tail capture with sbt's
     // "[success]" epilogue to spare.
@@ -70,23 +75,12 @@ class BenchFormatSpec extends org.scalatest.funsuite.AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      // 12 executor threads so the fan-out suites (QueriesSpec sweep,
-      // SqlSurfaceSpec round-trips, DeterminismSpec phases) overlap
-      // whole 4-partition jobs instead of serializing on 4 threads;
-      // shuffle.partitions stays 4 so per-query plan shapes and the
-      // partition-count determinism guards are unchanged.
-      .master("local[12]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .getOrCreate()
+    // 12 executor threads so the fan-out suites (QueriesSpec sweep,
+    // SqlSurfaceSpec round-trips, DeterminismSpec phases) overlap
+    // whole 4-partition jobs instead of serializing on 4 threads;
+    // shuffle.partitions stays 4 so per-query plan shapes and the
+    // partition-count determinism guards are unchanged.
+    val s = GraftSession.local(12, shufflePartitions = 4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

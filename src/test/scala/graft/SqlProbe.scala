@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe (test scope, not shipped): for every registered query not
   * yet in the SQL surface, try running its DuckDB oracle SQL through
   * spark.sql (with the SqlSurface compat prelude applied) over the
@@ -11,16 +9,7 @@ import org.apache.spark.sql.SparkSession
 object SqlProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .getOrCreate()
+    val spark = GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     Tables.registerAll(spark, sfDir)
     graft.queries.SqlSurface.registerCompat(spark)
@@ -60,7 +49,7 @@ object SqlProbe {
         tr != raw && attempt("DIALECT", tr)
       }
       if (hit) ok ::= name
-      spark.catalog.clearCache()
+      Pipeline.releaseCaches(spark)
     }
     println(s"== portable: ${ok.size}/${names.size}")
     spark.stop()

@@ -59,8 +59,16 @@ class TextHashExpressionsSpec extends SparkSpec {
   }
 
   test("hash_grams == transform(sequence...) gram arithmetic, widths 2/3/4, both distincts") {
+    // negative user input yields negative grams; (0,0,0,-1) is the -1 gram
+    // at width 4 (last coefficient 1), twice in the first row
+    val negative = spark.createDataFrame(Seq(
+      Seq(0L, 0L, 0L, -1L, 0L, 0L, 0L, -1L),
+      Seq.fill(8)(-1L),
+      Seq(-1L, 0L, 0L, 0L, -1L, 0L, 0L, 0L, -1L),
+      Seq(-5L, 3L, -2L, 7L, -5L, 3L, -2L, 7L, -5L, 3L)
+    ).map(Tuple1(_))).toDF("hs")
     val hashed = corpus.select(
-      call_function("word_hashes_text", col("text")).as("hs"))
+      call_function("word_hashes_text", col("text")).as("hs")).union(negative)
     for (width <- Seq(2, 3, 4); dist <- Seq(true, false)) {
       val coefs = Seq(b1, b2, b3, 1L)
       val grams = transform(sequence(lit(0), size(col("hs")) - width),
@@ -174,7 +182,10 @@ class TextHashExpressionsSpec extends SparkSpec {
   }
 
   test("char_len_sum == aggregate(transform(ws, length), 0, +); count_alpha_words == size(filter(rlike))") {
-    val base = corpus.select(split(col("text"), " ").as("ws"))
+    // a NULL array and a NULL word: under Spark 4's ANSI default,
+    // size(NULL) is NULL, as is the kernel's result
+    val base = corpus.select(split(col("text"), " ").as("ws")).union(spark.sql(
+      "SELECT CAST(NULL AS array<string>) AS ws UNION ALL SELECT array('ab', NULL, 'c1')"))
     assertColsEqual(base,
       call_function("char_len_sum", col("ws")),
       aggregate(transform(col("ws"), w => length(w)), lit(0), _ + _))
