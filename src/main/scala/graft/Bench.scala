@@ -47,6 +47,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadAtLaunch = loadAvg1m()
+    // Optional comma-separated subset for local iteration (unset = all);
+    // resolved before the session starts so a typo fails at once.
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -56,8 +59,6 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
     }
 
-    // Optional comma-separated subset for local iteration (unset = all).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // Per-query repeats with median: a single timing per query showed 2-3×
     // run-to-run swings on untouched code (r4→r5), making cross-round
     // deltas unattributable. Each repeat re-builds and re-plans the query
@@ -67,7 +68,6 @@ object Bench {
     // Clamped to >=1: median(Seq()) on a zero/negative misconfig would
     // crash the whole bench instead of flagging the bad env var.
     val repeats = math.max(1, sys.env.get("SPARK_GRAFT_REPEATS").map(_.toInt).getOrElse(3))
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     // Each query keeps its FULL repeat vector (empty = failed): the
     // BENCH-FULL line reports [median, min, max] per query so the
     // driver artifact carries its own error bars — a driver-box reading

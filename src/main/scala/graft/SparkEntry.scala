@@ -1,12 +1,15 @@
 package graft
 
+import graft.queries.{Q, QueryDef}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * `queries` aggregates every module's named query builders; `oracleSql`
-  * carries the DuckDB-runnable ANSI equivalent for each (omitted only for
-  * genuinely non-SQL-expressible ops, which the driver checks rows-only).
+  * Each module declares its queries once (`defs: Seq[QueryDef]`);
+  * `queries`, `oracleSql` and `sqlQueries` are projections of that one
+  * module list. `oracleSql` carries the DuckDB-runnable ANSI equivalent
+  * per query (omitted only for genuinely non-SQL-expressible ops, which
+  * are checked rows-only).
   */
 object SparkEntry {
   /** Flagship query (TPC-H Q1 pricing summary) on sf0.001;
@@ -14,31 +17,31 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  /** Every registered module's `(queries, oracleSql)` pair — the one
-    * module list both registries are projected from. */
-  private[graft] val modules: Seq[(Map[String, graft.queries.Q], Map[String, String])] = Seq(
-    graft.queries.Relational.queries -> graft.queries.Relational.oracleSql,
-    graft.queries.Aggregates.queries -> graft.queries.Aggregates.oracleSql,
-    graft.queries.Windows.queries -> graft.queries.Windows.oracleSql,
-    graft.queries.Scalars.queries -> graft.queries.Scalars.oracleSql,
-    graft.queries.Generators.queries -> graft.queries.Generators.oracleSql,
-    graft.queries.Text.queries -> graft.queries.Text.oracleSql,
-    graft.streaming.Events.queries -> graft.streaming.Events.oracleSql,
-    graft.sources.WritePaths.queries -> graft.sources.WritePaths.oracleSql,
-    graft.queries.Extras.queries -> graft.queries.Extras.oracleSql,
-    graft.queries.Extras2.queries -> graft.queries.Extras2.oracleSql,
-    graft.queries.Maintenance.queries -> graft.queries.Maintenance.oracleSql,
-    graft.queries.Sequences.queries -> graft.queries.Sequences.oracleSql,
-    graft.queries.Graph.queries -> graft.queries.Graph.oracleSql,
-    graft.queries.HiveCompat.queries -> graft.queries.HiveCompat.oracleSql)
+  /** Every registered module's declarations — the one module list the
+    * registry, the oracle map and the SQL surface are projected from. */
+  private[graft] val modules: Seq[Seq[QueryDef]] = Seq(
+    graft.queries.Relational.defs,
+    graft.queries.Aggregates.defs,
+    graft.queries.Windows.defs,
+    graft.queries.Scalars.defs,
+    graft.queries.Generators.defs,
+    graft.queries.Text.defs,
+    graft.streaming.Events.defs,
+    graft.sources.WritePaths.defs,
+    graft.queries.Extras.defs,
+    graft.queries.Extras2.defs,
+    graft.queries.Maintenance.defs,
+    graft.queries.Sequences.defs,
+    graft.queries.Graph.defs,
+    graft.queries.HiveCompat.defs)
 
   // a name in two modules would otherwise silently resolve to the last one
-  private val twice = modules.flatMap(_._1.keys).groupBy(identity).collect {
+  private val twice = modules.flatten.map(_.name).groupBy(identity).collect {
     case (name, defs) if defs.size > 1 => name }
   require(twice.isEmpty, s"query names registered by two modules: ${twice.mkString(", ")}")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  lazy val queries: Map[String, graft.queries.Q] = modules.flatMap(_._1).toMap
+  lazy val queries: Map[String, Q] = modules.flatten.map(d => d.name -> d.build).toMap
 
   /** SQL-string entry surface (SURVEY.md §3.1): runnable Spark SQL text
     * per query name, executed over the fixture views via
@@ -49,5 +52,20 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  lazy val oracleSql: Map[String, String] = modules.flatMap(_._2).toMap
+  lazy val oracleSql: Map[String, String] =
+    modules.flatten.flatMap(d => d.oracle.map(d.name -> _)).toMap
+
+  /** The registry restricted to a `SPARK_GRAFT_ONLY` value — a
+    * comma-separated list of query names; unset = every query. A name
+    * not in the registry fails, so a typo never runs an empty
+    * selection. */
+  def select(only: Option[String]): Map[String, Q] = only match {
+    case None => queries
+    case Some(list) =>
+      val names = list.split(",").toSet
+      val unknown = names -- queries.keySet
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
+      queries.filter { case (n, _) => names(n) }
+  }
 }

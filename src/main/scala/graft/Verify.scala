@@ -5,14 +5,13 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Optional comma-separated subset for local iteration (unset = all,
+    // so a run that sets nothing always dumps the full surface).
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated subset for local iteration (unset = all;
-    // the driver sets nothing, so its runs always dump the full surface).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

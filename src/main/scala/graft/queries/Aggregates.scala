@@ -409,36 +409,13 @@ object Aggregates {
       .orderBy("col_name")
   }
 
-  val queries: Map[String, Q] = Map(
-    "agg_table_profile" -> aggTableProfile,
-    "agg_mode" -> aggMode,
-    "agg_pivot" -> aggPivot,
-    "agg_basic" -> aggBasic,
-    "agg_variance" -> aggVariance,
-    "agg_covar_corr" -> aggCovarCorr,
-    "agg_regr" -> aggRegr,
-    "agg_collect" -> aggCollect,
-    "agg_multi_distinct" -> aggMultiDistinct,
-    "agg_rollup" -> aggRollup,
-    "agg_cube" -> aggCube,
-    "agg_grouping_sets" -> aggGroupingSets,
-    "agg_percentile" -> aggPercentile,
-    "agg_percentile_approx" -> aggPercentileApprox,
-    "agg_histogram" -> aggHistogram,
-    "agg_approx_ndv" -> aggApproxNdv,
-    "agg_sum_empty_zero" -> aggSumEmptyZero,
-    "agg_boolean" -> aggBoolean,
-    "agg_listagg" -> aggListagg,
-    "agg_bits" -> aggBits
-  )
-
-  val oracleSql: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // Table profile: one single-column aggregate per branch, UNION ALL
     // — numeric min/max quantized at 1e-6, timestamps as exact epoch
     // SECONDS (micros would overflow Spark's BIGINT floor in the 1e-6
     // quantizer — see the builder comment), strings as length stats
     // with NULL numerics.
-    "agg_table_profile" -> {
+    QueryDef("agg_table_profile", aggTableProfile, {
       def numSql(c: String, v: String) =
         s"""SELECT '$c' AS col_name, CAST(COUNT(*) AS BIGINT) AS n_rows,
            |  CAST(SUM(CASE WHEN $v IS NULL THEN 1 ELSE 0 END) AS BIGINT)
@@ -470,40 +447,40 @@ object Aggregates {
         strSql("l_returnflag"),
         strSql("l_linestatus"))
         .mkString("SELECT * FROM (\n", "\nUNION ALL\n", "\n) t ORDER BY col_name")
-    },
+    }),
     // The three sketch aggregates are SELF-GATING (see their scaladocs):
     // the oracle recomputes the exact side and pins the in-envelope
     // booleans TRUE, so sketch drift becomes a hash mismatch.
-    "agg_approx_ndv" ->
+    QueryDef("agg_approx_ndv", aggApproxNdv,
       """SELECT l_returnflag,
         |CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS ndv_part,
         |TRUE AS andv_ok
         |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "agg_percentile_approx" ->
+        |ORDER BY l_returnflag""".stripMargin),
+    QueryDef("agg_percentile_approx", aggPercentileApprox,
       s"""SELECT l_returnflag,
          |${oRound("quantile_cont(l_extendedprice, 0.5)", 6)} AS exact_med_price,
          |${oRound("quantile_cont(l_quantity, 0.25)", 6)} AS exact_q25,
          |${oRound("quantile_cont(l_quantity, 0.75)", 6)} AS exact_q75,
          |TRUE AS med_ok, TRUE AS q25_ok, TRUE AS q75_ok
          |FROM lineitem GROUP BY l_returnflag
-         |ORDER BY l_returnflag""".stripMargin,
-    "agg_histogram" ->
+         |ORDER BY l_returnflag""".stripMargin),
+    QueryDef("agg_histogram", aggHistogram,
       """SELECT l_returnflag,
         |CAST(5 AS BIGINT) AS n_bins,
         |CAST(COUNT(*) AS BIGINT) AS total_y,
         |TRUE AS x_sorted, TRUE AS x_in_range
         |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "agg_bits" ->
+        |ORDER BY l_returnflag""".stripMargin),
+    QueryDef("agg_bits", aggBits,
       """SELECT l_returnflag,
         |CAST(bit_and(l_linenumber) AS BIGINT) AS band_v,
         |CAST(bit_or(l_linenumber) AS BIGINT) AS bor_v,
         |CAST(bit_xor(l_linenumber) AS BIGINT) AS bxor_v,
         |CAST(bit_or(l_suppkey % 64) AS BIGINT) AS bor_mask
         |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "agg_listagg" ->
+        |ORDER BY l_returnflag""".stripMargin),
+    QueryDef("agg_listagg", aggListagg,
       """SELECT o_orderpriority,
         |string_agg(DISTINCT o_orderstatus, ',' ORDER BY o_orderstatus)
         |  AS statuses,
@@ -511,28 +488,28 @@ object Aggregates {
         |    ORDER BY o_totalprice DESC, o_orderkey)
         |  FILTER (WHERE o_totalprice > 550000) AS top_keys
         |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "agg_boolean" ->
+        |ORDER BY o_orderpriority""".stripMargin),
+    QueryDef("agg_boolean", aggBoolean,
       """SELECT o_orderpriority,
         |CAST(SUM(CASE WHEN o_totalprice > 200000 THEN 1 ELSE 0 END) AS BIGINT) AS n_big,
         |bool_and(o_totalprice > 1000) AS all_over_1k,
         |bool_or(o_orderstatus = 'F') AS any_f,
         |CAST(SUM(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS n_pending
         |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin),
     // mode() is tie-unspecified in both engines — replay the explicit
     // count + deterministic rank definition instead.
-    "agg_mode" ->
+    QueryDef("agg_mode", aggMode,
       """WITH c AS (SELECT l_returnflag, l_quantity,
         |             CAST(COUNT(*) AS BIGINT) AS cnt
         |           FROM lineitem GROUP BY l_returnflag, l_quantity),
         |r AS (SELECT *, row_number() OVER (PARTITION BY l_returnflag
         |        ORDER BY cnt DESC, l_quantity) AS rn FROM c)
         |SELECT l_returnflag, l_quantity AS mode_qty, cnt AS mode_cnt
-        |FROM r WHERE rn = 1 ORDER BY l_returnflag""".stripMargin,
+        |FROM r WHERE rn = 1 ORDER BY l_returnflag""".stripMargin),
     // PIVOT unrolled as conditional aggregation — the plan Catalyst
     // itself lowers PIVOT to; quantized-long sums per the dsum rule.
-    "agg_pivot" ->
+    QueryDef("agg_pivot", aggPivot,
       """SELECT l_returnflag,
         |  CAST(SUM(CASE WHEN l_linestatus = 'F'
         |    THEN CAST(FLOOR(l_quantity*100+0.5) AS BIGINT) END) AS DOUBLE)/100
@@ -544,8 +521,8 @@ object Aggregates {
         |    AS qty_o,
         |  CAST(COUNT(CASE WHEN l_linestatus = 'O' THEN 1 END) AS BIGINT)
         |    AS cnt_o
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "agg_basic" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    QueryDef("agg_basic", aggBasic,
       s"""SELECT l_returnflag, COUNT(*) AS cnt,
          |COUNT(DISTINCT l_suppkey) AS ndv_supp,
          |CAST(SUM(l_orderkey) AS BIGINT) AS sum_okey,
@@ -553,8 +530,8 @@ object Aggregates {
          |${oAvg("l_quantity")} AS avg_qty,
          |MIN(l_shipdate) AS min_ship, MAX(l_shipdate) AS max_ship,
          |MIN(l_linestatus) AS min_ls, MAX(l_linestatus) AS max_ls
-         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "agg_variance" ->
+         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    QueryDef("agg_variance", aggVariance,
       s"""SELECT l_returnflag,
          |${oRound("var_pop(l_quantity)", 6)} AS varp_qty,
          |${oRound("var_samp(l_quantity)", 6)} AS vars_qty,
@@ -562,15 +539,15 @@ object Aggregates {
          |${oRound("stddev_samp(l_quantity)", 6)} AS stds_qty,
          |${oRound("var_pop(l_discount)", 10)} AS varp_disc,
          |${oRound("stddev_samp(l_discount)", 10)} AS stds_disc
-         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "agg_covar_corr" ->
+         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    QueryDef("agg_covar_corr", aggCovarCorr,
       s"""SELECT l_returnflag,
          |${oRound("covar_pop(l_quantity, l_discount)", 8)} AS covp,
          |${oRound("covar_samp(l_quantity, l_discount)", 8)} AS covs,
          |${oRound("corr(l_quantity, l_discount)", 8)} AS corr_qd,
          |${oRound("corr(l_quantity, l_tax)", 8)} AS corr_qt
-         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "agg_regr" ->
+         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    QueryDef("agg_regr", aggRegr,
       s"""SELECT l_returnflag,
          |regr_count(l_quantity, l_discount) AS r_count,
          |${oRound("regr_slope(l_quantity, l_discount)", 6)} AS r_slope,
@@ -581,51 +558,51 @@ object Aggregates {
          |${oRound("regr_sxy(l_quantity, l_discount)", 4)} AS r_sxy,
          |${oRound("regr_avgx(l_quantity, l_discount)", 8)} AS r_avgx,
          |${oRound("regr_avgy(l_quantity, l_discount)", 6)} AS r_avgy
-         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "agg_collect" ->
+         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    QueryDef("agg_collect", aggCollect,
       """SELECT n_name,
         |string_agg(DISTINCT c_mktsegment, ',' ORDER BY c_mktsegment) AS segments,
         |COUNT(*) AS cust_cnt,
         |string_agg(substr(c_mktsegment, 1, 1), ',' ORDER BY substr(c_mktsegment, 1, 1)) AS seg_initials
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "agg_multi_distinct" ->
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    QueryDef("agg_multi_distinct", aggMultiDistinct,
       """SELECT l_returnflag,
         |COUNT(DISTINCT l_partkey) AS ndv_part,
         |COUNT(DISTINCT l_suppkey) AS ndv_supp,
         |COUNT(DISTINCT l_linenumber) AS ndv_line,
         |CAST(SUM(DISTINCT l_linenumber) AS BIGINT) AS sumd_line
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "agg_rollup" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    QueryDef("agg_rollup", aggRollup,
       s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt,
          |${oSum("l_quantity")} AS sum_qty,
          |CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
          |CAST(GROUPING(l_linestatus) AS INT) AS g_ls,
          |CAST(2*GROUPING(l_returnflag)+GROUPING(l_linestatus) AS BIGINT) AS gid
          |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-         |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-    "agg_cube" ->
+         |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin),
+    QueryDef("agg_cube", aggCube,
       s"""SELECT o_orderstatus, o_orderpriority, COUNT(*) AS cnt,
          |${oSum("o_totalprice", 2)} AS total
          |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-         |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-    "agg_grouping_sets" ->
+         |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin),
+    QueryDef("agg_grouping_sets", aggGroupingSets,
       """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS cnt,
         |CAST(GROUPING(o_orderstatus) AS INT) AS g_st
         |FROM orders
         |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-    "agg_percentile" ->
+        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin),
+    QueryDef("agg_percentile", aggPercentile,
       s"""SELECT l_returnflag,
          |${oRound("quantile_cont(l_quantity, 0.25)", 6)} AS q25,
          |${oRound("quantile_cont(l_quantity, 0.5)", 6)} AS q50,
          |${oRound("quantile_cont(l_quantity, 0.75)", 6)} AS q75,
          |${oRound("median(l_discount)", 8)} AS med_disc
-         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "agg_sum_empty_zero" ->
+         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    QueryDef("agg_sum_empty_zero", aggSumEmptyZero,
       s"""SELECT o_orderpriority,
          |COALESCE(${oSum("CASE WHEN o_totalprice > 450000 THEN o_totalprice END")}, 0.0) AS huge_total,
          |COUNT(CASE WHEN o_totalprice > 450000 THEN 1 END) AS huge_cnt
-         |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
+         |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
   )
 }

@@ -132,24 +132,13 @@ object Extras {
       .orderBy("o_orderstatus")
   }
 
-  val queries: Map[String, Q] = Map(
-    "gen_parse_url_tuple" -> genParseUrlTuple,
-    "fn_ngrams" -> fnNgrams,
-    "fn_context_ngrams" -> fnContextNgrams,
-    "fn_udf_registry" -> fnUdfRegistry,
-    "fn_sql_macro" -> fnSqlMacro,
-    "local_values" -> localValues,
-    "bloom_prefilter" -> bloomPrefilter,
-    "join_salted" -> joinSalted
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "gen_parse_url_tuple" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("gen_parse_url_tuple", genParseUrlTuple,
       """SELECT doc_id, 'example.com' AS host, CAST(doc_id AS VARCHAR) AS query_sid,
         |'u:p' AS userinfo,
         |'/api/' || source || '?sid=' || doc_id || '&x=1' AS file
-        |FROM documents WHERE doc_id < 300 ORDER BY doc_id""".stripMargin,
-    "fn_ngrams" ->
+        |FROM documents WHERE doc_id < 300 ORDER BY doc_id""".stripMargin),
+    QueryDef("fn_ngrams", fnNgrams,
       """WITH grams AS (
         |  SELECT unnest(list_transform(range(len(w)-1), i -> w[i+1] || ' ' || w[i+2])) AS g
         |  FROM (SELECT string_split(text, ' ') AS w FROM documents) t),
@@ -157,8 +146,8 @@ object Extras {
         |ranked AS (SELECT g, freq,
         |  row_number() OVER (ORDER BY freq DESC, g) AS rank FROM counts)
         |SELECT CAST(rank AS INT) AS rank, g AS ngram, freq
-        |FROM ranked WHERE rank <= 20 ORDER BY rank""".stripMargin,
-    "fn_context_ngrams" ->
+        |FROM ranked WHERE rank <= 20 ORDER BY rank""".stripMargin),
+    QueryDef("fn_context_ngrams", fnContextNgrams,
       """WITH pairs AS (
         |  SELECT unnest(list_transform(range(len(w)-1),
         |    i -> CASE WHEN w[i+1] = 'data' THEN w[i+2] END)) AS nw
@@ -167,33 +156,33 @@ object Extras {
         |ranked AS (SELECT nw, freq,
         |  row_number() OVER (ORDER BY freq DESC, nw) AS rank FROM counts)
         |SELECT CAST(rank AS INT) AS rank, nw AS next_word, freq
-        |FROM ranked WHERE rank <= 10 ORDER BY rank""".stripMargin,
-    "fn_udf_registry" ->
+        |FROM ranked WHERE rank <= 10 ORDER BY rank""".stripMargin),
+    QueryDef("fn_udf_registry", fnUdfRegistry,
       """SELECT doc_id,
         |CAST(CASE lang WHEN 'en' THEN 1 WHEN 'de' THEN 2 WHEN 'es' THEN 3
         |  WHEN 'zh' THEN 4 ELSE 0 END AS INT) AS lang_idx,
         |CAST(CASE WHEN len(string_split(text, ' ')) < 3 THEN 0
         |  ELSE len(string_split(text, ' ')) - 2 END AS INT) AS n_shingles
-        |FROM documents WHERE doc_id < 300 ORDER BY doc_id""".stripMargin,
+        |FROM documents WHERE doc_id < 300 ORDER BY doc_id""".stripMargin),
     // macro bodies inlined (the driver runs one statement per oracle;
     // semantically identical to DuckDB's CREATE MACRO twin)
-    "fn_sql_macro" ->
+    QueryDef("fn_sql_macro", fnSqlMacro,
       s"""SELECT l_returnflag || '/' || l_linestatus AS tag, COUNT(*) AS cnt,
          |${oSum("l_extendedprice*(1.0-l_discount)")} AS disc_sum
-         |FROM lineitem GROUP BY 1 ORDER BY tag""".stripMargin,
-    "local_values" ->
+         |FROM lineitem GROUP BY 1 ORDER BY tag""".stripMargin),
+    QueryDef("local_values", localValues,
       """SELECT id, tag, id * 10 AS ten
         |FROM (VALUES (1, 'a'), (2, 'b'), (3, 'c')) t(id, tag)
-        |ORDER BY id""".stripMargin,
-    "bloom_prefilter" ->
+        |ORDER BY id""".stripMargin),
+    QueryDef("bloom_prefilter", bloomPrefilter,
       s"""SELECT l_returnflag, COUNT(*) AS cnt, ${oSum("l_extendedprice")} AS price_sum
          |FROM lineitem WHERE EXISTS (
          |  SELECT 1 FROM supplier WHERE s_suppkey = l_suppkey AND s_acctbal > 0)
-         |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "join_salted" ->
+         |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    QueryDef("join_salted", joinSalted,
       s"""SELECT o_orderstatus, COUNT(*) AS cnt,
          |${oSum("l_extendedprice*(1.0-l_discount)")} AS revenue
          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
+         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
   )
 }

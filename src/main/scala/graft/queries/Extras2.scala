@@ -134,45 +134,33 @@ object Extras2 {
       .orderBy("n_nationkey")
   }
 
-  val queries: Map[String, Q] = Map(
-    "fn_virtual_cols" -> fnVirtualCols,
-    "subq_in" -> subqIn,
-    "subq_exists" -> subqExists,
-    "subq_scalar" -> subqScalar,
-    "subq_not_in" -> subqNotIn,
-    "cte_chain" -> cteChain,
-    "cte_recursive" -> cteRecursive,
-    "fn_string2" -> fnString2,
-    "fn_math2" -> fnMath2
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "fn_virtual_cols" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("fn_virtual_cols", fnVirtualCols,
       """SELECT CAST(n_nationkey AS INT) AS n_nationkey,
         |'nation.parquet' AS fname
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-    "subq_in" ->
+        |FROM nation ORDER BY n_nationkey""".stripMargin),
+    QueryDef("subq_in", subqIn,
       """SELECT c_mktsegment, COUNT(*) AS cnt
         |FROM customer
         |WHERE c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 2)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "subq_exists" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    QueryDef("subq_exists", subqExists,
       """SELECT o_orderpriority, COUNT(*) AS cnt
         |FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey AND l_quantity >= 49)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "subq_scalar" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    QueryDef("subq_scalar", subqScalar,
       s"""SELECT c_mktsegment, COUNT(*) AS rich_cnt
          |FROM customer
          |WHERE c_acctbal > (SELECT ${oAvg("c_acctbal", 4)} FROM customer)
-         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "subq_not_in" ->
+         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    QueryDef("subq_not_in", subqNotIn,
       """SELECT CAST(c_nationkey AS INT) AS nationkey, COUNT(*) AS cnt
         |FROM customer
         |WHERE c_nationkey NOT IN (SELECT s_nationkey FROM supplier WHERE s_acctbal > 9000)
-        |GROUP BY c_nationkey ORDER BY nationkey""".stripMargin,
-    "cte_chain" ->
+        |GROUP BY c_nationkey ORDER BY nationkey""".stripMargin),
+    QueryDef("cte_chain", cteChain,
       s"""WITH big_orders AS (
          |  SELECT o_orderkey, o_custkey, o_totalprice FROM orders
          |  WHERE o_totalprice > 200000),
@@ -181,9 +169,9 @@ object Extras2 {
          |  FROM big_orders GROUP BY o_custkey)
          |SELECT n AS orders_bucket, COUNT(*) AS customers,
          |  ${oSum("total", 2)} AS bucket_total
-         |FROM per_cust GROUP BY n ORDER BY n""".stripMargin,
+         |FROM per_cust GROUP BY n ORDER BY n""".stripMargin),
     // Identical recursion; DuckDB spells integer division `//`.
-    "cte_recursive" ->
+    QueryDef("cte_recursive", cteRecursive,
       """WITH RECURSIVE chain(u, a, depth) AS (
         |  SELECT user_id, user_id, 0
         |  FROM (SELECT DISTINCT user_id FROM events) t
@@ -191,8 +179,8 @@ object Extras2 {
         |  SELECT u, a // 2, depth + 1 FROM chain WHERE a > 0),
         |d AS (SELECT u, MAX(depth) AS depth_to_root FROM chain GROUP BY u)
         |SELECT depth_to_root, COUNT(*) AS n_users
-        |FROM d GROUP BY depth_to_root ORDER BY depth_to_root""".stripMargin,
-    "fn_string2" ->
+        |FROM d GROUP BY depth_to_root ORDER BY depth_to_root""".stripMargin),
+    QueryDef("fn_string2", fnString2,
       """SELECT doc_id,
         |CAST(len(string_split(text, ' ')) AS INT) AS sent_words,
         |string_split(text, ' ')[1] AS first_word,
@@ -202,8 +190,8 @@ object Extras2 {
         |CAST(length(lang) AS INT) AS clen_v,
         |CAST(octet_length(encode(lang)) AS INT) AS olen_v,
         |CAST(8 * octet_length(encode(lang)) AS INT) AS blen_v
-        |FROM documents WHERE doc_id < 300 ORDER BY doc_id""".stripMargin,
-    "fn_math2" ->
+        |FROM documents WHERE doc_id < 300 ORDER BY doc_id""".stripMargin),
+    QueryDef("fn_math2", fnMath2,
       s"""SELECT p_partkey,
          |CAST(p_size // 7 AS BIGINT) AS div_v,
          |${oRound("exp(1.0)", 9)} AS e_v,
@@ -212,6 +200,6 @@ object Extras2 {
          |${oRound("acos((p_size % 10)/10.0)", 9)} AS acos_v,
          |round_even(p_retailprice/7, 2) AS bround_v,
          |round(p_retailprice/7, 2) AS round_v
-         |FROM part WHERE p_partkey < 300 ORDER BY p_partkey""".stripMargin
+         |FROM part WHERE p_partkey < 300 ORDER BY p_partkey""".stripMargin)
   )
 }

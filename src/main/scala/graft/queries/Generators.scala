@@ -112,35 +112,23 @@ object Generators {
         |) t ORDER BY okey, prio""".stripMargin)
   }
 
-  val queries: Map[String, Q] = Map(
-    "gen_explode" -> genExplode,
-    "gen_explode_outer" -> genExplodeOuter,
-    "gen_posexplode" -> genPosexplode,
-    "gen_inline" -> genInline,
-    "gen_stack" -> genStack,
-    "gen_json_tuple" -> genJsonTuple,
-    "gen_lateral_view" -> genLateralView,
-    "gen_transform_script" -> genTransformScript,
-    "gen_transform_delimited" -> genTransformDelimited
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "gen_explode" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("gen_explode", genExplode,
       """SELECT word, COUNT(*) AS cnt FROM (
         |  SELECT unnest(string_split(text, ' ')) AS word FROM documents) t
-        |GROUP BY word ORDER BY cnt DESC, word""".stripMargin,
-    "gen_explode_outer" ->
+        |GROUP BY word ORDER BY cnt DESC, word""".stripMargin),
+    QueryDef("gen_explode_outer", genExplodeOuter,
       """SELECT doc_id, unnest(CASE WHEN len(lw) = 0 THEN [NULL] ELSE lw END) AS long_word
         |FROM (SELECT doc_id, list_filter(string_split(text, ' '), w -> length(w) > 6) AS lw
         |      FROM documents WHERE doc_id < 100) t
-        |ORDER BY doc_id, long_word NULLS FIRST""".stripMargin,
-    "gen_posexplode" ->
+        |ORDER BY doc_id, long_word NULLS FIRST""".stripMargin),
+    QueryDef("gen_posexplode", genPosexplode,
       """SELECT doc_id,
         |CAST(unnest(range(len(string_split(text, ' ')))) AS INT) AS pos,
         |unnest(string_split(text, ' ')) AS word
         |FROM documents WHERE doc_id < 30
-        |ORDER BY doc_id, pos""".stripMargin,
-    "gen_inline" ->
+        |ORDER BY doc_id, pos""".stripMargin),
+    QueryDef("gen_inline", genInline,
       """SELECT o_orderkey, lbl, amt FROM (
         |  SELECT o_orderkey, 'base' AS lbl, o_totalprice AS amt
         |  FROM orders WHERE o_orderkey < 1000
@@ -148,27 +136,27 @@ object Generators {
         |  SELECT o_orderkey, 'halved' AS lbl,
         |    CAST(FLOOR(o_totalprice*50+0.5) AS DOUBLE)/100 AS amt
         |  FROM orders WHERE o_orderkey < 1000) t
-        |ORDER BY o_orderkey, lbl""".stripMargin,
-    "gen_stack" ->
+        |ORDER BY o_orderkey, lbl""".stripMargin),
+    QueryDef("gen_stack", genStack,
       """SELECT o_orderkey, k, v FROM (
         |  SELECT o_orderkey, 'status' AS k, o_orderstatus AS v
         |  FROM orders WHERE o_orderkey < 1000
         |  UNION ALL
         |  SELECT o_orderkey, 'priority' AS k, o_orderpriority AS v
         |  FROM orders WHERE o_orderkey < 1000) t
-        |ORDER BY o_orderkey, k""".stripMargin,
-    "gen_json_tuple" ->
+        |ORDER BY o_orderkey, k""".stripMargin),
+    QueryDef("gen_json_tuple", genJsonTuple,
       """SELECT event_id, json_extract_string(props, '$.k') AS k_val
-        |FROM events WHERE event_id < 500 ORDER BY event_id""".stripMargin,
-    "gen_lateral_view" ->
+        |FROM events WHERE event_id < 500 ORDER BY event_id""".stripMargin),
+    QueryDef("gen_lateral_view", genLateralView,
       """SELECT doc_id, lang, unnest(list_sort(string_split(text, ' '))) AS word
         |FROM documents WHERE doc_id < 20
-        |ORDER BY doc_id, word""".stripMargin,
-    "gen_transform_script" ->
+        |ORDER BY doc_id, word""".stripMargin),
+    QueryDef("gen_transform_script", genTransformScript,
       """SELECT o_orderkey AS okey, o_orderpriority AS prio
-        |FROM orders WHERE o_orderkey < 2000 ORDER BY okey, prio""".stripMargin,
-    "gen_transform_delimited" ->
+        |FROM orders WHERE o_orderkey < 2000 ORDER BY okey, prio""".stripMargin),
+    QueryDef("gen_transform_delimited", genTransformDelimited,
       """SELECT o_orderkey AS okey, o_orderpriority AS prio
-        |FROM orders WHERE o_orderkey < 2000 ORDER BY okey, prio""".stripMargin
+        |FROM orders WHERE o_orderkey < 2000 ORDER BY okey, prio""".stripMargin)
   )
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over the corpus (beyond-inventory; the dedup family's
@@ -34,10 +35,44 @@ object Graph {
   private val Iterations = 5
   private val OutDeg = 3
 
+  /** The md5 out-link derivation over a `(doc_id, n)` frame: each doc
+    * emits OutDeg links `(src, dst)` with `dst = pmod(conv(substr(
+    * md5(src:i), 1, 8), 16, 10), n)` — the ONE copy of the
+    * oracle-mirrored edge formula every graph query builds on. */
+  private def linksOf(base: DataFrame): DataFrame =
+    base
+      .select(col("doc_id").as("src"), col("n"),
+        explode(array((1 to OutDeg).map(lit): _*)).as("i"))
+      .select(col("src"),
+        pmod(conv(substring(md5(concat_ws(":", col("src"), col("i"))), 1, 8),
+          16, 10).cast("long"), col("n").cast("long")).as("dst"))
+
+  /** (ids, n, raw links): the doc ids, the 1-row long node count
+    * (broadcast-joined, never collected) and [[linksOf]] over them. */
+  private def docLinks(s: SparkSession, dir: String)
+  : (DataFrame, DataFrame, DataFrame) = {
+    val ids = Tables.t(s, dir, "documents").select(col("doc_id"))
+    val nDf = ids.agg(count(lit(1)).cast("long").as("n"))
+    (ids, nDf, linksOf(ids.crossJoin(broadcast(nDf))))
+  }
+
+  /** Undirected simple edges `(a, b)` with a < b: orient low→high, drop
+    * self-loops, collapse the multigraph with a two-phase distinct. */
+  private def simpleEdges(raw: DataFrame): DataFrame =
+    raw
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .filter(col("a") < col("b"))
+      .distinct()
+
+  /** Both orientations `(u, v)` of [[simpleEdges]]. */
+  private def symmetric(edges: DataFrame): DataFrame =
+    edges.select(col("a").as("u"), col("b").as("v"))
+      .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
+
   /** Shared md5-derived 3-out-link doc graph: (base = ids × n-as-double,
-    * edges), both persisted — ONE construction for every link-analysis
-    * query (pagerank, hits), so the scale-critical, oracle-mirrored
-    * edge derivation has no copy to drift from.
+    * edges), both persisted — one construction for the link-analysis
+    * queries (pagerank, hits, reciprocity) over [[linksOf]].
     *
     * Persist rationale: both subtrees are pure projection chains (no
     * exchange below → nothing for AQE stage reuse to dedup) consumed
@@ -47,18 +82,12 @@ object Graph {
     * iteration stages would race the cache population. N rides as a
     * broadcast-joined column: no driver-side collect at any corpus
     * size. */
-  private def linkGraph(s: org.apache.spark.sql.SparkSession, dir: String)
-  : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  private def linkGraph(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val ids = Tables.t(s, dir, "documents").select(col("doc_id"))
     val nDf = ids.agg(count(lit(1)).cast("double").as("n"))
     val base = ids.crossJoin(broadcast(nDf))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edges = base
-      .select(col("doc_id").as("src"), col("n"),
-        explode(array((1 to OutDeg).map(lit): _*)).as("i"))
-      .select(col("src"),
-        pmod(conv(substring(md5(concat_ws(":", col("src"), col("i"))), 1, 8),
-          16, 10).cast("long"), col("n").cast("long")).as("dst"))
+    val edges = linksOf(base)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     edges.count()
     (base, edges)
@@ -163,19 +192,8 @@ object Graph {
     * dedup (the 3-out-link multigraph collapses to simple edges first)
     * is a two-phase distinct on the oriented pair. */
   val triangles: Q = (s, dir) => {
-    val ids = Tables.t(s, dir, "documents").select(col("doc_id"))
-    val nDf = ids.agg(count(lit(1)).cast("long").as("n"))
-    val raw = ids.crossJoin(broadcast(nDf))
-      .select(col("doc_id").as("src"), col("n"),
-        explode(array((1 to OutDeg).map(lit): _*)).as("i"))
-      .select(col("src"),
-        pmod(conv(substring(md5(concat_ws(":", col("src"), col("i"))), 1, 8),
-          16, 10).cast("long"), col("n")).as("dst"))
-    val edges = raw
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") < col("b")) // drop self-loops
-      .distinct()
+    val (_, _, raw) = docLinks(s, dir)
+    val edges = simpleEdges(raw)
     val wedges = edges.as("e1")
       .join(edges.select(col("a").as("b"), col("b").as("c")).as("e2"), "b")
       .select(col("a"), col("b"), col("c"))
@@ -200,24 +218,13 @@ object Graph {
     * The union-set size is inclusion-exclusion arithmetic, never an
     * array materialization. Top-k lands in TakeOrderedAndProject. */
   val linkpred: Q = (s, dir) => {
-    val ids = Tables.t(s, dir, "documents").select(col("doc_id"))
-    val nDf = ids.agg(count(lit(1)).cast("long").as("n"))
-    val raw = ids.crossJoin(broadcast(nDf))
-      .select(col("doc_id").as("src"), col("n"),
-        explode(array((1 to OutDeg).map(lit): _*)).as("i"))
-      .select(col("src"),
-        pmod(conv(substring(md5(concat_ws(":", col("src"), col("i"))), 1, 8),
-          16, 10).cast("long"), col("n")).as("dst"))
-    val edges = raw
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") < col("b")).distinct()
+    val (_, _, raw) = docLinks(s, dir)
+    val edges = simpleEdges(raw)
       // consumed 4x (two wedge sides, the anti-join, degrees) — pure
       // projection below, the catalogued multi-consumer barrier
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     edges.count()
-    val und = edges.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
+    val und = symmetric(edges)
     val deg = und.groupBy("u").agg(count(lit(1)).as("d"))
     val common = und.select(col("u"), col("v").as("m"))
       .join(und.select(col("u").as("m"), col("v").as("w")), "m")
@@ -261,20 +268,9 @@ object Graph {
   private def lpParts(s: org.apache.spark.sql.SparkSession, dir: String)
   : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val ids = Tables.t(s, dir, "documents").select(col("doc_id"))
-    val nDf = ids.agg(count(lit(1)).cast("long").as("n"))
-    val raw = ids.crossJoin(broadcast(nDf))
-      .select(col("doc_id").as("src"), col("n"),
-        explode(array((1 to OutDeg).map(lit): _*)).as("i"))
-      .select(col("src"),
-        pmod(conv(substring(md5(concat_ws(":", col("src"), col("i"))), 1, 8),
-          16, 10).cast("long"), col("n")).as("dst"))
-    val edges = raw
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") < col("b")).distinct()
-    val und = edges.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
+    val (ids, _, raw) = docLinks(s, dir)
+    val edges = simpleEdges(raw)
+    val und = symmetric(edges)
       // consumed once per round over a pure projection chain — the
       // catalogued multi-consumer barrier (same rationale as linkpred)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -418,31 +414,16 @@ object Graph {
     * referenced twice per round, u-side and v-side, and nested plans
     * would grow 2^rounds). */
   val kcore: Q = (s, dir) => {
-    val ids = Tables.t(s, dir, "documents").select(col("doc_id"))
-    val nDf = ids.agg(count(lit(1)).cast("long").as("n"))
-    val raw = ids.crossJoin(broadcast(nDf))
-      .select(col("doc_id").as("src"), col("n"),
-        explode(array((1 to OutDeg).map(lit): _*)).as("i"))
-      .select(col("src"),
-        pmod(conv(substring(md5(concat_ws(":", col("src"), col("i"))), 1, 8),
-          16, 10).cast("long"), col("n")).as("dst"))
+    val (_, _, raw) = docLinks(s, dir)
     // und stays the unionAll-of-orientations over the distinct'd edge
     // frame (re-A/B'd r21): a single distinct over the pre-symmetrized
     // pairs would cache 32 instead of 64 partitions (half the tiny
     // tasks per round), but it measured WORSE same-window (kcore
     // 6.44/4.73 vs 4.93/4.34 [med/min]) — the wider distinct costs more
     // than the halved task count saves. Negative result recorded.
-    val edges = raw
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") < col("b")).distinct()
-    val und = edges.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
+    val und = symmetric(simpleEdges(raw))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     und.count()
-    def ckpt(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     var alive = und.select(col("u")).distinct()
     for (_ <- 1 to 4) {
       alive = ckpt(und
@@ -477,25 +458,10 @@ object Graph {
     * hop). Unreached nodes surface as dist = -1 via one final left
     * join, never a driver-side set. */
   val bfs: Q = (s, dir) => {
-    val ids = Tables.t(s, dir, "documents").select(col("doc_id"))
-    val nDf = ids.agg(count(lit(1)).cast("long").as("n"))
-    val raw = ids.crossJoin(broadcast(nDf))
-      .select(col("doc_id").as("src"), col("n"),
-        explode(array((1 to OutDeg).map(lit): _*)).as("i"))
-      .select(col("src"),
-        pmod(conv(substring(md5(concat_ws(":", col("src"), col("i"))), 1, 8),
-          16, 10).cast("long"), col("n")).as("dst"))
-    val edges = raw
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") < col("b")).distinct()
-    val und = edges.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
+    val (ids, _, raw) = docLinks(s, dir)
+    val und = symmetric(simpleEdges(raw))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     und.count()
-    def ckpt(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     var dist = ids.filter(col("doc_id") < 3)
       .select(col("doc_id").as("u"), lit(0).as("d"))
     for (_ <- 1 to 4) {
@@ -531,25 +497,10 @@ object Graph {
     * 1e-9 before the exact sum; closeness divides two exact integers
     * as doubles and rounds at 1e-6. */
   val harmonicCentrality: Q = (s, dir) => {
-    val ids = Tables.t(s, dir, "documents").select(col("doc_id"))
-    val nDf = ids.agg(count(lit(1)).cast("long").as("n"))
-    val raw = ids.crossJoin(broadcast(nDf))
-      .select(col("doc_id").as("src"), col("n"),
-        explode(array((1 to OutDeg).map(lit): _*)).as("i"))
-      .select(col("src"),
-        pmod(conv(substring(md5(concat_ws(":", col("src"), col("i"))), 1, 8),
-          16, 10).cast("long"), col("n")).as("dst"))
-    val edges = raw
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") < col("b")).distinct()
-    val und = edges.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
+    val (ids, _, raw) = docLinks(s, dir)
+    val und = symmetric(simpleEdges(raw))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     und.count()
-    def ckpt(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     val seeds = ids
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
       .limit(5).select(col("doc_id").as("sd"))
@@ -598,25 +549,10 @@ object Graph {
     * ([[dsum]]), so the division chains cannot drift cross-engine;
     * the final per-node score rounds at 1e-6. */
   val betweennessSampled: Q = (s, dir) => {
-    val ids = Tables.t(s, dir, "documents").select(col("doc_id"))
-    val nDf = ids.agg(count(lit(1)).cast("long").as("n"))
-    val raw = ids.crossJoin(broadcast(nDf))
-      .select(col("doc_id").as("src"), col("n"),
-        explode(array((1 to OutDeg).map(lit): _*)).as("i"))
-      .select(col("src"),
-        pmod(conv(substring(md5(concat_ws(":", col("src"), col("i"))), 1, 8),
-          16, 10).cast("long"), col("n")).as("dst"))
-    val edges = raw
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") < col("b")).distinct()
-    val und = edges.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
+    val (ids, _, raw) = docLinks(s, dir)
+    val und = symmetric(simpleEdges(raw))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     und.count()
-    def ckpt(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     val seeds = ids
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
       .limit(5).select(col("doc_id").as("sd"))
@@ -683,14 +619,7 @@ object Graph {
     * twin walks the transitive closure recursively (fixture-scale
     * only). */
   val cc: Q = (s, dir) => {
-    val ids = Tables.t(s, dir, "documents").select(col("doc_id"))
-    val nDf = ids.agg(count(lit(1)).cast("long").as("n"))
-    val raw = ids.crossJoin(broadcast(nDf))
-      .select(col("doc_id").as("src"), col("n"),
-        explode(array((1 to OutDeg).map(lit): _*)).as("i"))
-      .select(col("src"),
-        pmod(conv(substring(md5(concat_ws(":", col("src"), col("i"))), 1, 8),
-          16, 10).cast("long"), col("n")).as("dst"))
+    val (ids, _, raw) = docLinks(s, dir)
     val intra = raw.filter(pmod(col("src"), lit(16)) === pmod(col("dst"), lit(16)))
     graft.queries.Text.connectedComponents(ids, intra)
       .orderBy("doc_id")
@@ -713,18 +642,8 @@ object Graph {
     * have no defined coefficient and are absent — documented, like the
     * oracle. */
   val clusteringCoeff: Q = (s, dir) => {
-    val ids = Tables.t(s, dir, "documents").select(col("doc_id"))
-    val nDf = ids.agg(count(lit(1)).cast("long").as("n"))
-    val raw = ids.crossJoin(broadcast(nDf))
-      .select(col("doc_id").as("src"), col("n"),
-        explode(array((1 to OutDeg).map(lit): _*)).as("i"))
-      .select(col("src"),
-        pmod(conv(substring(md5(concat_ws(":", col("src"), col("i"))), 1, 8),
-          16, 10).cast("long"), col("n")).as("dst"))
-    val edges = raw
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") < col("b")).distinct()
+    val (_, _, raw) = docLinks(s, dir)
+    val edges = simpleEdges(raw)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     edges.count()
     val wedges = edges.as("e1")
@@ -763,14 +682,7 @@ object Graph {
     * histogram frame. Window-free; the corpus-total share divisor
     * rides the broadcast 1-row frame. */
   val degreeDist: Q = (s, dir) => {
-    val ids = Tables.t(s, dir, "documents").select(col("doc_id"))
-    val nDf = ids.agg(count(lit(1)).cast("long").as("n"))
-    val raw = ids.crossJoin(broadcast(nDf))
-      .select(col("doc_id").as("src"), col("n"),
-        explode(array((1 to OutDeg).map(lit): _*)).as("i"))
-      .select(col("src"),
-        pmod(conv(substring(md5(concat_ws(":", col("src"), col("i"))), 1, 8),
-          16, 10).cast("long"), col("n")).as("dst"))
+    val (ids, nDf, raw) = docLinks(s, dir)
     val ind = raw.groupBy(col("dst").as("doc_id"))
       .agg(count(lit(1)).as("d"))
     ids.join(ind, Seq("doc_id"), "left")
@@ -792,14 +704,7 @@ object Graph {
     * SIZE-bounded histogram; share divisor on the broadcast 1-row
     * total. */
   val ccSizes: Q = (s, dir) => {
-    val ids = Tables.t(s, dir, "documents").select(col("doc_id"))
-    val nDf = ids.agg(count(lit(1)).cast("long").as("n"))
-    val raw = ids.crossJoin(broadcast(nDf))
-      .select(col("doc_id").as("src"), col("n"),
-        explode(array((1 to OutDeg).map(lit): _*)).as("i"))
-      .select(col("src"),
-        pmod(conv(substring(md5(concat_ws(":", col("src"), col("i"))), 1, 8),
-          16, 10).cast("long"), col("n")).as("dst"))
+    val (ids, nDf, raw) = docLinks(s, dir)
     val intra = raw.filter(pmod(col("src"), lit(16)) === pmod(col("dst"), lit(16)))
     graft.queries.Text.connectedComponents(ids, intra)
       .groupBy("cluster_id").agg(count(lit(1)).as("size"))
@@ -811,25 +716,6 @@ object Graph {
           / col("n"), 6).as("node_share"))
       .orderBy("size")
   }
-
-  val queries: Map[String, Q] = Map(
-    "graph_cc" -> cc,
-    "graph_cc_sizes" -> ccSizes,
-    "graph_clustering_coeff" -> clusteringCoeff,
-    "graph_degree_dist" -> degreeDist,
-    "graph_hits" -> hits,
-    "graph_pagerank" -> pagerank,
-    "graph_triangles" -> triangles,
-    "graph_linkpred" -> linkpred,
-    "graph_labelprop" -> labelprop,
-    "graph_modularity" -> modularity,
-    "graph_assortativity" -> assortativity,
-    "graph_reciprocity" -> reciprocity,
-    "graph_kcore" -> kcore,
-    "graph_bfs" -> bfs,
-    "graph_harmonic_centrality" -> harmonicCentrality,
-    "graph_betweenness_sampled" -> betweennessSampled
-  )
 
   private def hitsAuthSql(prevH: String, cur: String): String =
     s"""$cur AS MATERIALIZED (
@@ -921,12 +807,12 @@ object Graph {
        |    GROUP BY n.u) t
        |  WHERE c >= 4)""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // Residue-partitioned subgraph (src%16 = dst%16), symmetric closure,
     // recursive min-reachable-id walk (fixture-scale; the Spark side
     // runs the O(log d) star contraction instead — the dedup_cc twin
     // convention). Isolated nodes label themselves via the seed row.
-    "graph_cc" ->
+    QueryDef("graph_cc", cc,
       """WITH RECURSIVE ids AS (SELECT doc_id FROM documents),
         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
         |raw AS (
@@ -942,10 +828,10 @@ object Graph {
         |  UNION
         |  SELECT w.node, e.b FROM walk w JOIN edges e ON w.reach = e.a)
         |SELECT node AS doc_id, MIN(reach) AS cluster_id
-        |FROM walk GROUP BY node ORDER BY doc_id""".stripMargin,
+        |FROM walk GROUP BY node ORDER BY doc_id""".stripMargin),
     // Component-size histogram: the graph_cc closure + two bounded
     // rollups; node share off a scalar-subquery total.
-    "graph_cc_sizes" ->
+    QueryDef("graph_cc_sizes", ccSizes,
       s"""WITH RECURSIVE ids AS (SELECT doc_id FROM documents),
          |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
          |raw AS (
@@ -967,13 +853,13 @@ object Graph {
          |SELECT size, CAST(COUNT(*) AS BIGINT) AS n_components,
          |  CAST(size * COUNT(*) AS BIGINT) AS n_nodes,
          |  ${oRound("CAST(size * COUNT(*) AS DOUBLE) / (SELECT n FROM nn)", 6)} AS node_share
-         |FROM cs GROUP BY size ORDER BY size""".stripMargin,
+         |FROM cs GROUP BY size ORDER BY size""".stripMargin),
     // Same closure; 4 unrolled peel rounds, survivors' within-core
     // degree.
     // Same undirected closure; 4 unrolled BFS relaxations from the
     // {doc_id < 3} seed set, each MATERIALIZED (the PCA CTE-inlining
     // lesson: dK is referenced twice in round K+1); unreached = -1.
-    "graph_bfs" -> {
+    QueryDef("graph_bfs", bfs, {
       val rounds = (1 to 4)
         .map(k => bfsRoundSql(s"d${k - 1}", s"d$k")).mkString(",\n")
       s"""WITH ids AS (SELECT doc_id FROM documents),
@@ -993,11 +879,11 @@ object Graph {
          |SELECT ids.doc_id, CAST(COALESCE(d4.d, -1) AS INT) AS dist
          |FROM ids LEFT JOIN d4 ON d4.u = ids.doc_id
          |ORDER BY ids.doc_id""".stripMargin
-    },
+    }),
     // Brandes sampled betweenness: forward σ levels (exact integer path
     // counts, per-level visited-set exclusion), backward δ sweep with
     // per-term 1e-9 quantization, per-node score = Σ_seeds δ at 1e-6.
-    "graph_betweenness_sampled" -> {
+    QueryDef("graph_betweenness_sampled", betweennessSampled, {
       val fwd = (1 to 4).map(brandesFwdSql).mkString(",\n")
       val bwd = (3 to 0 by -1).map(brandesBwdSql).mkString(",\n")
       s"""WITH ids AS (SELECT doc_id FROM documents),
@@ -1030,11 +916,11 @@ object Graph {
          |FROM allb WHERE u != sd
          |GROUP BY u HAVING ${oSum("dep", 9)} > 0
          |ORDER BY doc_id""".stripMargin
-    },
+    }),
     // Harmonic/closeness from 5 md5-sampled seeds: the bfs chain with a
     // seed-keyed frontier; 1/d terms quantized at 1e-9 before the exact
     // sum, closeness = two exact integers divided as doubles at 1e-6.
-    "graph_harmonic_centrality" -> {
+    QueryDef("graph_harmonic_centrality", harmonicCentrality, {
       val rounds = (1 to 4)
         .map(k => msBfsRoundSql(s"d${k - 1}", s"d$k")).mkString(",\n")
       s"""WITH ids AS (SELECT doc_id FROM documents),
@@ -1059,8 +945,8 @@ object Graph {
          |  ${oRound(oSum("1.0 / d", 9), 6)} AS harmonic,
          |  ${oRound("CAST(COUNT(*) AS DOUBLE) / SUM(d)", 6)} AS closeness
          |FROM d4 WHERE d > 0 GROUP BY sd ORDER BY seed""".stripMargin
-    },
-    "graph_kcore" -> {
+    }),
+    QueryDef("graph_kcore", kcore, {
       val rounds = (1 to 4)
         .map(k => kcoreRoundSql(s"a${k - 1}", s"a$k")).mkString(",\n")
       s"""WITH ids AS (SELECT doc_id FROM documents),
@@ -1080,11 +966,11 @@ object Graph {
          |SELECT n.u AS doc_id, CAST(COUNT(*) AS BIGINT) AS core_deg
          |FROM und n JOIN a4 x ON x.u = n.u JOIN a4 y ON y.u = n.v
          |GROUP BY n.u ORDER BY doc_id""".stripMargin
-    },
+    }),
     // Same simple undirected closure; 3 unrolled synchronous rounds,
     // (count desc, label asc) argmax per node, isolated nodes rejoin
     // with their own label at the end.
-    "graph_labelprop" -> {
+    QueryDef("graph_labelprop", labelprop, {
       val rounds = (1 to 3)
         .map(k => lpRoundSql(s"l${k - 1}", s"l$k")).mkString(",\n")
       s"""WITH ids AS (SELECT doc_id FROM documents),
@@ -1104,11 +990,11 @@ object Graph {
          |SELECT ids.doc_id, COALESCE(l3.lbl, ids.doc_id) AS community
          |FROM ids LEFT JOIN l3 ON l3.v = ids.doc_id
          |ORDER BY ids.doc_id""".stripMargin
-    },
+    }),
     // Modularity: the labelprop CTE prefix + rounds, then two label
     // joins on the edge frame, per-community degree rollup, sum D_c^2
     // in HUGEINT, Q one fixed-shape chain over exact integers.
-    "graph_modularity" -> {
+    QueryDef("graph_modularity", modularity, {
       val rounds = (1 to 3)
         .map(k => lpRoundSql(s"l${k - 1}", s"l$k")).mkString(",\n")
       s"""WITH ids AS (SELECT doc_id FROM documents),
@@ -1145,10 +1031,10 @@ object Graph {
          |  ${oRound("ie.ie * 1.0 / me.m - CAST(ag.sd2 AS DOUBLE) / (4.0 * me.m * me.m)", 6)}
          |    AS modularity
          |FROM cn, me, ie, ag""".stripMargin
-    },
+    }),
     // Reciprocity: distinct directed simple edges, reversed-key
     // self-join, quantized ratio of exact longs.
-    "graph_reciprocity" ->
+    QueryDef("graph_reciprocity", reciprocity,
       s"""WITH ids AS (SELECT doc_id FROM documents),
          |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
          |raw AS (
@@ -1163,10 +1049,10 @@ object Graph {
          |nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_directed FROM ds)
          |SELECT nd.n_directed, rc.n_recip,
          |  ${oRound("rc.n_recip * 1.0 / nd.n_directed", 6)} AS reciprocity
-         |FROM nd, rc""".stripMargin,
+         |FROM nd, rc""".stripMargin),
     // Assortativity: same edge closure, two degree joins, HUGEINT
     // moments, one fixed-shape Pearson chain at 1e-6.
-    "graph_assortativity" ->
+    QueryDef("graph_assortativity", assortativity,
       s"""WITH ids AS (SELECT doc_id FROM documents),
          |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
          |raw AS (
@@ -1189,11 +1075,11 @@ object Graph {
          |SELECT mm AS n_edge_ends,
          |  ${oRound("CAST(mm * sjk - sj * sj AS DOUBLE)" +
              " / CAST(mm * sjj - sj * sj AS DOUBLE)", 6)} AS assortativity
-         |FROM mo""".stripMargin,
+         |FROM mo""".stripMargin),
     // Same oriented edge CTE; common neighbors via the middle-node
     // self-join; union size by inclusion-exclusion; quantized-long
     // top-20 ordering.
-    "graph_linkpred" ->
+    QueryDef("graph_linkpred", linkpred,
       s"""WITH ids AS (SELECT doc_id FROM documents),
          |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
          |raw AS (
@@ -1225,11 +1111,11 @@ object Graph {
          |  JOIN deg du ON du.u = c.u
          |  JOIN deg dw ON dw.u = c.w)
          |SELECT u AS a, w AS b, cn, CAST(jq AS DOUBLE) / 1000000.0 AS score
-         |FROM sc ORDER BY jq DESC, a, b LIMIT 20""".stripMargin,
+         |FROM sc ORDER BY jq DESC, a, b LIMIT 20""".stripMargin),
     // Clustering coefficient: triangles' edge/wedge CTEs; corner credit
     // via UNION ALL (portable — no lateral unnest), CAST-to-double
     // hoisted before the 2T/(d(d-1)) division.
-    "graph_clustering_coeff" ->
+    QueryDef("graph_clustering_coeff", clusteringCoeff,
       s"""WITH ids AS (SELECT doc_id FROM documents),
          |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
          |raw AS (
@@ -1259,10 +1145,10 @@ object Graph {
          |  CASE WHEN dg.degree >= 2 THEN
          |    ${oRound("2.0 * CAST(COALESCE(tc.n_tri, 0) AS DOUBLE) / (dg.degree * (dg.degree - 1))", 6)}
          |  ELSE 0.0 END AS coeff
-         |FROM dg LEFT JOIN tc USING (doc_id) ORDER BY doc_id""".stripMargin,
+         |FROM dg LEFT JOIN tc USING (doc_id) ORDER BY doc_id""".stripMargin),
     // In-degree distribution: zero-degree nodes kept via the id left
     // join; the share divisor rides a scalar subquery.
-    "graph_degree_dist" ->
+    QueryDef("graph_degree_dist", degreeDist,
       s"""WITH ids AS (SELECT doc_id FROM documents),
          |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
          |raw AS (
@@ -1276,8 +1162,8 @@ object Graph {
          |  FROM ids LEFT JOIN ind ON ind.doc_id = ids.doc_id)
          |SELECT indeg, CAST(COUNT(*) AS BIGINT) AS n_nodes,
          |  ${oRound("CAST(COUNT(*) AS DOUBLE) / (SELECT n FROM nn)", 6)} AS share
-         |FROM nd GROUP BY indeg ORDER BY indeg""".stripMargin,
-    "graph_triangles" ->
+         |FROM nd GROUP BY indeg ORDER BY indeg""".stripMargin),
+    QueryDef("graph_triangles", triangles,
       s"""WITH ids AS (SELECT doc_id FROM documents),
          |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
          |raw AS (
@@ -1295,11 +1181,11 @@ object Graph {
          |  JOIN edges e3 ON e3.a = e1.a AND e3.b = e2.b)
          |SELECT v AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_triangles
          |FROM tris, unnest([a, b, c]) AS u(v)
-         |GROUP BY v ORDER BY doc_id""".stripMargin,
+         |GROUP BY v ORDER BY doc_id""".stripMargin),
     // HITS: same edge CTE, 3 unrolled auth/hub half-step pairs (each
     // MATERIALIZED — every frame is referenced by the next half-step AND
     // the final join), grain-2 norm sums, grain-9 normalized output.
-    "graph_hits" -> {
+    QueryDef("graph_hits", hits, {
       val steps = (1 to 3).flatMap(k => Seq(
         hitsAuthSql(s"h${k - 1}", s"a$k"),
         hitsHubSql(s"a$k", s"h$k"))).mkString(",\n")
@@ -1319,8 +1205,8 @@ object Graph {
          |SELECT doc_id, ${oRound("a/na", 9)} AS authority,
          |  ${oRound("h/nh", 9)} AS hub
          |FROM j, nrm ORDER BY doc_id""".stripMargin
-    },
-    "graph_pagerank" -> {
+    }),
+    QueryDef("graph_pagerank", pagerank, {
       val iters = (1 to Iterations)
         .map(k => iterSql(s"r${k - 1}", s"r$k")).mkString(",\n")
       s"""WITH ids AS (SELECT doc_id FROM documents),
@@ -1333,6 +1219,6 @@ object Graph {
          |r0 AS (SELECT doc_id, 1.0/(SELECT n FROM nn) AS rank FROM ids),
          |$iters
          |SELECT doc_id, rank FROM r$Iterations ORDER BY doc_id""".stripMargin
-    }
+    })
   )
 }

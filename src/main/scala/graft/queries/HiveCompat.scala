@@ -94,14 +94,8 @@ object HiveCompat {
           .as("offsets_in_file"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "agg_ewah_bitmap" -> aggEwahBitmap,
-    "join_uniquejoin" -> joinUniquejoin,
-    "fn_block_offset" -> fnBlockOffset
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "agg_ewah_bitmap" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("agg_ewah_bitmap", aggEwahBitmap,
       """SELECT
         |  (SELECT COUNT(DISTINCT o_custkey) FROM orders
         |   WHERE o_orderpriority = '1-URGENT') AS urgent_card,
@@ -118,8 +112,8 @@ object HiveCompat {
         |  ((SELECT COUNT(*) FROM
         |    (SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
         |     INTERSECT
-        |     SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH') t) = 0) AS and_empty""".stripMargin,
-    "join_uniquejoin" ->
+        |     SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH') t) = 0) AS and_empty""".stripMargin),
+    QueryDef("join_uniquejoin", joinUniquejoin,
       """WITH a AS (SELECT CAST(c_nationkey AS INT) AS k, COUNT(*) AS cust_cnt
         |           FROM customer WHERE c_acctbal > 9000 GROUP BY 1),
         |     b AS (SELECT CAST(s_nationkey AS INT) AS k, COUNT(*) AS supp_cnt
@@ -129,12 +123,12 @@ object HiveCompat {
         |SELECT COALESCE(a.k, b.k) AS nationkey, a.cust_cnt, b.supp_cnt, c.n_name
         |FROM a FULL JOIN b ON a.k = b.k
         |LEFT JOIN c ON COALESCE(a.k, b.k) = c.k
-        |ORDER BY nationkey""".stripMargin,
-    "fn_block_offset" ->
+        |ORDER BY nationkey""".stripMargin),
+    QueryDef("fn_block_offset", fnBlockOffset,
       """SELECT COUNT(*) AS n_rows,
         |  CAST(1 AS BIGINT) AS n_blocks,
         |  CAST(0 AS BIGINT) AS min_block_offset,
         |  TRUE AS offsets_in_file
-        |FROM lineitem""".stripMargin
+        |FROM lineitem""".stripMargin)
   )
 }

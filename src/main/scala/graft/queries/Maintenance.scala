@@ -147,13 +147,8 @@ object Maintenance {
       .orderBy("mv_version", "n_name")
   }
 
-  val queries: Map[String, Q] = Map(
-    "merge_upsert" -> mergeUpsert,
-    "mv_rebuild" -> mvRebuild
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "merge_upsert" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("merge_upsert", mergeUpsert,
       s"""WITH merged AS (
          |  SELECT t.o_orderkey, t.o_orderstatus,
          |         CASE WHEN t.o_orderkey % 97 = 0
@@ -165,8 +160,8 @@ object Maintenance {
          |  FROM orders WHERE o_orderkey % 101 = 0)
          |SELECT o_orderstatus, COUNT(*) AS cnt,
          |       ${oSum("o_totalprice", 2)} AS total
-         |FROM merged GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "mv_rebuild" ->
+         |FROM merged GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    QueryDef("mv_rebuild", mvRebuild,
       s"""WITH rev AS (
          |  SELECT 1 AS mv_version, c_nationkey,
          |         ${oSum("o_totalprice", 2)} AS revenue, COUNT(*) AS n_orders
@@ -179,6 +174,6 @@ object Maintenance {
          |  GROUP BY c_nationkey)
          |SELECT mv_version, n_name, revenue, n_orders
          |FROM rev JOIN nation ON c_nationkey = n_nationkey
-         |ORDER BY mv_version, n_name""".stripMargin
+         |ORDER BY mv_version, n_name""".stripMargin)
   )
 }

@@ -482,39 +482,9 @@ object Relational {
       .orderBy("o_orderkey")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q1_pricing_summary" -> q1PricingSummary,
-    "q5_local_supplier" -> q5LocalSupplier,
-    "join_multiway" -> joinMultiway,
-    "join_left" -> joinLeft,
-    "join_right" -> joinRight,
-    "join_full" -> joinFull,
-    "join_semi" -> joinSemi,
-    "join_anti" -> joinAnti,
-    "join_cross" -> joinCross,
-    "join_theta" -> joinTheta,
-    "join_broadcast" -> joinBroadcast,
-    "join_asof" -> joinAsof,
-    "join_asof_tol" -> joinAsofTol,
-    "join_scd2" -> joinScd2,
-    "join_range_bin" -> joinRangeBin,
-    "join_fuzzy_block" -> joinFuzzyBlock,
-    "setop_union_all" -> setopUnionAll,
-    "setop_union_distinct" -> setopUnionDistinct,
-    "setop_intersect" -> setopIntersect,
-    "setop_intersect_all" -> setopIntersectAll,
-    "setop_except" -> setopExcept,
-    "setop_except_all" -> setopExceptAll,
-    "sort_topk" -> sortTopK,
-    "sort_global" -> sortGlobal,
-    "sort_cluster_by" -> sortClusterBy,
-    "sort_tablesample" -> sortTablesample,
-    "sort_hashsample" -> sortHashsample
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q1_pricing_summary" -> q1PricingSummarySql,
-    "q5_local_supplier" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q1_pricing_summary", q1PricingSummary, q1PricingSummarySql),
+    QueryDef("q5_local_supplier", q5LocalSupplier,
       s"""SELECT n_name, ${oSum("l_extendedprice*(1.0-l_discount)")} AS revenue
          |FROM region
          |JOIN nation ON n_regionkey = r_regionkey
@@ -525,8 +495,8 @@ object Relational {
          |WHERE r_name = 'ASIA'
          |  AND o_orderdate >= '1994-01-01' AND o_orderdate < '1996-01-01'
          |GROUP BY n_name
-         |ORDER BY revenue DESC, n_name""".stripMargin,
-    "join_multiway" ->
+         |ORDER BY revenue DESC, n_name""".stripMargin),
+    QueryDef("join_multiway", joinMultiway,
       s"""SELECT n_name, ${oSum("l_extendedprice*(1.0-l_discount)")} AS revenue,
          |COUNT(*) AS line_cnt
          |FROM region JOIN nation ON n_regionkey = r_regionkey
@@ -534,19 +504,19 @@ object Relational {
          |JOIN orders ON o_custkey = c_custkey
          |JOIN lineitem ON l_orderkey = o_orderkey
          |WHERE r_name = 'ASIA'
-         |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "join_left" ->
+         |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    QueryDef("join_left", joinLeft,
       s"""SELECT c_custkey, c_name, COUNT(o_orderkey) AS big_orders,
          |COALESCE(${oSum("o_totalprice")}, 0.0) AS big_total
          |FROM customer LEFT JOIN (SELECT * FROM orders WHERE o_totalprice > 300000) o
          |ON o.o_custkey = c_custkey
-         |GROUP BY c_custkey, c_name ORDER BY c_custkey""".stripMargin,
-    "join_right" ->
+         |GROUP BY c_custkey, c_name ORDER BY c_custkey""".stripMargin),
+    QueryDef("join_right", joinRight,
       """SELECT c_custkey, COUNT(o_orderkey) AS f_orders
         |FROM (SELECT * FROM orders WHERE o_orderstatus = 'F') o
         |RIGHT JOIN customer ON o.o_custkey = c_custkey
-        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin,
-    "join_full" ->
+        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin),
+    QueryDef("join_full", joinFull,
       """SELECT COALESCE(nk, nk2) AS nationkey,
         |COALESCE(cust_cnt, 0) AS cust_cnt, COALESCE(supp_cnt, 0) AS supp_cnt
         |FROM (SELECT c_nationkey AS nk, COUNT(*) AS cust_cnt FROM customer
@@ -554,35 +524,35 @@ object Relational {
         |FULL OUTER JOIN
         |     (SELECT s_nationkey AS nk2, COUNT(*) AS supp_cnt FROM supplier
         |      WHERE s_acctbal > 9000 GROUP BY s_nationkey) s
-        |ON nk = nk2 ORDER BY nationkey""".stripMargin,
-    "join_semi" ->
+        |ON nk = nk2 ORDER BY nationkey""".stripMargin),
+    QueryDef("join_semi", joinSemi,
       """SELECT c_custkey, c_name, c_mktsegment FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
         |              AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-    "join_anti" ->
+        |ORDER BY c_custkey""".stripMargin),
+    QueryDef("join_anti", joinAnti,
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
         |                  AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-    "join_cross" ->
+        |ORDER BY c_custkey""".stripMargin),
+    QueryDef("join_cross", joinCross,
       """SELECT r_name, n_name FROM (SELECT r_name FROM region) r
         |CROSS JOIN (SELECT n_name FROM nation) n
-        |ORDER BY r_name, n_name""".stripMargin,
-    "join_theta" ->
+        |ORDER BY r_name, n_name""".stripMargin),
+    QueryDef("join_theta", joinTheta,
       """SELECT s_suppkey, COUNT(*) AS near_cust_cnt
         |FROM supplier JOIN customer
         |ON c_acctbal > s_acctbal - 100 AND c_acctbal <= s_acctbal + 100
-        |GROUP BY s_suppkey ORDER BY s_suppkey""".stripMargin,
-    "join_broadcast" ->
+        |GROUP BY s_suppkey ORDER BY s_suppkey""".stripMargin),
+    QueryDef("join_broadcast", joinBroadcast,
       s"""SELECT p_brand, ${oSum("l_extendedprice*(1.0-l_discount)")} AS revenue,
          |COUNT(*) AS line_cnt
          |FROM lineitem JOIN part ON l_partkey = p_partkey
-         |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
+         |GROUP BY p_brand ORDER BY p_brand""".stripMargin),
     // Tolerance as-of / last-touch attribution: independent naive
     // derivation — latest click per purchase via a <= join + argmax,
     // then the lookback gate.
-    "join_asof_tol" ->
+    QueryDef("join_asof_tol", joinAsofTol,
       """WITH e AS (SELECT user_id, event_id, event_type,
         |             epoch_us(ts) AS t FROM events),
         |c AS (SELECT user_id, event_id, t FROM e
@@ -602,8 +572,8 @@ object Relational {
         |  COALESCE(b.ct IS NOT NULL AND p.t - b.ct <= 3600000000, FALSE)
         |    AS in_window
         |FROM p LEFT JOIN best b USING (user_id, event_id)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "join_asof" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    QueryDef("join_asof", joinAsof,
       """WITH o AS (
         |  SELECT o_custkey, o_orderdate, MAX(o_orderkey) AS o_orderkey,
         |    max_by(o_totalprice, o_orderkey) AS o_totalprice
@@ -613,10 +583,10 @@ object Relational {
         |FROM events e
         |ASOF LEFT JOIN o
         |  ON e.user_id = o.o_custkey AND CAST(e.ts AS TIMESTAMP) >= o.o_orderdate
-        |ORDER BY user_id, event_id""".stripMargin,
+        |ORDER BY user_id, event_id""".stripMargin),
     // SCD2 PIT join: status runs via gaps-and-islands, valid_to via
     // lead, probes shifted +1h so they cross version boundaries.
-    "join_scd2" ->
+    QueryDef("join_scd2", joinScd2,
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu, event_type
         |           FROM events),
         |r AS (SELECT user_id, event_id, tsu, event_type,
@@ -640,16 +610,16 @@ object Relational {
         |FROM p JOIN dim2 d ON d.d_user = p.user_id
         |  AND p.tsp >= d.valid_from
         |  AND (d.valid_to IS NULL OR p.tsp < d.valid_to)
-        |ORDER BY p.user_id, p.event_id""".stripMargin,
-    "join_range_bin" ->
+        |ORDER BY p.user_id, p.event_id""".stripMargin),
+    QueryDef("join_range_bin", joinRangeBin,
       s"""SELECT o1.o_orderpriority AS o_orderpriority, COUNT(*) AS follow_cnt,
          |${oSum("o2.o_totalprice", 2)} AS follow_total
          |FROM orders o1 JOIN orders o2
          |  ON o2.o_orderdate >= o1.o_orderdate
          | AND o2.o_orderdate < o1.o_orderdate + INTERVAL 7 DAY
          |WHERE o1.o_totalprice > 450000
-         |GROUP BY o1.o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "join_fuzzy_block" ->
+         |GROUP BY o1.o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    QueryDef("join_fuzzy_block", joinFuzzyBlock,
       """WITH nm AS (SELECT p_name, split_part(p_name, ' ', 2) AS blk,
         |              CAST(COUNT(*) AS BIGINT) AS n_parts
         |            FROM part GROUP BY 1, 2)
@@ -658,56 +628,57 @@ object Relational {
         |  CAST(a.n_parts + b.n_parts AS BIGINT) AS support
         |FROM nm a JOIN nm b ON a.blk = b.blk AND a.p_name < b.p_name
         |WHERE levenshtein(a.p_name, b.p_name) <= 4
-        |ORDER BY name_a, name_b""".stripMargin,
-    "setop_union_all" ->
+        |ORDER BY name_a, name_b""".stripMargin),
+    QueryDef("setop_union_all", setopUnionAll,
       """SELECT * FROM (
         |SELECT c_custkey AS key, 'customer' AS src FROM customer
         |UNION ALL
         |SELECT s_suppkey AS key, 'supplier' AS src FROM supplier) t
-        |ORDER BY src, key""".stripMargin,
-    "setop_union_distinct" ->
+        |ORDER BY src, key""".stripMargin),
+    QueryDef("setop_union_distinct", setopUnionDistinct,
       """SELECT * FROM (
         |SELECT CAST(c_nationkey AS INT) AS nationkey FROM customer
         |UNION
         |SELECT CAST(s_nationkey AS INT) AS nationkey FROM supplier) t
-        |ORDER BY nationkey""".stripMargin,
-    "setop_intersect" ->
+        |ORDER BY nationkey""".stripMargin),
+    QueryDef("setop_intersect", setopIntersect,
       """SELECT * FROM (
         |SELECT CAST(c_nationkey AS INT) AS nationkey FROM customer WHERE c_acctbal > 9500
         |INTERSECT
         |SELECT CAST(s_nationkey AS INT) AS nationkey FROM supplier) t
-        |ORDER BY nationkey""".stripMargin,
-    "setop_intersect_all" ->
+        |ORDER BY nationkey""".stripMargin),
+    QueryDef("setop_intersect_all", setopIntersectAll,
       """SELECT * FROM (
         |SELECT CAST(c_nationkey AS INT) AS nationkey FROM customer WHERE c_acctbal > 9500
         |INTERSECT ALL
         |SELECT CAST(s_nationkey AS INT) AS nationkey FROM supplier) t
-        |ORDER BY nationkey""".stripMargin,
-    "setop_except" ->
+        |ORDER BY nationkey""".stripMargin),
+    QueryDef("setop_except", setopExcept,
       """SELECT * FROM (
         |SELECT CAST(c_nationkey AS INT) AS nationkey FROM customer WHERE c_mktsegment = 'BUILDING'
         |EXCEPT
         |SELECT CAST(s_nationkey AS INT) AS nationkey FROM supplier WHERE s_acctbal > 5000) t
-        |ORDER BY nationkey""".stripMargin,
-    "setop_except_all" ->
+        |ORDER BY nationkey""".stripMargin),
+    QueryDef("setop_except_all", setopExceptAll,
       """SELECT * FROM (
         |SELECT CAST(c_nationkey AS INT) AS nationkey FROM customer WHERE c_mktsegment = 'BUILDING'
         |EXCEPT ALL
         |SELECT CAST(s_nationkey AS INT) AS nationkey FROM supplier) t
-        |ORDER BY nationkey""".stripMargin,
-    "sort_topk" ->
+        |ORDER BY nationkey""".stripMargin),
+    QueryDef("sort_topk", sortTopK,
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 15""".stripMargin,
-    "sort_global" ->
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 15""".stripMargin),
+    QueryDef("sort_global", sortGlobal,
       """SELECT o_orderkey, o_orderdate, o_orderpriority FROM orders
-        |ORDER BY o_orderdate, o_orderpriority DESC, o_orderkey""".stripMargin,
-    "sort_cluster_by" ->
+        |ORDER BY o_orderdate, o_orderpriority DESC, o_orderkey""".stripMargin),
+    QueryDef("sort_cluster_by", sortClusterBy,
       """SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity
         |FROM lineitem WHERE l_quantity >= 49
-        |ORDER BY l_returnflag, l_orderkey, l_linenumber, l_quantity""".stripMargin,
-    "sort_hashsample" ->
+        |ORDER BY l_returnflag, l_orderkey, l_linenumber, l_quantity""".stripMargin),
+    QueryDef("sort_tablesample", sortTablesample, None),
+    QueryDef("sort_hashsample", sortHashsample,
       """SELECT o_orderkey, o_custkey FROM orders
         |WHERE substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1) IN ('0', '1')
-        |ORDER BY o_orderkey""".stripMargin
+        |ORDER BY o_orderkey""".stripMargin)
   )
 }

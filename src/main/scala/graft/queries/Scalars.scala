@@ -382,42 +382,19 @@ object Scalars {
       .orderBy("p_partkey")
   }
 
-  val queries: Map[String, Q] = Map(
-    "fn_uniontype" -> fnUniontype,
-    "fn_math" -> fnMath,
-    "fn_bitwise" -> fnBitwise,
-    "fn_string" -> fnString,
-    "fn_regex" -> fnRegex,
-    "fn_datetime" -> fnDatetime,
-    "fn_conditional" -> fnConditional,
-    "fn_collection" -> fnCollection,
-    "fn_lambda" -> fnLambda,
-    "fn_variant" -> fnVariant,
-    "fn_try" -> fnTry,
-    "fn_json" -> fnJson,
-    "fn_url" -> fnUrl,
-    "fn_hash" -> fnHash,
-    "fn_hash_extra" -> fnHashExtra,
-    "fn_hash_b64fmt" -> fnHashB64Fmt,
-    "fn_mask" -> fnMask,
-    "fn_xpath" -> fnXpath,
-    "fn_cast" -> fnCast,
-    "fn_misc" -> fnMisc
-  )
-
   private val maskOracle: String => String = e =>
     s"regexp_replace(regexp_replace(regexp_replace($e,'[A-Z]','X','g'),'[a-z]','x','g'),'[0-9]','n','g')"
 
-  val oracleSql: Map[String, String] = Map(
-    "fn_uniontype" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("fn_uniontype", fnUniontype,
       """SELECT p_partkey,
         |CAST(p_partkey % 2 AS INT) AS utag,
         |CASE WHEN p_partkey % 2 = 0 THEN p_size END AS as_int,
         |CASE WHEN p_partkey % 2 = 1 THEN p_brand END AS as_str,
         |COALESCE(CAST(CASE WHEN p_partkey % 2 = 0 THEN p_size END AS VARCHAR),
         |         CASE WHEN p_partkey % 2 = 1 THEN p_brand END) AS shown
-        |FROM part WHERE p_partkey < 300 ORDER BY p_partkey""".stripMargin,
-    "fn_math" ->
+        |FROM part WHERE p_partkey < 300 ORDER BY p_partkey""".stripMargin),
+    QueryDef("fn_math", fnMath,
       s"""SELECT p_partkey,
          |abs(p_retailprice - 1000) AS abs_v,
          |${oRound("p_retailprice/7", 2)} AS round_div7,
@@ -440,8 +417,8 @@ object Scalars {
          |${oRound("atan(p_size)", 9)} AS atan_v,
          |${oRound("degrees(p_size)", 6)} AS deg_v,
          |${oRound("pow(p_size, 2)", 4)} AS pow_v
-         |FROM part WHERE p_partkey < 300 ORDER BY p_partkey""".stripMargin,
-    "fn_bitwise" ->
+         |FROM part WHERE p_partkey < 300 ORDER BY p_partkey""".stripMargin),
+    QueryDef("fn_bitwise", fnBitwise,
       """SELECT c_custkey,
         |CAST(c_custkey & 37 AS BIGINT) AS band,
         |CAST(c_custkey | 37 AS BIGINT) AS bor,
@@ -450,8 +427,8 @@ object Scalars {
         |CAST(c_custkey << 3 AS BIGINT) AS shl,
         |CAST(c_custkey >> 2 AS BIGINT) AS shr,
         |CAST(bit_count(c_custkey) AS INT) AS bcount
-        |FROM customer WHERE c_custkey < 300 ORDER BY c_custkey""".stripMargin,
-    "fn_string" ->
+        |FROM customer WHERE c_custkey < 300 ORDER BY c_custkey""".stripMargin),
+    QueryDef("fn_string", fnString,
       """SELECT p_partkey,
         |CAST(length(p_name) AS INT) AS len_v,
         |upper(p_name) AS upper_v,
@@ -474,8 +451,8 @@ object Scalars {
         |  w -> upper(w[1]) || w[2:]), ' ') AS initcap_v,
         |CAST(COALESCE(list_position(string_split('ECONOMY,SMALL,LARGE', ','), p_type), 0) AS INT) AS fis_v,
         |CAST(instr(p_name, 'e') AS INT) AS loc_v
-        |FROM part WHERE p_partkey < 300 ORDER BY p_partkey""".stripMargin,
-    "fn_regex" ->
+        |FROM part WHERE p_partkey < 300 ORDER BY p_partkey""".stripMargin),
+    QueryDef("fn_regex", fnRegex,
       """SELECT c_custkey,
         |c_name LIKE '%00001%' AS like_v,
         |regexp_matches(c_mktsegment, '^B.*G$') AS rlike_v,
@@ -483,8 +460,8 @@ object Scalars {
         |regexp_replace(c_name, '0', '_', 'g') AS rrep_v,
         |CAST(len(regexp_extract_all(c_name, '0')) AS INT) AS rcnt_v,
         |string_split(c_name, '#')[2] AS split_v
-        |FROM customer WHERE c_custkey < 300 ORDER BY c_custkey""".stripMargin,
-    "fn_datetime" ->
+        |FROM customer WHERE c_custkey < 300 ORDER BY c_custkey""".stripMargin),
+    QueryDef("fn_datetime", fnDatetime,
       """SELECT o_orderkey,
         |CAST(year(o_orderdate) AS INT) AS y_v,
         |CAST(quarter(o_orderdate) AS INT) AS q_v,
@@ -508,8 +485,8 @@ object Scalars {
         |date_trunc('month', o_orderdate) AS dtrunc_v,
         |CAST(o_orderdate AS DATE) AS todate_v,
         |make_date(CAST(year(o_orderdate) AS INT), CAST(month(o_orderdate) AS INT), 1) AS mkdate_v
-        |FROM orders WHERE o_orderkey < 2000 ORDER BY o_orderkey""".stripMargin,
-    "fn_conditional" ->
+        |FROM orders WHERE o_orderkey < 2000 ORDER BY o_orderkey""".stripMargin),
+    QueryDef("fn_conditional", fnConditional,
       """SELECT c_custkey,
         |CASE WHEN c_acctbal > 0 THEN 'pos' ELSE 'neg' END AS if_v,
         |CASE WHEN c_acctbal > 5000 THEN 'high'
@@ -522,8 +499,8 @@ object Scalars {
         |c_mktsegment IN ('BUILDING', 'AUTOMOBILE') AS in_v,
         |c_mktsegment IS NULL AS isn_v,
         |c_mktsegment IS NOT NULL AS isnn_v
-        |FROM customer WHERE c_custkey < 300 ORDER BY c_custkey""".stripMargin,
-    "fn_collection" ->
+        |FROM customer WHERE c_custkey < 300 ORDER BY c_custkey""".stripMargin),
+    QueryDef("fn_collection", fnCollection,
       """SELECT p_partkey,
         |CAST(3 AS INT) AS asize_v,
         |list_contains([p_brand, p_type, 'zzz'], 'ECONOMY') AS acont_v,
@@ -538,8 +515,8 @@ object Scalars {
         |CAST(p_size AS INT) AS sfield_v,
         |p_brand || ',' || p_brand AS arep_v,
         |CASE WHEN p_brand = p_type THEN p_brand ELSE p_brand || ',' || p_type END AS adist_v
-        |FROM part WHERE p_partkey < 300 ORDER BY p_partkey""".stripMargin,
-    "fn_try" ->
+        |FROM part WHERE p_partkey < 300 ORDER BY p_partkey""".stripMargin),
+    QueryDef("fn_try", fnTry,
       """SELECT p_partkey,
         |TRY_CAST(p_name AS INT) AS badcast_v,
         |CAST(p_size AS VARCHAR) AS okcast_v,
@@ -549,16 +526,16 @@ object Scalars {
         |p_partkey + p_size AS add_v,
         |CAST(p_size AS BIGINT) AS tonum_v,
         |CAST(NULL AS VARCHAR) AS elem_v
-        |FROM part WHERE p_partkey < 300 ORDER BY p_partkey""".stripMargin,
-    "fn_variant" ->
+        |FROM part WHERE p_partkey < 300 ORDER BY p_partkey""".stripMargin),
+    QueryDef("fn_variant", fnVariant,
       """SELECT event_id,
         |CAST(json_extract(props, '$.k') AS BIGINT) AS k_long,
         |CAST(CAST(json_extract(props, '$.k') AS BIGINT) AS VARCHAR) AS k_str,
         |CAST(NULL AS BIGINT) AS miss_v,
         |'OBJECT<k: BIGINT>' AS schema_v,
         |TRUE AS vnull_v
-        |FROM events WHERE event_id < 300 ORDER BY event_id""".stripMargin,
-    "fn_lambda" ->
+        |FROM events WHERE event_id < 300 ORDER BY event_id""".stripMargin),
+    QueryDef("fn_lambda", fnLambda,
       """SELECT p_partkey,
         |array_to_string(list_transform(nums, x -> x*2), ',') AS transform_v,
         |array_to_string(list_filter(nums, x -> x > 5), ',') AS filter_v,
@@ -571,16 +548,16 @@ object Scalars {
         |  AS zip_v
         |FROM (SELECT p_partkey, [p_size, p_size+10, 1] AS nums
         |      FROM part WHERE p_partkey < 300) t
-        |ORDER BY p_partkey""".stripMargin,
-    "fn_json" ->
+        |ORDER BY p_partkey""".stripMargin),
+    QueryDef("fn_json", fnJson,
       """SELECT event_id,
         |json_extract_string(props, '$.k') AS gjo_v,
         |json_extract_string(props, '$.k') AS jt_k,
         |CAST(json_extract_string(props, '$.k') AS INT) AS fj_k,
         |'{"u":' || user_id || '}' AS tj_v,
         |'STRUCT<k: BIGINT>' AS soj_v
-        |FROM events WHERE event_id < 300 ORDER BY event_id""".stripMargin,
-    "fn_url" ->
+        |FROM events WHERE event_id < 300 ORDER BY event_id""".stripMargin),
+    QueryDef("fn_url", fnUrl,
       """SELECT doc_id,
         |'example.com' AS host,
         |'/api/' || source AS path,
@@ -590,19 +567,20 @@ object Scalars {
         |'example.com:8080' AS authority,
         |'/api/' || source || '?sid=' || doc_id || '&x=1' AS file,
         |CAST(doc_id AS VARCHAR) AS query_sid
-        |FROM documents WHERE doc_id < 300 ORDER BY doc_id""".stripMargin,
-    "fn_hash" ->
+        |FROM documents WHERE doc_id < 300 ORDER BY doc_id""".stripMargin),
+    QueryDef("fn_hash", fnHash,
       """SELECT c_custkey,
         |md5(c_name) AS md5_v,
         |sha256(c_name) AS sha256_v,
         |CAST(128 AS INT) AS sha512_len
-        |FROM customer WHERE c_custkey < 300 ORDER BY c_custkey""".stripMargin,
+        |FROM customer WHERE c_custkey < 300 ORDER BY c_custkey""".stripMargin),
+    QueryDef("fn_hash_extra", fnHashExtra, None),
     // format_number emulation: fmt thousands-grouping is integer-only in
     // DuckDB 1.0.0, so group the truncated |integer| part, append the
     // 2-digit fraction (double→BIGINT cast rounds to nearest, matching
     // HALF_UP on the fixtures' 2-decimal values), and prepend the sign
     // separately so values in (-1, 0) keep their minus.
-    "fn_hash_b64fmt" ->
+    QueryDef("fn_hash_b64fmt", fnHashB64Fmt,
       """SELECT c_custkey,
         |base64(CAST(c_name AS BLOB)) AS b64_v,
         |base64(CAST(c_name AS BLOB)) AS b64_rt,
@@ -610,8 +588,8 @@ object Scalars {
         |  format('{:,}', CAST(trunc(abs(c_acctbal)) AS BIGINT)) || '.' ||
         |  lpad(CAST(CAST(abs(c_acctbal) * 100 AS BIGINT) % 100 AS VARCHAR),
         |       2, '0') AS fmtnum_v
-        |FROM customer WHERE c_custkey < 300 ORDER BY c_custkey""".stripMargin,
-    "fn_mask" ->
+        |FROM customer WHERE c_custkey < 300 ORDER BY c_custkey""".stripMargin),
+    QueryDef("fn_mask", fnMask,
       s"""SELECT c_custkey,
          |${maskOracle("c_name")} AS mask_v,
          |${maskOracle("substr(c_name, 1, 4)")} || substr(c_name, 5) AS mfn_v,
@@ -621,16 +599,16 @@ object Scalars {
          |${maskOracle("substr(c_name, 1, length(c_name) - 4)")} ||
          |  substr(c_name, length(c_name) - 3) AS msln_v,
          |md5(c_name) AS mhash_v
-         |FROM customer WHERE c_custkey < 300 ORDER BY c_custkey""".stripMargin,
-    "fn_xpath" ->
+         |FROM customer WHERE c_custkey < 300 ORDER BY c_custkey""".stripMargin),
+    QueryDef("fn_xpath", fnXpath,
       """SELECT p_partkey,
         |CAST(p_size AS INT) AS xint_v,
         |p_brand AS xstr_v,
         |p_size > 25 AS xbool_v,
         |CAST(p_size AS DOUBLE) AS xdbl_v,
         |p_size || ',' || p_brand AS xlist_v
-        |FROM part WHERE p_partkey < 300 ORDER BY p_partkey""".stripMargin,
-    "fn_cast" ->
+        |FROM part WHERE p_partkey < 300 ORDER BY p_partkey""".stripMargin),
+    QueryDef("fn_cast", fnCast,
       """SELECT c_custkey,
         |CAST(c_custkey AS VARCHAR) AS l2s,
         |CAST(substr(c_name, 10, 9) AS BIGINT) AS s2l,
@@ -641,8 +619,8 @@ object Scalars {
         |CAST(c_nationkey AS TINYINT) AS i2t,
         |CAST(c_nationkey AS SMALLINT) AS i2sm,
         |TRY_CAST(c_mktsegment AS INT) AS tryc
-        |FROM customer WHERE c_custkey < 300 ORDER BY c_custkey""".stripMargin,
-    "fn_misc" ->
+        |FROM customer WHERE c_custkey < 300 ORDER BY c_custkey""".stripMargin),
+    QueryDef("fn_misc", fnMisc,
       """SELECT p_partkey,
         |CAST(CASE p_type WHEN 'ECONOMY' THEN 1 WHEN 'SMALL' THEN 2
         |  WHEN 'LARGE' THEN 3 ELSE 0 END AS INT) AS field_v,
@@ -650,6 +628,6 @@ object Scalars {
         |CAST(p_size AS VARCHAR) AS s2m_v,
         |CAST(((p_partkey % 7) + 7) % 7 AS VARCHAR) AS refl_v,
         |CASE WHEN p_size <= 25 THEN p_brand ELSE p_type END AS sab_v
-        |FROM part WHERE p_partkey < 300 ORDER BY p_partkey""".stripMargin
+        |FROM part WHERE p_partkey < 300 ORDER BY p_partkey""".stripMargin)
   )
 }

@@ -1496,46 +1496,11 @@ object Sequences {
     credited.unionByName(direct).orderBy("touch_type")
   }
 
-  val queries: Map[String, Q] = Map(
-    "seq_attribution" -> seqAttribution,
-    "seq_cohort_ltv" -> seqCohortLtv,
-    "seq_survival" -> seqSurvival,
-    "seq_burstiness" -> seqBurstiness,
-    "seq_gini" -> seqGini,
-    "seq_user_surprise" -> seqUserSurprise,
-    "seq_rfm" -> seqRfm,
-    "seq_cuped" -> seqCuped,
-    "seq_attribution_markov" -> seqAttributionMarkov,
-    "seq_did" -> seqDid,
-    "seq_forecast_holt" -> seqForecastHolt,
-    "seq_holt_winters" -> seqHoltWinters,
-    "seq_mann_kendall" -> seqMannKendall,
-    "seq_theil_sen" -> seqTheilSen,
-    "seq_winsorized_mean" -> seqWinsorizedMean,
-    "seq_stl_decompose" -> seqStlDecompose,
-    "seq_entropy_rate" -> seqEntropyRate,
-    "seq_interarrival" -> seqInterarrival,
-    "seq_markov_prediction" -> seqMarkovPrediction,
-    "seq_srm" -> seqSrm,
-    "seq_power" -> seqPower,
-    "seq_anomaly" -> seqAnomaly,
-    "seq_changepoint" -> seqChangepoint,
-    "seq_periodicity" -> seqPeriodicity,
-    "seq_dau_wau" -> seqDauWau,
-    "seq_matchpath" -> seqMatchpath,
-    "seq_matchpath_counts" -> seqMatchpathCounts,
-    "seq_sessionize" -> seqSessionize,
-    "seq_concurrency" -> seqConcurrency,
-    "seq_funnel" -> seqFunnel,
-    "seq_retention" -> seqRetention,
-    "seq_transitions" -> seqTransitions
-  )
-
-  val oracleSql: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // CUPED: exact cent longs per user, int128 moments for theta, one
     // double division, fixed-shape IEEE adjustment chain quantized at
     // 1e-6; md5-parity arms; pooled variance from the quantized sums.
-    "seq_cuped" ->
+    QueryDef("seq_cuped", seqCuped,
       s"""WITH e AS (SELECT user_id, epoch_us(ts) AS tsu,
          |        CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS vc
          |      FROM events),
@@ -1578,10 +1543,10 @@ object Sequences {
          |  ${oRound("theta", 6)} AS theta,
          |  ${oRound("syy2 / nu - (sy2 / nu) * (sy2 / nu)", 6)} AS var_y,
          |  ${oRound("saa2 / nu - (sa2 / nu) * (sa2 / nu)", 6)} AS var_y_cuped
-         |FROM g, v ORDER BY arm""".stripMargin,
+         |FROM g, v ORDER BY arm""".stripMargin),
     // SRM: distinct users -> md5-parity arms -> 2-row count, chi2 one
     // fixed-shape chain over exact longs at 1e-6.
-    "seq_srm" ->
+    QueryDef("seq_srm", seqSrm,
       s"""WITH a AS (SELECT
          |    (('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))::BIGINT
          |      % 2) AS arm
@@ -1596,10 +1561,10 @@ object Sequences {
          |  (${oRound("(n_treat - e) * (n_treat - e) / e" +
              " + ((n - n_treat) - e) * ((n - n_treat) - e) / e", 6)}
          |    > 3.841) AS srm
-         |FROM x""".stripMargin,
+         |FROM x""".stripMargin),
     // Power: control-arm post-period cents moments (Σy² HUGEINT), the
     // pinned 15.6979 two-sample constant, one fixed-shape chain, ceil.
-    "seq_power" ->
+    QueryDef("seq_power", seqPower,
       s"""WITH e AS (SELECT user_id, epoch_us(ts) AS tsu,
          |        CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS vc
          |      FROM events),
@@ -1624,10 +1589,10 @@ object Sequences {
          |  CAST(CEIL(15.6979 * var_y
          |    / ((0.05 * mean_y) * (0.05 * mean_y))) AS BIGINT)
          |    AS n_required_per_arm
-         |FROM s1""".stripMargin,
+         |FROM s1""".stripMargin),
     // DiD: the cuped per-user frame, 2-row cell agg, quantized means,
     // one fixed-shape chain on the quantized means.
-    "seq_did" ->
+    QueryDef("seq_did", seqDid,
       s"""WITH e AS (SELECT user_id, epoch_us(ts) AS tsu,
          |        CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS vc
          |      FROM events),
@@ -1650,11 +1615,11 @@ object Sequences {
          |    m_post AS ctrl_post FROM cl WHERE arm = 0)
          |SELECT n_treat, n_ctrl, treat_pre, treat_post, ctrl_pre, ctrl_post,
          |  ${oRound("(treat_post - treat_pre) - (ctrl_post - ctrl_pre)", 6)} AS did
-         |FROM t, c""".stripMargin,
+         |FROM t, c""".stripMargin),
     // Holt: recursive CTE keyed on the row-number time index replays the
     // per-series fold; the trend update nests the NEW level's quantized
     // value exactly as the engine fold does.
-    "seq_forecast_holt" ->
+    QueryDef("seq_forecast_holt", seqForecastHolt,
       s"""WITH RECURSIVE dc AS (
          |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
          |      CAST(COUNT(*) AS DOUBLE) AS y
@@ -1678,13 +1643,13 @@ object Sequences {
          |SELECT event_type, CAST(n AS BIGINT) AS n_days,
          |  ${oRound("l", 6)} AS level, ${oRound("b", 6)} AS trend,
          |  ${oRound("l + b", 6)} AS fc_1, ${oRound("l + 7 * b", 6)} AS fc_7
-         |FROM st WHERE t = n ORDER BY event_type""".stripMargin,
+         |FROM st WHERE t = n ORDER BY event_type""".stripMargin),
     // Holt-Winters: the seasonal vector rides the recursion as SEVEN
     // columns (engine-portable — no list mutation), one slot updated
     // per step with the same repeated-expression arithmetic the Holt
     // oracle uses; init = classical two-season (week-1 mean level,
     // week-over-week trend, y_i - level seasonals).
-    "seq_holt_winters" -> {
+    QueryDef("seq_holt_winters", seqHoltWinters, {
       val sCur = "CASE r.t % 7 WHEN 0 THEN r.s0 WHEN 1 THEN r.s1" +
         " WHEN 2 THEN r.s2 WHEN 3 THEN r.s3 WHEN 4 THEN r.s4" +
         " WHEN 5 THEN r.s5 ELSE r.s6 END"
@@ -1730,11 +1695,11 @@ object Sequences {
          |  ${oRound(s"l + b + (${sAt("n % 7")})", 6)} AS fc_1,
          |  ${oRound(s"l + 7 * b + (${sAt("(n + 6) % 7")})", 6)} AS fc_7
          |FROM st WHERE t = n ORDER BY event_type""".stripMargin
-    },
+    }),
     // Mann-Kendall: exact integer S and tie sums off the bounded
     // (type, day) self-join; var quantized at 1e-6 before the sqrt, z
     // at 1e-6 after, so the 1.96 trend call has no float edge.
-    "seq_mann_kendall" ->
+    QueryDef("seq_mann_kendall", seqMannKendall,
       s"""WITH dc AS (SELECT event_type,
          |    epoch_us(ts) // 86400000000 AS day,
          |    CAST(COUNT(*) AS DOUBLE) AS y
@@ -1762,11 +1727,11 @@ object Sequences {
          |  CASE WHEN z > 1.96 THEN 'increasing'
          |       WHEN z < -1.96 THEN 'decreasing'
          |       ELSE 'none' END AS trend
-         |FROM z ORDER BY event_type""".stripMargin,
+         |FROM z ORDER BY event_type""".stripMargin),
     // Theil-Sen: pairwise slopes quantized at 1e-9 off the same bounded
     // self-join; medians are exact interpolating percentiles (the
     // agg_percentile precedent); slope/intercept round at 1e-6.
-    "seq_theil_sen" ->
+    QueryDef("seq_theil_sen", seqTheilSen,
       s"""WITH dc AS (SELECT event_type,
          |    epoch_us(ts) // 86400000000 AS day,
          |    CAST(COUNT(*) AS DOUBLE) AS y
@@ -1785,11 +1750,11 @@ object Sequences {
          |  ${oRound("sl.slope_med", 6)} AS slope,
          |  ${oRound("md.y_med - sl.slope_med * md.day_med", 6)} AS intercept
          |FROM md JOIN sl USING (event_type)
-         |ORDER BY event_type""".stripMargin,
+         |ORDER BY event_type""".stripMargin),
     // Winsorized mean: exact interpolating percentile bounds, raw
     // doubles clamped against the EXACT bounds, both means on the
     // quantized-sum discipline, bounds reported at 1e-6.
-    "seq_winsorized_mean" ->
+    QueryDef("seq_winsorized_mean", seqWinsorizedMean,
       s"""WITH b AS (SELECT event_type,
          |    quantile_cont(value, 0.01) AS p01,
          |    quantile_cont(value, 0.99) AS p99
@@ -1804,12 +1769,12 @@ object Sequences {
          |  ${oRound("MIN(b.p01)", 6)} AS p01,
          |  ${oRound("MIN(b.p99)", 6)} AS p99
          |FROM events e JOIN b USING (event_type)
-         |GROUP BY 1 ORDER BY e.event_type""".stripMargin,
+         |GROUP BY 1 ORDER BY e.event_type""".stripMargin),
     // STL-lite: trend = centered 7-day MA over the calendar-bounded
     // (type, day) frame (integer-valued daily counts -> exact window
     // sums), seasonal = dow mean of the detrended series at the
     // dsum(6)/count grain, residual from the quantized pieces.
-    "seq_stl_decompose" ->
+    QueryDef("seq_stl_decompose", seqStlDecompose,
       s"""WITH dc AS (SELECT event_type,
          |    epoch_us(ts) // 86400000000 AS day,
          |    CAST(COUNT(*) AS DOUBLE) AS y
@@ -1825,12 +1790,12 @@ object Sequences {
          |SELECT t.event_type, t.day, t.y, t.trend, s.seasonal,
          |  ${oRound("t.y - t.trend - s.seasonal", 6)} AS resid
          |FROM tr t JOIN se s ON s.event_type = t.event_type AND s.dow = t.dow
-         |ORDER BY t.event_type, t.day""".stripMargin,
+         |ORDER BY t.event_type, t.day""".stripMargin),
     // Entropy rate: seq_transitions' lag shape; probabilities quantized
     // at 1e-9 BEFORE the log, each -p ln p term at 1e-9 before the
     // exact sum; the grand total rides a scalar subquery (a comma cross
     // join of tiny frames can plan as CartesianProduct).
-    "seq_entropy_rate" ->
+    QueryDef("seq_entropy_rate", seqEntropyRate,
       s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu,
          |    event_type FROM events),
          |x AS (SELECT event_type,
@@ -1849,10 +1814,10 @@ object Sequences {
          |  ${oRound("CAST(h.tot AS DOUBLE) / (SELECT CAST(SUM(tot) AS BIGINT) FROM tt)", 6)} AS share,
          |  ${oRound("h.entropy_raw", 6)} AS entropy_nats,
          |  ${oRound("CAST(h.tot AS DOUBLE) / (SELECT CAST(SUM(tot) AS BIGINT) FROM tt) * h.entropy_raw", 6)} AS rate_contrib
-         |FROM h ORDER BY h.prev""".stripMargin,
+         |FROM h ORDER BY h.prev""".stripMargin),
     // Inter-arrival quantiles: burstiness' per-(user, type) gap shape,
     // exact interpolated quantile_cont == Spark percentile.
-    "seq_interarrival" ->
+    QueryDef("seq_interarrival", seqInterarrival,
       s"""WITH e AS (SELECT user_id, event_type, event_id,
          |    epoch_us(ts) AS tsu FROM events),
          |g AS (SELECT event_type,
@@ -1864,10 +1829,10 @@ object Sequences {
          |  ${oRound("quantile_cont(gap_s, 0.9)", 6)} AS p90_s,
          |  ${oRound("quantile_cont(gap_s, 0.99)", 6)} AS p99_s
          |FROM g WHERE gap_s IS NOT NULL
-         |GROUP BY event_type ORDER BY event_type""".stripMargin,
+         |GROUP BY event_type ORDER BY event_type""".stripMargin),
     // Modal-transition accuracy: the window-free min(struct) argmax
     // over the transition frame; accuracy from the per-state total.
-    "seq_markov_prediction" ->
+    QueryDef("seq_markov_prediction", seqMarkovPrediction,
       s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu,
          |    event_type FROM events),
          |x AS (SELECT event_type,
@@ -1885,12 +1850,12 @@ object Sequences {
          |    CAST(-best.nc AS BIGINT) AS modal_cnt FROM bs)
          |SELECT b2.prev, tt.tot AS n_out, b2.modal_next, b2.modal_cnt,
          |  ${oRound("b2.modal_cnt * 1.0 / tt.tot", 6)} AS accuracy
-         |FROM b2 JOIN tt USING (prev) ORDER BY b2.prev""".stripMargin,
+         |FROM b2 JOIN tt USING (prev) ORDER BY b2.prev""".stripMargin),
     // Markov attribution: identical journey segmentation, 1e-9-quantized
     // transition probs, and the SAME 12-step truncated absorption fixed
     // point unrolled as MATERIALIZED CTEs (one per step, default CTE
     // inlining would re-expand the chain per reference — the PCA rule).
-    "seq_attribution_markov" -> {
+    QueryDef("seq_attribution_markov", seqAttributionMarkov, {
       val stepCtes = (1 to 12).map { k =>
         s"""p$k AS MATERIALIZED (
            |  SELECT t.v, t.frm AS state, ${oSum("t.p * a.pv", 9)} AS pv
@@ -1962,10 +1927,10 @@ object Sequences {
          |  ${oRound("CASE WHEN re_tot <= 0 THEN 0.0 ELSE re / re_tot END", 6)} AS share,
          |  ${oRound("(CASE WHEN re_tot <= 0 THEN 0.0 ELSE re / re_tot END) * (vc / 100.0)", 2)} AS attributed_value
          |FROM x ORDER BY channel""".stripMargin
-    },
+    }),
     // Attribution: exact-cents before division, identical left-assoc
     // double ops, per-purchase windows, anti-join direct bucket.
-    "seq_attribution" ->
+    QueryDef("seq_attribution", seqAttribution,
       s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu,
          |             event_type, value FROM events),
          |p AS (SELECT user_id, event_id AS p_id, tsu AS ptsu,
@@ -1995,11 +1960,11 @@ object Sequences {
          |      FROM p WHERE NOT EXISTS
          |        (SELECT 1 FROM pr WHERE pr.p_id = p.p_id))
          |SELECT * FROM credited UNION ALL SELECT * FROM direct
-         |ORDER BY touch_type""".stripMargin,
+         |ORDER BY touch_type""".stripMargin),
     // Cohort LTV: exact-cents quantization before summation, user-keyed
     // cohort join, per-cohort cumulation over the bounded (cohort, age)
     // frame.
-    "seq_cohort_ltv" ->
+    QueryDef("seq_cohort_ltv", seqCohortLtv,
       s"""WITH e AS (SELECT user_id, epoch_us(ts) // 604800000000 AS wk,
          |    event_type, value FROM events),
          |coh AS (SELECT user_id, MIN(wk) AS cw FROM e GROUP BY user_id),
@@ -2023,11 +1988,11 @@ object Sequences {
          |  ${oRound("CAST(cum_cents AS DOUBLE) / 100" +
              " / CAST(n_cohort AS DOUBLE)", 6)} AS ltv_per_user
          |FROM cum JOIN sz USING (cw)
-         |ORDER BY cohort_week, age_weeks""".stripMargin,
+         |ORDER BY cohort_week, age_weeks""".stripMargin),
     // KM/NA: one per-user min/max agg, then suffix/cumulative windows
     // over the bounded lifetime-day frame; 1e-9-quantized log/hazard
     // cumsums, d = n short-circuited before ln(0).
-    "seq_survival" ->
+    QueryDef("seq_survival", seqSurvival,
       s"""WITH e AS (SELECT user_id, epoch_us(ts) AS tsu, event_type
          |  FROM events),
          |per AS (SELECT user_id, MIN(tsu) AS f,
@@ -2070,10 +2035,10 @@ object Sequences {
          |    END AS km_survival,
          |  ${oRound("CAST(qh AS DOUBLE) / 1000000000.0", 6)}
          |    AS na_cum_hazard
-         |FROM cum ORDER BY dur_hours""".stripMargin,
+         |FROM cum ORDER BY dur_hours""".stripMargin),
     // Same (user, type) lag gaps in integer seconds; exact moments,
     // identical IEEE cv chain.
-    "seq_burstiness" ->
+    QueryDef("seq_burstiness", seqBurstiness,
       s"""WITH e AS (SELECT user_id, event_type, event_id,
          |             epoch_us(ts) AS tsu FROM events),
          |g0 AS (SELECT event_type,
@@ -2091,10 +2056,10 @@ object Sequences {
          |  ${oRound("mean_s", 6)} AS mean_gap_s,
          |  ${oRound("sqrt(greatest(CAST(qg AS DOUBLE)/n_gaps - mean_s*mean_s, 0.0))/mean_s", 6)} AS cv,
          |  (${oRound("sqrt(greatest(CAST(qg AS DOUBLE)/n_gaps - mean_s*mean_s, 0.0))/mean_s", 6)} > 1.0) AS bursty
-         |FROM z ORDER BY event_type""".stripMargin,
+         |FROM z ORDER BY event_type""".stripMargin),
     // Same pinned (cnt, user_id) ranking via a PLAIN global row_number —
     // the independent derivation of the engine's bucket decomposition.
-    "seq_gini" ->
+    QueryDef("seq_gini", seqGini,
       s"""WITH c AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS cnt
          |           FROM events GROUP BY user_id),
          |r AS (SELECT cnt,
@@ -2103,10 +2068,10 @@ object Sequences {
          |  CAST(SUM(cnt) AS BIGINT) AS total_events,
          |  ${oRound("2.0*SUM(rnk*cnt)/(COUNT(*)*SUM(cnt)) - CAST(COUNT(*)+1 AS DOUBLE)/COUNT(*)", 6)}
          |    AS gini
-         |FROM r""".stripMargin,
+         |FROM r""".stripMargin),
     // Same lag adjacency and count frame as seq_transitions; the bits
     // join replays the integer bin-length log2 per transition.
-    "seq_user_surprise" ->
+    QueryDef("seq_user_surprise", seqUserSurprise,
       s"""WITH e AS (SELECT user_id, event_type, event_id,
          |             epoch_us(ts) AS tsu FROM events),
          |adj0 AS (SELECT user_id, event_type AS next,
@@ -2125,10 +2090,10 @@ object Sequences {
          |SELECT a.user_id, CAST(COUNT(*) AS BIGINT) AS n_trans,
          |  ${oRound("CAST(SUM(b.bits) AS DOUBLE)/COUNT(*)", 6)} AS avg_bits
          |FROM adj a JOIN bts b ON b.prev = a.prev AND b.next = a.next
-         |GROUP BY a.user_id ORDER BY a.user_id""".stripMargin,
+         |GROUP BY a.user_id ORDER BY a.user_id""".stripMargin),
     // Same forward-marker derivation (day + 0..6), independent DuckDB
     // spelling via unnest(range()).
-    "seq_dau_wau" ->
+    QueryDef("seq_dau_wau", seqDauWau,
       s"""WITH ud AS (SELECT DISTINCT user_id,
          |              epoch_us(ts) // 86400000000 AS day FROM events),
          |dau AS (SELECT day, CAST(COUNT(*) AS BIGINT) AS dau
@@ -2141,10 +2106,10 @@ object Sequences {
          |SELECT d.day, d.dau, w.wau,
          |  ${oRound("CAST(d.dau AS DOUBLE) / w.wau", 6)} AS stickiness
          |FROM dau d JOIN wau w ON w.wday = d.day
-         |ORDER BY d.day""".stripMargin,
+         |ORDER BY d.day""".stripMargin),
     // Same quantized-deviation frame; calendar-lag self-join, exact
     // integer numerator/denominator, one quantized division per lag.
-    "seq_periodicity" ->
+    QueryDef("seq_periodicity", seqPeriodicity,
       s"""WITH d AS (SELECT epoch_us(ts) // 86400000000 AS day,
          |             CAST(COUNT(*) AS BIGINT) AS cnt
          |           FROM events GROUP BY day),
@@ -2160,10 +2125,10 @@ object Sequences {
          |      GROUP BY l.lag)
          |SELECT p.lag, p.n_pairs,
          |  ${oRound("CAST(p.num AS DOUBLE)/ss.ss", 6)} AS autocorr
-         |FROM p, ss ORDER BY lag""".stripMargin,
+         |FROM p, ss ORDER BY lag""".stripMargin),
     // Same integer day buckets; per-day deviation quantized to BIGINT
     // before the running sum (order-free), identical argmax ranking.
-    "seq_changepoint" ->
+    QueryDef("seq_changepoint", seqChangepoint,
       s"""WITH d AS (SELECT epoch_us(ts) // 86400000000 AS day,
          |             CAST(COUNT(*) AS BIGINT) AS cnt
          |           FROM events GROUP BY day),
@@ -2177,10 +2142,10 @@ object Sequences {
          |        rank() OVER (ORDER BY abs(cusum) DESC, day) AS rk FROM c)
          |SELECT day, cnt, ${oRound("mean", 6)} AS mean_cnt, cusum,
          |  rk = 1 AS is_changepoint
-         |FROM r ORDER BY day""".stripMargin,
+         |FROM r ORDER BY day""".stripMargin),
     // Same integer day buckets and exact-integer-sum moments; the z chain
     // is spelled with the identical IEEE op shape (q/n − (s/n)·(s/n)).
-    "seq_anomaly" ->
+    QueryDef("seq_anomaly", seqAnomaly,
       s"""WITH d AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
          |             CAST(COUNT(*) AS BIGINT) AS cnt
          |           FROM events GROUP BY user_id, day),
@@ -2197,8 +2162,8 @@ object Sequences {
          |SELECT user_id, day, cnt, ${oRound("mean", 6)} AS mean_cnt,
          |  ${oRound("(cnt - mean)/sd", 6)} AS z
          |FROM z WHERE sd > 0 AND ${oRound("(cnt - mean)/sd", 6)} > 2.0
-         |ORDER BY user_id, day""".stripMargin,
-    "seq_matchpath" ->
+         |ORDER BY user_id, day""".stripMargin),
+    QueryDef("seq_matchpath", seqMatchpath,
       s"""WITH ev AS (
          |  SELECT user_id, event_id, value, substr(event_type, 1, 1) AS sym,
          |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pos
@@ -2225,8 +2190,8 @@ object Sequences {
          |  ${oRound("SUM(e.value)", 2)} AS total_value
          |FROM m JOIN ev e ON e.user_id = m.user_id AND e.pos BETWEEN m.cpos AND m.ppos
          |GROUP BY m.user_id, m.match_idx, m.cpos, m.ppos
-         |ORDER BY m.user_id, match_idx""".stripMargin,
-    "seq_matchpath_counts" ->
+         |ORDER BY m.user_id, match_idx""".stripMargin),
+    QueryDef("seq_matchpath_counts", seqMatchpathCounts,
       """WITH seq AS (
         |  SELECT user_id,
         |         string_agg(substr(event_type, 1, 1), '' ORDER BY ts, event_id) AS sym
@@ -2234,17 +2199,17 @@ object Sequences {
         |m AS (SELECT user_id, regexp_extract_all(sym, 'cv+p') AS ms FROM seq)
         |SELECT user_id, CAST(len(ms) AS BIGINT) AS n_matches,
         |       CAST(list_sum(list_transform(ms, x -> len(x))) AS BIGINT) AS n_steps_total
-        |FROM m WHERE len(ms) > 0 ORDER BY user_id""".stripMargin,
-    "seq_sessionize" ->
+        |FROM m WHERE len(ms) > 0 ORDER BY user_id""".stripMargin),
+    QueryDef("seq_sessionize", seqSessionize,
       s"""WITH $sessionCtesSql
          |SELECT user_id, CAST(session_idx AS INT) AS session_idx,
          |  COUNT(*) AS n_events, MIN(tsu) AS start_tsu, MAX(tsu) AS end_tsu,
          |  ${oSum("value", 2)} AS total_value
          |FROM s GROUP BY user_id, session_idx
-         |ORDER BY user_id, session_idx""".stripMargin,
+         |ORDER BY user_id, session_idx""".stripMargin),
     // Same per-user aggs; quantile_cont thresholds (≡ Spark percentile)
     // in one scalar subquery row, identical 1–5 scoring arithmetic.
-    "seq_rfm" -> {
+    QueryDef("seq_rfm", seqRfm, {
       val qSql = Seq("recency_days", "frequency", "monetary").flatMap(m =>
         Seq(20, 40, 60, 80).map(k =>
           s"quantile_cont(${m}, 0.${k}) AS ${m.head}${k}")).mkString(",\n|        ")
@@ -2269,10 +2234,10 @@ object Sequences {
          |    + ${upSql("r.frequency", "f")} * 10
          |    + ${upSql("r.monetary", "m")} AS INT) AS rfm
          |FROM r, t ORDER BY r.user_id""".stripMargin
-    },
+    }),
     // Same (ts, event_id)-ordered lag adjacency; row-count normalizer
     // per prev state.
-    "seq_transitions" ->
+    QueryDef("seq_transitions", seqTransitions,
       s"""WITH e AS (SELECT user_id, event_type, event_id,
          |             epoch_us(ts) AS tsu FROM events),
          |adj AS (SELECT event_type AS next,
@@ -2285,10 +2250,10 @@ object Sequences {
          |      FROM c GROUP BY prev)
          |SELECT c.prev, c.next, c.cnt,
          |  ${oRound("CAST(c.cnt AS DOUBLE) / t.tot", 6)} AS p
-         |FROM c JOIN t USING (prev) ORDER BY prev, next""".stripMargin,
+         |FROM c JOIN t USING (prev) ORDER BY prev, next""".stripMargin),
     // (user, day) dedup -> user-keyed cohort min -> offset join; the
     // independent DuckDB derivation uses the same integer day buckets.
-    "seq_retention" ->
+    QueryDef("seq_retention", seqRetention,
       s"""WITH d AS (SELECT DISTINCT user_id,
          |             epoch_us(ts) // 86400000000 AS day FROM events),
          |c AS (SELECT user_id, MIN(day) AS cday FROM d GROUP BY user_id),
@@ -2300,10 +2265,10 @@ object Sequences {
          |      WHERE d.day - c.cday <= 7 GROUP BY c.cday, off)
          |SELECT a.cday, a.off, a.n_active, s.n_cohort,
          |  ${oRound("CAST(a.n_active AS DOUBLE) / s.n_cohort", 6)} AS retention
-         |FROM a JOIN s USING (cday) ORDER BY cday, off""".stripMargin,
+         |FROM a JOIN s USING (cday) ORDER BY cday, off""".stripMargin),
     // Identical earliest-qualifying-event chaining; lag over the 3-row
     // result frame for the conversion ratio.
-    "seq_funnel" ->
+    QueryDef("seq_funnel", seqFunnel,
       s"""WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS tsu
          |           FROM events),
          |t1 AS (SELECT user_id, MIN(tsu) AS t1 FROM e
@@ -2324,11 +2289,11 @@ object Sequences {
          |SELECT step, etype, n_users,
          |  ${oRound("CAST(n_users AS DOUBLE) / lag(n_users) OVER (ORDER BY step)", 6)}
          |    AS conv
-         |FROM c ORDER BY step""".stripMargin,
+         |FROM c ORDER BY step""".stripMargin),
     // Deliberately the UNSPLIT global running sum (vs the engine's
     // bucket-decomposed prefix sum) — an independent derivation of the
     // same sweep, so a decomposition bug cannot hide.
-    "seq_concurrency" ->
+    QueryDef("seq_concurrency", seqConcurrency,
       s"""WITH $sessionCtesSql,
          |sess AS (SELECT user_id, session_idx, MIN(tsu) AS start_tsu,
          |           MAX(tsu) AS end_tsu
@@ -2344,7 +2309,7 @@ object Sequences {
          |SELECT m.day, m.max_conc, MIN(c.tsu) AS at_tsu
          |FROM c JOIN m ON c.day = m.day AND c.conc = m.max_conc
          |GROUP BY m.day, m.max_conc
-         |ORDER BY m.day""".stripMargin
+         |ORDER BY m.day""".stripMargin)
   )
 
   /** Shared DuckDB session CTE chain (gaps-and-islands over `events`) —

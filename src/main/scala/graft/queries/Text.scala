@@ -508,20 +508,7 @@ object Text {
         .filter(col("a") =!= col("b"))
         .distinct()
     }
-    // Each round's edge set is checkpointed (eager): persist alone caches
-    // results but leaves the logical plan nested, so the plan tree grows
-    // multiplicatively per round and per-action plan stringification
-    // OOMs. Checkpointing truncates lineage to the materialized RDD;
-    // superseded rounds are freed by the context cleaner once
-    // unreferenced. When the session has a checkpoint dir configured
-    // (a cluster run), use RELIABLE checkpoints — localCheckpoint blocks
-    // live on executors and an executor loss mid-iteration would kill
-    // the job; on a 1000-executor 100 TB run that is a certainty, not a
-    // tail risk. Local runs (no dir) keep the cheap executor-local path.
-    def ckpt(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint()
-      else df.localCheckpoint()
+    // Each round's edge set is checkpointed eagerly (`ckpt`, queries package).
     // Checkpoint + edge count in ONE job: observe() plants a
     // CollectMetricsExec above the star step, and the eager checkpoint's
     // internal materialization action delivers the metric — verified
@@ -7116,136 +7103,6 @@ object Text {
       id => id % 7 === 0)
       .orderBy("doc_id", "eval_id")
 
-  val queries: Map[String, Q] = Map(
-    "llm_exact_dedup" -> llmExactDedup,
-    "llm_url_dedup" -> llmUrlDedup,
-    "llm_dedup_rows" -> llmDedupRows,
-    "llm_minhash_lsh" -> llmMinhashLsh,
-    "llm_lsh_capped" -> llmLshCapped,
-    "llm_dedup_cc" -> llmDedupCc,
-    "llm_dedup_incremental" -> llmDedupIncremental,
-    "llm_simhash" -> llmSimhash,
-    "llm_simhash_neardup" -> llmSimhashNeardup,
-    "llm_ngram_jaccard" -> llmNgramJaccard,
-    "llm_cosine_topk" -> llmCosineTopk,
-    "llm_ndcg_eval" -> llmNdcgEval,
-    "llm_rouge_overlap" -> llmRougeOverlap,
-    "llm_embed_quantize" -> llmEmbedQuantize,
-    "llm_random_proj" -> llmRandomProj,
-    "llm_pca_project" -> llmPcaProject,
-    "llm_ann_lsh" -> llmAnnLsh,
-    "llm_embed_neardup" -> llmEmbedNeardup,
-    "llm_ann_ivf" -> llmAnnIvf,
-    "llm_ann_ivf_trained" -> llmAnnIvfTrained,
-    "llm_ann_ivf_int8" -> llmAnnIvfInt8,
-    "llm_ann_pq" -> llmAnnPq,
-    "llm_ann_ivfpq" -> llmAnnIvfPq,
-    "llm_lang_id" -> llmLangId,
-    "llm_quality_score" -> llmQualityScore,
-    "llm_lm_quality" -> llmLmQuality,
-    "llm_lm_bigram" -> llmLmBigram,
-    "llm_lm_trigram" -> llmLmTrigram,
-    "llm_ccnet_buckets" -> llmCcnetBuckets,
-    "llm_semdedup" -> llmSemdedup,
-    "llm_semdedup_cc" -> llmSemdedupCc,
-    "llm_cluster_sample" -> llmClusterSample,
-    "llm_mix_weights" -> llmMixWeights,
-    "llm_dsir_select" -> llmDsirSelect,
-    "llm_quality_classifier" -> llmQualityClassifier,
-    "llm_conformal" -> llmConformal,
-    "llm_gopher_rules" -> llmGopherRules,
-    "llm_token_count" -> llmTokenCount,
-    "llm_tokenize" -> llmTokenize,
-    "llm_chunk_split" -> llmChunkSplit,
-    "llm_tfidf_top" -> llmTfidfTop,
-    "llm_bm25_topk" -> llmBm25Topk,
-    "llm_rrf_fusion" -> llmRrfFusion,
-    "llm_stratified_sample" -> llmStratifiedSample,
-    "llm_weighted_sample" -> llmWeightedSample,
-    "llm_drift_psi" -> llmDriftPsi,
-    "llm_drift_ks" -> llmDriftKs,
-    "llm_corpus_diff" -> llmCorpusDiff,
-    "llm_quality_calibrate" -> llmQualityCalibrate,
-    "llm_zipf_fit" -> llmZipfFit,
-    "llm_heaps_law" -> llmHeapsLaw,
-    "llm_unimax" -> llmUnimax,
-    "llm_bootstrap_ci" -> llmBootstrapCi,
-    "llm_k_anon" -> llmKAnon,
-    "llm_l_diversity" -> llmLDiversity,
-    "llm_t_closeness" -> llmTCloseness,
-    "llm_kmv_ndv" -> llmKmvNdv,
-    "llm_cms_topk" -> llmCmsTopk,
-    "llm_dp_release" -> llmDpRelease,
-    "llm_rho_select" -> llmRhoSelect,
-    "llm_boilerplate" -> llmBoilerplate,
-    "llm_source_hhi" -> llmSourceHhi,
-    "llm_sketch_setops" -> llmSketchSetops,
-    "llm_rake_keywords" -> llmRakeKeywords,
-    "llm_code_detect" -> llmCodeDetect,
-    "llm_topic_mix" -> llmTopicMix,
-    "llm_lm_perplexity" -> llmLmPerplexity,
-    "llm_js_divergence" -> llmJsDivergence,
-    "llm_length_profile" -> llmLengthProfile,
-    "llm_ngram_containment" -> llmNgramContainment,
-    "llm_dedup_threshold_curve" -> llmDedupThresholdCurve,
-    "llm_mmr_rerank" -> llmMmrRerank,
-    "llm_collocations" -> llmCollocations,
-    "llm_textrank" -> llmTextrank,
-    "llm_charngram_langid" -> llmCharngramLangid,
-    "llm_char_entropy" -> llmCharEntropy,
-    "llm_embed_clip" -> llmEmbedClip,
-    "llm_dedup_weights" -> llmDedupWeights,
-    "llm_vocab_coverage" -> llmVocabCoverage,
-    "llm_split_assign" -> llmSplitAssign,
-    "llm_pack_sequences" -> llmPackSequences,
-    "llm_corpus_select" -> llmCorpusSelect,
-    "llm_fingerprint" -> llmFingerprint,
-    "llm_multimodal" -> llmMultimodal,
-    "llm_multimodal_decode" -> llmMultimodalDecode,
-    "llm_media_manifest" -> llmMediaManifest,
-    "llm_contamination" -> llmContamination,
-    "llm_domain_mix" -> llmDomainMix,
-    "llm_pii_scrub" -> llmPiiScrub,
-    "llm_html_extract" -> llmHtmlExtract,
-    "llm_source_cap" -> llmSourceCap,
-    "llm_repetition" -> llmRepetition,
-    "llm_dup_chunks" -> llmDupChunks,
-    "llm_span_dedup" -> llmSpanDedup,
-    "llm_suffix_dedup" -> llmSuffixDedup,
-    "llm_suffix_scrub" -> llmSuffixScrub,
-    "llm_chunk_scrub" -> llmChunkScrub,
-    "llm_source_stats" -> llmSourceStats,
-    "llm_corpus_pipeline" -> llmCorpusPipeline,
-    "llm_corpus_pipeline_v2" -> llmCorpusPipelineV2,
-    "llm_corpus_pipeline_v3" -> llmCorpusPipelineV3,
-    "llm_winnow" -> llmWinnow,
-    "llm_bpe_merges" -> llmBpeMerges,
-    "llm_bpe_train" -> llmBpeTrain,
-    "llm_bpe_encode" -> llmBpeEncode,
-    "llm_shuffle_order" -> llmShuffleOrder,
-    "llm_token_budget" -> llmTokenBudget,
-    "llm_contamination_fuzzy" -> llmContaminationFuzzy,
-    "llm_text_normalize" -> llmTextNormalize,
-    "llm_lm_kn" -> llmLmKn,
-    "llm_readability" -> llmReadability,
-    "llm_knn_graph" -> llmKnnGraph,
-    "llm_cdc_chunks" -> llmCdcChunks,
-    "llm_tokenizer_fertility" -> llmTokenizerFertility,
-    "llm_lexical_diversity" -> llmLexicalDiversity,
-    "llm_embed_outliers" -> llmEmbedOutliers,
-    "llm_minhash_calibration" -> llmMinhashCalibration,
-    "llm_ngram_novelty" -> llmNgramNovelty,
-    "llm_knn_classify" -> llmKnnClassify,
-    "llm_hard_negatives" -> llmHardNegatives,
-    "llm_split_leakage" -> llmSplitLeakage,
-    "llm_matryoshka_recall" -> llmMatryoshkaRecall,
-    "llm_score_agreement" -> llmScoreAgreement,
-    "llm_blocklist_filter" -> llmBlocklistFilter,
-    "llm_span_corrupt" -> llmSpanCorrupt,
-    "llm_fim" -> llmFim,
-    "llm_ivf_balance" -> llmIvfBalance
-  )
-
   // ---------------------------------------------------------------- oracle
 
   /** DuckDB twin of `wordHashRows`→`shingleIdRows`: 28-bit md5 word
@@ -7769,12 +7626,12 @@ object Text {
        |  FROM assigned a JOIN assigned b ON a.cell = b.cell AND a.vec_id < b.vec_id
        |  $pairFilter)""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "llm_exact_dedup" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("llm_exact_dedup", llmExactDedup,
       """SELECT h AS content_hash, min(doc_id) AS keeper, COUNT(*) AS copies
         |FROM (SELECT doc_id, sha256(text) AS h FROM documents) t
-        |GROUP BY h ORDER BY keeper""".stripMargin,
-    "llm_url_dedup" ->
+        |GROUP BY h ORDER BY keeper""".stripMargin),
+    QueryDef("llm_url_dedup", llmUrlDedup,
       s"""WITH u AS (
          |  SELECT doc_id, n_chars, ${syntheticUrlSql("VARCHAR")} AS url
          |  FROM documents),
@@ -7817,8 +7674,8 @@ object Text {
          |SELECT canonical_url, CAST(COUNT(*) AS BIGINT) AS dup_cnt,
          |  MIN(CASE WHEN rn = 1 THEN doc_id END) AS keeper_id,
          |  MAX(n_chars) AS best_chars
-         |FROM r GROUP BY canonical_url ORDER BY canonical_url""".stripMargin,
-    "llm_dedup_rows" ->
+         |FROM r GROUP BY canonical_url ORDER BY canonical_url""".stripMargin),
+    QueryDef("llm_dedup_rows", llmDedupRows,
       s"""WITH ranked AS (
          |  SELECT l_returnflag, l_quantity,
          |    row_number() OVER (PARTITION BY l_orderkey, l_linenumber
@@ -7826,20 +7683,20 @@ object Text {
          |               l_returnflag, l_linestatus, l_shipdate) AS rn
          |  FROM lineitem)
          |SELECT l_returnflag, COUNT(*) AS kept, ${oSum("l_quantity")} AS kept_qty
-         |FROM ranked WHERE rn = 1 GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "llm_minhash_lsh" -> minhashSql,
-    "llm_lsh_capped" ->
+         |FROM ranked WHERE rn = 1 GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    QueryDef("llm_minhash_lsh", llmMinhashLsh, minhashSql),
+    QueryDef("llm_lsh_capped", llmLshCapped,
       s"""WITH ${bucketCtes(2)}
          |SELECT band, sig, doc_id FROM buckets
-         |ORDER BY band, sig, doc_id""".stripMargin,
-    "llm_dedup_cc" -> dedupCcSql,
-    "llm_dedup_incremental" -> dedupIncrementalSql,
-    "llm_simhash" -> simhashSql,
-    "llm_simhash_neardup" -> simhashNeardupSql,
+         |ORDER BY band, sig, doc_id""".stripMargin),
+    QueryDef("llm_dedup_cc", llmDedupCc, dedupCcSql),
+    QueryDef("llm_dedup_incremental", llmDedupIncremental, dedupIncrementalSql),
+    QueryDef("llm_simhash", llmSimhash, simhashSql),
+    QueryDef("llm_simhash_neardup", llmSimhashNeardup, simhashNeardupSql),
     // Candidate pairs come from the SAME banded-LSH CTE chain as the
     // minhash oracle (shared fragment — no drift); the bigram verify
     // then re-joins each side's distinct bigram-id set.
-    "llm_ngram_jaccard" ->
+    QueryDef("llm_ngram_jaccard", llmNgramJaccard,
       s"""WITH $minhashPairsCtes,
          |cand AS (SELECT DISTINCT doc_a, doc_b FROM pairs),
          |g AS (
@@ -7849,12 +7706,12 @@ object Text {
          |  CAST(FLOOR((len(list_filter(a.g, x -> list_contains(b.g, x))) * 1.0 /
          |    len(list_distinct(list_concat(a.g, b.g))))*1000000.0+0.5) AS DOUBLE)/1000000.0 AS bigram_jac
          |FROM cand c JOIN g a ON a.doc_id = c.doc_a JOIN g b ON b.doc_id = c.doc_b
-         |ORDER BY doc_a, doc_b""".stripMargin,
+         |ORDER BY doc_a, doc_b""".stripMargin),
     // Threshold curve: the jaccard chain + a 5-row threshold frame;
     // zero-pair thresholds stay visible via the left joins; the
     // threshold column CASTs to DOUBLE (a bare VALUES decimal would
     // type-mismatch the builder's double).
-    "llm_dedup_threshold_curve" -> {
+    QueryDef("llm_dedup_threshold_curve", llmDedupThresholdCurve, {
       s"""WITH $minhashPairsCtes,
          |cand AS (SELECT DISTINCT doc_a, doc_b FROM pairs),
          |g AS (
@@ -7882,20 +7739,20 @@ object Text {
          |  CAST(COALESCE(d.n_dup_docs, 0) AS BIGINT) AS n_dup_docs
          |FROM th LEFT JOIN c USING (threshold) LEFT JOIN d USING (threshold)
          |ORDER BY threshold""".stripMargin
-    },
+    }),
     // Containment: the ngram_jaccard chain with asymmetric |A∩B|/|A|
     // read-outs; embedded = high max-containment at low Jaccard, off
     // the already-quantized values (no float boundary).
-    "llm_ngram_containment" -> {
+    QueryDef("llm_ngram_containment", llmNgramContainment, {
       s"""WITH $minhashPairsCtes,
          |${containmentCtes("cand", "g", "j", "j2")}
          |SELECT doc_a, doc_b, n_a, n_b, n_inter, cont_a, cont_b, jaccard,
          |  (GREATEST(cont_a, cont_b) >= 0.8 AND jaccard < 0.5) AS embedded
          |FROM j2 ORDER BY doc_a, doc_b""".stripMargin
-    },
+    }),
     // Split leakage: the ngram_jaccard chain verbatim, each side tagged
     // with the split_assign md5-bucket rule, aggregated per category.
-    "llm_split_leakage" -> {
+    QueryDef("llm_split_leakage", llmSplitLeakage, {
       def splitSql(c: String) =
         s"CASE WHEN ('0x' || substr(md5(CAST($c AS VARCHAR)), 1, 4))::INT % 100 < 95 THEN 'train' ELSE 'val' END"
       s"""WITH $minhashPairsCtes,
@@ -7918,8 +7775,8 @@ object Text {
          |    AS n_neardup,
          |  ${oRound("MAX(bigram_jac)", 6)} AS max_jac
          |FROM s GROUP BY 1 ORDER BY cat""".stripMargin
-    },
-    "llm_contamination" ->
+    }),
+    QueryDef("llm_contamination", llmContamination,
       s"""WITH g AS (
          |  SELECT doc_id, ${hashGramSql(4)} AS g
          |  FROM ($wordHashSql) t WHERE nw >= 4),
@@ -7929,8 +7786,8 @@ object Text {
          |SELECT c.doc_id, COUNT(*) AS n_shared, CAST(c.n_grams AS INT) AS n_grams,
          |  ${oRound("COUNT(*) * 1.0 / c.n_grams", 6)} AS contam_ratio
          |FROM c JOIN eg ON c.gm = eg.gm
-         |GROUP BY c.doc_id, c.n_grams ORDER BY doc_id""".stripMargin,
-    "llm_repetition" ->
+         |GROUP BY c.doc_id, c.n_grams ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_repetition", llmRepetition,
       s"""WITH b AS (
          |  SELECT doc_id, len(hs) AS n_words, len(list_distinct(hs)) AS n_distinct,
          |    ${hashGramSql(2, distinct = false)} AS bg
@@ -7943,8 +7800,8 @@ object Text {
          |  tc.top_bigram_count,
          |  ${oRound("tc.top_bigram_count * 1.0 / (b.n_words - 1)", 6)} AS top_bigram_frac,
          |  (tc.top_bigram_count * 1.0 / (b.n_words - 1) > 0.20) AS repetitive
-         |FROM b JOIN tc USING (doc_id) ORDER BY doc_id""".stripMargin,
-    "llm_dup_chunks" ->
+         |FROM b JOIN tc USING (doc_id) ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_dup_chunks", llmDupChunks,
       s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          |b AS (SELECT doc_id, list_distinct(list_transform(range(((len(ws)-1)//20)+1),
          |       i -> md5(array_to_string(ws[i*20+1:i*20+20], ' ')))) AS ch FROM w),
@@ -7955,8 +7812,8 @@ object Text {
          |  ${oRound("SUM(CASE WHEN c.n_docs > 1 THEN 1 ELSE 0 END) * 1.0 / e.n_chunks", 6)} AS dup_chunk_frac,
          |  (SUM(CASE WHEN c.n_docs > 1 THEN 1 ELSE 0 END) * 1.0 / e.n_chunks > 0.3) AS dup_heavy
          |FROM e JOIN c USING (h)
-         |GROUP BY e.doc_id, e.n_chunks ORDER BY doc_id""".stripMargin,
-    "llm_chunk_scrub" ->
+         |GROUP BY e.doc_id, e.n_chunks ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_chunk_scrub", llmChunkScrub,
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |b AS (SELECT doc_id, list_transform(range(((len(ws)-1)//20)+1),
         |       i -> array_to_string(ws[i*20+1:i*20+20], ' ')) AS ch FROM w),
@@ -7971,18 +7828,18 @@ object Text {
         |  md5(COALESCE(string_agg(CASE WHEN dpc.n_docs = 1 THEN o3.chunk END,
         |    ' ' ORDER BY o3.idx), '')) AS clean_hash
         |FROM o3 JOIN dpc USING (h)
-        |GROUP BY o3.doc_id ORDER BY doc_id""".stripMargin,
-    "llm_corpus_pipeline" ->
+        |GROUP BY o3.doc_id ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_corpus_pipeline", llmCorpusPipeline,
       s"""WITH $corpusPipelineCtes
          |SELECT d.doc_id, d.lang, d.source,
          |  ${oRound(qualitySql("d.text"), 6)} AS quality
          |FROM documents d
          |WHERE $corpusPipelineWhere
-         |ORDER BY d.doc_id""".stripMargin,
+         |ORDER BY d.doc_id""".stripMargin),
     // v2: the same base conjunction plus the r12 rule stages at the
     // capstone's pipeline-configured bounds (gopher 20/1, lm 5.2) —
     // CTEs built from the SAME fragments as the standalone oracles.
-    "llm_corpus_pipeline_v2" ->
+    QueryDef("llm_corpus_pipeline_v2", llmCorpusPipelineV2,
       s"""WITH $corpusPipelineCtes,
          |gd AS ($gopherSplitSql),
          |gr AS (SELECT doc_id, $gopherRuleColsSql FROM gd),
@@ -7996,13 +7853,13 @@ object Text {
          |WHERE $corpusPipelineWhere
          |  AND d.doc_id IN (SELECT doc_id FROM gop)
          |  AND d.doc_id IN (SELECT doc_id FROM lmq)
-         |ORDER BY d.doc_id""".stripMargin,
+         |ORDER BY d.doc_id""".stripMargin),
     // v3 (r20): v2 plus the r19 signal gates — perplexity ceiling,
     // code/topic composition bounds, containment sub-document drop —
     // every CTE from the SAME shared fragments as the standalone
     // oracles (pplModelCtes / codeScoreCtes / topicMixCtes /
     // minhashPairsCtes + containmentCtes).
-    "llm_corpus_pipeline_v3" ->
+    QueryDef("llm_corpus_pipeline_v3", llmCorpusPipelineV3,
       s"""WITH $corpusPipelineCtes,
          |gd AS ($gopherSplitSql),
          |gr AS (SELECT doc_id, $gopherRuleColsSql FROM gd),
@@ -8039,8 +7896,8 @@ object Text {
          |  AND d.source IN (SELECT source FROM ckeep)
          |  AND d.source IN (SELECT source FROM tkeep)
          |  AND d.doc_id NOT IN (SELECT doc_id FROM cemb)
-         |ORDER BY d.doc_id""".stripMargin,
-    "llm_source_stats" -> {
+         |ORDER BY d.doc_id""".stripMargin),
+    QueryDef("llm_source_stats", llmSourceStats, {
       s"""WITH q AS (
          |  SELECT source, lang,
          |    len(string_split(text, ' ')) AS n_toks,
@@ -8056,8 +7913,8 @@ object Text {
          |  ${oRound("SUM(is_dup) * 1.0 / COUNT(*)", 6)} AS dup_frac,
          |  (SUM(is_dup) * 1.0 / COUNT(*) <= 0.5) AS keep
          |FROM q GROUP BY source ORDER BY source""".stripMargin
-    },
-    "llm_domain_mix" ->
+    }),
+    QueryDef("llm_domain_mix", llmDomainMix,
       """WITH b AS (
         |  SELECT doc_id, lang,
         |    CASE WHEN lang = 'en' THEN 1 WHEN lang = 'zh' THEN 2 ELSE 3 END AS w
@@ -8072,19 +7929,19 @@ object Text {
         |SELECT doc_id, lang, epoch, shard,
         |  CAST(row_number() OVER (PARTITION BY shard
         |    ORDER BY k, doc_id, epoch) AS INT) AS pos
-        |FROM s ORDER BY shard, pos""".stripMargin,
-    "llm_source_cap" ->
+        |FROM s ORDER BY shard, pos""".stripMargin),
+    QueryDef("llm_source_cap", llmSourceCap,
       """SELECT source, doc_id, rn FROM (
         |  SELECT source, doc_id,
         |    row_number() OVER (PARTITION BY source
         |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
         |  FROM documents) t
-        |WHERE rn <= 10 ORDER BY source, rn""".stripMargin,
+        |WHERE rn <= 10 ORDER BY source, rn""".stripMargin),
     // Same plant-then-transform pattern as llm_pii_scrub: the wrapper is
     // rebuilt identically, every strip stage mirrored with RE2-safe
     // patterns and explicit 'g' flags (DuckDB replaces first-match-only
     // by default; Spark replaces all).
-    "llm_html_extract" ->
+    QueryDef("llm_html_extract", llmHtmlExtract,
       """WITH raw AS (SELECT doc_id,
         |  '<html><head><script type="text/javascript">var x = 1 < 2;</script><style>p { margin: 0; }</style></head><body><!-- doc ' ||
         |  CAST(doc_id AS VARCHAR) || ' --><h1>Title &amp; ' || CAST(doc_id AS VARCHAR) ||
@@ -8100,8 +7957,8 @@ object Text {
         |SELECT doc_id, CAST(length(ct) AS INT) AS clean_n_chars,
         |  CAST(len(string_split(ct, ' ')) AS INT) AS clean_words,
         |  md5(ct) AS clean_hash
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "llm_pii_scrub" ->
+        |FROM c ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_pii_scrub", llmPiiScrub,
       """WITH p AS (
         |  SELECT doc_id,
         |    text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com'
@@ -8120,28 +7977,28 @@ object Text {
         |    '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '[EMAIL]', 'g'),
         |    '\+[0-9]{1,2}-[0-9]{3}-[0-9]{4}', '[PHONE]', 'g'),
         |    '\b([0-9]{1,3}\.){3}[0-9]{1,3}\b', '[IP]', 'g')) AS scrub_hash
-        |FROM p ORDER BY doc_id""".stripMargin,
-    "llm_ann_lsh" -> s"$lshPairsSql\nSELECT id_a, id_b, cos FROM pairs ORDER BY id_a, id_b",
-    "llm_ann_ivf" ->
-      ivfSql("e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"),
-    "llm_ann_ivf_trained" ->
+        |FROM p ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_ann_lsh", llmAnnLsh, s"$lshPairsSql\nSELECT id_a, id_b, cos FROM pairs ORDER BY id_a, id_b"),
+    QueryDef("llm_ann_ivf", llmAnnIvf,
+      ivfSql("e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)")),
+    QueryDef("llm_ann_ivf_trained", llmAnnIvfTrained,
       ivfSql("e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        refine = true),
+        refine = true)),
     // int8 path: e = the quantize→dequantize reconstruction. The CASE
     // mirrors Spark's mx=mn guard; mn + FLOOR((x−mn)/scale + 0.5)·scale
     // is the (−128/+128)-cancelled dequant, same IEEE ops in the same
     // order as the Spark column (see llmAnnIvfInt8).
-    "llm_ann_ivf_int8" -> ivfSql(
+    QueryDef("llm_ann_ivf_int8", llmAnnIvfInt8, ivfSql(
       """e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v0 FROM embeddings),
         |st AS (SELECT vec_id, v0, list_min(v0) AS mn, list_max(v0) AS mx FROM e0),
         |e AS (SELECT vec_id, list_transform(v0, x ->
         |  CASE WHEN mx = mn THEN mn
         |       ELSE mn + FLOOR((x - mn)/((mx - mn)/255.0) + 0.5) * ((mx - mn)/255.0)
-        |  END) AS v FROM st)""".stripMargin),
-    "llm_embed_neardup" ->
+        |  END) AS v FROM st)""".stripMargin)),
+    QueryDef("llm_embed_neardup", llmEmbedNeardup,
       s"""$lshPairsSql
          |SELECT id_b AS dup_id, MIN(id_a) AS keeper_id, MAX(cos) AS best_cos
-         |FROM pairs GROUP BY id_b ORDER BY dup_id""".stripMargin,
+         |FROM pairs GROUP BY id_b ORDER BY dup_id""".stripMargin),
     // Product quantization: md5-sampled seed codebooks refined by ONE
     // Lloyd step (twin of pqLloydStep — packed-long argmin assignment,
     // per-(m, r, d) 1e-6-quantized long sums, mean in the same division
@@ -8150,9 +8007,9 @@ object Text {
     // arg_min over the same packed (dist, rank) long the Spark min_by
     // uses, then the ADC sum over exact longs and the exact-L2 re-rank
     // of the top-20 ADC shortlist (twin of the Spark refine stage).
-    "llm_ann_ivfpq" ->
-      ivfPqSql("e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"),
-    "llm_ann_pq" ->
+    QueryDef("llm_ann_ivfpq", llmAnnIvfPq,
+      ivfPqSql("e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)")),
+    QueryDef("llm_ann_pq", llmAnnPq,
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |seeds AS (SELECT vec_id, v,
          |    row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS r
@@ -8211,8 +8068,8 @@ object Text {
          |  FROM rr)
          |SELECT q_id, CAST(rnk AS INT) AS rnk, vec_id,
          |  ${oRound("CAST(qsum AS DOUBLE) / 1000000000.0", 6)} AS adist
-         |FROM rk WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
-    "llm_embed_quantize" ->
+         |FROM rk WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
+    QueryDef("llm_embed_quantize", llmEmbedQuantize,
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |m AS (SELECT vec_id, v, list_min(v) AS mn, list_max(v) AS mx FROM e),
          |er AS (SELECT vec_id, v, mn, mx,
@@ -8224,13 +8081,13 @@ object Text {
          |  ${oRound("mn", 6)} AS mn, ${oRound("mx", 6)} AS mx,
          |  ${oRound("list_max(err)", 6)} AS max_err,
          |  ${oRound("list_reduce(list_prepend(0.0::DOUBLE, err), (a, b) -> a + b) / len(err)", 6)} AS mean_err
-         |FROM er ORDER BY vec_id""".stripMargin,
+         |FROM er ORDER BY vec_id""".stripMargin),
     // Achlioptas ternary matrix as a pure function of (i, j) — the
     // vocabBucket md5 idiom; BIGINT inner product stays < 2^53 so
     // DuckDB's double list_inner_product is exact. 3.0/16.0 is a
     // power-of-two divide and sqrt is correctly-rounded IEEE — the
     // only float steps mirror the Spark side's spelling.
-    "llm_random_proj" ->
+    QueryDef("llm_random_proj", llmRandomProj,
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |q AS (SELECT vec_id,
          |        list_transform(v, x -> CAST(FLOOR(x*1000000.0+0.5) AS BIGINT)) AS qx
@@ -8242,8 +8099,8 @@ object Text {
          |mr AS (SELECT j, list(r ORDER BY i) AS rj FROM m GROUP BY j)
          |SELECT q.vec_id, CAST(mr.j AS INT) AS j,
          |  ${oRound("(list_inner_product(q.qx, mr.rj) / 1000000.0) * sqrt(3.0/16.0)", 6)} AS y
-         |FROM q, mr ORDER BY vec_id, j""".stripMargin,
-    "llm_cosine_topk" ->
+         |FROM q, mr ORDER BY vec_id, j""".stripMargin),
+    QueryDef("llm_cosine_topk", llmCosineTopk,
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |sims AS (
          |  SELECT q.vec_id AS q_id, c.vec_id AS vec_id,
@@ -8253,13 +8110,13 @@ object Text {
          |  row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk
          |  FROM sims)
          |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, vec_id, cos
-         |FROM ranked WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
+         |FROM ranked WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
     // Retrieval eval: cosine_topk's ranking graded by label relevance;
     // every log2 discount is spelled ln(r+1)/ln(2) (identical IEEE ops
     // in both engines) and quantized at 1e-9 before the exact sum;
     // ideal DCG joins the per-query relevant total against a 10-row
     // rank frame.
-    "llm_ndcg_eval" ->
+    QueryDef("llm_ndcg_eval", llmNdcgEval,
       s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
          |           FROM embeddings),
          |n AS (SELECT vec_id, label, v,
@@ -8293,12 +8150,12 @@ object Text {
          |  CASE WHEN ic.idcg > 0 THEN ${oRound("p.dcg / ic.idcg", 6)}
          |       ELSE 0.0 END AS ndcg
          |FROM p LEFT JOIN ic ON ic.q_id = p.q_id
-         |ORDER BY p.q_id""".stripMargin,
+         |ORDER BY p.q_id""".stripMargin),
     // ROUGE-1/2: clipped multiset matches = SUM(LEAST(cc, cr)) off the
     // (pair_id, gram) two-phase counts; totals read off list lengths;
     // P/R quantize at 1e-6 before the fixed-shape F1, zero denominators
     // score 0.0 (the codeDetectOf convention).
-    "llm_rouge_overlap" -> {
+    QueryDef("llm_rouge_overlap", llmRougeOverlap, {
       def gramsSql(src: String) =
         s"CASE WHEN len($src) >= 2 THEN list_transform(range(len($src) - 1), i -> $src[i + 1] || ' ' || $src[i + 2]) ELSE [] END"
       def prSql(m: String, tot: String) =
@@ -8342,12 +8199,12 @@ object Text {
          |  r1_p, r1_r, ${f1Sql("r1_p", "r1_r")} AS r1_f,
          |  r2_p, r2_r, ${f1Sql("r2_p", "r2_r")} AS r2_f
          |FROM pr ORDER BY pair_id""".stripMargin
-    },
+    }),
     // Hard-negative mining: the cosine_topk pairing carried with labels;
     // per-query rank over the same-label frame (keep 1 = the positive)
     // and the different-label frame (keep 3 = the hard negatives);
     // margin is the difference of the two already-quantized cosines.
-    "llm_hard_negatives" ->
+    QueryDef("llm_hard_negatives", llmHardNegatives,
       s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
          |           FROM embeddings),
          |sims AS (
@@ -8366,11 +8223,11 @@ object Text {
          |SELECT p.q_id, p.pos_id, p.pos_cos, n.rnk, n.neg_id, n.neg_cos,
          |  ${oRound("p.pos_cos - n.neg_cos", 6)} AS margin
          |FROM pos p JOIN neg n USING (q_id)
-         |ORDER BY p.q_id, n.rnk""".stripMargin,
+         |ORDER BY p.q_id, n.rnk""".stripMargin),
     // Matryoshka audit: both cosines from the one pairing (vt = the
     // 16-dim prefix), two rankings, intersection counted per query with
     // a left join so zero-overlap queries still carry a row.
-    "llm_matryoshka_recall" ->
+    QueryDef("llm_matryoshka_recall", llmMatryoshkaRecall,
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v,
          |             (embedding::DOUBLE[])[1:16] AS vt FROM embeddings),
          |sims AS (
@@ -8392,11 +8249,11 @@ object Text {
          |  ${oRound("CAST(COALESCE(c.n_common, 0) AS DOUBLE) / 5", 6)}
          |    AS recall_at_k
          |FROM e q LEFT JOIN c ON c.q_id = q.vec_id
-         |WHERE q.vec_id < 20 ORDER BY q_id""".stripMargin,
+         |WHERE q.vec_id < 20 ORDER BY q_id""".stripMargin),
     // Spearman agreement: same two signals (shared qualitySql /
     // lmBitsCtes fragments), ranks via a PLAIN global row_number — the
     // independent derivation of the engine's bucket-decomposed ranking.
-    "llm_score_agreement" ->
+    QueryDef("llm_score_agreement", llmScoreAgreement,
       s"""WITH ${lmBitsCtes("ws0", "f0", "t0", "b0")},
          |bb AS (SELECT doc_id,
          |         CAST(FLOOR(($lmAvgBitsSql)*1000000.0+0.5) AS BIGINT) AS sq2
@@ -8414,10 +8271,10 @@ object Text {
          |  CAST(SUM(d*d) AS BIGINT) AS sum_d2,
          |  ${oRound("1.0 - (6.0*SUM(d*d))/(COUNT(*)*(COUNT(*)*COUNT(*)-1))", 6)}
          |    AS rho
-         |FROM dd""".stripMargin,
+         |FROM dd""".stripMargin),
     // IVF balance: the shared centroid/assignment fragments, one
     // summary row over the cell-size frame.
-    "llm_ivf_balance" ->
+    QueryDef("llm_ivf_balance", llmIvfBalance,
       s"""WITH $embCentsCtes,
          |cells AS (
          |  SELECT vec_id, arg_max(c_id, CAST(FLOOR(list_inner_product(v, cv)/(nrm*cn)*1000000000.0 + 0.5) AS BIGINT) * 65536 + r) AS cell
@@ -8428,9 +8285,9 @@ object Text {
          |  CAST(SUM(n) AS BIGINT) AS n_vecs,
          |  MAX(n) AS max_cell, MIN(n) AS min_cell,
          |  ${oRound("CAST(MAX(n)*COUNT(*) AS DOUBLE)/SUM(n)", 6)} AS imbalance
-         |FROM sizes""".stripMargin,
+         |FROM sizes""".stripMargin),
     // FIM: identical md5 cut points, 1-based inclusive list slices.
-    "llm_fim" ->
+    QueryDef("llm_fim", llmFim,
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws,
          |             len(string_split(text, ' ')) AS n FROM documents),
          |c AS (SELECT doc_id, ws, n,
@@ -8452,11 +8309,11 @@ object Text {
          |    ' <SUF> ' || array_to_string(ws[CAST(p2 + 1 AS INT):CAST(n AS INT)], ' ') ||
          |    ' <MID> ' || array_to_string(ws[CAST(p1 + 1 AS INT):CAST(p2 AS INT)], ' ')
          |  ELSE array_to_string(ws, ' ') END AS psm
-         |FROM c2 ORDER BY doc_id""".stripMargin,
+         |FROM c2 ORDER BY doc_id""".stripMargin),
     // Span corruption: identical per-(doc,pos) md5 Bernoulli, run
     // compaction via lag/run-sum windows, ordered string_agg re-assembly
     // (COALESCE: an unmasked doc's target is '' in both engines).
-    "llm_span_corrupt" ->
+    QueryDef("llm_span_corrupt", llmSpanCorrupt,
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws
          |           FROM documents),
          |t AS (SELECT doc_id, i - 1 AS pos, ws[CAST(i AS INT)] AS w,
@@ -8485,10 +8342,10 @@ object Text {
          |  CAST(SUM(CASE WHEN flag THEN 1 ELSE 0 END) AS BIGINT) AS n_masked,
          |  COALESCE(string_agg(in_tok, ' ' ORDER BY pos), '') AS input,
          |  COALESCE(string_agg(tgt_tok, ' ' ORDER BY pos), '') AS target
-         |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // Blocklist filter: same lexicon literal, list membership + the
     // double keep gate on the quantized ratio.
-    "llm_blocklist_filter" -> {
+    QueryDef("llm_blocklist_filter", llmBlocklistFilter, {
       val lex = demoBlockTerms.map("'" + _ + "'").mkString("[", ",", "]")
       s"""WITH b AS (SELECT doc_id, string_split(text, ' ') AS ws
          |           FROM documents),
@@ -8501,13 +8358,13 @@ object Text {
          |  (n_hits < 2 AND ${oRound("CAST(n_hits AS DOUBLE)/n_words", 6)} <= 0.02)
          |    AS keep
          |FROM h ORDER BY doc_id""".stripMargin
-    },
+    }),
     // MMR: pool + pairwise sims materialized once, then the greedy
     // selection unrolled step-by-step — each step's score is the same
     // 1e-9-quantized λ·rel − (1−λ)·max-sim arithmetic the Spark group
     // fold runs ((1 - 0.7) spelled as the subtraction so both engines
     // use the identical IEEE double 0.30000000000000004).
-    "llm_mmr_rerank" -> {
+    QueryDef("llm_mmr_rerank", llmMmrRerank, {
       def stepSql(k: Int): String =
         s"""cand$k AS (SELECT p.q_id, p.vec_id, p.rel, MAX(pr.sim) AS red
            |  FROM p JOIN pr ON pr.q_id = p.q_id AND pr.a = p.vec_id
@@ -8550,8 +8407,8 @@ object Text {
          |      UNION ALL SELECT * FROM s3 UNION ALL SELECT * FROM s4
          |      UNION ALL SELECT * FROM s5)
          |ORDER BY q_id, step""".stripMargin
-    },
-    "llm_lang_id" ->
+    }),
+    QueryDef("llm_lang_id", llmLangId,
       """SELECT doc_id, lang,
         |CAST(len(list_filter(list_distinct(string_split(text,' ')), x -> list_contains(['the','a','and','of','to'], x))) AS INT) AS sc_en,
         |CAST(len(list_filter(list_distinct(string_split(text,' ')), x -> list_contains(['query','table','scan'], x))) AS INT) AS sc_q,
@@ -8564,29 +8421,29 @@ object Text {
         |     WHEN len(list_filter(list_distinct(string_split(text,' ')), x -> list_contains(['query','table','scan'], x)))
         |       >= len(list_filter(list_distinct(string_split(text,' ')), x -> list_contains(['join','merge','hash'], x)))
         |     THEN 'q' ELSE 'j' END AS predicted
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "llm_quality_score" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_quality_score", llmQualityScore,
       s"""SELECT doc_id, n_chars,
          |CAST(len(string_split(text, ' ')) AS INT) AS n_words,
          |${oRound("n_chars * 1.0 / len(string_split(text, ' '))", 6)} AS avg_word_len,
          |${oRound("len(list_filter(string_split(text, ' '), w -> list_contains(['the','a','and','of','to'], w))) * 1.0 / len(string_split(text, ' '))", 6)} AS stop_ratio,
          |CAST(len(regexp_extract_all(text, '[aeiou]')) AS INT) AS vowels,
          |${oRound(qualitySql("text"), 6)} AS quality
-         |FROM documents ORDER BY doc_id""".stripMargin,
+         |FROM documents ORDER BY doc_id""".stripMargin),
     // Integer log2 via bin-length on both engines (libm-free; see
     // lmQualityOf). DuckDB bin(BIGINT) renders the same minimal binary
     // string as Spark's bin(LONG), so bits(total) − bits(count) is
     // bit-exact.
-    "llm_lm_quality" ->
+    QueryDef("llm_lm_quality", llmLmQuality,
       s"""WITH ${lmBitsCtes("ws", "f", "t", "b")}
          |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
          |  $lmAvgBitsSql AS avg_bits,
          |  ($lmAvgBitsSql >= 12.0) AS suspect
-         |FROM b GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |FROM b GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // CCNet thirds: integer quantized score sq = (Σbits·10^6) // n_words,
     // per-lang histogram cum window, thresholds by cum·3 >= n / >= 2n —
     // all-integer threshold math, no quantile interpolation to drift.
-    "llm_ccnet_buckets" ->
+    QueryDef("llm_ccnet_buckets", llmCcnetBuckets,
       s"""WITH ${lmBitsCtes("ws", "f", "t", "b")},
          |sc AS (SELECT doc_id, CAST(SUM(bits) AS BIGINT) AS sb,
          |         CAST(COUNT(*) AS BIGINT) AS nw
@@ -8609,7 +8466,7 @@ object Text {
          |  CASE WHEN q.sq <= t.t1 THEN 'head'
          |       WHEN q.sq <= t.t2 THEN 'middle'
          |       ELSE 'tail' END AS bucket
-         |FROM sq q JOIN thr t USING (lang) ORDER BY q.doc_id""".stripMargin,
+         |FROM sq q JOIN thr t USING (lang) ORDER BY q.doc_id""".stripMargin),
     // Bigram conditional surprise: same bin-length integer log2 as
     // lm_quality, now over TWO hashed count tables — unigram context
     // counts (over ALL words, including docs with one word) and bigram
@@ -8618,7 +8475,7 @@ object Text {
     // len) is empty for single-word docs, so they carry no row on
     // either engine. greatest(0, …) clamps the collision case where a
     // pooled bigram bucket outgrows its context's.
-    "llm_span_dedup" ->
+    QueryDef("llm_span_dedup", llmSpanDedup,
       s"""WITH wt AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          |ch AS (SELECT doc_id, j,
          |    array_to_string(list_slice(ws, j*5 + 1, j*5 + 5), ' ') AS chunk,
@@ -8635,7 +8492,7 @@ object Text {
          |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS kept,
          |  CAST(COUNT(*) - SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS removed,
          |  COALESCE(string_agg(chunk, ' ' ORDER BY j) FILTER (WHERE keep), '') AS clean_text
-         |FROM kp GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |FROM kp GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // Oracle recomputes the suffix-class semantics directly: a position
     // is duplicated at depth d iff its d-word gram (list_slice, 1-based
     // inclusive) occurs >= 2 times corpus-wide. range(1, len-d+2) is
@@ -8643,7 +8500,7 @@ object Text {
     // engines. The Spark side emits the same literal d-grams in a
     // single pass (its scaladoc documents measuring and rejecting the
     // prefix-doubling alternative) — identical gram multisets per depth.
-    "llm_suffix_dedup" ->
+    QueryDef("llm_suffix_dedup", llmSuffixDedup,
       s"""WITH wt AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          |ds(d) AS (VALUES (1), (2), (4), (8), (16)),
          |ag AS (SELECT doc_id, d,
@@ -8661,14 +8518,14 @@ object Text {
          |  CAST(COALESCE(max_dup_depth, 0) AS INTEGER) AS max_dup_depth,
          |  CAST(COALESCE(n_dup8, 0) AS BIGINT) AS n_dup8,
          |  CAST(COALESCE(n_dup16, 0) AS BIGINT) AS n_dup16
-         |FROM wt w LEFT JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin,
+         |FROM wt w LEFT JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin),
     // Span-removal action: non-first occurrences of duplicated 8-word
     // spans are cut; a word survives unless covered by some removable
     // span start. range(p, p+8) is half-open = offsets p..p+7; kept
     // words reassemble ORDER BY position. First occurrence = lexico-
     // graphic MIN over (doc_id, pos) STRUCTS (no packed-key magnitude
     // assumption — mirrors the builder), the spanDedup tiebreak.
-    "llm_suffix_scrub" ->
+    QueryDef("llm_suffix_scrub", llmSuffixScrub,
       s"""WITH wt AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          |g AS (SELECT doc_id, p,
          |    array_to_string(list_slice(ws, p, p + 7), ' ') AS gm
@@ -8693,8 +8550,8 @@ object Text {
          |SELECT w.doc_id, CAST(len(ws) AS BIGINT) AS n_words,
          |  CAST(len(ws) - COALESCE(ka.n_kept, 0) AS BIGINT) AS n_removed,
          |  COALESCE(ka.txt, '') AS clean_text
-         |FROM wt w LEFT JOIN ka USING (doc_id) ORDER BY w.doc_id""".stripMargin,
-    "llm_lm_trigram" ->
+         |FROM wt w LEFT JOIN ka USING (doc_id) ORDER BY w.doc_id""".stripMargin),
+    QueryDef("llm_lm_trigram", llmLmTrigram,
       s"""WITH wt AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          |tp AS (SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2, ws[i + 2] AS w3
          |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws) - 1)) AS i FROM wt) px),
@@ -8736,8 +8593,8 @@ object Text {
          |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_trigrams,
          |  ${oRound("CAST(SUM(bits) AS DOUBLE) / COUNT(*)", 6)} AS avg_bits,
          |  ${oRound("CAST(SUM(backed) AS DOUBLE) / COUNT(*)", 6)} AS backoff_frac
-         |FROM bt GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "llm_lm_bigram" ->
+         |FROM bt GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_lm_bigram", llmLmBigram,
       s"""WITH wt AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          |pairs AS (
          |  SELECT doc_id,
@@ -8751,11 +8608,11 @@ object Text {
          |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
          |  ${oRound("CAST(SUM(greatest(0, length(bin(cp)) - length(bin(cb)))) AS DOUBLE) / COUNT(*)", 6)} AS avg_cond_bits
          |FROM pairs JOIN fu USING (bp) JOIN fb USING (bb)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // RHO select: the shared unigram-bits CTEs + the bigram pair CTEs
     // (unigram count frame reused for the pair join — no recount),
     // quantized gain, rounded-gain/doc_id total order into the top-k.
-    "llm_rho_select" ->
+    QueryDef("llm_rho_select", llmRhoSelect,
       s"""WITH ${lmBitsCtes("ws", "f", "t", "b")},
          |u AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
          |    $lmAvgBitsSql AS uni_bits FROM b GROUP BY doc_id),
@@ -8777,19 +8634,19 @@ object Text {
          |SELECT u.doc_id AS doc_id, u.n_words, u.uni_bits, bg.bi_bits,
          |  ${oRound("u.uni_bits - bg.bi_bits", 6)} AS gain
          |FROM u JOIN bg USING (doc_id)
-         |ORDER BY gain DESC, doc_id LIMIT 100""".stripMargin,
+         |ORDER BY gain DESC, doc_id LIMIT 100""".stripMargin),
     // SemDeDup: the IVF cell CTEs over ALL vectors (no query/corpus
     // split), then within-cell pairs + the embed_neardup keeper rule.
     // Shares `semPairsCtes` with the CC-resolved twin below.
-    "llm_semdedup" ->
+    QueryDef("llm_semdedup", llmSemdedup,
       s"""WITH $semPairsCtes
          |SELECT id_b AS dup_id, MIN(id_a) AS keeper_id, MAX(cos) AS best_cos
          |FROM spairs
-         |GROUP BY id_b ORDER BY dup_id""".stripMargin,
+         |GROUP BY id_b ORDER BY dup_id""".stripMargin),
     // SemDeDup pairs resolved via connected components (transitive
     // closure by recursive walk at fixture scale — the Spark side runs
     // the O(log d) star contraction, same contract as llm_dedup_cc).
-    "llm_semdedup_cc" ->
+    QueryDef("llm_semdedup_cc", llmSemdedupCc,
       s"""WITH RECURSIVE $semPairsCtes,
          |edges AS (SELECT id_a AS a, id_b AS b FROM spairs
          |          UNION SELECT id_b, id_a FROM spairs),
@@ -8798,9 +8655,9 @@ object Text {
          |  UNION
          |  SELECT w.node, e.b FROM walk w JOIN edges e ON w.reach = e.a)
          |SELECT node AS vec_id, MIN(reach) AS cluster_id
-         |FROM walk GROUP BY node ORDER BY vec_id""".stripMargin,
+         |FROM walk GROUP BY node ORDER BY vec_id""".stripMargin),
     // The CC labels above + a per-cluster md5-ordered cap of 2.
-    "llm_cluster_sample" ->
+    QueryDef("llm_cluster_sample", llmClusterSample,
       s"""WITH RECURSIVE $semPairsCtes,
          |edges AS (SELECT id_a AS a, id_b AS b FROM spairs
          |          UNION SELECT id_b, id_a FROM spairs),
@@ -8815,10 +8672,10 @@ object Text {
          |    row_number() OVER (PARTITION BY cluster_id
          |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
          |  FROM lab) t
-         |WHERE rn <= 2 ORDER BY cluster_id, rn""".stripMargin,
+         |WHERE rn <= 2 ORDER BY cluster_id, rn""".stripMargin),
     // sqrt is IEEE-correctly-rounded in both engines (unlike pow/log);
     // the normalizer goes through the oSum quantized-long sum.
-    "llm_mix_weights" ->
+    QueryDef("llm_mix_weights", llmMixWeights,
       s"""WITH per AS (
          |  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
          |    CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
@@ -8830,18 +8687,18 @@ object Text {
          |SELECT source, n_docs, n_tokens,
          |  ${oRound("w.w / t.tot_w", 6)} AS mix_p,
          |  ${oRound("w.w / t.tot_w * CAST(t.tot_tokens AS DOUBLE) / w.n_tokens", 6)} AS epochs
-         |FROM w, t ORDER BY source""".stripMargin,
+         |FROM w, t ORDER BY source""".stripMargin),
     // DSIR importance: four integer-log2 terms via bin-length (see
     // dsirSelectOf); add-one smoothing on BOTH count terms (ct+1,
     // cr+1) — the totals are unsmoothed. One conditional-sum count
     // pass mirrors the Spark shape; values are identical to computing
     // the two sides separately.
-    "llm_pca_project" -> pcaProjectSql(8),
-    "llm_quality_classifier" -> qualityClassifierSql(3),
+    QueryDef("llm_pca_project", llmPcaProject, pcaProjectSql(8)),
+    QueryDef("llm_quality_classifier", llmQualityClassifier, qualityClassifierSql(3)),
     // Conformal: the SAME classifier CTE chain (cannot drift), integer
     // margin nonconformity, order-statistic threshold on the cal split,
     // set-membership comparisons all integer-exact.
-    "llm_conformal" ->
+    QueryDef("llm_conformal", llmConformal,
       s"""WITH ${qualityClassifierCtes(3)},
          |base AS (SELECT lab.doc_id, CAST(lab.y AS INT) AS y, fin.score
          |  FROM lab JOIN fin USING (doc_id)),
@@ -8864,8 +8721,8 @@ object Text {
          |    + (CASE WHEN b.score <= kq.qhat THEN 1 ELSE 0 END) AS INT)
          |    AS set_size
          |FROM base b, kq WHERE b.doc_id % 5 <> 0
-         |ORDER BY b.doc_id""".stripMargin,
-    "llm_dsir_select" ->
+         |ORDER BY b.doc_id""".stripMargin),
+    QueryDef("llm_dsir_select", llmDsirSelect,
       s"""WITH ws AS (SELECT doc_id, $vocabBucketSql AS wb
          |            FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
          |                  FROM documents) raw_ws),
@@ -8883,38 +8740,38 @@ object Text {
          |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
          |  ${oRound("CAST(SUM(score) AS DOUBLE) / COUNT(*)", 6)} AS avg_importance,
          |  (${oRound("CAST(SUM(score) AS DOUBLE) / COUNT(*)", 6)} > 0.0) AS selected
-         |FROM b GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |FROM b GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // Gopher rule battery: every ratio mirrored expression-for-
     // expression; flags re-derive from the ROUNDED columns so both
     // engines decide identically at rule boundaries. The fragments are
     // shared with the v2 capstone's gopher CTE so the two oracles
     // cannot drift.
-    "llm_gopher_rules" ->
+    QueryDef("llm_gopher_rules", llmGopherRules,
       s"""WITH d AS ($gopherSplitSql),
          |r AS (SELECT doc_id, $gopherRuleColsSql FROM d)
          |SELECT doc_id, n_words, mean_word_len, symbol_ratio, bullet_ratio,
          |  ellipsis_ratio, alpha_word_ratio, stop_words,
          |  (${gopherKeepCondSql(50, 2)}) AS keep
-         |FROM r ORDER BY doc_id""".stripMargin,
-    "llm_token_count" ->
+         |FROM r ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_token_count", llmTokenCount,
       """SELECT doc_id,
         |CAST(len(string_split(text, ' ')) AS INT) AS ws_tokens,
         |CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS INT) AS bpe_tokens,
         |CAST(length(text) AS INT) AS chars,
         |CAST(length(text) - length(replace(text, ' ', '')) AS INT) AS spaces
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "llm_tokenize" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_tokenize", llmTokenize,
       s"""SELECT doc_id,
          |  CAST(len(string_split(text, ' ')) AS INT) AS n_words,
          |  $wpTokensSql AS wp_tokens
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "llm_split_assign" ->
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_split_assign", llmSplitAssign,
       """SELECT doc_id, lang,
         |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::INT % 100 AS INT) AS bucket,
         |  CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::INT % 100 < 95
         |    THEN 'train' ELSE 'val' END AS split
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "llm_chunk_split" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_chunk_split", llmChunkSplit,
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |n AS (SELECT doc_id, ws,
         |  GREATEST(1, CAST(CEIL((len(ws) - 50)/40.0) AS INT) + 1) AS nc FROM w),
@@ -8923,8 +8780,8 @@ object Text {
         |  array_to_string(ws[(chunk_idx*40+1):(chunk_idx*40+50)], ' ') AS chunk FROM c)
         |SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
         |  CAST(len(string_split(chunk, ' ')) AS INT) AS n_tokens, chunk
-        |FROM c2 ORDER BY doc_id, chunk_idx""".stripMargin,
-    "llm_corpus_select" ->
+        |FROM c2 ORDER BY doc_id, chunk_idx""".stripMargin),
+    QueryDef("llm_corpus_select", llmCorpusSelect,
       s"""WITH keep AS (
          |  SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY sha256(text)),
          |sel AS (
@@ -8934,8 +8791,8 @@ object Text {
          |  FROM documents d JOIN keep k USING (doc_id))
          |SELECT doc_id, lang, bucket, quality FROM sel
          |WHERE lang IN ('en', 'de') AND bucket < 95 AND quality >= 0.7
-         |ORDER BY doc_id""".stripMargin,
-    "llm_pack_sequences" ->
+         |ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_pack_sequences", llmPackSequences,
       """WITH w AS (SELECT doc_id, lang, string_split(text, ' ') AS ws FROM documents),
         |n AS (SELECT doc_id, lang, ws,
         |  GREATEST(1, CAST(CEIL((len(ws) - 50)/40.0) AS INT) + 1) AS nc FROM w),
@@ -8950,8 +8807,8 @@ object Text {
         |  CAST(n_tokens AS INT) AS n_tokens,
         |  CAST(FLOOR((cum - n_tokens) / 2048) AS INT) AS bin,
         |  CAST((cum - n_tokens) % 2048 AS INT) AS bin_offset
-        |FROM cum ORDER BY lang, doc_id, chunk_idx""".stripMargin,
-    "llm_tfidf_top" ->
+        |FROM cum ORDER BY lang, doc_id, chunk_idx""".stripMargin),
+    QueryDef("llm_tfidf_top", llmTfidfTop,
       s"""WITH wrd AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
          |tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM wrd GROUP BY doc_id, w),
          |dfc AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
@@ -8965,11 +8822,11 @@ object Text {
          |SELECT doc_id, CAST(rnk AS INT) AS rnk, w AS term,
          |  CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df,
          |  ${oRound("score", 6)} AS score
-         |FROM r WHERE rnk <= 5 ORDER BY doc_id, rnk""".stripMargin,
+         |FROM r WHERE rnk <= 5 ORDER BY doc_id, rnk""".stripMargin),
     // BM25 with integer-bits idf; parenthesization mirrors the Spark
     // expression term-for-term (fixed-order IEEE), and the per-pair sum
     // goes through the quantized-long oSum.
-    "llm_bm25_topk" ->
+    QueryDef("llm_bm25_topk", llmBm25Topk,
       s"""WITH wrd AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
          |tf AS (SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS tf FROM wrd GROUP BY doc_id, w),
          |dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM wrd GROUP BY doc_id),
@@ -8991,11 +8848,11 @@ object Text {
          |  row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rnk
          |  FROM sc)
          |SELECT q_id, CAST(rnk AS INT) AS rnk, doc_id, score, n_terms
-         |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
+         |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
     // RRF fusion: the BM25 CTEs verbatim (pool 20) + a 64-dim hashed
     // count-vector cosine ranker (integer dots/norms, IEEE sqrt), fused
     // by 1/(60+rank) with NULL ranks contributing zero.
-    "llm_rrf_fusion" ->
+    QueryDef("llm_rrf_fusion", llmRrfFusion,
       s"""WITH wrd AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
          |tf AS (SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS tf FROM wrd GROUP BY doc_id, w),
          |dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM wrd GROUP BY doc_id),
@@ -9043,7 +8900,7 @@ object Text {
          |  FROM fused)
          |SELECT q_id, CAST(rnk AS INT) AS rnk, doc_id, rrf,
          |  CAST(lex_rnk AS INT) AS lex_rnk, CAST(dense_rnk AS INT) AS dense_rnk
-         |FROM fr WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
+         |FROM fr WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
     // Exact-quota stratified sample: rank within lang by md5(doc_id),
     // keep rn <= ceil(0.2 * n_lang) — all-integer membership test.
     // Bucket-decomposed per-lang rank (the builder's distributed
@@ -9052,7 +8909,7 @@ object Text {
     // row_number — never a row window partitioned on lang alone. The
     // text doubles as the Spark surface entry, where the plan shape
     // is PlanSpec-guarded.
-    "llm_stratified_sample" ->
+    QueryDef("llm_stratified_sample", llmStratifiedSample,
       """WITH c AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_lang
         |           FROM documents GROUP BY lang),
         |kb AS (SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS k,
@@ -9075,12 +8932,12 @@ object Text {
         |  CAST(CEIL(c.n_lang * 0.2) AS BIGINT) AS quota
         |FROM r JOIN c USING (lang)
         |WHERE r.rn <= CEIL(c.n_lang * 0.2)
-        |ORDER BY r.doc_id""".stripMargin,
+        |ORDER BY r.doc_id""".stripMargin),
     // PSI drift: (bin × slice) counts, ε-floored shares (p·0.999 +
     // 1e-4 — N-independent, so both-empty bins contribute exactly 0)
     // over the literal 10-bin universe; ROUNDED shares feed the ln so
     // the term arithmetic matches the builder's dround-then-divide.
-    "llm_drift_psi" ->
+    QueryDef("llm_drift_psi", llmDriftPsi,
       s"""WITH s AS (SELECT LEAST(9, CAST(FLOOR(n_chars / 100) AS INT)) AS bin,
          |             (doc_id % 7 = 0) AS cand FROM documents),
          |c AS (SELECT bin,
@@ -9102,11 +8959,11 @@ object Text {
          |       FROM b LEFT JOIN c ON c.bin = b.bin CROSS JOIN t)
          |SELECT bin, c_ref, c_cand, p_ref, p_cand,
          |  ${oRound("(p_ref - p_cand) * ln(p_ref / p_cand)", 9)} AS psi_term
-         |FROM sh ORDER BY bin""".stripMargin,
+         |FROM sh ORDER BY bin""".stripMargin),
     // Zipf fit: two-phase wordcount, top-V ORDER/LIMIT, rank window
     // over the V-row frame, quantized regression sums, closed-form
     // slope/intercept/R² on identical doubles.
-    "llm_zipf_fit" ->
+    QueryDef("llm_zipf_fit", llmZipfFit,
       s"""WITH tc AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
          |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents) t
          |  GROUP BY w ORDER BY c DESC, w LIMIT 1000),
@@ -9127,11 +8984,11 @@ object Text {
          |  CASE WHEN n * syy - sy * sy <= 1e-9 THEN 0.0
          |  ELSE ${oRound("(n * sxy - sx * sy) * (n * sxy - sx * sy)" +
              " / ((n * sxx - sx * sx) * (n * syy - sy * sy))", 6)} END AS r2
-         |FROM bb""".stripMargin,
+         |FROM bb""".stripMargin),
     // Heaps fit: integer-exact ceil-division checkpoint buckets,
     // word→min(doc) first-occurrence agg, cumulation + quantized
     // regression over the 16-row checkpoint frame only.
-    "llm_heaps_law" ->
+    QueryDef("llm_heaps_law", llmHeapsLaw,
       s"""WITH m AS (SELECT MAX(doc_id) + 1 AS m FROM documents),
          |dt AS (SELECT CAST(((doc_id + 1) * 16 + m - 1) // m AS INT) AS bkt,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nt
@@ -9171,11 +9028,11 @@ object Text {
          |    ELSE ${oRound("(n * sxy - sx * sy) * (n * sxy - sx * sy)" +
              " / ((n * sxx - sx * sx) * (n * syy - sy * sy))", 6)} END AS r2,
          |  tokens_total, vocab_total
-         |FROM bb""".stripMargin,
+         |FROM bb""".stripMargin),
     // UniMax water-filling: exact-long caps/prefix sums/budget, τ as a
     // ratio of exact longs, rank/threshold windows over the k-language
     // frame only.
-    "llm_unimax" ->
+    QueryDef("llm_unimax", llmUnimax,
       s"""WITH per AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
          |    CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
          |  FROM documents GROUP BY lang),
@@ -9209,11 +9066,11 @@ object Text {
              " THEN CAST(cap AS DOUBLE)" +
              " ELSE COALESCE(tau, CAST(cap AS DOUBLE)) END)" +
              " / CAST(n_tokens AS DOUBLE)", 6)} AS epochs_alloc
-         |FROM h ORDER BY lang""".stripMargin,
+         |FROM h ORDER BY lang""".stripMargin),
     // Poisson bootstrap: md5-uniform → Poisson(1) inverse-CDF ladder
     // (full-precision literals, tail capped at 6), exact per-replicate
     // long sums, order-statistic CI on the 64-row frame.
-    "llm_bootstrap_ci" -> {
+    QueryDef("llm_bootstrap_ci", llmBootstrapCi, {
       val bVals = (1 to 64).map(b => s"($b)").mkString(", ")
       s"""WITH q AS (SELECT doc_id,
          |    CAST(FLOOR((${qualitySql("text")}) * 1000000.0 + 0.5) AS BIGINT)
@@ -9250,11 +9107,11 @@ object Text {
          |  ${oRound("MAX(CASE WHEN r = 2 THEN m END)", 6)} AS lo95,
          |  ${oRound("MAX(CASE WHEN r = 63 THEN m END)", 6)} AS hi95
          |FROM mm""".stripMargin
-    },
+    }),
     // Per-source calibration: quantized-long quality, exact per-source
     // moments (Σq² in hugeint ≡ the builder's decimal(38,0)), unique
     // (qi, doc_id) rank == row_number, zero-variance CASE.
-    "llm_quality_calibrate" ->
+    QueryDef("llm_quality_calibrate", llmQualityCalibrate,
       s"""WITH sc AS (SELECT doc_id, source,
          |    CAST(FLOOR((${qualitySql("text")}) * 1000000.0 + 0.5) AS BIGINT)
          |      AS qi
@@ -9285,10 +9142,10 @@ object Text {
          |  CASE WHEN sd > 0
          |    THEN ${oRound("(CAST(qi AS DOUBLE) / 1000000.0 - mu) / sd", 6)}
          |    ELSE 0.0 END AS z_src
-         |FROM j ORDER BY doc_id""".stripMargin,
+         |FROM j ORDER BY doc_id""".stripMargin),
     // Snapshot diff: full-outer join of the two derived snapshots on
     // doc_id, sha256 content compare, per-status rollup.
-    "llm_corpus_diff" ->
+    QueryDef("llm_corpus_diff", llmCorpusDiff,
       """WITH v1 AS (SELECT doc_id, sha256(text) AS h1
         |            FROM documents WHERE doc_id % 5 <> 4),
         |v2 AS (SELECT doc_id,
@@ -9303,11 +9160,11 @@ object Text {
         |      FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id)
         |SELECT status, CAST(COUNT(*) AS BIGINT) AS n,
         |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-        |FROM j GROUP BY status ORDER BY status""".stripMargin,
+        |FROM j GROUP BY status ORDER BY status""".stripMargin),
     // Two-sample KS: cumulative window over the DISTINCT-value frame
     // (grouped first, so RANGE-vs-ROWS default frames agree), D from
     // exact long counts quantized before the (D desc, x) argmax.
-    "llm_drift_ks" ->
+    QueryDef("llm_drift_ks", llmDriftKs,
       s"""WITH s AS (SELECT CAST(n_chars AS BIGINT) AS x,
          |             (doc_id % 7 = 0) AS cand FROM documents),
          |c AS (SELECT x,
@@ -9324,23 +9181,23 @@ object Text {
              " - cum_cand / CAST(t.n_cand AS DOUBLE))", 9)} AS ks_d,
          |  x AS at_x, t.n_ref, t.n_cand
          |FROM cum CROSS JOIN t
-         |ORDER BY ks_d DESC, at_x LIMIT 1""".stripMargin,
+         |ORDER BY ks_d DESC, at_x LIMIT 1""".stripMargin),
     // Efraimidis–Spirakis A-ES: u from the 12-hex md5 cast (+0.5 over
     // 16^12), key = ln(u)/w; ORDER/LIMIT on the ROUNDED key + doc_id so
     // the k-boundary can never split on an engine's last ulp.
-    "llm_weighted_sample" ->
+    QueryDef("llm_weighted_sample", llmWeightedSample,
       s"""SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
          |  ${oRound(
              "ln((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT" +
              " + 0.5) / 281474976710656.0) / CAST(n_chars AS DOUBLE)", 9)}
          |    AS es_key
          |FROM documents
-         |ORDER BY es_key DESC, doc_id LIMIT 200""".stripMargin,
+         |ORDER BY es_key DESC, doc_id LIMIT 200""".stripMargin),
     // PMI association ratio, un-logged (monotone, libm-free), with the
     // division interleaved into the products exactly as the Spark side
     // parenthesizes it; cab >= 3 hapax guard; DuckDB range(1, len) is
     // empty for 1-word docs, mirroring the Spark size >= 2 filter.
-    "llm_collocations" ->
+    QueryDef("llm_collocations", llmCollocations,
       s"""WITH wt AS (SELECT string_split(text, ' ') AS ws FROM documents),
          |prs AS (SELECT ws[i] AS a, ws[i+1] AS b
          |        FROM (SELECT ws, unnest(range(1, len(ws))) AS i FROM wt) t),
@@ -9355,11 +9212,11 @@ object Text {
          |  ${oRound("((cb.cab * 1.0 * tw.tw / tb.tb) * (tw.tw * 1.0 / wa.c)) / wb.c", 6)} AS ratio
          |FROM cb JOIN cw wa ON wa.w = cb.a JOIN cw wb ON wb.w = cb.b, tw, tb
          |WHERE cb.cab >= 3
-         |ORDER BY ratio DESC, a, b LIMIT 20""".stripMargin,
+         |ORDER BY ratio DESC, a, b LIMIT 20""".stripMargin),
     // TextRank: undirected weighted word graph, 5 unrolled weighted-
     // PageRank iterations with the same quantized-long sums as the Spark
     // side; (score * wgt / ow) parenthesized identically (left-assoc).
-    "llm_textrank" -> {
+    QueryDef("llm_textrank", llmTextrank, {
       def iterSql(prev: String, cur: String): String =
         s"""$cur AS MATERIALIZED (
            |  SELECT n.word,
@@ -9385,10 +9242,10 @@ object Text {
          |${(1 to 5).map(k => iterSql(s"r${k - 1}", s"r$k")).mkString(",\n")}
          |SELECT word, score FROM r5
          |ORDER BY score DESC, word LIMIT 10""".stripMargin
-    },
+    }),
     // Zipf coverage curve: rank + running-sum windows over the vocab-
     // sized count table; k > vocab saturates at total naturally.
-    "llm_vocab_coverage" ->
+    QueryDef("llm_vocab_coverage", llmVocabCoverage,
       s"""WITH cw AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
          |  FROM (SELECT unnest(string_split(text, ' ')) AS w
          |        FROM documents) wrd GROUP BY w),
@@ -9406,21 +9263,21 @@ object Text {
          |  ${oRound("CAST(MAX(CASE WHEN r.rnk <= ks.k THEN r.cum END) AS DOUBLE) / t.total", 6)} AS coverage
          |FROM ks CROSS JOIN ranked r CROSS JOIN t
          |GROUP BY ks.k, t.total, t.vocab
-         |ORDER BY ks.k""".stripMargin,
+         |ORDER BY ks.k""".stripMargin),
     // SoftDeDup weights: sha256 content clusters (the exact-dedup
     // scheme), weight = 1/n quantized.
-    "llm_dedup_weights" ->
+    QueryDef("llm_dedup_weights", llmDedupWeights,
       s"""WITH h AS (SELECT doc_id, sha256(text) AS h FROM documents),
          |c AS (SELECT h, CAST(COUNT(*) AS BIGINT) AS n_copies
          |      FROM h GROUP BY h)
          |SELECT h.doc_id, c.n_copies,
          |  ${oRound("1.0 / c.n_copies", 9)} AS weight
-         |FROM h JOIN c USING (h) ORDER BY h.doc_id""".stripMargin,
+         |FROM h JOIN c USING (h) ORDER BY h.doc_id""".stripMargin),
     // Winsorization audit: quantile_cont ≡ Spark percentile (the
     // agg_percentile idiom), 64-row dim table via range(64) (DuckDB 1.0
     // lacks lateral range-over-column), clip counts against the ROUNDED
     // thresholds in both engines.
-    "llm_embed_clip" ->
+    QueryDef("llm_embed_clip", llmEmbedClip,
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |vals AS (SELECT t.d AS dim, e.v[t.d + 1] AS v
          |         FROM e, range(64) t(d)),
@@ -9434,10 +9291,10 @@ object Text {
          |  CAST(SUM(CASE WHEN va.v > s.hi THEN 1 ELSE 0 END) AS BIGINT) AS n_hi
          |FROM vals va JOIN stats s USING (dim)
          |GROUP BY s.dim, s.lo, s.hi, s.n
-         |ORDER BY s.dim""".stripMargin,
+         |ORDER BY s.dim""".stripMargin),
     // Bin-length entropy surrogate over per-doc char counts; substr-
     // over-range chars (no empty-delimiter split in DuckDB).
-    "llm_char_entropy" ->
+    QueryDef("llm_char_entropy", llmCharEntropy,
       s"""WITH chars AS (
          |  SELECT doc_id, length(text) AS len, substr(text, i, 1) AS ch
          |  FROM (SELECT doc_id, text, unnest(range(1, length(text) + 1)) AS i
@@ -9447,10 +9304,10 @@ object Text {
          |SELECT doc_id, CAST(len AS BIGINT) AS len,
          |  CAST(COUNT(*) AS BIGINT) AS alphabet,
          |  ${oRound("CAST(SUM(c * (length(bin(CAST(len AS BIGINT))) - length(bin(c)))) AS DOUBLE) / len", 6)} AS ent_bits
-         |FROM cc GROUP BY doc_id, len ORDER BY doc_id""".stripMargin,
+         |FROM cc GROUP BY doc_id, len ORDER BY doc_id""".stripMargin),
     // Cavnar-Trenkle: char-trigram rank profiles + out-of-place
     // distance, all-integer; absent trigram costs the max rank 30.
-    "llm_charngram_langid" ->
+    QueryDef("llm_charngram_langid", llmCharngramLangid,
       """WITH grams AS (
         |  SELECT doc_id, lang, substr(text, i, 3) AS g
         |  FROM (SELECT doc_id, lang, text,
@@ -9484,10 +9341,10 @@ object Text {
         |SELECT d.doc_id, d.lang, b.predicted, b.dist,
         |  (d.lang = b.predicted) AS correct
         |FROM documents d JOIN best b USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin),
     // k-anonymity: QI triple (lang, source, n_chars//100); groups under
     // k = 5 get their quasi-identifiers masked to '*'.
-    "llm_k_anon" ->
+    QueryDef("llm_k_anon", llmKAnon,
       """WITH d AS (SELECT doc_id, lang, source, n_chars // 100 AS size_bucket
         |           FROM documents),
         |g AS (SELECT doc_id, lang, source, size_bucket,
@@ -9498,12 +9355,12 @@ object Text {
         |  CASE WHEN group_n >= 5 THEN source ELSE '*' END AS source,
         |  CASE WHEN group_n >= 5 THEN CAST(size_bucket AS VARCHAR) ELSE '*' END AS size_bucket,
         |  CAST(group_n AS BIGINT) AS group_n
-        |FROM g ORDER BY doc_id""".stripMargin,
+        |FROM g ORDER BY doc_id""".stripMargin),
     // Boilerplate prefix: (source, 8-word prefix) counts; source total
     // and argmax collapse in one window-free GROUP BY source — the
     // (count desc, prefix asc) winner is MIN over (-c, prefix) structs
     // (mirrors the builder's reshaped two-phase agg; no Sort/Window).
-    "llm_boilerplate" ->
+    QueryDef("llm_boilerplate", llmBoilerplate,
       s"""WITH p AS (SELECT source,
          |        array_to_string(list_slice(string_split(text, ' '), 1, 8), ' ')
          |          AS prefix
@@ -9517,11 +9374,11 @@ object Text {
          |  CAST(-best.nc AS BIGINT) AS top_count,
          |  ${oRound("(-best.nc) * 1.0 / n", 6)} AS share,
          |  ((-best.nc) * 1.0 / n >= 0.2) AS boilerplate
-         |FROM g ORDER BY source""".stripMargin,
+         |FROM g ORDER BY source""".stripMargin),
     // Source concentration: window-free H = ln n - (sum c ln c)/n
     // identity; sum(c*c) exact (HUGEINT / decimal(38,0)) cast to double
     // once; c ln c terms quantized at 1e-9 before the exact sum.
-    "llm_source_hhi" ->
+    QueryDef("llm_source_hhi", llmSourceHhi,
       s"""WITH c AS (SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS c
          |  FROM documents GROUP BY 1, 2),
          |g AS (SELECT lang, CAST(SUM(c) AS BIGINT) AS n_docs,
@@ -9533,13 +9390,13 @@ object Text {
          |  ${oRound("c2 / (CAST(n_docs AS DOUBLE) * n_docs)", 6)} AS hhi,
          |  ${oRound("ln(CAST(n_docs AS DOUBLE)) - clnc / n_docs", 6)} AS entropy_nats,
          |  ${oRound("exp(ln(CAST(n_docs AS DOUBLE)) - clnc / n_docs)", 6)} AS eff_sources
-         |FROM g ORDER BY lang""".stripMargin,
+         |FROM g ORDER BY lang""".stripMargin),
     // KMV theta set ops: same md5 48-bit uniform, per-slice k-minima by
     // (h, w) rank, union sketch re-ranked over the distinct sketch
     // values; every 1-row frame rides a scalar subquery (a comma cross
     // join of tiny frames can plan as CartesianProduct on the Spark
     // surface).
-    "llm_sketch_setops" ->
+    QueryDef("llm_sketch_setops", llmSketchSetops,
       s"""WITH wd AS (SELECT DISTINCT doc_id % 2 AS slice, w
          |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
          |        FROM documents) t
@@ -9586,11 +9443,11 @@ object Text {
          |  ${oRound("CAST(m_both AS DOUBLE) / n_u", 6)} AS jaccard_est,
          |  ${oRound("CAST(m_both AS DOUBLE) / n_u * nd_union_est", 6)} AS nd_intersect_est,
          |  (SELECT n_intersect_exact FROM ex) AS n_intersect_exact
-         |FROM us2""".stripMargin,
+         |FROM us2""".stripMargin),
     // RAKE: stopword masking + literal-class split (RE2 == Java for
     // [ ]*[|][ ]*); word deg/freq over candidate occurrences; per-word
     // score quantized at 1e-9 before the exact per-phrase sum.
-    "llm_rake_keywords" ->
+    QueryDef("llm_rake_keywords", llmRakeKeywords,
       s"""WITH po AS (SELECT phrase, string_split(phrase, ' ') AS pws FROM (
          |    SELECT unnest(string_split_regex(array_to_string(
          |      list_transform(string_split(text, ' '),
@@ -9614,42 +9471,42 @@ object Text {
          |  FROM m JOIN ws USING (w) GROUP BY 1, 2)
          |SELECT phrase, n_words, occurrences,
          |  ${oRound("score_raw", 6)} AS score
-         |FROM sc ORDER BY score DESC, phrase LIMIT 20""".stripMargin,
+         |FROM sc ORDER BY score DESC, phrase LIMIT 20""".stripMargin),
     // Code detection: translate-based symbol strip + IN-list lambda
     // filter; all ratios are exact-count divisions with CAST AS DOUBLE
     // hoisted before the division (the decimal-literal trap).
-    "llm_code_detect" ->
+    QueryDef("llm_code_detect", llmCodeDetect,
       s"""WITH ${codeScoreCtes("s", "sc")}
          |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
          |  CAST(SUM(CASE WHEN score >= 0.05 THEN 1 ELSE 0 END) AS BIGINT)
          |    AS code_docs,
          |  ${oRound("CAST(SUM(CASE WHEN score >= 0.05 THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)", 6)} AS code_frac,
          |  ${oRound(s"${oSum("score", 6)} / COUNT(score)", 6)} AS avg_score
-         |FROM sc GROUP BY source ORDER BY source""".stripMargin,
+         |FROM sc GROUP BY source ORDER BY source""".stripMargin),
     // Topic mix: the lexicon rides a CASE (values-identical to the
     // builder's broadcast join), argmax = the window-free
     // min(struct(-c, topic)) idiom, shares from a per-source total join.
-    "llm_topic_mix" ->
+    QueryDef("llm_topic_mix", llmTopicMix,
       s"""WITH ${topicMixCtes("t", "hh", "dt", "dt2", "lab", "ce", "tt")}
          |SELECT ce.source, ce.topic, ce.n_docs,
          |  ${oRound("CAST(ce.n_docs AS DOUBLE) / tt.n_src", 6)} AS share
-         |FROM ce JOIN tt USING (source) ORDER BY source, topic""".stripMargin,
+         |FROM ce JOIN tt USING (source) ORDER BY source, topic""".stripMargin),
     // Bigram perplexity: Jelinek-Mercer 0.9/0.1 over exact counts,
     // CAST AS DOUBLE hoisted; -ln p quantized at 1e-9 before the exact
     // per-doc sum; bt rides a scalar subquery.
-    "llm_lm_perplexity" ->
+    QueryDef("llm_lm_perplexity", llmLmPerplexity,
       s"""WITH ${pplModelCtes("wt", "bg", "c12", "c1", "cu", "bt", "md")}
          |SELECT bg.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
          |  ${oRound(s"(${oSum("-ln(p)", 9)}) / COUNT(*)", 6)} AS cross_entropy,
          |  ${oRound(s"exp((${oSum("-ln(p)", 9)}) / COUNT(*))", 6)} AS ppl
          |FROM bg JOIN md USING (w1, w2) GROUP BY bg.doc_id
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // JS divergence: full-outer vocab join, absent-side terms exact
     // zeros, p ln(p/m) terms quantized at 1e-9 before the exact sum;
     // slice totals ride scalar subqueries; ln 2 is the pinned Java
     // double literal (an engine's own ln(2.0) could differ in the last
     // ulp).
-    "llm_js_divergence" ->
+    QueryDef("llm_js_divergence", llmJsDivergence,
       s"""WITH wc AS (SELECT doc_id % 2 AS slice, w,
          |    CAST(COUNT(*) AS BIGINT) AS c
          |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
@@ -9673,19 +9530,19 @@ object Text {
          |SELECT n_words_a, n_words_b, n_common,
          |  ${oRound("0.5 * sp + 0.5 * sq", 6)} AS js_nats,
          |  ${oRound(s"(0.5 * sp + 0.5 * sq) / ${math.log(2.0)}", 6)} AS js_norm
-         |FROM g""".stripMargin,
+         |FROM g""".stripMargin),
     // Length profile: the agg_percentile idiom per source.
-    "llm_length_profile" ->
+    QueryDef("llm_length_profile", llmLengthProfile,
       s"""SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
          |  ${oRound("quantile_cont(n_chars, 0.1)", 6)} AS p10_chars,
          |  ${oRound("quantile_cont(n_chars, 0.5)", 6)} AS p50_chars,
          |  ${oRound("quantile_cont(n_chars, 0.9)", 6)} AS p90_chars,
          |  ${oRound(s"${oSum("CAST(n_chars AS DOUBLE)", 6)} / COUNT(n_chars)", 6)} AS mean_chars
-         |FROM documents GROUP BY source ORDER BY source""".stripMargin,
+         |FROM documents GROUP BY source ORDER BY source""".stripMargin),
     // l-diversity: QI pair (lang, n_chars//100), sensitive = source;
     // group-total window runs over the aggregated (QI, source) frame;
     // entropy terms quantized at 1e-9 before the exact sum.
-    "llm_l_diversity" ->
+    QueryDef("llm_l_diversity", llmLDiversity,
       s"""WITH sc AS (SELECT lang, n_chars // 100 AS size_bucket, source,
          |        CAST(COUNT(*) AS BIGINT) AS c
          |      FROM documents GROUP BY 1, 2, 3),
@@ -9697,11 +9554,11 @@ object Text {
          |  ${oRound(oSum("(c * 1.0 / n) * ln(n * 1.0 / c)", 9), 6)} AS entropy,
          |  (COUNT(*) >= 3) AS diverse
          |FROM g GROUP BY lang, size_bucket
-         |ORDER BY lang, size_bucket""".stripMargin,
+         |ORDER BY lang, size_bucket""".stripMargin),
     // t-closeness: the comparison grid is the aggregated QI-frame x
     // sensitive-universe cross join (absent cells contribute q_s), terms
     // quantized at 1e-9, the x1/2 and t-compare on the quantized value.
-    "llm_t_closeness" ->
+    QueryDef("llm_t_closeness", llmTCloseness,
       s"""WITH d AS (SELECT lang, n_chars // 100 AS size_bucket, source
          |      FROM documents),
          |sc AS (SELECT lang, size_bucket, source,
@@ -9720,10 +9577,10 @@ object Text {
          |  ${oRound("0.5 * (" + oSum("ABS(c * 1.0 / n - cs * 1.0 / nn)", 9) + ")", 6)} AS emd,
          |  (${oRound("0.5 * (" + oSum("ABS(c * 1.0 / n - cs * 1.0 / nn)", 9) + ")", 6)} <= 0.25) AS close
          |FROM x GROUP BY lang, size_bucket
-         |ORDER BY lang, size_bucket""".stripMargin,
+         |ORDER BY lang, size_bucket""".stripMargin),
     // KMV sketch: md5 12-hex uniform hash over the DISTINCT vocabulary,
     // k minima via ORDER/LIMIT, estimate (k-1)/u_k replayed exactly.
-    "llm_kmv_ndv" ->
+    QueryDef("llm_kmv_ndv", llmKmvNdv,
       s"""WITH wd AS (SELECT DISTINCT w FROM (
          |      SELECT unnest(string_split(text, ' ')) AS w FROM documents)
          |      WHERE w <> ''),
@@ -9736,11 +9593,11 @@ object Text {
          |  ${oRound("CAST(k - 1 AS DOUBLE) / uk", 2)} AS est_ndv,
          |  exact_ndv,
          |  ${oRound("ABS(CAST(k - 1 AS DOUBLE) / uk - CAST(exact_ndv AS DOUBLE)) / CAST(exact_ndv AS DOUBLE)", 6)} AS rel_err
-         |FROM sk, e""".stripMargin,
+         |FROM sk, e""".stripMargin),
     // CMS: counters replay exactly (md5 12-hex mod-w buckets over the
     // distinct-word frame); the one_sided invariant is the sketch's
     // defining property, pinned TRUE by construction in both engines.
-    "llm_cms_topk" ->
+    QueryDef("llm_cms_topk", llmCmsTopk,
       s"""WITH wc AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM (
          |      SELECT unnest(string_split(text, ' ')) AS w FROM documents)
          |    WHERE w <> '' GROUP BY w),
@@ -9757,11 +9614,11 @@ object Text {
          |  (MIN(sk.cnt) >= MAX(tp.c)) AS one_sided
          |FROM tp JOIN pr ON pr.w = tp.w JOIN sk ON sk.r = pr.r AND sk.b = pr.b
          |GROUP BY tp.w
-         |ORDER BY exact DESC, w""".stripMargin,
+         |ORDER BY exact DESC, w""".stripMargin),
     // DP release: per-CELL-KEY md5 uniform inverted through the Laplace
     // CDF, quantized at 1e-9 before round-and-clamp — both engines
     // release the identical table (a seeded RNG would be rows-only).
-    "llm_dp_release" ->
+    QueryDef("llm_dp_release", llmDpRelease,
       s"""WITH c AS (SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_true
          |    FROM documents GROUP BY lang, source),
          |un AS (SELECT lang, source, n_true,
@@ -9775,15 +9632,15 @@ object Text {
          |  CAST(GREATEST(FLOOR(n_true + noise + 0.5), 0.0) AS BIGINT)
          |    AS released,
          |  ${oRound("ABS(noise)", 6)} AS noise_abs
-         |FROM nz ORDER BY lang, source""".stripMargin,
-    "llm_fingerprint" ->
+         |FROM nz ORDER BY lang, source""".stripMargin),
+    QueryDef("llm_fingerprint", llmFingerprint,
       s"""SELECT doc_id,
          |list_reduce(list_prepend(0::BIGINT,
          |  list_transform(string_split(text, ' '),
          |    w -> length(w)::BIGINT * 256 + ascii(w[1]))),
          |  (a, b) -> (a * 31 + b) % $P) AS fingerprint
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "llm_media_manifest" ->
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_media_manifest", llmMediaManifest,
       """WITH f AS (SELECT doc_id,
         |    CAST(octet_length(encode(text)) AS INT) AS n,
         |    CASE WHEN length(text) > 0 THEN ascii(text[1]) ELSE 0 END AS b0
@@ -9807,26 +9664,26 @@ object Text {
         |  CAST(frame_idx AS BIGINT) * CAST(FLOOR(n / frames) AS BIGINT) AS byte_off,
         |  src_w, src_h, out_w, out_h,
         |  CAST(FLOOR(sc * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0 AS scale
-        |FROM m ORDER BY doc_id, j""".stripMargin,
-    "llm_multimodal_decode" ->
+        |FROM m ORDER BY doc_id, j""".stripMargin),
+    QueryDef("llm_multimodal_decode", llmMultimodalDecode,
       """SELECT doc_id, lang,
         |CAST(octet_length(encode(text)) AS INT) AS bytes,
         |CAST(64 + octet_length(encode(text)) % 640 AS INT) AS width,
         |CAST(64 + (CASE WHEN length(text) > 0 THEN ascii(text[1]) ELSE 0 END * 3) % 480 AS INT) AS height,
         |CAST(1 + octet_length(encode(text)) % 30 AS INT) AS frames
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "llm_multimodal" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_multimodal", llmMultimodal,
       """SELECT doc_id,
         |CAST(octet_length(encode(text)) AS INT) AS payload_bytes,
         |upper(array_to_string(list_transform(range(1, 5), i -> to_hex(ascii(text[i]))), '')) AS magic,
         |lang, n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // Winnowing replay: same positional 3-gram stream (shared hashGramSql
     // fragment), window-min selection over w consecutive grams. DuckDB
     // list slices are 1-based inclusive-inclusive, so g[i+1:i+w] is the
     // w-gram window starting at 0-based offset i — exactly Spark's
     // slice(g, i+1, w).
-    "llm_winnow" ->
+    QueryDef("llm_winnow", llmWinnow,
       s"""WITH wh AS ($wordHashSql),
          |g AS (SELECT doc_id, ${hashGramSql(3, distinct = false)} AS g
          |      FROM wh WHERE nw >= ${winnowW + 2}),
@@ -9835,8 +9692,8 @@ object Text {
          |SELECT doc_id, CAST(len(fps) AS INT) AS n_fp,
          |  CAST(list_sum(fps) AS BIGINT) AS fp_sum,
          |  list_min(fps) AS fp_min, list_max(fps) AS fp_max
-         |FROM f ORDER BY doc_id""".stripMargin,
-    "llm_bpe_merges" ->
+         |FROM f ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_bpe_merges", llmBpeMerges,
       """WITH w0 AS (
         |  SELECT w, COUNT(*) AS wc
         |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents) t
@@ -9844,18 +9701,18 @@ object Text {
         |p AS (SELECT wc, unnest(list_transform(range(1, length(w)),
         |        i -> substr(w, CAST(i AS INT), 2))) AS pair FROM w0)
         |SELECT pair, CAST(SUM(wc) AS BIGINT) AS cnt
-        |FROM p GROUP BY pair ORDER BY cnt DESC, pair LIMIT 20""".stripMargin,
+        |FROM p GROUP BY pair ORDER BY cnt DESC, pair LIMIT 20""".stripMargin),
     // Iterative trainer, unrolled: v0 = sentinel-wrapped weighted vocab;
     // per step k, p{k} = adjacent symbol pairs (chr(3)-keyed), m{k} =
     // the argmax merge, v{k} = the vocab with it applied (chr(1)/chr(2)
     // sentinel-literal replace — same semantics as the Spark side).
-    "llm_bpe_train" -> bpeTrainSql(10),
+    QueryDef("llm_bpe_train", llmBpeTrain, bpeTrainSql(10)),
     // Training = the same unrolled CTEs; the apply step folds the
     // word's sentinel-wrapped form through the m1..m10 scalar
     // subqueries in training order (left-to-right non-overlapping
     // replace — the canonical BPE apply).
-    "llm_bpe_encode" -> bpeEncodeSql(10),
-    "llm_shuffle_order" ->
+    QueryDef("llm_bpe_encode", llmBpeEncode, bpeEncodeSql(10)),
+    QueryDef("llm_shuffle_order", llmShuffleOrder,
       """WITH k AS (
         |  SELECT doc_id,
         |    ('0x' || substr(md5('shuf1:' || CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT AS okey
@@ -9864,13 +9721,13 @@ object Text {
         |SELECT shard,
         |  CAST(row_number() OVER (PARTITION BY shard ORDER BY okey, doc_id) AS INT) AS pos,
         |  doc_id
-        |FROM s ORDER BY shard, pos""".stripMargin,
+        |FROM s ORDER BY shard, pos""".stripMargin),
     // Token-budget replay: same two-phase bucket selection — bucket-level
     // running totals pick full buckets + the single boundary bucket; only
     // boundary docs pay a doc-level running sum. Window default frames
     // (RANGE .. CURRENT ROW) agree across engines; both order keys are
     // tie-free (distinct buckets; unique doc_id).
-    "llm_token_budget" ->
+    QueryDef("llm_token_budget", llmTokenBudget,
       s"""WITH s0 AS (
          |  SELECT doc_id, len(string_split(text, ' ')) AS n_tokens,
          |    ${oRound(qualitySql("text"), 6)} AS q
@@ -9898,11 +9755,11 @@ object Text {
          |  WHERE dcum + (cum - btok) <= budget)
          |SELECT doc_id, CAST(bucket AS INT) AS bucket,
          |  CAST(n_tokens AS INT) AS n_tokens, q
-         |FROM sel ORDER BY doc_id""".stripMargin,
+         |FROM sel ORDER BY doc_id""".stripMargin),
     // Fuzzy-decontamination replay: the SAME capped-bucket CTE chain as
     // the minhash oracle (shared fragment — no drift), with the self-join
     // split corpus×eval instead of doc_a<doc_b.
-    "llm_contamination_fuzzy" ->
+    QueryDef("llm_contamination_fuzzy", llmContaminationFuzzy,
       s"""WITH ${bucketCtes(maxBucket)},
          |cand AS (
          |  SELECT DISTINCT c.doc_id AS doc_id, e.doc_id AS eval_id,
@@ -9913,12 +9770,12 @@ object Text {
          |    ON c.band = e.band AND c.sig = e.sig
          |  WHERE c.doc_id % 7 != 0 AND e.doc_id % 7 = 0)
          |SELECT doc_id, eval_id, ${oRound("jac", 6)} AS jaccard
-         |FROM cand WHERE jac >= 0.3 ORDER BY doc_id, eval_id""".stripMargin,
+         |FROM cand WHERE jac >= 0.3 ORDER BY doc_id, eval_id""".stripMargin),
     // NFC (utf8proc = same UAX#15 result as the JDK normalizer) →
     // control strip → whitespace collapse → trim; md5 of the normalized
     // text is the exactness witness. RE2 needs the 'g' flag for global
     // replace (Java regexp_replace is global by default).
-    "llm_text_normalize" ->
+    QueryDef("llm_text_normalize", llmTextNormalize,
       """WITH n AS (
         |  SELECT doc_id, text,
         |    trim(regexp_replace(regexp_replace(nfc_normalize(text),
@@ -9927,10 +9784,10 @@ object Text {
         |  FROM documents)
         |SELECT doc_id, length(text) AS raw_len, length(norm) AS norm_len,
         |  norm <> text AS changed, md5(norm) AS h
-        |FROM n ORDER BY doc_id""".stripMargin,
+        |FROM n ORDER BY doc_id""".stripMargin),
     // Interpolated Kneser-Ney: identical fixed-order double formula,
     // quantized-long ordering for the cross-engine top-20.
-    "llm_lm_kn" ->
+    QueryDef("llm_lm_kn", llmLmKn,
       """WITH w AS (SELECT string_split(text, ' ') AS ws FROM documents
         |           WHERE len(string_split(text, ' ')) >= 2),
         |prs AS (SELECT ws[i] AS w1, ws[i+1] AS w2
@@ -9949,11 +9806,11 @@ object Text {
         |  FROM big b JOIN ctx USING (w1) JOIN cont USING (w2)
         |  CROSS JOIN tot)
         |SELECT w1, w2, c, CAST(pq AS DOUBLE) / 1000000.0 AS p_kn
-        |FROM p ORDER BY pq DESC, w1, w2 LIMIT 20""".stripMargin,
+        |FROM p ORDER BY pq DESC, w1, w2 LIMIT 20""".stripMargin),
     // Calibration: the shared bucket CTEs; per-pair match_k via a
     // 12-element index filter, exact Jaccard via the set intersect;
     // est ≥ 0.5 spelled as the integer match_k >= 6 in both engines.
-    "llm_minhash_calibration" -> {
+    QueryDef("llm_minhash_calibration", llmMinhashCalibration, {
       val mhList = (0 until bands * rowsPerBand).map(i => s"mh$i")
         .mkString("[", ", ", "]")
       s"""WITH ${bucketCtes(maxBucket)},
@@ -9983,10 +9840,10 @@ object Text {
          |  CAST(SUM(CASE WHEN match_k >= 6 AND xact >= 0.5 THEN 1 ELSE 0 END)
          |    AS BIGINT) AS both_pos
          |FROM m""".stripMargin
-    },
+    }),
     // Novelty: shared gram arithmetic; first occurrence = min doc_id
     // over the distinct-gram explode.
-    "llm_ngram_novelty" ->
+    QueryDef("llm_ngram_novelty", llmNgramNovelty,
       s"""WITH wh AS ($wordHashSql),
          |g4 AS (SELECT doc_id, unnest(${hashGramSql(4)}) AS g
          |       FROM wh WHERE nw >= 4),
@@ -9997,10 +9854,10 @@ object Text {
          |  ${oRound("CAST(SUM(CASE WHEN f.first_doc = g4.doc_id THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)", 6)}
          |    AS novelty
          |FROM g4 JOIN f USING (g)
-         |GROUP BY g4.doc_id ORDER BY g4.doc_id""".stripMargin,
+         |GROUP BY g4.doc_id ORDER BY g4.doc_id""".stripMargin),
     // Lexical diversity: Σc² rides the same (doc, word) count table;
     // three fixed-order divisions are the only doubles.
-    "llm_lexical_diversity" ->
+    QueryDef("llm_lexical_diversity", llmLexicalDiversity,
       s"""WITH cw AS (SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS c
          |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
          |        FROM documents) t GROUP BY doc_id, w),
@@ -10014,10 +9871,10 @@ object Text {
          |  ${oRound("CAST(n_types AS DOUBLE) / n_tokens", 6)} AS ttr,
          |  ${oRound("CAST(n_hapax AS DOUBLE) / n_types", 6)} AS hapax_frac,
          |  ${oRound("10000.0 * (sum_c2 - n_tokens) / (n_tokens * n_tokens)", 6)} AS yules_k
-         |FROM d ORDER BY doc_id""".stripMargin,
+         |FROM d ORDER BY doc_id""".stripMargin),
     // Outliers: same packed-key argmax as the cell CTEs; quantile_cont
     // ≡ Spark percentile over the unpacked integer cosines.
-    "llm_embed_outliers" ->
+    QueryDef("llm_embed_outliers", llmEmbedOutliers,
       s"""WITH $embCentsCtes,
          |asg AS (
          |  SELECT vec_id,
@@ -10033,10 +9890,10 @@ object Text {
          |  t.cell_n,
          |  ${oRound("t.p05_raw / 1000000000.0", 6)} AS cell_p05,
          |  CAST(qv.q AS DOUBLE) < t.p05_raw AS is_outlier
-         |FROM qv JOIN t USING (cell) ORDER BY qv.vec_id""".stripMargin,
+         |FROM qv JOIN t USING (cell) ORDER BY qv.vec_id""".stripMargin),
     // Fertility: shared wpTokensSql fold + the llm_token_count regex,
     // summed per language.
-    "llm_tokenizer_fertility" ->
+    QueryDef("llm_tokenizer_fertility", llmTokenizerFertility,
       s"""WITH per AS (SELECT lang,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
          |    $wpTokensSql AS wp_tokens,
@@ -10049,10 +9906,10 @@ object Text {
          |  CAST(SUM(bpe_tokens) AS BIGINT) AS bpe_tokens,
          |  ${oRound("CAST(SUM(wp_tokens) AS DOUBLE) / SUM(n_words)", 6)} AS wp_fertility,
          |  ${oRound("CAST(SUM(bpe_tokens) AS DOUBLE) / SUM(n_words)", 6)} AS bpe_fertility
-         |FROM per GROUP BY lang ORDER BY lang""".stripMargin,
+         |FROM per GROUP BY lang ORDER BY lang""".stripMargin),
     // CDC: identical B1/B2/B3·mod-P gram arithmetic, mod-16 boundary,
     // lag-sum chunk index, order-preserving string_agg reassembly.
-    "llm_cdc_chunks" ->
+    QueryDef("llm_cdc_chunks", llmCdcChunks,
       s"""WITH wt AS (SELECT doc_id, string_split(text, ' ') AS ws
          |            FROM documents
          |            WHERE len(string_split(text, ' ')) >= 1),
@@ -10086,11 +9943,11 @@ object Text {
          |  ${oRound("CAST(SUM(CASE WHEN bc.n_docs > 1 THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)", 6)}
          |    AS dup_frac
          |FROM chunks c JOIN bc USING (h)
-         |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin,
+         |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin),
     // kNN classify: same unthresholded cell pairs; per-vector top-3,
     // (vector, label) vote count, argmax with smaller-label tie-break,
     // per-class accuracy.
-    "llm_knn_classify" ->
+    QueryDef("llm_knn_classify", llmKnnClassify,
       s"""WITH ${semPairsCtesWith("")},
          |dirp AS (SELECT id_a AS src, id_b AS dst, cos FROM spairs
          |         UNION ALL SELECT id_b, id_a, cos FROM spairs),
@@ -10113,11 +9970,11 @@ object Text {
          |  ${oRound("CAST(SUM(CASE WHEN p.pred = l.label THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)", 6)}
          |    AS acc
          |FROM lab l JOIN pred p USING (vec_id)
-         |GROUP BY l.label ORDER BY l.label""".stripMargin,
+         |GROUP BY l.label ORDER BY l.label""".stripMargin),
     // Mutual kNN graph: the unthresholded SemDeDup cell pairs, ranked
     // per node (cos desc, dst tie-break), kept iff both directions
     // rank each other top-3.
-    "llm_knn_graph" ->
+    QueryDef("llm_knn_graph", llmKnnGraph,
       s"""WITH ${semPairsCtesWith("")},
          |dirp AS (SELECT id_a AS src, id_b AS dst, cos FROM spairs
          |         UNION ALL SELECT id_b, id_a, cos FROM spairs),
@@ -10127,10 +9984,10 @@ object Text {
          |  WHERE rnk <= 3)
          |SELECT t.src AS id_a, t.dst AS id_b, t.cos
          |FROM topk t JOIN topk r ON r.src = t.dst AND r.dst = t.src
-         |WHERE t.src < t.dst ORDER BY id_a, id_b""".stripMargin,
+         |WHERE t.src < t.dst ORDER BY id_a, id_b""".stripMargin),
     // Flesch battery: same split/filter/vowel-group arithmetic; the
     // scores are the identical fixed-order IEEE expression.
-    "llm_readability" ->
+    QueryDef("llm_readability", llmReadability,
       s"""WITH t AS (
          |  SELECT doc_id,
          |    len(list_filter(string_split_regex(text, '[.!?]+'),
@@ -10150,6 +10007,6 @@ object Text {
          |  CASE WHEN n_sents > 0 AND n_words > 0 THEN
          |    ${oRound("0.39 * (CAST(n_words AS DOUBLE) / n_sents) " +
       "+ 11.8 * (CAST(n_syll AS DOUBLE) / n_words) - 15.59", 4)} END AS fkgl
-         |FROM t ORDER BY doc_id""".stripMargin
+         |FROM t ORDER BY doc_id""".stripMargin)
   )
 }

@@ -108,17 +108,9 @@ object Windows {
         |ORDER BY user_id, tsu, event_id""".stripMargin)
   }
 
-  val queries: Map[String, Q] = Map(
-    "win_ranking" -> winRanking,
-    "win_time_range" -> winTimeRange,
-    "win_lead_lag" -> winLeadLag,
-    "win_agg_rows" -> winAggRows,
-    "win_agg_range" -> winAggRange
-  )
-
-  val oracleSql: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // Identical INTERVAL frame over the same naive-µs timestamps.
-    "win_time_range" ->
+    QueryDef("win_time_range", winTimeRange,
       """SELECT user_id, event_id, epoch_us(ts) AS tsu,
         |CAST(SUM(CAST(FLOOR(value*100+0.5) AS BIGINT)) OVER wh AS DOUBLE)/100
         |  AS roll_1h_sum,
@@ -126,8 +118,8 @@ object Windows {
         |FROM events
         |WINDOW wh AS (PARTITION BY user_id ORDER BY ts
         |              RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, tsu, event_id""".stripMargin,
-    "win_ranking" ->
+        |ORDER BY user_id, tsu, event_id""".stripMargin),
+    QueryDef("win_ranking", winRanking,
       s"""SELECT o_custkey, o_orderkey, o_orderpriority,
          |rank() OVER wt AS rnk,
          |dense_rank() OVER wt AS drnk,
@@ -138,8 +130,8 @@ object Windows {
          |FROM orders
          |WINDOW wt AS (PARTITION BY o_custkey ORDER BY o_orderpriority),
          |       wo AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)
-         |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "win_lead_lag" ->
+         |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    QueryDef("win_lead_lag", winLeadLag,
       """SELECT o_custkey, o_orderkey,
         |lag(o_totalprice, 1) OVER w AS prev_price,
         |lead(o_totalprice, 2, -1.0) OVER w AS next2_price,
@@ -150,8 +142,8 @@ object Windows {
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
         |       wf AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
         |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "win_agg_rows" ->
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    QueryDef("win_agg_rows", winAggRows,
       """SELECT o_custkey, o_orderkey,
         |CAST(SUM(CAST(FLOOR(o_totalprice*100+0.5) AS BIGINT)) OVER wr AS DOUBLE)/100 AS running_total,
         |COUNT(*) OVER wr AS running_cnt,
@@ -163,14 +155,14 @@ object Windows {
         |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
         |       wm AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
         |              ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "win_agg_range" ->
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    QueryDef("win_agg_range", winAggRange,
       """SELECT o_custkey, o_orderkey, o_totalprice,
         |COUNT(*) OVER wr AS near_cheaper_cnt,
         |CAST(SUM(CAST(FLOOR(o_totalprice*100+0.5) AS BIGINT)) OVER wr AS DOUBLE)/100 AS near_cheaper_sum
         |FROM orders
         |WINDOW wr AS (PARTITION BY o_custkey ORDER BY o_totalprice
         |              RANGE BETWEEN 50000 PRECEDING AND CURRENT ROW)
-        |ORDER BY o_custkey, o_orderkey, o_totalprice""".stripMargin
+        |ORDER BY o_custkey, o_orderkey, o_totalprice""".stripMargin)
   )
 }

@@ -57,6 +57,35 @@ package object queries {
     s"CAST(FLOOR(($e)*$p+0.5) AS DOUBLE)/$p"
   }
 
+  /** One registered query: its builder and, when the operation is
+    * SQL-expressible, the DuckDB-runnable oracle SQL whose rows the
+    * builder's must hash-match (`None` = checked rows-only). Each module declares its queries once, as a
+    * `defs: Seq[QueryDef]`; [[graft.SparkEntry]] projects the registry,
+    * the oracle map and the SQL surface from those lists. */
+  case class QueryDef(name: String, build: Q, oracle: Option[String])
+
+  object QueryDef {
+    /** The common case: a query with an oracle. */
+    def apply(name: String, build: Q, oracle: String): QueryDef =
+      QueryDef(name, build, Some(oracle))
+  }
+
+  /** Eager lineage-truncating checkpoint for the iterative operators
+    * (connected components, k-core, BFS, centrality rounds): persist
+    * alone caches results but leaves the logical plan nested, so the
+    * plan tree grows multiplicatively per round and per-action plan
+    * stringification OOMs. Checkpointing truncates lineage to the
+    * materialized RDD; superseded rounds are freed by the context
+    * cleaner once unreferenced. When the session has a checkpoint dir
+    * configured (a cluster run), use RELIABLE checkpoints —
+    * localCheckpoint blocks live on executors and an executor loss
+    * mid-iteration would kill the job; on a 1000-executor 100 TB run
+    * that is a certainty, not a tail risk. Local runs (no dir) keep the
+    * cheap executor-local path. */
+  def ckpt(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
+
   /** Scale-adaptive scan fan-out for CPU-heavy per-row derivations
     * (guide §2: make partitioning scale-adaptive, derive it from the
     * input, never a local-mode constant).

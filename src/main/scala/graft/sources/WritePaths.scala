@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.Tables
-import graft.queries.{dsum, oSum, Q}
+import graft.queries.{dsum, oSum, Q, QueryDef}
 import org.apache.spark.sql.functions._
 
 /** §2.2 sources/sinks beyond plain parquet reads: CSV/JSON/text/regex
@@ -369,42 +369,26 @@ object WritePaths {
       .orderBy("o_orderstatus")
   }
 
-  val queries: Map[String, Q] = Map(
-    "join_smb" -> joinSmb,
-    "src_csv_roundtrip" -> srcCsvRoundtrip,
-    "src_xml_roundtrip" -> srcXmlRoundtrip,
-    "src_json_roundtrip" -> srcJsonRoundtrip,
-    "src_parquet_evolution" -> srcParquetEvolution,
-    "src_regex_text" -> srcRegexText,
-    "src_csv_malformed" -> srcCsvMalformed,
-    "src_sequencefile" -> srcSequenceFile,
-    "src_avro_roundtrip" -> srcAvroRoundtrip,
-    "src_rcfile_roundtrip" -> srcRcfileRoundtrip,
-    "sink_partitioned_parquet" -> sinkPartitionedParquet,
-    "sink_sharded_export" -> sinkShardedExport,
-    "sink_orc_roundtrip" -> sinkOrcRoundtrip
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "join_smb" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("join_smb", joinSmb,
       s"""SELECT o_orderstatus, COUNT(*) AS cnt,
          |${oSum("l_extendedprice", 2)} AS price_sum
          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "src_xml_roundtrip" ->
+         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    QueryDef("src_xml_roundtrip", srcXmlRoundtrip,
       """SELECT CAST(n_nationkey AS INT) AS n_nationkey, n_name,
         |CAST(n_regionkey AS INT) AS n_regionkey
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-    "src_csv_roundtrip" ->
+        |FROM nation ORDER BY n_nationkey""".stripMargin),
+    QueryDef("src_csv_roundtrip", srcCsvRoundtrip,
       """SELECT CAST(n_nationkey AS INT) AS n_nationkey, n_name,
         |CAST(n_regionkey AS INT) AS n_regionkey
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-    "src_json_roundtrip" ->
+        |FROM nation ORDER BY n_nationkey""".stripMargin),
+    QueryDef("src_json_roundtrip", srcJsonRoundtrip,
       """SELECT CAST(r_regionkey AS INT) AS r_regionkey, r_name
-        |FROM region ORDER BY r_regionkey""".stripMargin,
+        |FROM region ORDER BY r_regionkey""".stripMargin),
     // Reconstruction oracle: batch 1 reads back with NULL in the added
     // column, batch 2 with the computed tier — the evolved-read unify.
-    "src_parquet_evolution" ->
+    QueryDef("src_parquet_evolution", srcParquetEvolution,
       """WITH r AS (SELECT CAST(r_regionkey AS INT) AS r_regionkey, r_name
         |           FROM region)
         |SELECT * FROM (
@@ -414,31 +398,31 @@ object WritePaths {
         |  SELECT r_regionkey, r_name,
         |    CASE WHEN r_regionkey < 2 THEN 'core' ELSE 'tail' END,
         |    CAST(2 AS INT) FROM r) t
-        |ORDER BY batch, r_regionkey""".stripMargin,
-    "src_regex_text" ->
-      "SELECT s_suppkey, s_name FROM supplier ORDER BY s_suppkey",
-    "src_sequencefile" ->
-      "SELECT s_suppkey, s_name, s_acctbal FROM supplier ORDER BY s_suppkey",
-    "src_avro_roundtrip" ->
-      "SELECT s_suppkey, s_name, s_acctbal FROM supplier ORDER BY s_suppkey",
-    "src_rcfile_roundtrip" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
-    "src_csv_malformed" ->
+        |ORDER BY batch, r_regionkey""".stripMargin),
+    QueryDef("src_regex_text", srcRegexText,
+      "SELECT s_suppkey, s_name FROM supplier ORDER BY s_suppkey"),
+    QueryDef("src_sequencefile", srcSequenceFile,
+      "SELECT s_suppkey, s_name, s_acctbal FROM supplier ORDER BY s_suppkey"),
+    QueryDef("src_avro_roundtrip", srcAvroRoundtrip,
+      "SELECT s_suppkey, s_name, s_acctbal FROM supplier ORDER BY s_suppkey"),
+    QueryDef("src_rcfile_roundtrip", srcRcfileRoundtrip,
+      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey"),
+    QueryDef("src_csv_malformed", srcCsvMalformed,
       s"""SELECT COUNT(*) AS total,
          |CAST(SUM(CASE WHEN s_suppkey % 10 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS corrupt,
          |${oSum("CASE WHEN s_suppkey % 10 <> 0 THEN s_acctbal END", 2)} AS good_bal
-         |FROM supplier""".stripMargin,
-    "sink_partitioned_parquet" ->
+         |FROM supplier""".stripMargin),
+    QueryDef("sink_partitioned_parquet", sinkPartitionedParquet,
       s"""SELECT o_orderstatus, COUNT(*) AS cnt, ${oSum("o_totalprice", 2)} AS total
-         |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "sink_orc_roundtrip" ->
+         |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    QueryDef("sink_orc_roundtrip", sinkOrcRoundtrip,
       s"""SELECT c_mktsegment, COUNT(*) AS cnt, ${oSum("c_acctbal", 2)} AS bal_sum
          |FROM customer WHERE c_acctbal > 5000
-         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "sink_sharded_export" ->
+         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    QueryDef("sink_sharded_export", sinkShardedExport,
       """SELECT lang, COUNT(*) AS docs,
         |CAST(SUM(length(text)) AS BIGINT) AS chars
         |FROM documents WHERE n_chars >= 200
-        |GROUP BY lang ORDER BY lang""".stripMargin
+        |GROUP BY lang ORDER BY lang""".stripMargin)
   )
 }

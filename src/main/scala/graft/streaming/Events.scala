@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import graft.queries.{dsum, oSum, Q}
+import graft.queries.{dsum, oSum, Q, QueryDef}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
@@ -199,20 +199,8 @@ object Events {
       .orderBy("win_start", "category")
   }
 
-  val queries: Map[String, Q] = Map(
-    "stream_tumbling" -> streamTumbling,
-    "stream_enrich" -> streamEnrich,
-    "stream_interval_join" -> streamIntervalJoin,
-    "stream_stateful_sessions" -> streamStatefulSessions,
-    "stream_sliding" -> streamSliding,
-    "stream_session" -> streamSession,
-    "stream_dedup_first" -> streamDedupFirst,
-    "stream_watermark_drop" -> streamWatermarkDrop,
-    "stream_topk_types" -> streamTopkTypes
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "stream_interval_join" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("stream_interval_join", streamIntervalJoin,
       """SELECT c.user_id AS user_id, c.event_id AS click_id,
         |       p.event_id AS purchase_id,
         |       (epoch_us(CAST(p.ts AS TIMESTAMP)) - epoch_us(CAST(c.ts AS TIMESTAMP))) // 60000000 AS mins_between,
@@ -221,8 +209,8 @@ object Events {
         |  ON c.user_id = p.user_id
         | AND c.event_type = 'click' AND p.event_type = 'purchase'
         | AND p.ts >= c.ts AND p.ts < c.ts + INTERVAL '1 hour'
-        |ORDER BY user_id, click_id, purchase_id""".stripMargin,
-    "stream_stateful_sessions" ->
+        |ORDER BY user_id, click_id, purchase_id""".stripMargin),
+    QueryDef("stream_stateful_sessions", streamStatefulSessions,
       s"""WITH ordered AS (
          |  SELECT user_id, value,
          |    CASE WHEN epoch_us(CAST(ts AS TIMESTAMP))
@@ -235,8 +223,8 @@ object Events {
          |SELECT user_id, COUNT(*) AS n_events,
          |  CAST(SUM(new_sess) AS BIGINT) AS n_sessions,
          |  ${oSum("value")} AS total_value
-         |FROM ordered GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "stream_enrich" -> {
+         |FROM ordered GROUP BY user_id ORDER BY user_id""".stripMargin),
+    QueryDef("stream_enrich", streamEnrich, {
       val dimRows = typeDim
         .map { case (t, c, w) => s"('$t', '$c', $w)" }.mkString(", ")
       s"""WITH dim(event_type, category, weight) AS (VALUES $dimRows)
@@ -245,12 +233,12 @@ object Events {
          |  ${oSum("e.value * d.weight", 2)} AS wsum
          |FROM events e JOIN dim d USING (event_type)
          |GROUP BY 1, 2 ORDER BY win_start, category""".stripMargin
-    },
-    "stream_tumbling" ->
+    }),
+    QueryDef("stream_tumbling", streamTumbling,
       s"""SELECT time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP)) AS win_start,
          |event_type, COUNT(*) AS cnt, ${oSum("value")} AS val_sum
-         |FROM events GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin,
-    "stream_topk_types" ->
+         |FROM events GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin),
+    QueryDef("stream_topk_types", streamTopkTypes,
       """WITH c AS (
         |  SELECT time_bucket(INTERVAL '6 hours', CAST(ts AS TIMESTAMP))
         |    AS win_start, event_type, CAST(COUNT(*) AS BIGINT) AS cnt
@@ -258,8 +246,8 @@ object Events {
         |r AS (SELECT *, row_number() OVER (PARTITION BY win_start
         |        ORDER BY cnt DESC, event_type) AS rnk FROM c)
         |SELECT win_start, CAST(rnk AS INT) AS rnk, event_type, cnt
-        |FROM r WHERE rnk <= 2 ORDER BY win_start, rnk""".stripMargin,
-    "stream_sliding" ->
+        |FROM r WHERE rnk <= 2 ORDER BY win_start, rnk""".stripMargin),
+    QueryDef("stream_sliding", streamSliding,
       s"""WITH t AS (
          |  SELECT time_bucket(INTERVAL '30 minutes', CAST(ts AS TIMESTAMP)) AS w1, value FROM events
          |), win AS (
@@ -267,8 +255,8 @@ object Events {
          |  UNION ALL
          |  SELECT w1 - INTERVAL '30 minutes' AS win_start, value FROM t)
          |SELECT win_start, COUNT(*) AS cnt, ${oSum("value")} AS val_sum
-         |FROM win GROUP BY win_start ORDER BY win_start""".stripMargin,
-    "stream_session" ->
+         |FROM win GROUP BY win_start ORDER BY win_start""".stripMargin),
+    QueryDef("stream_session", streamSession,
       s"""WITH ordered AS (
          |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value,
          |    CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
@@ -282,21 +270,21 @@ object Events {
          |SELECT user_id, MIN(ts) AS sess_start,
          |  MAX(ts) + INTERVAL '10 minutes' AS sess_end,
          |  COUNT(*) AS cnt, ${oSum("value")} AS val_sum
-         |FROM sess GROUP BY user_id, sess_id ORDER BY user_id, sess_start""".stripMargin,
-    "stream_dedup_first" ->
+         |FROM sess GROUP BY user_id, sess_id ORDER BY user_id, sess_start""".stripMargin),
+    QueryDef("stream_dedup_first", streamDedupFirst,
       """WITH ranked AS (
         |  SELECT user_id, event_type, event_id, CAST(ts AS TIMESTAMP) AS first_ts, value,
         |    row_number() OVER (PARTITION BY user_id, event_type
         |                       ORDER BY ts, event_id) AS rn
         |  FROM events)
         |SELECT user_id, event_type, event_id, first_ts, value
-        |FROM ranked WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin,
-    "stream_watermark_drop" ->
+        |FROM ranked WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin),
+    QueryDef("stream_watermark_drop", streamWatermarkDrop,
       s"""WITH m AS (SELECT user_id, MAX(ts) AS max_ts FROM events GROUP BY user_id)
          |SELECT e.user_id AS user_id, COUNT(*) AS recent_cnt, ${oSum("value")} AS recent_sum
          |FROM events e JOIN m ON e.user_id = m.user_id
          |WHERE e.ts >= m.max_ts - INTERVAL '1 hour'
-         |GROUP BY e.user_id ORDER BY user_id""".stripMargin
+         |GROUP BY e.user_id ORDER BY user_id""".stripMargin)
   )
 
   /** File-source stream over the events fixture. `readStream` needs an

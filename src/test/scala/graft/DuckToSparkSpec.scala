@@ -5,10 +5,10 @@ import graft.queries.SqlSurface.duckToSpark
 
 /** Unit pins for the oracle-dialect → Spark SQL rewriter feeding the
   * SQL-string entry surface. The end gate is SqlSurfaceSpec's exact-row
-  * round-trip over every translated text; these pins catch the rewrite
-  * CLASSES (so a future transform can't silently regress a protected
-  * case like in-string content and only be caught as a cryptic row
-  * mismatch a round later). */
+  * round-trip over every surface text without an override; these pins
+  * catch the rewrite CLASSES (so a future transform can't silently
+  * regress a protected case like in-string content and only be caught
+  * as a cryptic row mismatch a round later). */
 class DuckToSparkSpec extends AnyFunSuite {
 
   test("string literals are untouched by token rewrites") {

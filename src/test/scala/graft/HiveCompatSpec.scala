@@ -131,7 +131,7 @@ class HiveCompatSpec extends SparkSpec {
   test("fn_block_offset's path-based surface spelling is still load-bearing") {
     // `_metadata` is a file-source hidden column; Spark does not expose it
     // through a temp VIEW node. That is why the r20 surface text (see
-    // SqlSurface.custom) must bind the file-source relation DIRECTLY via
+    // SqlSurface.overrides) must bind the file-source relation DIRECTLY via
     // Hive-style variable substitution — parquet.`${graft.dir}/…` — rather
     // than the registered `lineitem` view every other text uses. If a
     // future Spark version resolves _metadata through views, the path

@@ -661,7 +661,7 @@ class PlanSpec extends SparkSpec {
 
   test("SQL-surface texts obey the suite-wide plan-class guards too") {
     // The 222 surface texts are gated on ROW equality against their
-    // builders, but a dialect-translation regression (a translatedPatched
+    // builders, but a dialect-translation regression (a patched override
     // regex dropping a join condition or fanning a signature chain into
     // scan filters) would keep rows identical while planning
     // catastrophically worse. Iterate the same plan-class bounds over

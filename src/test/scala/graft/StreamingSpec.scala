@@ -201,7 +201,7 @@ class StreamingSpec extends SparkSpec {
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       assert(q.awaitTermination(120000), "stream did not finish in 120s")
       val streamed = spark.table("tws_smoke").orderBy("user_id").collect()
-      val batch = graft.streaming.Events
+      val batch = SparkEntry
         .queries("stream_stateful_sessions")(spark, sfDir).collect()
       assert(streamed.length == batch.length)
       assert(streamed.map(_.toString).sameElements(batch.map(_.toString)))
@@ -255,7 +255,7 @@ class StreamingSpec extends SparkSpec {
       .filter(col("rn") === 1)
       .select("user_id", "n_events", "n_sessions", "total_value")
       .orderBy("user_id").collect()
-    val batch = graft.streaming.Events
+    val batch = SparkEntry
       .queries("stream_stateful_sessions")(spark, sfDir).collect()
     assert(finalRows.length == batch.length)
     assert(finalRows.map(_.toString).sameElements(batch.map(_.toString)))
@@ -329,7 +329,7 @@ class StreamingSpec extends SparkSpec {
     assert(streamedRows.map(_.getLong(0)).distinct.length === streamedRows.length)
     val streamed = streamedRows
       .map(r => r.getLong(0) -> (r.getLong(1), r.getInt(2), r.getDouble(3))).toMap
-    val batch = graft.queries.Text.queries("llm_contamination")(spark, sfDir)
+    val batch = SparkEntry.queries("llm_contamination")(spark, sfDir)
       .collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getInt(2), r.getDouble(3))).toMap
     assert(streamed.nonEmpty)
