@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import graft.queries.{MmFeat, MmRow, Text}
+import graft.queries.{CorpusStats, Dedup, LmStats, MmFeat, MmRow, Multimodal, Quality, Sampling,
+  Vectors}
 
 /** Public library surface for the training-data pipeline operators, over
   * CALLER-OWNED DataFrames — the `SparkEntry.queries` registry binds the
@@ -14,7 +15,7 @@ import graft.queries.{MmFeat, MmRow, Text}
   *    method says so, `source`/`lang` for [[sourceStats]].
   *  - All operators are deterministic (no RNG), shuffle-minimal, and
   *    scale-shaped as documented on their cores in
-  *    [[graft.queries.Text]]: banded/bucketed candidate generation with
+  *    the `graft.queries` family modules: banded/bucketed candidate generation with
   *    hot-bucket caps, two-phase aggregation, O(log d) star-contraction
   *    clustering, broadcast-sized state joins.
   *
@@ -23,7 +24,7 @@ import graft.queries.{MmFeat, MmRow, Text}
   * [[minhashCandidatePairs]] — materialize small id/bucket-only
   * intermediates via `persist` (load-bearing barriers against a
   * filter-pushdown recompute pathology and against multi-consumer
-  * re-hashing — measured, see [[graft.queries.Text]]), and the
+  * re-hashing — measured, see [[graft.queries.Dedup]]), and the
   * iterative operators ([[connectedComponents]], [[nearDupClusters]],
   * [[semDedupClusters]], [[clusterSample]]) additionally leave
   * RDD-level `localCheckpoint()` blocks that `spark.catalog
@@ -55,42 +56,42 @@ object Pipeline {
     * shingle-id set) — the persisted state schema of the dedup family.
     * Docs with fewer than 3 words carry no signature (no 3-shingle
     * exists) and are absent from the result. */
-  def minhashSignatures(docs: DataFrame): DataFrame = Text.signaturesOf(docs)
+  def minhashSignatures(docs: DataFrame): DataFrame = Dedup.signaturesOf(docs)
 
   /** Verified near-duplicate pairs (doc_a < doc_b, shingle-Jaccard ≥ 0.5)
     * via banded MinHash-LSH — candidates only ever form inside
     * (band, signature) buckets, capped against boilerplate blowup. */
-  def nearDupPairs(docs: DataFrame): DataFrame = Text.minhashDupPairs(docs)
+  def nearDupPairs(docs: DataFrame): DataFrame = Dedup.minhashDupPairs(docs)
 
   /** UNVERIFIED banded-LSH candidate pairs (doc_a < doc_b) — the pair
     * source for a downstream verify stage ([[ngramJaccard]], or your
     * own) when you want to separate candidate generation from the
     * verification feature. */
   def minhashCandidatePairs(docs: DataFrame): DataFrame =
-    Text.minhashCandidatePairs(docs)
+    Dedup.minhashCandidatePairs(docs)
 
   /** Exact word-bigram Jaccard verify over caller candidate pairs
     * (doc_a, doc_b) → (doc_a, doc_b, bigram_jac). The one-argument
     * overload wires in [[minhashCandidatePairs]], the deployed
     * generate → verify composition. */
   def ngramJaccard(docs: DataFrame, pairs: DataFrame): DataFrame =
-    Text.ngramJaccardOf(docs, pairs)
+    Dedup.ngramJaccardOf(docs, pairs)
   def ngramJaccard(docs: DataFrame): DataFrame =
-    Text.ngramJaccardOf(docs, Text.minhashCandidatePairs(docs))
+    Dedup.ngramJaccardOf(docs, Dedup.minhashCandidatePairs(docs))
 
   /** Near-dup clusters: connected components over [[nearDupPairs]] by
     * alternating large-star/small-star contraction (O(log d) rounds).
     * Returns (doc_id, cluster_id = component-min doc_id). */
   def nearDupClusters(docs: DataFrame): DataFrame =
-    Text.connectedComponents(
+    Dedup.connectedComponents(
       docs.select("doc_id"),
-      Text.minhashDupPairs(docs).select("doc_a", "doc_b"))
+      Dedup.minhashDupPairs(docs).select("doc_a", "doc_b"))
 
   /** Connected components over a caller-supplied undirected edge list
     * (any two equal-typed id columns); returns (doc_id, cluster_id) for
     * `nodes` (single id column). */
   def connectedComponents(nodes: DataFrame, edges: DataFrame): DataFrame =
-    Text.connectedComponents(nodes, edges)
+    Dedup.connectedComponents(nodes, edges)
 
   /** One production incremental-dedup round: dedup `batch` against the
     * persisted signature state at `statePath` (exact content-hash layer
@@ -99,7 +100,7 @@ object Pipeline {
     * corpus ∪ survivors. Initialize the state with [[writeDedupState]]. */
   def incrementalDedup(spark: SparkSession, batch: DataFrame,
       statePath: String, append: Boolean = true): DataFrame =
-    Text.incrementalDedupRound(spark, batch, statePath, append)
+    Dedup.incrementalDedupRound(spark, batch, statePath, append)
 
   /** Build and write the initial dedup state (signatures + content
     * hashes) for a corpus. Output parallelism follows the corpus scan
@@ -107,7 +108,7 @@ object Pipeline {
     * bounded shards and a fixture corpus as a handful of files — never
     * the single-reducer bottleneck a coalesce(1) would force at scale. */
   def writeDedupState(corpus: DataFrame, statePath: String): Unit =
-    Text.dedupStateOf(corpus)
+    Dedup.dedupStateOf(corpus)
       .write.mode("overwrite").option("maxRecordsPerFile", 1000000)
       .parquet(statePath)
 
@@ -129,7 +130,7 @@ object Pipeline {
     val stateHashes = spark.read.parquet(statePath)
       .select(col("h").as("__graft_state_h")).distinct()
     batch
-      .withColumn("__graft_h", Text.contentHashCol) // state's hash scheme, shared
+      .withColumn("__graft_h", Dedup.contentHashCol) // state's hash scheme, shared
       .join(stateHashes, col("__graft_h") === col("__graft_state_h"), "left_anti")
       .drop("__graft_h")
   }
@@ -180,7 +181,7 @@ object Pipeline {
       .foreachBatch { (b: DataFrame, id: Long) =>
         val s = b.sparkSession
         // survivors vs state-at-batch-start; pinned before any writes
-        val ids = Text.incrementalDedupRound(s, b, statePath, append = false)
+        val ids = Dedup.incrementalDedupRound(s, b, statePath, append = false)
           .localCheckpoint()
         // dynamic overwrite scoped to THIS write (DataFrameWriter
         // option, not a session-conf toggle): a conf set/restore here
@@ -190,7 +191,7 @@ object Pipeline {
         ids.withColumn("batch_id", lit(id))
           .write.option("partitionOverwriteMode", "dynamic")
           .mode("overwrite").partitionBy("batch_id").parquet(outPath)
-        if (append) Text.appendSurvivorState(b, ids, statePath)
+        if (append) Dedup.appendSurvivorState(b, ids, statePath)
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -200,7 +201,7 @@ object Pipeline {
     * ratio against the eval partition selected by `isEval(doc_id)`.
     * The eval gram set broadcasts; the corpus side never shuffles. */
   def contamination(docs: DataFrame, isEval: Column => Column): DataFrame =
-    Text.contaminationOf(docs, isEval)
+    Dedup.contaminationOf(docs, isEval)
 
   /** Streaming twin of [[contamination]]: score a STREAMING (doc_id,
     * text) frame against a STATIC eval-doc frame (broadcast gram set).
@@ -208,7 +209,7 @@ object Pipeline {
     * its own micro-batch; see the core's scaladoc for the state-growth
     * caveat. */
   def contaminationStream(stream: DataFrame, evalDocs: DataFrame): DataFrame =
-    Text.contaminationStream(stream, evalDocs)
+    Dedup.contaminationStream(stream, evalDocs)
 
   /** Fuzzy (near-duplicate) benchmark decontamination — catches the
     * paraphrased/partially-edited eval leakage [[contamination]]'s exact
@@ -219,39 +220,39 @@ object Pipeline {
     * are KB-sized, so the eval side of both joins broadcasts and the
     * corpus side streams map-side through them. */
   def fuzzyContamination(docs: DataFrame, isEval: Column => Column): DataFrame =
-    Text.fuzzyContaminationOf(docs, isEval)
+    Dedup.fuzzyContaminationOf(docs, isEval)
 
   /** Gopher-rule intra-doc repetition ratios (duplicate-word fraction,
     * top-bigram mass) with the 0.20 flag. */
-  def repetition(docs: DataFrame): DataFrame = Text.repetitionOf(docs)
+  def repetition(docs: DataFrame): DataFrame = Dedup.repetitionOf(docs)
 
   /** MassiveText/Dolma duplicate-chunk fractions: share of each doc's
     * 20-word chunks that occur in at least one other doc. */
-  def dupChunks(docs: DataFrame): DataFrame = Text.dupChunksOf(docs)
+  def dupChunks(docs: DataFrame): DataFrame = Dedup.dupChunksOf(docs)
 
   /** Duplicate-chunk removal (Dolma paragraph dedup): strips every
     * cross-document duplicate 20-word chunk and reassembles the
     * survivors in order — returns (doc_id, n_chunks, n_kept,
     * clean_hash = md5 of the scrubbed text). */
-  def chunkScrub(docs: DataFrame): DataFrame = Text.chunkScrubOf(docs)
+  def chunkScrub(docs: DataFrame): DataFrame = Dedup.chunkScrubOf(docs)
 
   /** Per-source document cap (C4-style domain balancing): keep at most
     * `cap` docs per `source`, selected deterministically by md5(doc_id)
     * — an unbiased per-source sample. Plans through the heap-based
     * grouped-top-k operator, so no per-partition sort at scale. */
   def sourceCap(docs: DataFrame, cap: Int): DataFrame =
-    Text.sourceCapOf(docs, cap).drop("__graft_rn")
+    Sampling.sourceCapOf(docs, cap).drop("__graft_rn")
 
   /** HTML → text extraction over a raw-markup `text` column: strips
     * script/style blocks, comments and tags, decodes the common
     * entities, collapses whitespace — the deterministic
     * boilerplate-removal stage ahead of quality scoring and dedup.
     * Returns (doc_id, clean_text). */
-  def htmlExtract(docs: DataFrame): DataFrame = Text.htmlExtractOf(docs)
+  def htmlExtract(docs: DataFrame): DataFrame = Quality.htmlExtractOf(docs)
 
   /** C4/RefinedWeb-style per-source corpus statistics and the
     * source-level keep/drop decision. Needs `source`, `lang`, `text`. */
-  def sourceStats(docs: DataFrame): DataFrame = Text.sourceStatsOf(docs)
+  def sourceStats(docs: DataFrame): DataFrame = CorpusStats.sourceStatsOf(docs)
 
   /** CCNet-style LM-frequency quality score: per-doc mean unigram
     * surprise (integer-log2 bits) under the corpus's own word
@@ -259,7 +260,7 @@ object Pipeline {
     * hashed into a fixed 2^16 feature-bucket space before counting
     * (broadcast-safe at any corpus scale; colliding words pool
     * counts). Returns (doc_id, n_words, avg_bits, suspect). */
-  def lmQuality(docs: DataFrame): DataFrame = Text.lmQualityOf(docs)
+  def lmQuality(docs: DataFrame): DataFrame = LmStats.lmQualityOf(docs)
 
   /** Bigram-conditional LM surprise — the context-aware dual of
     * [[lmQuality]]: per adjacent word pair, bits(c(prev)) −
@@ -268,7 +269,7 @@ object Pipeline {
     * = word salad. Same fixed 2^16 hashed-bucket count tables
     * (broadcast-safe at any scale). Docs under 2 words carry no row.
     * Returns (doc_id, n_bigrams, avg_cond_bits). */
-  def lmBigram(docs: DataFrame): DataFrame = Text.lmBigramOf(docs)
+  def lmBigram(docs: DataFrame): DataFrame = LmStats.lmBigramOf(docs)
 
   /** CCNet head/middle/tail partitioning (Wenzek et al. 1911.00359
     * §4.3): per language, docs split into best/middle/worst thirds by
@@ -276,7 +277,7 @@ object Pipeline {
     * Thresholds come from a per-(lang, quantized-score) histogram, so
     * no per-doc ntile/sort at any corpus scale. Returns (doc_id, lang,
     * avg_bits, bucket). */
-  def ccnetBuckets(docs: DataFrame): DataFrame = Text.ccnetBucketsOf(docs)
+  def ccnetBuckets(docs: DataFrame): DataFrame = Quality.ccnetBucketsOf(docs)
 
   /** Hybrid retrieval: BM25 lexical + 64-dim hashed-count cosine dense
     * rankers fused by Reciprocal Rank Fusion (Cormack et al. 2009,
@@ -286,7 +287,7 @@ object Pipeline {
     * rrf, lex_rnk, dense_rnk). */
   def rrfFusion(docs: DataFrame, isQuery: Column => Column,
       poolK: Int = 20, topK: Int = 5): DataFrame =
-    Text.rrfFusionOf(docs, isQuery, poolK, topK)
+    LmStats.rrfFusionOf(docs, isQuery, poolK, topK)
 
   /** Exact-quota stratified sampling: per language, EXACTLY
     * ⌈frac · n_lang⌉ docs in md5(doc_id) order — quota honored exactly
@@ -294,7 +295,7 @@ object Pipeline {
     * up to hash interleaving. Returns (doc_id, lang, rn, n_lang,
     * quota). */
   def stratifiedSample(docs: DataFrame, frac: Double = 0.2): DataFrame =
-    Text.stratifiedSampleOf(docs, frac)
+    Sampling.stratifiedSampleOf(docs, frac)
 
   /** Population Stability Index drift monitor between the doc_id % 7
     * candidate slice and the rest: 100-char length bins (capped at 9),
@@ -302,7 +303,7 @@ object Pipeline {
     * column and alert above ~0.25. Input needs (doc_id, n_chars);
     * returns the 10-bin (bin, c_ref, c_cand, p_ref, p_cand, psi_term)
     * frame. One two-phase count over the corpus. */
-  def driftPsi(docs: DataFrame): DataFrame = Text.driftPsiOf(docs)
+  def driftPsi(docs: DataFrame): DataFrame = CorpusStats.driftPsiOf(docs)
 
   /** Two-sample Kolmogorov–Smirnov drift statistic between the same
     * slices — [[driftPsi]]'s binless companion: the sup-norm CDF
@@ -310,13 +311,13 @@ object Pipeline {
     * one two-phase count; the cumulative window runs over the bounded
     * distinct-value frame. Returns one row (ks_d, at_x, n_ref,
     * n_cand). */
-  def driftKs(docs: DataFrame): DataFrame = Text.driftKsOf(docs)
+  def driftKs(docs: DataFrame): DataFrame = CorpusStats.driftKsOf(docs)
 
   /** Corpus snapshot diff: added/removed/changed/unchanged counts by
     * content hash across two derived snapshots — one co-partitioned
     * full-outer join on the doc key, so downstream stages recompute
     * only the delta. Input needs (doc_id, text). */
-  def corpusDiff(docs: DataFrame): DataFrame = Text.corpusDiffOf(docs)
+  def corpusDiff(docs: DataFrame): DataFrame = CorpusStats.corpusDiffOf(docs)
 
   /** t-closeness audit (the third release-privacy gate beside kAnon and
     * lDiversity): per QI group, the EMD (= total-variation distance for
@@ -325,14 +326,14 @@ object Pipeline {
     * comparison frames are aggregated — one corpus pass. Input needs
     * (lang, n_chars, source). */
   def tCloseness(docs: DataFrame, t: Double = 0.25): DataFrame =
-    Text.tClosenessOf(docs, t)
+    CorpusStats.tClosenessOf(docs, t)
 
   /** K-minimum-values distinct-count sketch over the corpus vocabulary:
     * (k, u_k, est_ndv, exact_ndv, rel_err) one-row self-gate — the
     * exactly-replayable counterpart of the HLL++ NDV estimate. Input
     * needs a text column. */
   def kmvNdv(docs: DataFrame, k: Int = 256): DataFrame =
-    Text.kmvNdvOf(docs, k)
+    CorpusStats.kmvNdvOf(docs, k)
 
   /** Count-min sketch heavy-hitter read-out: d×w occurrence counters
     * over the vocabulary, then per top-k exact word the CMS estimate,
@@ -340,14 +341,14 @@ object Pipeline {
     * mergeable-sketch counterpart of kmvNdv. Input needs a text
     * column. */
   def cmsTopk(docs: DataFrame, d: Int = 4, wBuckets: Int = 1024,
-      topK: Int = 10): DataFrame = Text.cmsTopkOf(docs, d, wBuckets, topK)
+      topK: Int = 10): DataFrame = CorpusStats.cmsTopkOf(docs, d, wBuckets, topK)
 
   /** Excess-loss data selection (RHO-style): top-k docs by
     * uni_bits − bi_bits — the per-word information the context model
     * explains that the unigram reference cannot; high gain = learnable
     * structure, ~0 = word soup a loss-based curator skips. */
   def rhoSelect(docs: DataFrame, topK: Int = 100): DataFrame =
-    Text.rhoSelectOf(docs, topK)
+    Quality.rhoSelectOf(docs, topK)
 
   /** ε-DP contingency-release audit: the (lang × source) count table
     * with deterministic per-cell Laplace(1/ε) noise, round-and-clamp
@@ -355,7 +356,7 @@ object Pipeline {
     * — completes the privacy family (kAnon/lDiversity/tCloseness audit
     * the data; this audits the released statistic). */
   def dpRelease(docs: DataFrame, eps: Double = 1.0): DataFrame =
-    Text.dpReleaseOf(docs, eps)
+    CorpusStats.dpReleaseOf(docs, eps)
 
   /** Per-source quality-score calibration (batch-effect correction):
     * per doc, the raw quantized score plus its in-source percent rank
@@ -363,7 +364,7 @@ object Pipeline {
     * in-source z-score (shape-preserving). Input needs (doc_id,
     * source, text). Per-source window + broadcast moment frame. */
   def qualityCalibrate(docs: DataFrame): DataFrame =
-    Text.qualityCalibrateOf(docs)
+    Quality.qualityCalibrateOf(docs)
 
   /** Zipf rank-frequency fit over the top-V vocabulary: least-squares
     * (exponent, intercept, R²) of ln(freq) on ln(rank) — natural text
@@ -371,7 +372,7 @@ object Pipeline {
     * spam bend it. One wordcount + a V-row regression. Input needs a
     * text column. */
   def zipfFit(docs: DataFrame, topV: Int = 1000): DataFrame =
-    Text.zipfFitOf(docs, topV)
+    LmStats.zipfFitOf(docs, topV)
 
   /** Heaps'-law vocabulary-growth fit — the companion gate to
     * [[zipfFit]]: least-squares β of ln(vocab) on ln(tokens) at nCkpt
@@ -380,14 +381,14 @@ object Pipeline {
     * soup. Input needs (doc_id, text); wordcount-shaped shuffles plus
     * an nCkpt-row regression frame. */
   def heapsLaw(docs: DataFrame, nCkpt: Int = 16): DataFrame =
-    Text.heapsLawOf(docs, nCkpt)
+    LmStats.heapsLawOf(docs, nCkpt)
 
   /** UniMax budget allocation (Chung et al., ICLR 2023): water-fill a
     * token budget across languages under a per-language epoch cap —
     * closed-form threshold on the k-language frame, no iteration.
     * Input needs (lang, text); returns per-language allocation,
     * epochs, and the capped flag. */
-  def unimax(docs: DataFrame): DataFrame = Text.unimaxOf(docs)
+  def unimax(docs: DataFrame): DataFrame = Sampling.unimaxOf(docs)
 
   /** Poisson-bootstrap 95% CI for the corpus mean quality — each of
     * nB replicates draws every doc's multiplicity independently as
@@ -395,7 +396,7 @@ object Pipeline {
     * text); returns one row (n_docs, b_resamples, mean_q, lo95,
     * hi95). */
   def bootstrapCi(docs: DataFrame, nB: Int = 64): DataFrame =
-    Text.bootstrapCiOf(docs, nB)
+    CorpusStats.bootstrapCiOf(docs, nB)
 
   /** Weighted sampling without replacement (Efraimidis–Spirakis A-ES):
     * top-k by the deterministic key ln(u)/w with md5-derived u — the
@@ -403,13 +404,13 @@ object Pipeline {
     * returns the k selected (doc_id, w, es_key). Per-row arithmetic
     * into a bounded top-k heap merge — scan speed at any scale. */
   def weightedSample(docs: DataFrame, k: Int = 200): DataFrame =
-    Text.weightedSampleOf(docs, k)
+    Sampling.weightedSampleOf(docs, k)
 
   /** k-anonymity suppression over the (lang, source, size-bucket)
     * quasi-identifier triple: rows whose QI group holds fewer than k
     * docs get their QIs masked to '*' before release. Returns (doc_id,
     * lang, source, size_bucket, group_n). */
-  def kAnon(docs: DataFrame, k: Int = 5): DataFrame = Text.kAnonOf(docs, k)
+  def kAnon(docs: DataFrame, k: Int = 5): DataFrame = CorpusStats.kAnonOf(docs, k)
 
   /** l-diversity audit over the (lang, size-bucket) quasi-identifier
     * pair with `source` as the sensitive attribute: per QI group, size,
@@ -417,20 +418,20 @@ object Pipeline {
     * flag — the homogeneity-attack check k-anonymity alone misses.
     * Returns (lang, size_bucket, n_docs, distinct_l, entropy, diverse). */
   def lDiversity(docs: DataFrame, l: Int = 3): DataFrame =
-    Text.lDiversityOf(docs, l)
+    CorpusStats.lDiversityOf(docs, l)
 
   /** Retrieval evaluation (nDCG@k / MRR / hits) of the brute-cosine
     * ranking against label relevance. Returns per eval query
     * (q_id, n_rel, hits, mrr, dcg, ndcg). */
   def ndcgEval(embeddings: DataFrame, k: Int = 10): DataFrame =
-    Text.ndcgEvalOf(embeddings, k)
+    Vectors.ndcgEvalOf(embeddings, k)
 
   /** Per-source boilerplate-prefix detection: the most frequent w-word
     * document prefix per source, its share of the source's docs, and
     * the share ≥ thresh flag — the audit before a template-strip pass.
     * Returns (source, n_docs, top_prefix, top_count, share, boilerplate). */
   def boilerplate(docs: DataFrame, w: Int = 8,
-      thresh: Double = 0.2): DataFrame = Text.boilerplateOf(docs, w, thresh)
+      thresh: Double = 0.2): DataFrame = CorpusStats.boilerplateOf(docs, w, thresh)
 
   /** Multi-touch conversion attribution (linear + last-touch side by
     * side, 7-day lookback, value-conserving `direct` bucket) over a
@@ -504,61 +505,61 @@ object Pipeline {
   /** Per-lang source-concentration indices: HHI, Shannon entropy,
     * effective-source count. Input needs (lang, source). */
   def sourceHhi(docs: DataFrame): DataFrame =
-    graft.queries.Text.sourceHhiOf(docs)
+    CorpusStats.sourceHhiOf(docs)
 
   /** KMV theta-sketch set operations between the even/odd doc_id
     * slices: NDV estimates for each slice, their union and
     * intersection, with exact counts beside every estimate. Input
     * needs (doc_id, text). */
   def sketchSetops(docs: DataFrame, k: Int = 200): DataFrame =
-    graft.queries.Text.sketchSetopsOf(docs, k)
+    CorpusStats.sketchSetopsOf(docs, k)
 
   /** RAKE keyword extraction: top-N stopword-free phrases scored by
     * summed member-word degree/frequency. Input needs (text). */
   def rakeKeywords(docs: DataFrame, topN: Int = 20): DataFrame =
-    graft.queries.Text.rakeKeywordsOf(docs, topN)
+    LmStats.rakeKeywordsOf(docs, topN)
 
   /** Per-source code-likeness audit (symbol-char + code-keyword
     * ratios, code-like doc fraction). Input needs (source, text). */
   def codeDetect(docs: DataFrame, thresh: Double = 0.05): DataFrame =
-    graft.queries.Text.codeDetectOf(docs, thresh)
+    Quality.codeDetectOf(docs, thresh)
 
   /** Lexicon-based per-doc topic argmax rolled up as per-(source,
     * topic) shares. Input needs (doc_id, source, text). */
   def topicMix(docs: DataFrame): DataFrame =
-    graft.queries.Text.topicMixOf(docs)
+    Quality.topicMixOf(docs)
 
   /** Per-doc perplexity under the corpus's own interpolated bigram LM
     * (docs with fewer than 2 words have no defined perplexity and are
     * absent). Input needs (doc_id, text). */
   def lmPerplexity(docs: DataFrame): DataFrame =
-    graft.queries.Text.lmPerplexityOf(docs)
+    LmStats.lmPerplexityOf(docs)
 
   /** Jensen-Shannon divergence between the even/odd doc_id slices'
     * word distributions (one row: vocab sizes, overlap, JS in nats and
     * normalized to [0,1]). Input needs (doc_id, text). */
   def jsDivergence(docs: DataFrame): DataFrame =
-    graft.queries.Text.jsDivergenceOf(docs)
+    CorpusStats.jsDivergenceOf(docs)
 
   /** Per-source document-length profile: exact interpolated
     * p10/p50/p90 of n_chars plus the mean. Input needs
     * (source, n_chars). */
   def lengthProfile(docs: DataFrame): DataFrame =
-    graft.queries.Text.lengthProfileOf(docs)
+    CorpusStats.lengthProfileOf(docs)
 
   /** Near-dup threshold sensitivity curve: per candidate Jaccard cut
     * (0.5–0.9), the verified pairs and distinct docs a dedup pass at
     * that cut would touch. Input needs (doc_id, text). */
   def dedupThresholdCurve(docs: DataFrame): DataFrame =
-    graft.queries.Text.dedupThresholdCurveOf(docs)
+    Dedup.dedupThresholdCurveOf(docs)
 
   /** Asymmetric n-gram containment over pre-built LSH candidate pairs
     * — the sub-document-duplicate detector symmetric Jaccard misses
     * (the `embedded` flag fires on high containment at low Jaccard).
-    * `hashed` = [[graft.queries.Text.hashedWordsOf]] output (caller
+    * `hashed` = [[graft.queries.Dedup.hashedWordsOf]] output (caller
     * persists it); `pairs` needs (doc_a, doc_b). */
   def ngramContainment(hashed: DataFrame, pairs: DataFrame): DataFrame =
-    graft.queries.Text.ngramContainmentFromHashed(hashed, pairs)
+    Dedup.ngramContainmentFromHashed(hashed, pairs)
 
   /** URL-level dedup (RefinedWeb §3.1): canonicalize a `url` column
     * (strip fragments/default ports/trailing slashes/tracking params,
@@ -567,7 +568,7 @@ object Pipeline {
     * url); returns (canonical_url, dup_cnt, keeper_id, best_chars).
     * A pure projection plus ONE shuffle on the canonical key — the
     * pre-content dedup stage, runnable before any text is fetched. */
-  def urlDedup(docs: DataFrame): DataFrame = Text.urlDedupOf(docs)
+  def urlDedup(docs: DataFrame): DataFrame = Dedup.urlDedupOf(docs)
 
   /** Exact duplicated-substring detection (Lee et al., ACL 2022) via
     * bounded prefix doubling over word-level suffix equivalence
@@ -577,7 +578,7 @@ object Pipeline {
     * (class ids are representative positions, not hashes). Input needs
     * (doc_id, text); returns (doc_id, n_pos, max_dup_depth, n_dup8,
     * n_dup16). log₂(depth) equi-shuffle rounds, no global sort. */
-  def suffixDup(docs: DataFrame): DataFrame = Text.suffixDupOf(docs)
+  def suffixDup(docs: DataFrame): DataFrame = Dedup.suffixDupOf(docs)
 
   /** The dedup action on the [[suffixDup]] signal (Lee et al. §4):
     * cut every non-first occurrence of a duplicated `spanW`-word span
@@ -587,7 +588,7 @@ object Pipeline {
     * clean_text). One gram pass + two-phase gram stats + skew-safe
     * equi-join + bounded per-doc covered set. */
   def suffixScrub(docs: DataFrame, spanW: Int = 8): DataFrame =
-    Text.suffixScrubOf(docs, spanW)
+    Dedup.suffixScrubOf(docs, spanW)
 
   /** MMR diversity reranking (Carbonell & Goldstein 1998) of a cosine
     * retrieval pool: greedy λ·rel − (1−λ)·max-sim-to-selected picks,
@@ -596,33 +597,33 @@ object Pipeline {
     * (q_id, step, vec_id, mmr). */
   def mmrRerank(embeddings: DataFrame, isQuery: Column => Column,
       poolK: Int = 10, selectK: Int = 5, lambda: Double = 0.7): DataFrame =
-    Text.mmrRerankOf(embeddings, isQuery, poolK, selectK, lambda)
+    Vectors.mmrRerankOf(embeddings, isQuery, poolK, selectK, lambda)
 
   /** PMI-ranked collocation extraction (Church & Hanks 1990): adjacent
     * word pairs scored by the un-logged association ratio
     * p(a,b)/(p(a)·p(b)), hapax-guarded (`minCount`), global top-k via
     * TakeOrderedAndProject. Returns (a, b, cab, ca, cbn, ratio). */
   def collocations(docs: DataFrame, minCount: Int = 3,
-      topK: Int = 20): DataFrame = Text.collocationsOf(docs, minCount, topK)
+      topK: Int = 20): DataFrame = LmStats.collocationsOf(docs, minCount, topK)
 
   /** TextRank keyword extraction (Mihalcea & Tarau 2004): weighted
     * PageRank over the word co-occurrence graph, surfacing words
     * central to the topology even when raw counts are unremarkable.
     * Returns the top-k (word, score). */
   def textrank(docs: DataFrame, iterations: Int = 5,
-      topK: Int = 10): DataFrame = Text.textrankOf(docs, iterations, topK)
+      topK: Int = 10): DataFrame = LmStats.textrankOf(docs, iterations, topK)
 
   /** Cavnar-Trenkle char-trigram language ID: per-language top-30
     * trigram rank profiles built from the corpus's own labels, docs
     * classified by the all-integer out-of-place distance. Returns
     * (doc_id, lang, predicted, dist, correct). */
-  def charLangId(docs: DataFrame): DataFrame = Text.charLangIdOf(docs)
+  def charLangId(docs: DataFrame): DataFrame = Quality.charLangIdOf(docs)
 
   /** Per-doc character-distribution entropy in the integer bin-length
     * surrogate — the cheap low-entropy garbage gate (single-char
     * floods, keyboard mash) that runs before heavier n-gram scorers.
     * Returns (doc_id, len, alphabet, ent_bits). */
-  def charEntropy(docs: DataFrame): DataFrame = Text.charEntropyOf(docs)
+  def charEntropy(docs: DataFrame): DataFrame = LmStats.charEntropyOf(docs)
 
   /** Media preprocessing manifest: per payload, the resize plan
     * (longest side to 224 px, aspect preserved) and the uniform
@@ -632,7 +633,7 @@ object Pipeline {
     * arithmetic; at 100 TB the manifest generation is the
     * corpus-sized pass, the decode is per-row work behind it. */
   def mediaManifest(spark: SparkSession, sfDir: String): DataFrame =
-    Text.llmMediaManifest(spark, sfDir)
+    Multimodal.llmMediaManifest(spark, sfDir)
 
   /** Cross-document repeated-span removal with text reconstruction
     * (Lee et al. 2107.06499's finding that span-level cutting beats
@@ -643,7 +644,7 @@ object Pipeline {
     * n_chunks, kept, removed, clean_text). Chunk stats are one
     * hash-keyed two-phase agg; reconstruction is per-doc bounded. */
   def spanDedup(docs: DataFrame, chunkWords: Int = 5): DataFrame =
-    Text.spanDedupOf(docs, chunkWords)
+    Dedup.spanDedupOf(docs, chunkWords)
 
   /** Stupid-backoff trigram LM scoring (Brants et al. 2007) of the
     * held-out slice (`!isTrain`) under the train slice's hashed count
@@ -654,7 +655,7 @@ object Pipeline {
     * out-of-distribution signal. All three count tables are ≤ 65,536
     * rows at any corpus scale (broadcast-safe by construction). */
   def lmTrigram(docs: DataFrame, isTrain: Column => Column): DataFrame =
-    Text.lmTrigramOf(docs, isTrain)
+    LmStats.lmTrigramOf(docs, isTrain)
 
   /** SemDeDup (semantic dedup inside coarse embedding clusters) over a
     * caller (vec_id, embedding) frame: returns (dup_id, keeper_id,
@@ -671,21 +672,21 @@ object Pipeline {
     * k ≳ N / 1000 (≈ 2^16 at tens of millions of vectors; the default
     * 40 suits the test fixtures). Works for any id space, including
     * frames smaller than k. */
-  def semDedup(embeddings: DataFrame, k: Int = Text.ivfK): DataFrame =
-    Text.semDedupOf(embeddings, k)
+  def semDedup(embeddings: DataFrame, k: Int = Vectors.ivfK): DataFrame =
+    Vectors.semDedupOf(embeddings, k)
 
   /** Lexical-diversity battery over a caller (doc_id, text) frame:
     * type-token ratio, hapax fraction, Yule's K — the vocabulary-
     * richness axis template spam passes every length/ratio gate on. */
   def lexicalDiversity(docs: DataFrame): DataFrame =
-    Text.lexicalDiversityOf(docs)
+    LmStats.lexicalDiversityOf(docs)
 
   /** Embedding outlier audit over a caller (vec_id, embedding) frame:
     * flags each coarse cell's most-peripheral 5% by quantized cosine
     * to the cell centroid (exact interpolated per-cell p05). `k` sizes
     * the coarse quantizer (see [[semDedup]]'s sizing rule). */
-  def embedOutliers(embeddings: DataFrame, k: Int = Text.ivfK): DataFrame =
-    Text.embedOutliersOf(embeddings, k)
+  def embedOutliers(embeddings: DataFrame, k: Int = Vectors.ivfK): DataFrame =
+    Vectors.embedOutliersOf(embeddings, k)
 
   /** Mutual k-NN graph over a caller (vec_id, embedding) frame: edge
     * (id_a < id_b, cos) iff each endpoint ranks the other in its
@@ -694,8 +695,8 @@ object Pipeline {
     * cells (`cells` seeds — see [[semDedup]]'s sizing rule), so the
     * pair space stays cell-bounded at any corpus size. */
   def knnGraph(embeddings: DataFrame, k: Int = 3,
-      cells: Int = Text.ivfK): DataFrame =
-    Text.knnGraphOf(embeddings, k, cells)
+      cells: Int = Vectors.ivfK): DataFrame =
+    Vectors.knnGraphOf(embeddings, k, cells)
 
   /** SemDeDup pairs resolved into CLUSTERS via connected components
     * (the same O(log d) star-contraction operator the MinHash path
@@ -705,8 +706,8 @@ object Pipeline {
     * must resolve consistently — the pairwise keeper rule maps B to A
     * but C to B, which a per-pair drop mishandles. `k` sizes the coarse
     * quantizer (see [[semDedup]]'s sizing rule). */
-  def semDedupClusters(embeddings: DataFrame, k: Int = Text.ivfK): DataFrame =
-    Text.semDedupClustersOf(embeddings, k)
+  def semDedupClusters(embeddings: DataFrame, k: Int = Vectors.ivfK): DataFrame =
+    Vectors.semDedupClustersOf(embeddings, k)
 
   /** Cluster-balanced diversity sampling: keep at most `m` vectors per
     * semantic cluster (the [[semDedupClusters]] labels), selected by
@@ -714,8 +715,8 @@ object Pipeline {
     * m > 1 trades residual redundancy for coverage. Returns (vec_id,
     * cluster_id) for the kept vectors. */
   def clusterSample(embeddings: DataFrame, m: Int,
-      k: Int = Text.ivfK): DataFrame =
-    Text.clusterSampleOf(embeddings, m, k)
+      k: Int = Vectors.ivfK): DataFrame =
+    Vectors.clusterSampleOf(embeddings, m, k)
       .select("vec_id", "cluster_id")
 
   /** IVF approximate-nearest-neighbor search over CALLER frames —
@@ -733,29 +734,26 @@ object Pipeline {
     * millions of vectors; the default 40 suits the test fixtures) and
     * scale `nprobe` with the recall you need. */
   def annSearch(corpus: DataFrame, queries: DataFrame, topK: Int = 5,
-      nprobe: Int = 2, refineSteps: Int = 1, k: Int = Text.ivfK): DataFrame = {
+      nprobe: Int = 2, refineSteps: Int = 1, k: Int = Vectors.ivfK): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(corpus.sparkSession)
-    val dot = (x: Column, y: Column) => call_function("dot_product", x, y)
-    def prep(df: DataFrame): DataFrame = df
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+    def prep(df: DataFrame): DataFrame =
+      Vectors.withNorm(df.select(col("vec_id"), Vectors.embeddingV))
     val c = prep(corpus)
-    var cents = Text.ivfSeeds(c, k)
-    (1 to refineSteps).foreach(_ => cents = Text.lloydRefine(c, cents))
-    Text.ivfRetrieve(c, prep(queries), cents, topK, nprobe)
+    var cents = Vectors.ivfSeeds(c, k)
+    (1 to refineSteps).foreach(_ => cents = Vectors.lloydRefine(c, cents))
+    Vectors.ivfRetrieve(c, prep(queries), cents, topK, nprobe)
   }
 
   /** Temperature-scaled (α = 0.5) domain-mixing weights per `source`:
     * (source, n_docs, n_tokens, mix_p, epochs). */
-  def mixWeights(docs: DataFrame): DataFrame = Text.mixWeightsOf(docs)
+  def mixWeights(docs: DataFrame): DataFrame = Sampling.mixWeightsOf(docs)
 
   /** The full Gopher document-filter rule battery (word-count bounds,
     * mean word length, symbol/bullet/ellipsis ratios, alphabetic-word
     * ratio, stopword presence) with per-rule columns and the `keep`
     * conjunction. Pair with [[repetition]] for Table A1's
     * duplication half. */
-  def gopherRules(docs: DataFrame): DataFrame = Text.gopherRulesOf(docs)
+  def gopherRules(docs: DataFrame): DataFrame = Quality.gopherRulesOf(docs)
 
   /** DSIR-style importance scoring of raw docs against the target
     * distribution selected by `isTarget(doc_id)`: (doc_id, n_words,
@@ -767,7 +765,7 @@ object Pipeline {
     * target distribution has no likelihoods, and every score degrades
     * to null. */
   def dsirSelect(docs: DataFrame, isTarget: Column => Column): DataFrame =
-    Text.dsirSelectOf(docs, isTarget)
+    Quality.dsirSelectOf(docs, isTarget)
 
   /** Trained linear quality classifier (the GPT-3-style "train a
     * classifier on labeled docs, score the corpus" selection step):
@@ -780,7 +778,7 @@ object Pipeline {
     * scale (broadcast-safe by construction). */
   def qualityClassifier(docs: DataFrame, positive: Column,
       epochs: Int = 3): DataFrame =
-    Text.qualityClassifierOf(docs, epochs, positive)
+    Quality.qualityClassifierOf(docs, epochs, positive)
 
   /** Split-conformal prediction sets over [[qualityClassifier]]'s
     * scores: calibration split doc_id % 5 = 0, α = 0.1, integer-exact
@@ -789,7 +787,7 @@ object Pipeline {
     * distribution-free coverage guarantee a pipeline checks before
     * trusting a learned quality cut. Input needs (doc_id, lang, text)
     * — lang supplies the classifier's ±1 labels. */
-  def conformal(docs: DataFrame): DataFrame = Text.conformalOf(docs)
+  def conformal(docs: DataFrame): DataFrame = Quality.conformalOf(docs)
 
   /** PCA top-component projection over a caller (vec_id, v) frame:
     * center, estimate the dominant variance direction by `iters`
@@ -799,7 +797,7 @@ object Pipeline {
     * projection join; quantized-long sums end to end, so the trained
     * direction and every projection replay bit-exact in DuckDB. */
   def pcaProject(emb: DataFrame, iters: Int = 8): DataFrame =
-    Text.pcaProjectOf(emb, iters)
+    Vectors.pcaProjectOf(emb, iters)
 
   /** Winnowing fingerprints (Schleimer et al., SIGMOD 2003) per doc:
     * window-minimum selection over the positional 3-word hash-gram
@@ -809,14 +807,14 @@ object Pipeline {
     * overlap that whole-doc hashing misses. Returns (doc_id, n_fp,
     * fp_sum, fp_min, fp_max) summary rows; shuffle-free per-row
     * arithmetic. Docs under w+2 words carry no window and are absent. */
-  def winnow(docs: DataFrame): DataFrame = Text.winnowOf(docs)
+  def winnow(docs: DataFrame): DataFrame = Dedup.winnowOf(docs)
 
   /** First-iteration BPE merge-candidate table (Sennrich et al., ACL
     * 2016): the `topK` most frequent adjacent character pairs weighted
     * by corpus word frequency — (pair, cnt). The pair explode runs over
     * DISTINCT words (vocabulary-sized), never the token stream. */
   def bpeMerges(docs: DataFrame, topK: Int = 20): DataFrame =
-    Text.bpeMergesOf(docs, topK)
+    LmStats.bpeMergesOf(docs, topK)
 
   /** BPE APPLY: train the top-`topK` merge table on `docs` (collected
     * driver-side — the tokenizer model artifact, `topK` rows) and
@@ -826,7 +824,7 @@ object Pipeline {
     * Contract: words must not contain code points U+0001/U+0002 (the
     * internal symbol sentinels). */
   def bpeEncode(docs: DataFrame, topK: Int = 10): DataFrame =
-    Text.bpeEncodeOf(docs, topK)
+    LmStats.bpeEncodeOf(docs, topK)
 
   /** BM25 retrieval (Okapi k1 = 1.2, b = 0.75): docs matching
     * `isQuery(doc_id)` are multi-term queries against the rest; top-`k`
@@ -835,7 +833,7 @@ object Pipeline {
     * shape — no vocabulary broadcast); ranking runs through
     * TopKPerKeyExec. */
   def bm25(docs: DataFrame, isQuery: Column => Column, topK: Int = 5): DataFrame =
-    Text.bm25Of(docs, isQuery, topK)
+    LmStats.bm25Of(docs, isQuery, topK)
 
   /** Sparse-random-projection dimensionality reduction (Achlioptas
     * ternary JL matrix, 64 → 16 dims): (vec_id, j, y) projected
@@ -844,7 +842,7 @@ object Pipeline {
     * matrix — run it before LSH/clustering to cut vector bytes and
     * hash cost 4x. */
   def randomProject(embeddings: DataFrame): DataFrame =
-    Text.randomProjOf(embeddings)
+    Vectors.randomProjOf(embeddings)
 
   /** Product-quantization ANN over caller (vec_id, v: array&lt;double&gt;)
     * frames: seed `m`×32 sub-codebooks from a deterministic corpus
@@ -864,7 +862,7 @@ object Pipeline {
   def pqSearch(corpus: DataFrame, queries: DataFrame, topK: Int = 5,
       m: Int = 8, subDim: Int = 8, refineSteps: Int = 1,
       rerank: Int = 4): DataFrame =
-    Text.pqRetrieve(corpus, queries, topK, m, subDim, refineSteps, rerank = rerank)
+    Vectors.pqRetrieve(corpus, queries, topK, m, subDim, refineSteps, rerank = rerank)
 
   /** IVF-PQ ANN (FAISS IndexIVFPQ shape) over caller (vec_id, v, nrm)
     * frames + a centroid frame from [[annSearch]]'s quantizer family:
@@ -880,7 +878,7 @@ object Pipeline {
     * 1.000 at 8). */
   def ivfPqSearch(corpus: DataFrame, queries: DataFrame, cents: DataFrame,
       topK: Int = 5, nprobe: Int = 4, rerank: Int = 8): DataFrame =
-    Text.ivfPqRetrieve(corpus, queries, cents, topK, nprobe, rerank = rerank)
+    Vectors.ivfPqRetrieve(corpus, queries, cents, topK, nprobe, rerank = rerank)
 
   /** Deterministic global training-order shuffle + shard assignment:
     * (shard, pos, doc_id) where the whole ordering replays
@@ -888,7 +886,7 @@ object Pipeline {
     * target_shard_bytes at scale — it is the write-parallelism knob and
     * bounds every per-shard sort. */
   def shuffleShards(docs: DataFrame, nShards: Int, seed: String): DataFrame =
-    Text.shuffleOrderOf(docs, nShards, seed)
+    Sampling.shuffleOrderOf(docs, nShards, seed)
 
   /** Token-budget corpus selection: the highest-quality docs whose
     * cumulative token count fits `frac` of the corpus total — exact to
@@ -898,7 +896,7 @@ object Pipeline {
     * n_tokens, q). */
   def tokenBudget(docs: DataFrame, frac: Double = 0.5,
       nBuckets: Int = 20): DataFrame =
-    Text.tokenBudgetOf(docs, frac, nBuckets)
+    Sampling.tokenBudgetOf(docs, frac, nBuckets)
 
   /** Hard-negative mining for contrastive retrieval training (DPR/ANCE):
     * per query vector (label carried), the top same-label positive and
@@ -909,56 +907,56 @@ object Pipeline {
     * at scale with identical downstream mining. */
   def hardNegatives(embeddings: DataFrame, isQuery: Column => Column,
       negK: Int = 3): DataFrame =
-    Text.hardNegativesOf(embeddings, isQuery, negK)
+    Vectors.hardNegativesOf(embeddings, isQuery, negK)
 
   /** Train/val split-leakage audit: near-dup pairs (banded-LSH
     * candidates verified by exact bigram Jaccard) tagged with the
     * md5-bucket split rule, aggregated per split-pair category — the
     * `train-val` row counts validation docs whose loss measures
     * memorization, not generalization. */
-  def splitLeakage(docs: DataFrame): DataFrame = Text.splitLeakageOf(docs)
+  def splitLeakage(docs: DataFrame): DataFrame = Dedup.splitLeakageOf(docs)
 
   /** Matryoshka truncation audit: per-query recall@k of first-`truncDim`
     * -dims retrieval against full-dimension retrieval — quantifies the
     * quality cost of serving a truncated index before it ships. */
   def matryoshkaRecall(embeddings: DataFrame, isQuery: Column => Column,
       truncDim: Int = 16, k: Int = 5): DataFrame =
-    Text.matryoshkaRecallOf(embeddings, isQuery, truncDim, k)
+    Vectors.matryoshkaRecallOf(embeddings, isQuery, truncDim, k)
 
   /** Spearman rank agreement between the heuristic quality composite and
     * the LM-frequency surprise over the corpus — one (n, Σd², ρ) row;
     * ranks are doc_id-tie-broken total orders, bucket-decomposed (no
     * global window). Near-zero ρ = the two selection signals are
     * measuring different things. */
-  def scoreAgreement(docs: DataFrame): DataFrame = Text.scoreAgreementOf(docs)
+  def scoreAgreement(docs: DataFrame): DataFrame = Quality.scoreAgreementOf(docs)
 
   /** T5-style span corruption: (input with `<extra_id_k>` sentinels,
     * paired target) per doc, deterministic md5 Bernoulli masking at
     * `rate`% with run compaction. Substituting targets back into the
     * input reproduces the original text (test-pinned). */
   def spanCorrupt(docs: DataFrame, rate: Int = 15): DataFrame =
-    Text.spanCorruptOf(docs, rate)
+    Sampling.spanCorruptOf(docs, rate)
 
   /** Fill-in-the-middle PSM transformation with deterministic cut
     * points; docs under 3 words pass through unsplit. */
-  def fim(docs: DataFrame): DataFrame = Text.fimOf(docs)
+  def fim(docs: DataFrame): DataFrame = Sampling.fimOf(docs)
 
   /** Blocklist-lexicon filter: per-doc hit count/ratio against a
     * caller-owned term list, keep = mention-not-concentration. */
   def blocklistFilter(docs: DataFrame,
-      terms: Seq[String] = Text.demoBlockTerms): DataFrame =
-    Text.blocklistOf(docs, terms)
+      terms: Seq[String] = Quality.demoBlockTerms): DataFrame =
+    Quality.blocklistOf(docs, terms)
 
   /** Greedy longest-match wordpiece token count for one word — the exact
     * matcher behind the `llm_tokenize` query (set-backed, JVM-side; use
     * inside typed maps over partition iterators). */
-  def wordpieceTokenCount(word: String): Int = Text.wpTokenCountRef(word)
+  def wordpieceTokenCount(word: String): Int = LmStats.wpTokenCountRef(word)
 
   /** Batched multimodal feature extraction over typed payload rows:
     * real PNG/JPEG header decode, deterministic stub for other media —
     * iterator→iterator per partition, partitioning preserved. */
   def multimodalFeatures(rows: Dataset[MmRow]): Dataset[MmFeat] = {
     import rows.sparkSession.implicits._
-    rows.mapPartitions(_.map(Text.decodeFeatures))
+    rows.mapPartitions(_.map(Multimodal.decodeFeatures))
   }
 }

@@ -25,15 +25,19 @@ object SparkEntry {
     graft.queries.Windows.defs,
     graft.queries.Scalars.defs,
     graft.queries.Generators.defs,
-    graft.queries.Text.defs,
+    graft.queries.Dedup.defs,
+    graft.queries.Vectors.defs,
+    graft.queries.LmStats.defs,
+    graft.queries.Quality.defs,
+    graft.queries.Sampling.defs,
+    graft.queries.CorpusStats.defs,
+    graft.queries.Multimodal.defs,
+    graft.queries.CorpusPipeline.defs,
     graft.streaming.Events.defs,
     graft.sources.WritePaths.defs,
-    graft.queries.Extras.defs,
-    graft.queries.Extras2.defs,
     graft.queries.Maintenance.defs,
     graft.queries.Sequences.defs,
-    graft.queries.Graph.defs,
-    graft.queries.HiveCompat.defs)
+    graft.queries.Graph.defs)
 
   // a name in two modules would otherwise silently resolve to the last one
   private val twice = modules.flatten.map(_.name).groupBy(identity).collect {

@@ -13,10 +13,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * the variable-length array paths a static unroll cannot reach).
   *
   * Every method here is the bit-identical twin of a Column formulation in
-  * [[graft.queries.Text]] (the originals are quoted at each swap site and
+  * [[graft.queries.Dedup]] (the originals are quoted at each swap site and
   * pinned by TextHashExpressionsSpec): the arithmetic is integer/string
   * only, so equality is exact, not approximate. The constants are the
-  * SINGLE definition — Text.scala references these, so a base change
+  * SINGLE definition — [[graft.queries.Dedup]] references these, so a base change
   * lands in the native kernels, the Column twins and the DuckDB oracle
   * SQL together or not at all.
   *
@@ -29,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object TextHashOps {
   /** Hash-shingling bases (shingle id = h1*B1 + h2*B2 + h3*B3 mod P over
-    * 28-bit word hashes) — see Text.scala's scale/overflow argument. */
+    * 28-bit word hashes) — see [[graft.queries.Dedup]]'s scale/overflow argument. */
   val B1 = 1000003L
   val B2 = 1000033L
   val B3 = 1000211L
@@ -186,7 +186,7 @@ object TextHashOps {
     if (k == m) out else java.util.Arrays.copyOf(out, k)
   }
 
-  /** Twin of Text.hashGramCol: gram(i) = sum_j hs[i+j]*COEFS(j) mod P for
+  /** Twin of Dedup.hashGramCol: gram(i) = sum_j hs[i+j]*COEFS(j) mod P for
     * i in 0..n-width, optionally first-occurrence-distinct
     * (array_distinct order). Callers guarantee size >= width (same
     * precondition as the Column twin — its `sequence(0, size-width)`

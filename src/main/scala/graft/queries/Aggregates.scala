@@ -1,11 +1,14 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.{ContextNGramsAgg, EwahBitmap, NGramsAgg}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
 /** §2.4 aggregation surface: the complete Hive 2.3.10 builtin-UDAF registry
-  * re-expressed over Spark's partial/final HashAggregate.
+  * re-expressed over Spark's partial/final HashAggregate, incl. the
+  * ngrams/context_ngrams Aggregators and the EWAH bitmap-index UDAF family.
   *
   * Reference: `GroupByOperator` modes PARTIAL1/PARTIAL2/FINAL/HASH (the
   * largest operator class in the reference jar, SURVEY.md §2.1) and the
@@ -260,18 +263,17 @@ object Aggregates {
     * makes the concatenation deterministic — listagg without one is
     * arrival-ordered and would fail the DuckDB hash gate (and the
     * DeterminismSpec partition flip). */
-  val aggListagg: Q = (s, dir) => {
-    Tables.t(s, dir, "orders").createOrReplaceTempView("orders")
-    s.sql(
-      """SELECT o_orderpriority,
-        |  listagg(DISTINCT o_orderstatus, ',')
-        |    WITHIN GROUP (ORDER BY o_orderstatus) AS statuses,
-        |  listagg(CAST(o_orderkey AS STRING), '|')
-        |    WITHIN GROUP (ORDER BY o_totalprice DESC, o_orderkey)
-        |    FILTER (WHERE o_totalprice > 550000) AS top_keys
-        |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin)
-  }
+  val aggListagg: Q = (s, dir) => sqlOverViews(s, dir, aggListaggSql)
+  /** Also this query's SQL-surface text (`SqlSurface.overrides`). */
+  private[queries] val aggListaggSql =
+    """SELECT o_orderpriority,
+      |  listagg(DISTINCT o_orderstatus, ',')
+      |    WITHIN GROUP (ORDER BY o_orderstatus) AS statuses,
+      |  listagg(CAST(o_orderkey AS STRING), '|')
+      |    WITHIN GROUP (ORDER BY o_totalprice DESC, o_orderkey)
+      |    FILTER (WHERE o_totalprice > 550000) AS top_keys
+      |FROM orders GROUP BY o_orderpriority
+      |ORDER BY o_orderpriority""".stripMargin
 
   /** Boolean/conditional aggregate family (count_if, bool_and/bool_or —
     * the ANSI every/any surface): all deterministic regardless of
@@ -407,6 +409,50 @@ object Aggregates {
       str("l_linestatus"))
       .reduce(_.union(_))
       .orderBy("col_name")
+  }
+
+  /** ngrams UDAF (GenericUDAFnGrams): global top-20 bigrams. */
+  val fnNgrams: Q = (s, dir) => {
+    val ng = udaf(new NGramsAgg(2, 20), ExpressionEncoder[Seq[String]]())
+    Tables.t(s, dir, "documents")
+      .agg(ng(split(col("text"), " ")).as("gs"))
+      .selectExpr("posexplode(gs) AS (pos, g)")
+      .select((col("pos") + 1).as("rank"),
+        col("g.ngram").as("ngram"), col("g.freq").as("freq"))
+      .orderBy("rank")
+  }
+
+  /** context_ngrams UDAF: top-10 words following "data". */
+  val fnContextNgrams: Q = (s, dir) => {
+    val cng = udaf(new ContextNGramsAgg(Seq("data"), 10), ExpressionEncoder[Seq[String]]())
+    Tables.t(s, dir, "documents")
+      .agg(cng(split(col("text"), " ")).as("gs"))
+      .selectExpr("posexplode(gs) AS (pos, g)")
+      .select((col("pos") + 1).as("rank"),
+        col("g.ngram").as("next_word"), col("g.freq").as("freq"))
+      .orderBy("rank")
+  }
+
+  /** Distributed bitmap-index build + AND/OR/empty combinators: per-key
+    * bitmaps of distinct customers for two order priorities, then
+    * intersection/union cardinalities off the compressed form. All four
+    * cardinalities are oracle-exact (COUNT DISTINCT / INTERSECT / UNION);
+    * `and_empty` is engine-computed via ewah_bitmap_empty and
+    * oracle-recomputed as `and_card = 0`. */
+  val aggEwahBitmap: Q = (s, dir) => {
+    EwahBitmap.register(s)
+    Tables.t(s, dir, "orders")
+      .agg(
+        expr("ewah_bitmap(CASE WHEN o_orderpriority = '1-URGENT' " +
+          "THEN CAST(o_custkey AS BIGINT) ELSE CAST(-1 AS BIGINT) END)").as("bm_u"),
+        expr("ewah_bitmap(CASE WHEN o_orderpriority = '2-HIGH' " +
+          "THEN CAST(o_custkey AS BIGINT) ELSE CAST(-1 AS BIGINT) END)").as("bm_h"))
+      .select(
+        expr("ewah_cardinality(bm_u)").as("urgent_card"),
+        expr("ewah_cardinality(bm_h)").as("high_card"),
+        expr("ewah_cardinality(ewah_bitmap_and(bm_u, bm_h))").as("and_card"),
+        expr("ewah_cardinality(ewah_bitmap_or(bm_u, bm_h))").as("or_card"),
+        expr("ewah_bitmap_empty(ewah_bitmap_and(bm_u, bm_h))").as("and_empty"))
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -603,6 +649,43 @@ object Aggregates {
       s"""SELECT o_orderpriority,
          |COALESCE(${oSum("CASE WHEN o_totalprice > 450000 THEN o_totalprice END")}, 0.0) AS huge_total,
          |COUNT(CASE WHEN o_totalprice > 450000 THEN 1 END) AS huge_cnt
-         |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
+         |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    QueryDef("fn_ngrams", fnNgrams,
+      """WITH grams AS (
+        |  SELECT unnest(list_transform(range(len(w)-1), i -> w[i+1] || ' ' || w[i+2])) AS g
+        |  FROM (SELECT string_split(text, ' ') AS w FROM documents) t),
+        |counts AS (SELECT g, COUNT(*) AS freq FROM grams GROUP BY g),
+        |ranked AS (SELECT g, freq,
+        |  row_number() OVER (ORDER BY freq DESC, g) AS rank FROM counts)
+        |SELECT CAST(rank AS INT) AS rank, g AS ngram, freq
+        |FROM ranked WHERE rank <= 20 ORDER BY rank""".stripMargin),
+    QueryDef("fn_context_ngrams", fnContextNgrams,
+      """WITH pairs AS (
+        |  SELECT unnest(list_transform(range(len(w)-1),
+        |    i -> CASE WHEN w[i+1] = 'data' THEN w[i+2] END)) AS nw
+        |  FROM (SELECT string_split(text, ' ') AS w FROM documents) t),
+        |counts AS (SELECT nw, COUNT(*) AS freq FROM pairs WHERE nw IS NOT NULL GROUP BY nw),
+        |ranked AS (SELECT nw, freq,
+        |  row_number() OVER (ORDER BY freq DESC, nw) AS rank FROM counts)
+        |SELECT CAST(rank AS INT) AS rank, nw AS next_word, freq
+        |FROM ranked WHERE rank <= 10 ORDER BY rank""".stripMargin),
+    QueryDef("agg_ewah_bitmap", aggEwahBitmap,
+      """SELECT
+        |  (SELECT COUNT(DISTINCT o_custkey) FROM orders
+        |   WHERE o_orderpriority = '1-URGENT') AS urgent_card,
+        |  (SELECT COUNT(DISTINCT o_custkey) FROM orders
+        |   WHERE o_orderpriority = '2-HIGH') AS high_card,
+        |  (SELECT COUNT(*) FROM
+        |    (SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
+        |     INTERSECT
+        |     SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH') t) AS and_card,
+        |  (SELECT COUNT(*) FROM
+        |    (SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
+        |     UNION
+        |     SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH') t) AS or_card,
+        |  ((SELECT COUNT(*) FROM
+        |    (SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
+        |     INTERSECT
+        |     SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH') t) = 0) AS and_empty""".stripMargin)
   )
 }

@@ -1,10 +1,12 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.ParseUrlTupleGen
 import org.apache.spark.sql.functions._
 
 /** §2.1 rows 13–15: UDTF/generator surface — explode / posexplode /
-  * inline / stack / json_tuple, LATERAL VIEW [OUTER], TRANSFORM … USING.
+  * inline / stack / json_tuple, LATERAL VIEW [OUTER], TRANSFORM … USING,
+  * and a custom Catalyst Generator (parse_url_tuple, §2.10's UDTF path).
   *
   * Reference: `UDTFOperator`, `LateralViewForwardOperator`/
   * `LateralViewJoinOperator`, `ScriptOperator` (SURVEY.md §2.1). All are
@@ -99,17 +101,32 @@ object Generators {
     * reader splits script stdout with the delimiter AS A REGEX, so a
     * metachar like '|' would split on every character; '#' is
     * regex-neutral.) */
-  val genTransformDelimited: Q = (s, dir) => {
-    Tables.t(s, dir, "orders").createOrReplaceTempView("orders_td")
+  val genTransformDelimited: Q = (s, dir) => sqlOverViews(s, dir, genTransformDelimitedSql)
+  /** Also this query's SQL-surface text (`SqlSurface.overrides`). */
+  private[queries] val genTransformDelimitedSql =
+    """SELECT CAST(k AS BIGINT) AS okey, v AS prio FROM (
+      |  SELECT TRANSFORM(o_orderkey, o_orderstatus, o_orderpriority)
+      |    ROW FORMAT DELIMITED FIELDS TERMINATED BY '#'
+      |    USING 'cut -d"#" -f1,3'
+      |    AS (k STRING, v STRING)
+      |    ROW FORMAT DELIMITED FIELDS TERMINATED BY '#'
+      |  FROM orders WHERE o_orderkey < 2000
+      |) t ORDER BY okey, prio""".stripMargin
+
+  /** Custom Catalyst Generator in a LATERAL VIEW (parse_url_tuple UDTF). */
+  val genParseUrlTuple: Q = (s, dir) => {
+    ParseUrlTupleGen.register(s)
+    Tables.t(s, dir, "documents").filter(col("doc_id") < 300)
+      .select(col("doc_id"),
+        concat(lit("https://u:p@example.com:8080/api/"), col("source"),
+          lit("?sid="), col("doc_id"), lit("&x=1#frag")).as("url"))
+      .createOrReplaceTempView("doc_urls")
     s.sql(
-      """SELECT CAST(k AS BIGINT) AS okey, v AS prio FROM (
-        |  SELECT TRANSFORM(o_orderkey, o_orderstatus, o_orderpriority)
-        |    ROW FORMAT DELIMITED FIELDS TERMINATED BY '#'
-        |    USING 'cut -d"#" -f1,3'
-        |    AS (k STRING, v STRING)
-        |    ROW FORMAT DELIMITED FIELDS TERMINATED BY '#'
-        |  FROM orders_td WHERE o_orderkey < 2000
-        |) t ORDER BY okey, prio""".stripMargin)
+      """SELECT doc_id, t.host, t.query_sid, t.userinfo, t.file
+        |FROM doc_urls
+        |LATERAL VIEW parse_url_tuple(url, 'HOST', 'QUERY:sid', 'USERINFO', 'FILE') t
+        |  AS host, query_sid, userinfo, file
+        |ORDER BY doc_id""".stripMargin)
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -157,6 +174,11 @@ object Generators {
         |FROM orders WHERE o_orderkey < 2000 ORDER BY okey, prio""".stripMargin),
     QueryDef("gen_transform_delimited", genTransformDelimited,
       """SELECT o_orderkey AS okey, o_orderpriority AS prio
-        |FROM orders WHERE o_orderkey < 2000 ORDER BY okey, prio""".stripMargin)
+        |FROM orders WHERE o_orderkey < 2000 ORDER BY okey, prio""".stripMargin),
+    QueryDef("gen_parse_url_tuple", genParseUrlTuple,
+      """SELECT doc_id, 'example.com' AS host, CAST(doc_id AS VARCHAR) AS query_sid,
+        |'u:p' AS userinfo,
+        |'/api/' || source || '?sid=' || doc_id || '&x=1' AS file
+        |FROM documents WHERE doc_id < 300 ORDER BY doc_id""".stripMargin)
   )
 }

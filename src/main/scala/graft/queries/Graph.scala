@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over the corpus (beyond-inventory; the dedup family's
-  * connected components — `llm_dedup_cc` — already lives in Text.scala).
+  * connected components — `llm_dedup_cc` — lives in [[Dedup]]).
   *
   * PageRank is the canonical iterative distributed graph workload (Page et
   * al. 1999; the Pregel/GraphX reference algorithm). Here it runs over a
@@ -56,6 +56,24 @@ object Graph {
     (ids, nDf, linksOf(ids.crossJoin(broadcast(nDf))))
   }
 
+  /** DuckDB twin of [[docLinks]]: the `ids` and `nn` CTEs and the md5
+    * out-link CTE `cte` (src, dst) — the edge formula of [[linksOf]] with
+    * the hex-prefix cast as `('0x' || …)::BIGINT`. `spark` spells that
+    * cast for Spark SQL (`conv(…, 16, 10)`), for SQL-surface texts. */
+  private[queries] def linksSql(cte: String = "raw", materialized: Boolean = false,
+      spark: Boolean = false): String = {
+    val h = "substr(md5(ids.doc_id || ':' || t.i), 1, 8)"
+    val dst =
+      if (spark) s"CAST(conv($h, 16, 10) AS BIGINT)\n      % (SELECT n FROM nn)"
+      else s"(('0x' || $h)::BIGINT\n      % (SELECT n FROM nn))"
+    s"""ids AS (SELECT doc_id FROM documents),
+       |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
+       |$cte AS ${if (materialized) "MATERIALIZED " else ""}(
+       |  SELECT ids.doc_id AS src,
+       |    $dst AS dst
+       |  FROM ids, (VALUES (1), (2), (3)) AS t(i))""".stripMargin
+  }
+
   /** Undirected simple edges `(a, b)` with a < b: orient low→high, drop
     * self-loops, collapse the multigraph with a two-phase distinct. */
   private def simpleEdges(raw: DataFrame): DataFrame =
@@ -65,10 +83,21 @@ object Graph {
       .filter(col("a") < col("b"))
       .distinct()
 
+  /** DuckDB twin of [[simpleEdges]]: the `edges` (a, b) CTE over `raw`. */
+  private[queries] def simpleEdgesSql(materialized: Boolean = true): String =
+    s"""edges AS ${if (materialized) "MATERIALIZED " else ""}(
+       |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
+       |  FROM raw WHERE LEAST(src, dst) < GREATEST(src, dst))""".stripMargin
+
   /** Both orientations `(u, v)` of [[simpleEdges]]. */
   private def symmetric(edges: DataFrame): DataFrame =
     edges.select(col("a").as("u"), col("b").as("v"))
       .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
+
+  /** DuckDB twin of [[symmetric]]: the `und` (u, v) CTE over `edges`. */
+  private def symmetricSql(materialized: Boolean = false): String =
+    s"""und AS ${if (materialized) "MATERIALIZED " else ""}(SELECT a AS u, b AS v FROM edges
+       |        UNION ALL SELECT b, a FROM edges)""".stripMargin
 
   /** Shared md5-derived 3-out-link doc graph: (base = ids × n-as-double,
     * edges), both persisted — one construction for the link-analysis
@@ -612,7 +641,7 @@ object Graph {
     * component whp, which would make the query a constant).
     *
     * Scale shape: delegates to the audited O(log d) large-star /
-    * small-star contraction ([[Text.connectedComponents]] — the
+    * small-star contraction ([[Dedup.connectedComponents]] — the
     * llm_dedup_cc engine, per-round checkpointed lineage, plateau +
     * symmetric set-compare convergence, measured scale-curve α ≈ 0.04).
     * Edge derivation is a projection; no new shuffle class. The DuckDB
@@ -621,7 +650,7 @@ object Graph {
   val cc: Q = (s, dir) => {
     val (ids, _, raw) = docLinks(s, dir)
     val intra = raw.filter(pmod(col("src"), lit(16)) === pmod(col("dst"), lit(16)))
-    graft.queries.Text.connectedComponents(ids, intra)
+    graft.queries.Dedup.connectedComponents(ids, intra)
       .orderBy("doc_id")
   }
 
@@ -706,7 +735,7 @@ object Graph {
   val ccSizes: Q = (s, dir) => {
     val (ids, nDf, raw) = docLinks(s, dir)
     val intra = raw.filter(pmod(col("src"), lit(16)) === pmod(col("dst"), lit(16)))
-    graft.queries.Text.connectedComponents(ids, intra)
+    graft.queries.Dedup.connectedComponents(ids, intra)
       .groupBy("cluster_id").agg(count(lit(1)).as("size"))
       .groupBy("size").agg(count(lit(1)).as("n_components"))
       .crossJoin(broadcast(nDf))
@@ -813,32 +842,20 @@ object Graph {
     // runs the O(log d) star contraction instead — the dedup_cc twin
     // convention). Isolated nodes label themselves via the seed row.
     QueryDef("graph_cc", cc,
-      """WITH RECURSIVE ids AS (SELECT doc_id FROM documents),
-        |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
-        |raw AS (
-        |  SELECT ids.doc_id AS src,
-        |    (('0x' || substr(md5(ids.doc_id || ':' || t.i), 1, 8))::BIGINT
-        |      % (SELECT n FROM nn)) AS dst
-        |  FROM ids, (VALUES (1), (2), (3)) AS t(i)),
-        |intra AS (SELECT src, dst FROM raw WHERE src % 16 = dst % 16),
-        |edges AS (SELECT src AS a, dst AS b FROM intra
-        |          UNION SELECT dst, src FROM intra),
-        |walk AS (
-        |  SELECT doc_id AS node, doc_id AS reach FROM ids
-        |  UNION
-        |  SELECT w.node, e.b FROM walk w JOIN edges e ON w.reach = e.a)
-        |SELECT node AS doc_id, MIN(reach) AS cluster_id
-        |FROM walk GROUP BY node ORDER BY doc_id""".stripMargin),
+      s"""WITH RECURSIVE ${linksSql()},
+         |intra AS (SELECT src, dst FROM raw WHERE src % 16 = dst % 16),
+         |edges AS (SELECT src AS a, dst AS b FROM intra
+         |          UNION SELECT dst, src FROM intra),
+         |walk AS (
+         |  SELECT doc_id AS node, doc_id AS reach FROM ids
+         |  UNION
+         |  SELECT w.node, e.b FROM walk w JOIN edges e ON w.reach = e.a)
+         |SELECT node AS doc_id, MIN(reach) AS cluster_id
+         |FROM walk GROUP BY node ORDER BY doc_id""".stripMargin),
     // Component-size histogram: the graph_cc closure + two bounded
     // rollups; node share off a scalar-subquery total.
     QueryDef("graph_cc_sizes", ccSizes,
-      s"""WITH RECURSIVE ids AS (SELECT doc_id FROM documents),
-         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
-         |raw AS (
-         |  SELECT ids.doc_id AS src,
-         |    (('0x' || substr(md5(ids.doc_id || ':' || t.i), 1, 8))::BIGINT
-         |      % (SELECT n FROM nn)) AS dst
-         |  FROM ids, (VALUES (1), (2), (3)) AS t(i)),
+      s"""WITH RECURSIVE ${linksSql()},
          |intra AS (SELECT src, dst FROM raw WHERE src % 16 = dst % 16),
          |edges AS (SELECT src AS a, dst AS b FROM intra
          |          UNION SELECT dst, src FROM intra),
@@ -862,18 +879,9 @@ object Graph {
     QueryDef("graph_bfs", bfs, {
       val rounds = (1 to 4)
         .map(k => bfsRoundSql(s"d${k - 1}", s"d$k")).mkString(",\n")
-      s"""WITH ids AS (SELECT doc_id FROM documents),
-         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
-         |raw AS (
-         |  SELECT ids.doc_id AS src,
-         |    (('0x' || substr(md5(ids.doc_id || ':' || t.i), 1, 8))::BIGINT
-         |      % (SELECT n FROM nn)) AS dst
-         |  FROM ids, (VALUES (1), (2), (3)) AS t(i)),
-         |edges AS MATERIALIZED (
-         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM raw WHERE LEAST(src, dst) < GREATEST(src, dst)),
-         |und AS (SELECT a AS u, b AS v FROM edges
-         |        UNION ALL SELECT b, a FROM edges),
+      s"""WITH ${linksSql()},
+         |${simpleEdgesSql()},
+         |${symmetricSql()},
          |d0 AS (SELECT doc_id AS u, 0 AS d FROM ids WHERE doc_id < 3),
          |$rounds
          |SELECT ids.doc_id, CAST(COALESCE(d4.d, -1) AS INT) AS dist
@@ -886,18 +894,9 @@ object Graph {
     QueryDef("graph_betweenness_sampled", betweennessSampled, {
       val fwd = (1 to 4).map(brandesFwdSql).mkString(",\n")
       val bwd = (3 to 0 by -1).map(brandesBwdSql).mkString(",\n")
-      s"""WITH ids AS (SELECT doc_id FROM documents),
-         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
-         |raw AS (
-         |  SELECT ids.doc_id AS src,
-         |    (('0x' || substr(md5(ids.doc_id || ':' || t.i), 1, 8))::BIGINT
-         |      % (SELECT n FROM nn)) AS dst
-         |  FROM ids, (VALUES (1), (2), (3)) AS t(i)),
-         |edges AS MATERIALIZED (
-         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM raw WHERE LEAST(src, dst) < GREATEST(src, dst)),
-         |und AS MATERIALIZED (SELECT a AS u, b AS v FROM edges
-         |        UNION ALL SELECT b, a FROM edges),
+      s"""WITH ${linksSql()},
+         |${simpleEdgesSql()},
+         |${symmetricSql(materialized = true)},
          |sds AS MATERIALIZED (
          |  SELECT doc_id AS sd FROM ids
          |  ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id LIMIT 5),
@@ -923,18 +922,9 @@ object Graph {
     QueryDef("graph_harmonic_centrality", harmonicCentrality, {
       val rounds = (1 to 4)
         .map(k => msBfsRoundSql(s"d${k - 1}", s"d$k")).mkString(",\n")
-      s"""WITH ids AS (SELECT doc_id FROM documents),
-         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
-         |raw AS (
-         |  SELECT ids.doc_id AS src,
-         |    (('0x' || substr(md5(ids.doc_id || ':' || t.i), 1, 8))::BIGINT
-         |      % (SELECT n FROM nn)) AS dst
-         |  FROM ids, (VALUES (1), (2), (3)) AS t(i)),
-         |edges AS MATERIALIZED (
-         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM raw WHERE LEAST(src, dst) < GREATEST(src, dst)),
-         |und AS (SELECT a AS u, b AS v FROM edges
-         |        UNION ALL SELECT b, a FROM edges),
+      s"""WITH ${linksSql()},
+         |${simpleEdgesSql()},
+         |${symmetricSql()},
          |sds AS MATERIALIZED (
          |  SELECT doc_id AS sd FROM ids
          |  ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id LIMIT 5),
@@ -949,18 +939,9 @@ object Graph {
     QueryDef("graph_kcore", kcore, {
       val rounds = (1 to 4)
         .map(k => kcoreRoundSql(s"a${k - 1}", s"a$k")).mkString(",\n")
-      s"""WITH ids AS (SELECT doc_id FROM documents),
-         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
-         |raw AS (
-         |  SELECT ids.doc_id AS src,
-         |    (('0x' || substr(md5(ids.doc_id || ':' || t.i), 1, 8))::BIGINT
-         |      % (SELECT n FROM nn)) AS dst
-         |  FROM ids, (VALUES (1), (2), (3)) AS t(i)),
-         |edges AS MATERIALIZED (
-         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM raw WHERE LEAST(src, dst) < GREATEST(src, dst)),
-         |und AS (SELECT a AS u, b AS v FROM edges
-         |        UNION ALL SELECT b, a FROM edges),
+      s"""WITH ${linksSql()},
+         |${simpleEdgesSql()},
+         |${symmetricSql()},
          |a0 AS (SELECT DISTINCT u FROM und),
          |$rounds
          |SELECT n.u AS doc_id, CAST(COUNT(*) AS BIGINT) AS core_deg
@@ -973,18 +954,9 @@ object Graph {
     QueryDef("graph_labelprop", labelprop, {
       val rounds = (1 to 3)
         .map(k => lpRoundSql(s"l${k - 1}", s"l$k")).mkString(",\n")
-      s"""WITH ids AS (SELECT doc_id FROM documents),
-         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
-         |raw AS (
-         |  SELECT ids.doc_id AS src,
-         |    (('0x' || substr(md5(ids.doc_id || ':' || t.i), 1, 8))::BIGINT
-         |      % (SELECT n FROM nn)) AS dst
-         |  FROM ids, (VALUES (1), (2), (3)) AS t(i)),
-         |edges AS MATERIALIZED (
-         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM raw WHERE LEAST(src, dst) < GREATEST(src, dst)),
-         |und AS (SELECT a AS u, b AS v FROM edges
-         |        UNION ALL SELECT b, a FROM edges),
+      s"""WITH ${linksSql()},
+         |${simpleEdgesSql()},
+         |${symmetricSql()},
          |l0 AS (SELECT doc_id AS v, doc_id AS lbl FROM ids),
          |$rounds
          |SELECT ids.doc_id, COALESCE(l3.lbl, ids.doc_id) AS community
@@ -997,18 +969,9 @@ object Graph {
     QueryDef("graph_modularity", modularity, {
       val rounds = (1 to 3)
         .map(k => lpRoundSql(s"l${k - 1}", s"l$k")).mkString(",\n")
-      s"""WITH ids AS (SELECT doc_id FROM documents),
-         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
-         |raw AS (
-         |  SELECT ids.doc_id AS src,
-         |    (('0x' || substr(md5(ids.doc_id || ':' || t.i), 1, 8))::BIGINT
-         |      % (SELECT n FROM nn)) AS dst
-         |  FROM ids, (VALUES (1), (2), (3)) AS t(i)),
-         |edges AS MATERIALIZED (
-         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM raw WHERE LEAST(src, dst) < GREATEST(src, dst)),
-         |und AS (SELECT a AS u, b AS v FROM edges
-         |        UNION ALL SELECT b, a FROM edges),
+      s"""WITH ${linksSql()},
+         |${simpleEdgesSql()},
+         |${symmetricSql()},
          |l0 AS (SELECT doc_id AS v, doc_id AS lbl FROM ids),
          |$rounds,
          |asg AS MATERIALIZED (
@@ -1035,13 +998,7 @@ object Graph {
     // Reciprocity: distinct directed simple edges, reversed-key
     // self-join, quantized ratio of exact longs.
     QueryDef("graph_reciprocity", reciprocity,
-      s"""WITH ids AS (SELECT doc_id FROM documents),
-         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
-         |raw AS (
-         |  SELECT ids.doc_id AS src,
-         |    (('0x' || substr(md5(ids.doc_id || ':' || t.i), 1, 8))::BIGINT
-         |      % (SELECT n FROM nn)) AS dst
-         |  FROM ids, (VALUES (1), (2), (3)) AS t(i)),
+      s"""WITH ${linksSql()},
          |ds AS MATERIALIZED (SELECT DISTINCT src, dst FROM raw
          |  WHERE src <> dst),
          |rc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_recip
@@ -1053,18 +1010,9 @@ object Graph {
     // Assortativity: same edge closure, two degree joins, HUGEINT
     // moments, one fixed-shape Pearson chain at 1e-6.
     QueryDef("graph_assortativity", assortativity,
-      s"""WITH ids AS (SELECT doc_id FROM documents),
-         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
-         |raw AS (
-         |  SELECT ids.doc_id AS src,
-         |    (('0x' || substr(md5(ids.doc_id || ':' || t.i), 1, 8))::BIGINT
-         |      % (SELECT n FROM nn)) AS dst
-         |  FROM ids, (VALUES (1), (2), (3)) AS t(i)),
-         |edges AS MATERIALIZED (
-         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM raw WHERE LEAST(src, dst) < GREATEST(src, dst)),
-         |und AS (SELECT a AS u, b AS v FROM edges
-         |        UNION ALL SELECT b, a FROM edges),
+      s"""WITH ${linksSql()},
+         |${simpleEdgesSql()},
+         |${symmetricSql()},
          |deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d
          |  FROM und GROUP BY u),
          |mo AS (SELECT CAST(COUNT(*) AS BIGINT) AS mm,
@@ -1080,18 +1028,9 @@ object Graph {
     // self-join; union size by inclusion-exclusion; quantized-long
     // top-20 ordering.
     QueryDef("graph_linkpred", linkpred,
-      s"""WITH ids AS (SELECT doc_id FROM documents),
-         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
-         |raw AS (
-         |  SELECT ids.doc_id AS src,
-         |    (('0x' || substr(md5(ids.doc_id || ':' || t.i), 1, 8))::BIGINT
-         |      % (SELECT n FROM nn)) AS dst
-         |  FROM ids, (VALUES (1), (2), (3)) AS t(i)),
-         |edges AS MATERIALIZED (
-         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM raw WHERE LEAST(src, dst) < GREATEST(src, dst)),
-         |und AS (SELECT a AS u, b AS v FROM edges
-         |        UNION ALL SELECT b, a FROM edges),
+      s"""WITH ${linksSql()},
+         |${simpleEdgesSql()},
+         |${symmetricSql()},
          |deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d
          |        FROM und GROUP BY u),
          |common AS (
@@ -1116,16 +1055,8 @@ object Graph {
     // via UNION ALL (portable — no lateral unnest), CAST-to-double
     // hoisted before the 2T/(d(d-1)) division.
     QueryDef("graph_clustering_coeff", clusteringCoeff,
-      s"""WITH ids AS (SELECT doc_id FROM documents),
-         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
-         |raw AS (
-         |  SELECT ids.doc_id AS src,
-         |    (('0x' || substr(md5(ids.doc_id || ':' || t.i), 1, 8))::BIGINT
-         |      % (SELECT n FROM nn)) AS dst
-         |  FROM ids, (VALUES (1), (2), (3)) AS t(i)),
-         |edges AS MATERIALIZED (
-         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM raw WHERE LEAST(src, dst) < GREATEST(src, dst)),
+      s"""WITH ${linksSql()},
+         |${simpleEdgesSql()},
          |tris AS MATERIALIZED (
          |  SELECT e1.a, e1.b, e2.b AS c
          |  FROM edges e1
@@ -1149,13 +1080,7 @@ object Graph {
     // In-degree distribution: zero-degree nodes kept via the id left
     // join; the share divisor rides a scalar subquery.
     QueryDef("graph_degree_dist", degreeDist,
-      s"""WITH ids AS (SELECT doc_id FROM documents),
-         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
-         |raw AS (
-         |  SELECT ids.doc_id AS src,
-         |    (('0x' || substr(md5(ids.doc_id || ':' || t.i), 1, 8))::BIGINT
-         |      % (SELECT n FROM nn)) AS dst
-         |  FROM ids, (VALUES (1), (2), (3)) AS t(i)),
+      s"""WITH ${linksSql()},
          |ind AS (SELECT dst AS doc_id, CAST(COUNT(*) AS BIGINT) AS d
          |  FROM raw GROUP BY 1),
          |nd AS (SELECT CAST(COALESCE(ind.d, 0) AS BIGINT) AS indeg
@@ -1164,16 +1089,8 @@ object Graph {
          |  ${oRound("CAST(COUNT(*) AS DOUBLE) / (SELECT n FROM nn)", 6)} AS share
          |FROM nd GROUP BY indeg ORDER BY indeg""".stripMargin),
     QueryDef("graph_triangles", triangles,
-      s"""WITH ids AS (SELECT doc_id FROM documents),
-         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
-         |raw AS (
-         |  SELECT ids.doc_id AS src,
-         |    (('0x' || substr(md5(ids.doc_id || ':' || t.i), 1, 8))::BIGINT
-         |      % (SELECT n FROM nn)) AS dst
-         |  FROM ids, (VALUES (1), (2), (3)) AS t(i)),
-         |edges AS MATERIALIZED (
-         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM raw WHERE LEAST(src, dst) < GREATEST(src, dst)),
+      s"""WITH ${linksSql()},
+         |${simpleEdgesSql()},
          |tris AS (
          |  SELECT e1.a, e1.b, e2.b AS c
          |  FROM edges e1
@@ -1189,13 +1106,7 @@ object Graph {
       val steps = (1 to 3).flatMap(k => Seq(
         hitsAuthSql(s"h${k - 1}", s"a$k"),
         hitsHubSql(s"a$k", s"h$k"))).mkString(",\n")
-      s"""WITH ids AS (SELECT doc_id FROM documents),
-         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
-         |edges AS MATERIALIZED (
-         |  SELECT ids.doc_id AS src,
-         |    (('0x' || substr(md5(ids.doc_id || ':' || t.i), 1, 8))::BIGINT
-         |      % (SELECT n FROM nn)) AS dst
-         |  FROM ids, (VALUES (1), (2), (3)) AS t(i)),
+      s"""WITH ${linksSql("edges", materialized = true)},
          |h0 AS (SELECT doc_id, 1.0 AS h FROM ids),
          |$steps,
          |j AS MATERIALIZED (SELECT a3.doc_id, a3.a, h3.h

@@ -1,0 +1,1948 @@
+package graft.queries
+
+import graft.Tables
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+
+/** §2.9 language-model statistics over document text: unigram, bigram,
+  * trigram and Kneser-Ney scoring, perplexity, the tokenizers
+  * (WordPiece count, BPE merge training and encoding), lexical and
+  * vocabulary statistics (Zipf, Heaps, collocations, TextRank, RAKE,
+  * lexical diversity, character entropy) and retrieval scoring (TF-IDF,
+  * BM25, RRF fusion, ROUGE overlap).
+  *
+  * It owns the hashed vocabulary: [[vocabBucket]] and its DuckDB twin
+  * `vocabBucketSql`, which the quality scorers reuse.
+  */
+object LmStats {
+  import Dedup.reg
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Fixed 2^16 hashed vocabulary bucket of a word — the DSIR paper's
+    * hashed-features mechanism (Xie et al., arXiv:2302.03169): the
+    * lm_quality/DSIR unigram count tables key on this bucket instead of
+    * the raw word, bounding them at 65,536 rows at ANY corpus scale
+    * (broadcast-safe by construction, where the raw web vocabulary —
+    * billions of distinct URLs/typos/code tokens — is not). First 16
+    * md5 bits; [[vocabBucketSql]] is the bit-identical DuckDB twin. */
+  private[queries] def vocabBucket(w: Column): Column =
+    // r22: the codegen'd-but-allocation-heavy `conv(substring(md5(w), 1,
+    // 4), 16, 10).cast("long")` chain (hex string + substring + decimal
+    // string per word occurrence) became the native scalar kernel —
+    // bit-identity at [[graft.functions.TextHashOps.md5Prefix]], pinned
+    // by TextHashExpressionsSpec
+    call_function("md5_prefix", w, lit(4))
+
+  private[queries] val vocabBucketSql: String = "('0x' || substr(md5(w), 1, 4))::BIGINT"
+
+  /** (doc_id, b) vocab-bucket occurrences of `docs`' words, persisted
+    * and materialized eagerly (concurrent consumers would race the
+    * cache). Persist barrier: each consumer (bucket-count agg + scoring
+    * join) would otherwise recompute the per-occurrence md5 — a pure
+    * projection, so there is no exchange for ReuseExchange to dedup (the
+    * same measured rule as ngramJaccardOf's gram sets); 16 bytes/row,
+    * MEMORY_AND_DISK. */
+  private[queries] def bucketedWords(docs: DataFrame): DataFrame = {
+    val words = reg(docs)
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      .select(col("doc_id"), vocabBucket(col("w")).as("b"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    words.count()
+    words
+  }
+
+  /** Per-occurrence surprise (doc_id, bits): −log₂ p(w) as the integer
+    * bits(corpus total) − bits(bucket count), over [[bucketedWords]] —
+    * the Column twin of [[lmBitsCtes]]. */
+  private[queries] def wordBits(docs: DataFrame): DataFrame = {
+    val words = bucketedWords(docs)
+    val freq = words.groupBy("b").agg(count(lit(1)).as("c"))
+    val total = freq.agg(sum(col("c")).as("tc"))
+    words
+      .join(broadcast(freq), "b")
+      .crossJoin(broadcast(total))
+      .select(col("doc_id"),
+        (length(bin(col("tc"))) - length(bin(col("c")))).as("bits"))
+  }
+
+  /** ROUGE-1/2 overlap between paired texts (Lin, ACL-WS 2004) — the
+    * summarization-eval staple beside [[ndcgEvalOf]]'s retrieval
+    * metric: clipped multiset n-gram matches give precision, recall
+    * and F1 per (candidate, reference) pair. Fixture binding: each
+    * consecutive doc pair (even doc_id = reference, odd = candidate);
+    * a production caller passes its (summary, reference) columns and
+    * the arithmetic is identical.
+    *
+    * Scale shape: the pair frame is ONE co-partitioned equi-join on
+    * doc_id+1 (never all-pairs); one explode per side per gram width
+    * into two-phase (pair_id, gram) counts; the clipped intersection
+    * is an equi-join on (pair_id, gram) — everything keyed by pair_id,
+    * totals read off per-row array sizes (no extra aggregate).
+    *
+    * Determinism: matches and totals are exact integer sums; P/R
+    * quantize at 1e-6 before F1's fixed-shape (2PR)/(P+R), which
+    * quantizes again; zero denominators score 0.0 (the codeDetectOf
+    * convention). */
+  private[graft] def rougeOverlapOf(docs: DataFrame): DataFrame = {
+    val w = docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
+    // Persist barrier: five consumers (four gram-count frames + the
+    // size frame) re-derive the scan + split + pair join otherwise —
+    // their differing projections defeat exchange reuse (the
+    // sketch_setops precedent). A/B'd per the module rule (7-repeat
+    // sf0.1 micros): 1.110 → 1.040 s median, 1.018 → 0.886 min — a
+    // modest win here because the shared subtree is scan-light at
+    // fixture scale; the five-fold scan elimination is what matters
+    // at 100 TB.
+    val pairs = w.filter(col("doc_id") % 2 === 0)
+      .select(col("doc_id").as("pair_id"), col("ws").as("rws"))
+      .join(w.select((col("doc_id") - 1).as("pair_id"), col("ws").as("cws")),
+        "pair_id")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    pairs.count() // eager: the five consumers would race the cache
+    def grams(c: Column, n: Int): Column =
+      if (n == 1) c
+      else when(size(c) >= n, transform(sequence(lit(1), size(c) - (n - 1)),
+          i => concat_ws(" ", element_at(c, i), element_at(c, i + 1))))
+        .otherwise(array().cast("array<string>"))
+    def counts(src: String, n: Int, as: String): DataFrame = pairs
+      .select(col("pair_id"), explode(grams(col(src), n)).as("g"))
+      .groupBy("pair_id", "g").agg(count(lit(1)).as(as))
+    def matched(n: Int): DataFrame =
+      counts("cws", n, "cc").join(counts("rws", n, "cr"), Seq("pair_id", "g"))
+        .groupBy("pair_id")
+        .agg(sum(least(col("cc"), col("cr"))).as(s"m$n"))
+    def pr(m: Column, tot: Column): Column =
+      when(tot === 0, lit(0.0))
+        .otherwise(dround(m.cast("double") / tot, 6))
+    def f1(p: Column, r: Column): Column =
+      when(p + r === 0.0, lit(0.0))
+        .otherwise(dround(lit(2.0) * p * r / (p + r), 6))
+    val sized = pairs
+      .select(col("pair_id"),
+        size(col("cws")).cast("long").as("n_cand1"),
+        greatest(size(col("cws")) - 1, lit(0)).cast("long").as("n_cand2"),
+        size(col("rws")).cast("long").as("n_ref1"),
+        greatest(size(col("rws")) - 1, lit(0)).cast("long").as("n_ref2"))
+      .join(matched(1), Seq("pair_id"), "left")
+      .join(matched(2), Seq("pair_id"), "left")
+      .select(col("pair_id"), col("n_cand1"), col("n_ref1"),
+        coalesce(col("m1"), lit(0L)).as("m1"),
+        coalesce(col("m2"), lit(0L)).as("m2"),
+        col("n_cand2"), col("n_ref2"))
+    sized
+      .select(col("pair_id"), col("n_cand1"), col("n_ref1"), col("m1"), col("m2"),
+        pr(col("m1"), col("n_cand1")).as("r1_p"),
+        pr(col("m1"), col("n_ref1")).as("r1_r"),
+        pr(col("m2"), col("n_cand2")).as("r2_p"),
+        pr(col("m2"), col("n_ref2")).as("r2_r"))
+      .select(col("pair_id"), col("n_cand1"), col("n_ref1"), col("m1"), col("m2"),
+        col("r1_p"), col("r1_r"), f1(col("r1_p"), col("r1_r")).as("r1_f"),
+        col("r2_p"), col("r2_r"), f1(col("r2_p"), col("r2_r")).as("r2_f"))
+      .orderBy("pair_id")
+  }
+
+  val llmRougeOverlap: Q = (s, dir) =>
+    rougeOverlapOf(Tables.t(s, dir, "documents").select("doc_id", "text"))
+
+  /** CCNet-style LM-frequency quality scoring (Wenzek et al.,
+    * arXiv:1911.00359 — perplexity filtering): score each doc by the
+    * mean "surprise" of its words under the corpus's own unigram
+    * distribution — natural high-frequency text scores low, gibberish /
+    * rare-token text high. CCNet scores against a pretrained LM; the
+    * engine-side analogue is the corpus unigram table, and the per-word
+    * −log₂ p(w) ≈ bits(total) − bits(count) is computed as INTEGER log2
+    * (length of `bin(x)`) — libm log/log2 differs in the last ulp
+    * across engines (the same reason llm_tfidf avoids log-idf,
+    * [[llmTfidfTop]]), while bin-length is bit-exact everywhere.
+    *
+    * Scale shape: words are hashed into a FIXED 2^16 feature-bucket
+    * space ([[vocabBucket]] — the DSIR paper's own hashed-features
+    * mechanism) before counting, so the count table is ≤ 65,536 rows
+    * at ANY corpus scale and the broadcast hint is unconditionally
+    * safe — a web corpus's raw vocabulary (billions of distinct URLs /
+    * typos / code tokens) never materializes as a join side. Collision
+    * semantics: words sharing a bucket pool their counts, so a rare
+    * word colliding with a common one reads as common (score is
+    * under-, never over-estimated) — exactly the hashed-DSIR trade-off,
+    * and deterministic on both engines. Bucket counts remain exact
+    * longs, so the integer-log2 scoring is still bit-exact. The
+    * per-doc mean is a two-phase agg on doc_id, and the grand total
+    * rides a broadcast 1-row crossJoin (llm_tfidf's shape). */
+  private[graft] def lmQualityOf(docs: DataFrame): DataFrame = {
+    wordBits(docs)
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_words"),
+        dround(sum(col("bits")).cast("double") / count(lit(1)), 6).as("avg_bits"))
+      // High mean surprise = rare-token-dominated text; threshold is a
+      // demo cut on the deterministic rounded score. Fixture note: the
+      // tiny synthetic vocabulary keeps every doc at 5.0-5.4 bits, so
+      // `suspect` never fires there — the oracle checks the score
+      // arithmetic; the planted PipelineSpec corpus pins exact bit
+      // values on both sides of a common-vs-rare contrast.
+      .withColumn("suspect", col("avg_bits") >= 12.0)
+  }
+
+  /** Shared lm-quality CTE chain ending in `<b>(doc_id, bits)` — the
+    * registered oracle and the v2 capstone build from it with their own
+    * CTE names (one definition, no drift). */
+  private[queries] def lmBitsCtes(ws: String, f: String, t: String, b: String): String =
+    s"""$ws AS (SELECT doc_id, $vocabBucketSql AS wb
+       |            FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
+       |                  FROM documents) raw_$ws),
+       |$f AS (SELECT wb, COUNT(*) AS c FROM $ws GROUP BY wb),
+       |$t AS (SELECT CAST(SUM(c) AS BIGINT) AS tc FROM $f),
+       |$b AS (SELECT $ws.doc_id,
+       |        length(bin($t.tc)) - length(bin($f.c)) AS bits
+       |      FROM $ws JOIN $f USING (wb), $t)""".stripMargin
+
+  private[queries] lazy val lmAvgBitsSql: String =
+    oRound("CAST(SUM(bits) AS DOUBLE) / COUNT(*)", 6)
+
+  val llmLmQuality: Q = (s, dir) =>
+    lmQualityOf(Tables.t(s, dir, "documents")).orderBy("doc_id")
+
+  /** Bigram-conditional LM surprise — the context-aware half of the
+    * CCNet-style quality family ([[lmQualityOf]] scores tokens against
+    * the unigram distribution; real filters use n-gram LMs, cf. Wenzek
+    * et al. arXiv:1911.00359 §4.3): per adjacent word pair, conditional
+    * surprise ≈ log2 c(prev) − log2 c(prev, cur) in the integer
+    * bin-length arithmetic, clamped at 0 (hash collisions can pool a
+    * bigram bucket above its context's), averaged per doc. Low
+    * avg_cond_bits = strongly collocated text (boilerplate, templates);
+    * high = word salad — the dual signal to unigram rarity.
+    *
+    * Scale shape: BOTH count tables hash into the fixed 2^16
+    * [[vocabBucket]] feature space (the bigram keys on the joined
+    * "prev_cur" string), so each is ≤ 65,536 rows at ANY corpus scale
+    * and broadcast-safe by construction; the bigram projection persists
+    * once (pure projection, two consumers — the measured barrier rule);
+    * per-doc means are two-phase aggs. Docs under 2 words carry no
+    * bigram and are absent. */
+  private[graft] def lmBigramOf(docs: DataFrame): DataFrame = {
+    // Drop <2-word docs BEFORE building pair indices: sequence(1, 0) in
+    // Spark is the DESCENDING [1, 0] (not empty like DuckDB's range), so
+    // an unguarded transform would element_at index 2 of a 1-word array
+    // and crash the job. The filter keeps the documented drop-semantics.
+    val ws = reg(docs).select(col("doc_id"), split(col("text"), " ").as("ws"))
+      .filter(size(col("ws")) >= 2)
+    val pairs = ws
+      .select(col("doc_id"), explode(transform(
+        sequence(lit(1), size(col("ws")) - 1),
+        i => struct(element_at(col("ws"), i).as("wp"),
+          element_at(col("ws"), i + 1).as("wc")))).as("p"))
+      .select(col("doc_id"),
+        vocabBucket(col("p.wp")).as("bp"),
+        vocabBucket(concat(col("p.wp"), lit("_"), col("p.wc"))).as("bb"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    pairs.count() // eager: concurrent consumers would race the cache
+    val freqU = docs
+      .select(explode(split(col("text"), " ")).as("w"))
+      .select(vocabBucket(col("w")).as("bp"))
+      .groupBy("bp").agg(count(lit(1)).as("cp"))
+    val freqB = pairs.groupBy("bb").agg(count(lit(1)).as("cb"))
+    pairs
+      .join(broadcast(freqU), "bp")
+      .join(broadcast(freqB), "bb")
+      .select(col("doc_id"),
+        greatest(lit(0), length(bin(col("cp"))) - length(bin(col("cb")))).as("bits"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_bigrams"),
+        dround(sum(col("bits")).cast("double") / count(lit(1)), 6).as("avg_cond_bits"))
+  }
+
+  val llmLmBigram: Q = (s, dir) =>
+    lmBigramOf(Tables.t(s, dir, "documents")).orderBy("doc_id")
+
+  /** Stupid-backoff trigram LM scoring (Brants et al., EMNLP 2007 §4 —
+    * the web-scale LM recipe: unnormalized relative frequencies with a
+    * fixed backoff penalty, no discounting) — the HELD-OUT half of the
+    * CCNet quality family: [[lmQualityOf]]/[[lmBigramOf]] score docs
+    * against the corpus's OWN counts, where every observed n-gram has
+    * count ≥ 1 and backoff can never fire; here the count tables come
+    * from the TRAIN slice (doc_id % 7 ≠ 0) and the scored docs are the
+    * held-out slice, so unseen trigrams are real and the backoff chain
+    * trigram → bigram → unigram does what it exists to do. Per scored
+    * position (w1 w2 w3), in integer bin-length bits with a +1-bit
+    * penalty per backoff level (the integer analogue of α = 0.4's
+    * −log₂ ≈ 1.3 bits):
+    *
+    *   c(w1w2w3) > 0 → bits(c(w1w2)+1) − bits(c(w1w2w3))
+    *   c(w2w3)   > 0 → 1 + bits(c(w2)+1) − bits(c(w2w3))
+    *   else          → 2 + bits(N) − bits(c(w3)+1)
+    *
+    * (each clamped at 0 before the penalty; contexts +1-smoothed so an
+    * absent context bucket is well-defined). Output per held-out doc:
+    * n_trigrams, avg_bits, and backoff_frac — the fraction of
+    * positions that backed off, itself a strong OOD signal.
+    *
+    * Scale shape: all three count tables hash into the fixed 2^16
+    * [[vocabBucket]] space (trigram/pair/unigram keys on the joined
+    * strings) — each ≤ 65,536 rows and broadcast-safe at ANY corpus
+    * scale; ONE pair table serves both the trigram context (w1_w2) and
+    * the bigram level (w2_w3) lookups, one unigram table both contexts.
+    * The train side pays three token-stream passes (trigram, pair,
+    * unigram explodes — distinct aggregates, unlike BM25's six copies
+    * of ONE aggregate); the scored side is one pass; per-doc means are
+    * two-phase aggs over exact integer bits. Docs under 3 words carry
+    * no position and are absent. */
+  private[graft] def lmTrigramOf(docs: DataFrame,
+      isTrain: Column => Column): DataFrame = {
+    val train = reg(docs).filter(isTrain(col("doc_id")))
+    val t3 = trigramPositions(train)
+      .select(vocabBucket(concat_ws("_", col("p.w1"), col("p.w2"), col("p.w3"))).as("b3"))
+      .groupBy("b3").agg(count(lit(1)).as("c3"))
+    val t2 = train.select(col("doc_id"), split(col("text"), " ").as("ws"))
+      .filter(size(col("ws")) >= 2)
+      .select(explode(transform(sequence(lit(1), size(col("ws")) - 1),
+        i => concat_ws("_", element_at(col("ws"), i),
+          element_at(col("ws"), i + 1)))).as("pr"))
+      .select(vocabBucket(col("pr")).as("b2"))
+      .groupBy("b2").agg(count(lit(1)).as("c2"))
+    val t1 = train.select(explode(split(col("text"), " ")).as("w"))
+      .select(vocabBucket(col("w")).as("b1"))
+      .groupBy("b1").agg(count(lit(1)).as("c1"))
+    val totals = t1.agg(sum(col("c1")).as("n"))
+    val pos = trigramPositions(docs.filter(!isTrain(col("doc_id"))))
+      .select(col("doc_id"),
+        vocabBucket(concat_ws("_", col("p.w1"), col("p.w2"), col("p.w3"))).as("b3"),
+        vocabBucket(concat_ws("_", col("p.w1"), col("p.w2"))).as("b2c"),
+        vocabBucket(concat_ws("_", col("p.w2"), col("p.w3"))).as("b2"),
+        vocabBucket(col("p.w2")).as("b1c"),
+        vocabBucket(col("p.w3")).as("b1w"))
+    val bitsOf = (c: Column) => length(bin(c))
+    val joined = pos
+      .join(broadcast(t3), Seq("b3"), "left")
+      .join(broadcast(t2.withColumnRenamed("b2", "b2c")
+        .withColumnRenamed("c2", "c2ctx")), Seq("b2c"), "left")
+      .join(broadcast(t2), Seq("b2"), "left")
+      .join(broadcast(t1.withColumnRenamed("b1", "b1c")
+        .withColumnRenamed("c1", "c1ctx")), Seq("b1c"), "left")
+      .join(broadcast(t1.withColumnRenamed("b1", "b1w")
+        .withColumnRenamed("c1", "c1w")), Seq("b1w"), "left")
+      .crossJoin(broadcast(totals))
+      .select(col("doc_id"),
+        coalesce(col("c3"), lit(0L)).as("c3"),
+        coalesce(col("c2ctx"), lit(0L)).as("c2ctx"),
+        coalesce(col("c2"), lit(0L)).as("c2"),
+        coalesce(col("c1ctx"), lit(0L)).as("c1ctx"),
+        coalesce(col("c1w"), lit(0L)).as("c1w"),
+        col("n"))
+    joined.select(col("doc_id"),
+        when(col("c3") > 0,
+          greatest(lit(0), bitsOf(col("c2ctx") + 1) - bitsOf(col("c3"))))
+          .when(col("c2") > 0,
+            greatest(lit(0), bitsOf(col("c1ctx") + 1) - bitsOf(col("c2"))) + 1)
+          .otherwise(
+            greatest(lit(0), bitsOf(col("n")) - bitsOf(col("c1w") + 1)) + 2)
+          .as("bits"),
+        (col("c3") === 0).cast("long").as("backed"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_trigrams"),
+        dround(sum(col("bits")).cast("double") / count(lit(1)), 6).as("avg_bits"),
+        dround(sum(col("backed")).cast("double") / count(lit(1)), 6).as("backoff_frac"))
+  }
+
+  /** (doc_id, p: struct&lt;w1, w2, w3&gt;) rows at every trigram
+    * position of a docs frame — the &lt; 3-word docs filter out BEFORE
+    * the index transform, [[lmBigramOf]]'s guard (Spark's
+    * sequence(1, 0) is descending, not empty). */
+  private def trigramPositions(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
+      .filter(size(col("ws")) >= 3)
+      .select(col("doc_id"), explode(transform(
+        sequence(lit(1), size(col("ws")) - 2),
+        i => struct(element_at(col("ws"), i).as("w1"),
+          element_at(col("ws"), i + 1).as("w2"),
+          element_at(col("ws"), i + 2).as("w3")))).as("p"))
+
+  val llmLmTrigram: Q = (s, dir) =>
+    lmTrigramOf(Tables.t(s, dir, "documents"), id => id % 7 =!= 0)
+      .orderBy("doc_id")
+
+  /** Per-document top-5 terms by tf-idf (linear idf variant: tf·N/df —
+    * no transcendental functions, so the score arithmetic is the same
+    * IEEE sequence in both engines and the ranking replays exactly;
+    * log-idf would hang the oracle on libm last-ulp differences).
+    * Shape: word-count aggregation, df aggregation over distinct terms,
+    * broadcast of the tiny corpus-size scalar, ranked window per doc. */
+  val llmTfidfTop: Q = (s, dir) => {
+    val words = Tables.t(s, dir, "documents")
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+    val tf = words.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
+    val dfc = tf.groupBy("w").agg(count(lit(1)).as("df"))
+    val total = Tables.t(s, dir, "documents").agg(count(lit(1)).as("n"))
+    val win = org.apache.spark.sql.expressions.Window
+      .partitionBy("doc_id").orderBy(col("score").desc, col("w"))
+    tf.join(dfc, "w").crossJoin(broadcast(total))
+      .withColumn("score", col("tf") * lit(1.0) * col("n") / col("df"))
+      .withColumn("rnk", row_number().over(win))
+      .filter(col("rnk") <= 5)
+      .select(col("doc_id"), col("rnk"), col("w").as("term"),
+        col("tf"), col("df"), dround(col("score"), 6).as("score"))
+      .orderBy("doc_id", "rnk")
+  }
+
+  /** BM25 retrieval (Robertson/Walker, TREC-3 Okapi weighting; k1 = 1.2,
+    * b = 0.75): the first 3 documents act as multi-term QUERIES against
+    * the rest of the corpus, top-5 docs per query. The idf term uses the
+    * integer-bits surrogate `bits(N) − bits(df)` ([[llmLmQuality]]'s
+    * bin-length idiom) instead of ln((N−df+.5)/(df+.5)) — same
+    * monotonicity, bit-exact on both engines where libm `ln` is not —
+    * and per-(query, doc) accumulation runs over 1e-6-quantized longs
+    * ([[dsum]]) so the term-score sum has no float-order drift.
+    *
+    * Scale shape — the inverted-index join, not a vocabulary broadcast:
+    * postings (doc, term, tf) and document frequencies both come off the
+    * SAME groupBy-on-term exchange, so the df join is co-partitioned and
+    * reuses it; the query side is query-sized (broadcast by AQE); the
+    * only corpus-sized shuffles are the tf/dl aggregations every index
+    * build pays once. avgdl/N ride broadcast 1-row totals. Top-5 per
+    * query plans through TopKPerKeyExec. */
+  val llmBm25Topk: Q = (s, dir) =>
+    bm25Of(Tables.t(s, dir, "documents").select("doc_id", "text"),
+      id => id < 3)
+
+  /** BM25 core over a caller (doc_id, text) frame: docs matching
+    * `isQuery(doc_id)` act as multi-term queries against the rest —
+    * see [[llmBm25Topk]] for the weighting and scale shape. */
+  private[graft] def bm25Of(docs: DataFrame, isQuery: Column => Column,
+      topK: Int = 5): DataFrame = {
+    // ONE corpus scan: explode → postings (doc, term, tf). This is the
+    // inverted index a retrieval system materializes anyway —
+    // per-doc-distinct-term-sized, far smaller than the raw token stream.
+    // Everything downstream derives from it: dl = Σ tf per doc (exact,
+    // since every token lands in exactly one (doc, term) posting), df from
+    // the term-side groupBy, and the corpus totals n/avgdl from dl (split
+    // of any string yields ≥1 element, so dl has a row for EVERY doc).
+    // No persist: every consumer sits above the SAME (doc_id, w) groupBy
+    // exchange, so ReuseExchange dedups the scan+explode+shuffle once in
+    // the physical plan (PlanSpec pins scan count ≤ 2 and the reuse) —
+    // shuffle-file reuse, unlike a MEMORY_AND_DISK persist, costs no
+    // executor memory at 100 TB and no materialization job at any scale.
+    // Before deriving everything from tf the plan re-scanned and
+    // re-exploded the corpus six times (tf, dl, dfc, n, avgdl, qterms).
+    val tf = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
+    val dl = tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
+    val corpus = tf.filter(!isQuery(col("doc_id")))
+    val qterms = tf.filter(isQuery(col("doc_id")))
+      .select(col("doc_id").as("q_id"), col("w")).distinct()
+    // The tf >= 1 filter is semantically a no-op (tf is a group count),
+    // but the optimizer cannot prove it, so it keeps the tf column alive
+    // in this subtree. Without it, ColumnPruning rewrites the df branch
+    // into a bare DISTINCT(doc_id, w) whose pre-exchange plan no longer
+    // matches the postings exchange — and AQE stage reuse only fires on
+    // canonically identical subtrees, costing a second corpus scan
+    // (measured: final plan 2 corpus scans → 1 with this filter).
+    val dfc = corpus.filter(col("tf") >= 1).groupBy("w").agg(count(lit(1)).as("df"))
+    // one broadcast 1-row frame carries both corpus totals
+    val totals = dl.filter(!isQuery(col("doc_id")))
+      .agg(count(lit(1)).as("n"),
+        (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
+    // per-(term, doc) partial score: every factor is fixed-order IEEE
+    // arithmetic the oracle mirrors parenthesis-for-parenthesis
+    val termScore =
+      (length(bin(col("n"))) - length(bin(col("df")))).cast("double") *
+        ((col("tf") * (lit(1.2) + lit(1.0))) /
+          (col("tf") + lit(1.2) *
+            ((lit(1.0) - lit(0.75)) + lit(0.75) * (col("dl") / col("avgdl")))))
+    val win = org.apache.spark.sql.expressions.Window
+      .partitionBy("q_id").orderBy(col("score").desc, col("doc_id"))
+    qterms.join(corpus, "w")
+      .join(dfc, "w")
+      .join(dl, "doc_id")
+      .crossJoin(broadcast(totals))
+      .withColumn("s", termScore)
+      .groupBy("q_id", "doc_id")
+      .agg(dsum(col("s"), 6).as("score"), count(lit(1)).as("n_terms"))
+      .withColumn("rnk", row_number().over(win))
+      .filter(col("rnk") <= topK)
+      .select(col("q_id"), col("rnk"), col("doc_id"),
+        col("score"), col("n_terms"))
+      .orderBy("q_id", "rnk")
+  }
+
+  /** Hybrid retrieval via Reciprocal Rank Fusion (Cormack et al., SIGIR
+    * 2009: `score(d) = Σ_rankers 1/(60 + rank_r(d))` — the standard way
+    * production RAG stacks combine lexical and dense retrieval, robust
+    * to the two score scales being incomparable). Lexical ranker =
+    * [[bm25Of]] (pool of `poolK` per query); dense ranker = cosine over
+    * 64-dim HASHED word-count vectors (feature hashing: dim =
+    * md5-bucket mod 64, value = occurrence count — integer dot products
+    * and norms, so cosine = dot/(√n2q·√n2d) is exact IEEE arithmetic in
+    * both engines; sqrt is correctly rounded per IEEE 754, not libm
+    * folklore). A doc missing from one ranker's pool contributes only
+    * the other's term (its rank column stays NULL in the output).
+    *
+    * Scale shape: the lexical side is the shared-postings-exchange BM25
+    * index; the dense side here is the brute pairwise baseline over the
+    * query-sized probe set (3 queries × corpus — fine for a bounded
+    * query batch; a standing 100 TB dense index would swap in the IVF
+    * family's cell-probed search, same fusion step). Fusion itself is a
+    * full-outer join of two poolK-bounded lists per query — trivially
+    * small at any corpus scale. */
+  private[graft] def rrfFusionOf(docs: DataFrame, isQuery: Column => Column,
+      poolK: Int = 20, topK: Int = 5): DataFrame = {
+    val lex = bm25Of(docs, isQuery, poolK)
+      .select(col("q_id"), col("doc_id"), col("rnk").as("lex_rnk"))
+    val vecs = reg(docs)
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      .select(col("doc_id"), (vocabBucket(col("w")) % 64).as("dim"))
+      .groupBy("doc_id", "dim").agg(count(lit(1)).as("v"))
+    val norms = vecs.groupBy("doc_id").agg(sum(col("v") * col("v")).as("n2"))
+    val dots = vecs.filter(isQuery(col("doc_id")))
+      .select(col("doc_id").as("q_id"), col("dim"), col("v").as("vq"))
+      .join(vecs.filter(!isQuery(col("doc_id"))), "dim")
+      .groupBy("q_id", "doc_id")
+      .agg(sum(col("vq") * col("v")).as("dot"))
+    val denseWin = org.apache.spark.sql.expressions.Window
+      .partitionBy("q_id").orderBy(col("cos").desc, col("doc_id"))
+    val dense = dots
+      .join(norms.select(col("doc_id").as("q_id"), col("n2").as("n2q")), "q_id")
+      .join(norms, "doc_id")
+      .withColumn("cos",
+        dround(col("dot") / (sqrt(col("n2q")) * sqrt(col("n2"))), 6))
+      .withColumn("dense_rnk", row_number().over(denseWin))
+      .filter(col("dense_rnk") <= poolK)
+      .select(col("q_id"), col("doc_id"), col("dense_rnk"))
+    val fuseWin = org.apache.spark.sql.expressions.Window
+      .partitionBy("q_id").orderBy(col("rrf").desc, col("doc_id"))
+    lex.join(dense, Seq("q_id", "doc_id"), "full_outer")
+      .withColumn("rrf", dround(
+        coalesce(lit(1.0) / (lit(60) + col("lex_rnk")), lit(0.0)) +
+        coalesce(lit(1.0) / (lit(60) + col("dense_rnk")), lit(0.0)), 9))
+      .withColumn("rnk", row_number().over(fuseWin))
+      .filter(col("rnk") <= topK)
+      .select(col("q_id"), col("rnk"), col("doc_id"), col("rrf"),
+        col("lex_rnk"), col("dense_rnk"))
+      .orderBy("q_id", "rnk")
+  }
+
+  val llmRrfFusion: Q = (s, dir) =>
+    rrfFusionOf(Tables.t(s, dir, "documents").select("doc_id", "text"),
+      id => id < 3)
+
+  /** Zipf rank-frequency fit (Zipf 1949; the corpus-linguistics
+    * diagnostic tokenizer and dedup work lean on): least-squares slope
+    * of ln(freq) on ln(rank) over the top-V vocabulary — a healthy
+    * natural corpus fits exponent ≈ 1 with high R²; template/boiler-
+    * plate floods and synthetic spam bend the curve (flat head or
+    * collapsed tail), so the (exponent, r2) pair is a cheap whole-
+    * corpus hygiene gate beside the per-doc quality family.
+    *
+    * Determinism/scale: the corpus-sized work is the standard
+    * two-phase wordcount; the top-V cut is ORDER/LIMIT
+    * (TakeOrderedAndProject heaps — never a global sort), and the
+    * rank window runs over the V-row frame only (bounded by
+    * construction). Regression sums quantize each per-row ln-product
+    * to 1e-9 longs before the exact long sum ([[dsum]]), so float
+    * summation order cannot drift between engines; the closed-form
+    * slope/intercept/R² arithmetic then runs on identical doubles. */
+  private[graft] def zipfFitOf(docs: DataFrame, topV: Int = 1000): DataFrame = {
+    val ln = (c: Column) => org.apache.spark.sql.functions.log(c)
+    val top = docs.select(explode(split(col("text"), " ")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("c"))
+      .orderBy(col("c").desc, col("w")).limit(topV)
+    val wR = org.apache.spark.sql.expressions.Window
+      .orderBy(col("c").desc, col("w"))
+    val pts = top.withColumn("r", row_number().over(wR))
+      .select(ln(col("r").cast("double")).as("x"),
+        ln(col("c").cast("double")).as("y"))
+    pts
+      .agg(count(lit(1)).cast("double").as("n"),
+        dsum(col("x"), 9).as("sx"), dsum(col("y"), 9).as("sy"),
+        dsum(col("x") * col("x"), 9).as("sxx"),
+        dsum(col("x") * col("y"), 9).as("sxy"),
+        dsum(col("y") * col("y"), 9).as("syy"))
+      .withColumn("b", (col("n") * col("sxy") - col("sx") * col("sy"))
+        / (col("n") * col("sxx") - col("sx") * col("sx")))
+      .select(col("n").cast("long").as("n_fit"),
+        dround(-col("b"), 6).as("zipf_exponent"),
+        dround((col("sy") - col("b") * col("sx")) / col("n"), 6)
+          .as("intercept"),
+        // zero-variance guard (the quality_calibrate rule, same as
+        // heapsLawOf): a degenerate corpus where all top-V counts are
+        // equal leaves n·syy − sy² as a ±quantization residue — the
+        // unguarded ratio would emit NaN or an impossible R² in the
+        // hygiene column. Pin r2 to 0 there in BOTH engines.
+        when(col("n") * col("syy") - col("sy") * col("sy") <= lit(1e-9),
+          lit(0.0)).otherwise(
+          dround((col("n") * col("sxy") - col("sx") * col("sy"))
+            * (col("n") * col("sxy") - col("sx") * col("sy"))
+            / ((col("n") * col("sxx") - col("sx") * col("sx"))
+              * (col("n") * col("syy") - col("sy") * col("sy"))), 6))
+          .as("r2"))
+  }
+
+  val llmZipfFit: Q = (s, dir) =>
+    zipfFitOf(Tables.t(s, dir, "documents").select("text"))
+
+  /** Heaps'-law vocabulary-growth fit (Heaps 1978) — the companion
+    * diagnostic to [[zipfFitOf]]: V(N) ≈ K·N^β, the sub-linear growth
+    * of distinct vocabulary V with corpus tokens N. A healthy natural
+    * corpus fits β ≈ 0.4–0.8 with high R²; β near 0 flags a closed
+    * template vocabulary (boilerplate floods), β near 1 flags
+    * near-random token soup — either way the corpus needs a look
+    * before tokenizer training trusts it.
+    *
+    * Measured at `nCkpt` corpus prefixes in doc_id order. The bucket of
+    * a doc is integer-exact ceil-division ⌈nCkpt·(doc_id+1)/M⌉ (M =
+    * max doc_id + 1), so both engines bucket identically with no float
+    * boundary risk. V at a checkpoint counts words whose FIRST carrier
+    * doc falls at or before it — a word→min(doc_id) agg, the same
+    * wordcount shuffle shape as [[zipfFitOf]]; N is the doc-level
+    * token sum per bucket. Cumulation and the ln-ln least-squares fit
+    * run over the nCkpt-row frame only (bounded by construction), with
+    * regression sums quantized to 1e-9 longs ([[dsum]]) so float
+    * summation order cannot drift between engines. */
+  private[graft] def heapsLawOf(docs: DataFrame, nCkpt: Int = 16): DataFrame = {
+    val ln = (c: Column) => org.apache.spark.sql.functions.log(c)
+    // m feeds BOTH branches below, but no persist: its broadcast
+    // exchanges are canonically identical, and the POST-EXECUTION plan
+    // shows `ReusedExchange [m] BroadcastExchange` — the doc_id scan
+    // behind it runs once (verified at sf0.1; the no-persist-over-
+    // reusable-exchange rule).
+    val m = docs.agg((max(col("doc_id")) + 1).as("m"))
+    val docTok = docs
+      .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("nt"))
+      .crossJoin(broadcast(m))
+      .withColumn("bkt", expr(s"CAST(((doc_id + 1) * $nCkpt + m - 1) DIV m AS INT)"))
+      .groupBy("bkt").agg(sum(col("nt")).as("toks"))
+    val newWords = docs
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      .groupBy("w").agg(min(col("doc_id")).as("fd"))
+      .crossJoin(broadcast(m))
+      .withColumn("bkt", expr(s"CAST(((fd + 1) * $nCkpt + m - 1) DIV m AS INT)"))
+      .groupBy("bkt").agg(count(lit(1)).as("nw"))
+    val wC = org.apache.spark.sql.expressions.Window
+      .orderBy("bkt")
+      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+    val pts = docTok.join(newWords, Seq("bkt"), "left")
+      .withColumn("n_cum", sum(col("toks")).over(wC))
+      .withColumn("v_cum", sum(coalesce(col("nw"), lit(0L))).over(wC))
+      .select(ln(col("n_cum").cast("double")).as("x"),
+        ln(col("v_cum").cast("double")).as("y"),
+        col("n_cum"), col("v_cum"))
+    pts
+      .agg(count(lit(1)).cast("double").as("n"),
+        dsum(col("x"), 9).as("sx"), dsum(col("y"), 9).as("sy"),
+        dsum(col("x") * col("x"), 9).as("sxx"),
+        dsum(col("x") * col("y"), 9).as("sxy"),
+        dsum(col("y") * col("y"), 9).as("syy"),
+        max(col("n_cum")).as("tokens_total"),
+        max(col("v_cum")).as("vocab_total"))
+      .withColumn("b", (col("n") * col("sxy") - col("sx") * col("sy"))
+        / (col("n") * col("sxx") - col("sx") * col("sx")))
+      .select(col("n").cast("long").as("n_fit"),
+        dround(col("b"), 6).as("heaps_beta"),
+        dround((col("sy") - col("b") * col("sx")) / col("n"), 6)
+          .as("intercept"),
+        // zero-variance guard (the quality_calibrate rule): a closed
+        // vocabulary — the very regime this gate detects — makes every
+        // y identical, so n·syy − sy² is a ±1e-7 quantization residue
+        // of arbitrary sign; an unguarded ratio then emits NaN or an
+        // impossible R² in the hygiene column. Pin r2 = 0 there.
+        when(col("n") * col("syy") - col("sy") * col("sy") <= lit(1e-9),
+          lit(0.0)).otherwise(
+          dround((col("n") * col("sxy") - col("sx") * col("sy"))
+            * (col("n") * col("sxy") - col("sx") * col("sy"))
+            / ((col("n") * col("sxx") - col("sx") * col("sx"))
+              * (col("n") * col("syy") - col("sy") * col("sy"))), 6))
+          .as("r2"),
+        col("tokens_total"), col("vocab_total"))
+  }
+
+  val llmHeapsLaw: Q = (s, dir) =>
+    heapsLawOf(Tables.t(s, dir, "documents").select("doc_id", "text"))
+
+  /** PMI-ranked collocation extraction (Church & Hanks 1990, the
+    * association-ratio method): for each adjacent word pair, the
+    * pointwise-mutual-information RATIO p(a,b)/(p(a)·p(b)) =
+    * (c_ab/T_b)·(T_w/c_a)·(T_w/c_b) — ranked un-logged, since log is
+    * monotone and libm-free ranking keeps both engines bit-identical.
+    * Pairs under 3 occurrences are dropped (the classic sparse-PMI
+    * guard: a hapax pair maximizes PMI vacuously). Top-20 collocations
+    * by (ratio, a, b).
+    *
+    * Scale shape: bigram counts are a two-phase agg over observed
+    * pairs (bounded by the token stream, not vocab²); unigram counts
+    * are vocab-sized (Heaps' law — the [[llmTfidfTop]] posture);
+    * corpus totals ride broadcast 1-row frames; the global top-20 is
+    * TakeOrderedAndProject (per-partition heads, never a global
+    * sort). The ratio arithmetic is parenthesized identically in both
+    * engines — products never materialize beyond double-exact range
+    * because the division interleaves. */
+  private[graft] def collocationsOf(docs: DataFrame,
+      minCount: Int = 3, topK: Int = 20): DataFrame = {
+    // size >= 2 guard: Spark's sequence(1, 0) is the descending [1, 0],
+    // not empty — the lmBigramOf lesson
+    val pairs = docs
+      .select(split(col("text"), " ").as("ws"))
+      .filter(size(col("ws")) >= 2)
+      .select(explode(transform(sequence(lit(1), size(col("ws")) - 1),
+        i => struct(element_at(col("ws"), i).as("a"),
+          element_at(col("ws"), i + 1).as("b")))).as("p"))
+      .select(col("p.a").as("a"), col("p.b").as("b"))
+    val cw = docs.select(explode(split(col("text"), " ")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("c"))
+    val tw = cw.agg(sum(col("c")).as("tw"))
+    val cb = pairs.groupBy("a", "b").agg(count(lit(1)).as("cab"))
+    val tb = cb.agg(sum(col("cab")).as("tb"))
+    cb.filter(col("cab") >= minCount)
+      .join(cw.select(col("w").as("a"), col("c").as("ca")), "a")
+      .join(cw.select(col("w").as("b"), col("c").as("cbn")), "b")
+      .crossJoin(broadcast(tw))
+      .crossJoin(broadcast(tb))
+      .select(col("a"), col("b"), col("cab"), col("ca"), col("cbn"),
+        dround(((col("cab") * lit(1.0) * col("tw") / col("tb")) *
+          (col("tw") * lit(1.0) / col("ca"))) / col("cbn"), 6).as("ratio"))
+      .orderBy(col("ratio").desc, col("a"), col("b"))
+      .limit(topK)
+  }
+
+  val llmCollocations: Q = (s, dir) =>
+    collocationsOf(Tables.t(s, dir, "documents"))
+
+  /** TextRank keyword extraction (Mihalcea & Tarau, EMNLP 2004):
+    * weighted PageRank over the word co-occurrence graph — nodes are
+    * distinct words, an undirected edge per adjacent pair weighted by
+    * its count, score `PR(w) = 0.15 + 0.85·Σ_v (w_vw/outw(v))·PR(v)`
+    * iterated 5 times from 1.0, top-10 words by final score. The
+    * graph-ranking dual of [[collocationsOf]]' frequency-ratio view:
+    * TextRank surfaces words central to the co-occurrence topology
+    * even when raw counts are unremarkable.
+    *
+    * Scale shape: nodes/edges are vocab-sized (Heaps' law), weights are
+    * a two-phase bigram agg bounded by the token stream; each iteration
+    * is one vocab-sized join + dst groupBy (the [[graft.queries.Graph]]
+    * PageRank dataflow), with AQE stage reuse deduping the weight
+    * exchange across iterations; the top-10 is TakeOrderedAndProject.
+    * 1e-9 quantized sums/rounds per iteration keep the trajectory
+    * bit-exact vs the DuckDB MATERIALIZED-CTE replay. */
+  private[graft] def textrankOf(docs: DataFrame, iterations: Int = 5,
+      topK: Int = 10): DataFrame = {
+    val pairs = docs
+      .select(split(col("text"), " ").as("ws"))
+      .filter(size(col("ws")) >= 2)
+      .select(explode(transform(sequence(lit(1), size(col("ws")) - 1),
+        i => struct(element_at(col("ws"), i).as("a"),
+          element_at(col("ws"), i + 1).as("b")))).as("p"))
+      .select(col("p.a").as("a"), col("p.b").as("b"))
+      .filter(col("a") =!= col("b"))
+    val und = pairs.unionAll(pairs.select(col("b").as("a"), col("a").as("b")))
+    val wgt = und.groupBy("a", "b").agg(count(lit(1)).as("wgt"))
+    val outw = wgt.groupBy("a").agg(sum(col("wgt")).as("ow"))
+    val e = wgt.join(outw, "a")
+    val nodes = outw.select(col("a").as("word"))
+    var pr = nodes.select(col("word"), lit(1.0).as("score"))
+    for (_ <- 1 to iterations) {
+      val contribs = e
+        .join(pr.withColumnRenamed("word", "a"), "a")
+        .select(col("b").as("word"),
+          (col("score") * col("wgt") / col("ow")).as("c"))
+      pr = nodes
+        .join(contribs, Seq("word"), "left")
+        .groupBy("word")
+        .agg(dsum(coalesce(col("c"), lit(0.0)), 9).as("sc"))
+        .select(col("word"),
+          dround(lit(0.15) + lit(0.85) * col("sc"), 9).as("score"))
+    }
+    pr.orderBy(col("score").desc, col("word")).limit(topK)
+  }
+
+  val llmTextrank: Q = (s, dir) =>
+    // NO fanOut (A/B'd r21, same window): 2.94/2.62 fanned vs 3.15/2.48
+    // plain [med/min] — a wash; the pair explode feeds the (a, b)
+    // count exchange whose 5 downstream iterations dominate.
+    textrankOf(Tables.t(s, dir, "documents"))
+
+  /** Per-document character-distribution entropy, in the engine's
+    * integer bin-length surrogate (Σ cᵢ·(bits(L) − bits(cᵢ))/L over the
+    * doc's char counts — the libm-free stand-in for Shannon −Σp·log₂p,
+    * same monotone ordering): the cheap low-entropy detector that flags
+    * single-char floods and keyboard-mash BEFORE the heavier n-gram
+    * scorers run — Gopher-class pipelines gate on exactly this signal
+    * first because it needs one char pass and no model tables.
+    *
+    * Scale shape: explode chars → two-phase (doc, char) count agg →
+    * per-doc weighted agg; alphabet size bounds the per-doc group count,
+    * nothing global, no joins beyond the per-doc length carried through
+    * the agg. */
+  private[graft] def charEntropyOf(docs: DataFrame): DataFrame = {
+    // split(text, "") — O(len) per row, vs the substr-over-range
+    // idiom's O(len²): UTF8String.substring re-scans to the code-point
+    // offset on every call. A/B at sf0.1 (REPEATS=7 medians): substr
+    // 5.11 s → array-lambda filter 3.55 (interpreted HOFs cost ~2 µs
+    // per element) → this split + codegen'd post-explode filter 0.61.
+    // The DuckDB twin keeps substr-over-range (no empty-delimiter
+    // split there; oracle runtime is not on the path). The length
+    // filter below also drops the trailing "" the empty-regex split
+    // appends under Spark's limit=-1.
+    val chars = docs
+      .filter(length(col("text")) >= 1)
+      .select(col("doc_id"), length(col("text")).as("len"),
+        explode(split(col("text"), "")).as("ch"))
+      .filter(length(col("ch")) === 1) // codegen'd post-explode guard —
+        // an array-lambda filter here would run interpreted per element
+    chars.groupBy("doc_id", "len", "ch")
+      .agg(count(lit(1)).as("c"))
+      .select(col("doc_id"), col("len"),
+        (col("c") * (length(bin(col("len").cast("long"))) -
+          length(bin(col("c"))))).as("w"))
+      .groupBy("doc_id", "len")
+      .agg(sum(col("w")).as("sw"), count(lit(1)).as("alphabet"))
+      .select(col("doc_id"), col("len").cast("long").as("len"),
+        col("alphabet"),
+        dround(col("sw").cast("double") / col("len"), 6).as("ent_bits"))
+  }
+
+  val llmCharEntropy: Q = (s, dir) =>
+    charEntropyOf(Tables.t(s, dir, "documents")).orderBy("doc_id")
+
+  /** Vocabulary coverage curve — for budgets k ∈ {10, 100, 1000, 10000}:
+    * what fraction of all token OCCURRENCES the top-k most frequent
+    * words cover (the analysis behind every tokenizer-budget decision:
+    * Zipf's law makes the head cover most of the stream, and the k
+    * where coverage plateaus is the economic vocab size; the same curve
+    * justifies `llm_bpe_*`'s subword fallback for the
+    * tail). Ranking ties break by word for a total order.
+    *
+    * Scale shape: the heavy pass is the two-phase word count; the
+    * ranking + cumulative windows run over the VOCAB-sized count table
+    * (Heaps' law — not the token stream), and the 4-row budget frame
+    * cross-joins in. All-integer counts; only the final fraction is a
+    * quantized division. */
+  val llmVocabCoverage: Q = (s, dir) => {
+    val budgets = Seq(10, 100, 1000, 10000)
+    val cw = Tables.t(s, dir, "documents")
+      .select(explode(split(col("text"), " ")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("c"))
+    val rankW = org.apache.spark.sql.expressions.Window
+      .orderBy(col("c").desc, col("w"))
+    val ranked = cw
+      .withColumn("rnk", row_number().over(rankW))
+      .withColumn("cum", sum("c").over(rankW.rowsBetween(
+        org.apache.spark.sql.expressions.Window.unboundedPreceding,
+        org.apache.spark.sql.expressions.Window.currentRow)))
+    val totals = cw.agg(sum(col("c")).as("total"),
+      count(lit(1)).as("vocab"))
+    // one conditional agg over the vocab-sized ranked table, unpivoted
+    // via stack — no k×vocab theta join. For k > vocab the MAX simply
+    // sees every row and covered = total (the curve saturates).
+    val kCols = budgets.map(k =>
+      max(when(col("rnk") <= k, col("cum"))).as(s"c$k"))
+    val perK = ranked.agg(kCols.head, kCols.tail: _*)
+    val stackExpr = budgets.map(k => s"$k, c$k").mkString(", ")
+    perK
+      .select(expr(s"stack(${budgets.size}, $stackExpr) AS (k, covered)"))
+      .crossJoin(broadcast(totals))
+      .select(col("k"), col("covered"), col("total"), col("vocab"),
+        dround(col("covered").cast("double") / col("total"), 6).as("coverage"))
+      .orderBy("k")
+  }
+
+  /** Interpolated Kneser-Ney bigram LM (Kneser & Ney 1995; the smoothing
+    * behind every serious count-based LM, and the principled upgrade of
+    * [[lmBigramOf]]'s raw conditional estimate): with discount D = 0.75,
+    *
+    *   P_KN(w2|w1) = max(c(w1,w2) − D, 0)/c(w1·)
+    *               + D · N1+(w1·)/c(w1·) · N1+(·w2)/B
+    *
+    * where c(w1·) = Σ_w c(w1,w), N1+(w1·) = distinct continuations of
+    * w1, N1+(·w2) = distinct left contexts of w2 (the CONTINUATION
+    * count — "how novel is w2", the idea that makes KN beat Katz), and
+    * B = distinct bigram types. Emits the top-20 bigrams by smoothed
+    * probability (quantized-long ordering, then (w1,w2) — total order).
+    *
+    * Scale shape: one pass builds the bigram-TYPE table (vocab²-bounded
+    * but Zipf-sparse — Heaps' law, not the token stream), persisted and
+    * consumed by all four count views; the context/continuation joins
+    * re-use the bigram table's key exchanges; B broadcasts as a 1-row
+    * frame. All counts integer; only the final probability is double
+    * (identical fixed-order IEEE arithmetic in the DuckDB twin). */
+  private[graft] def lmKnOf(docs: DataFrame): DataFrame = {
+    val big = docs
+      .select(split(col("text"), " ").as("ws"))
+      .filter(size(col("ws")) >= 2) // sequence(1,0) is [1,0], the lmBigramOf trap
+      .select(explode(transform(
+        sequence(lit(1), size(col("ws")) - 1),
+        i => struct(element_at(col("ws"), i).as("w1"),
+          element_at(col("ws"), i + 1).as("w2")))).as("p"))
+      .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
+      .agg(count(lit(1)).as("c"))
+      // A/B'd vs the BM25-style exchange-reuse derivation (no persist,
+      // REPEATS=7, sf0.1): persist 0.595 s median vs 0.743 without —
+      // with FOUR consumers of different shapes (two re-groupings, a
+      // global count, the final join) pruning breaks canonical equality
+      // for at least one, so the exchange is not reused everywhere and
+      // the cache barrier wins here.
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    big.count() // eager: four consumers would race the cache
+    val ctx = big.groupBy("w1")
+      .agg(sum("c").as("cw1"), count(lit(1)).as("n1f"))
+    val cont = big.groupBy("w2").agg(count(lit(1)).as("n1b"))
+    val tot = big.agg(count(lit(1)).as("bt"))
+    val pkn = greatest(col("c") - lit(0.75), lit(0.0)) / col("cw1") +
+      lit(0.75) * col("n1f") / col("cw1") * (col("n1b") / col("bt"))
+    big.join(ctx, "w1").join(cont, "w2").crossJoin(broadcast(tot))
+      .withColumn("pq", floor(pkn * 1e6 + lit(0.5)).cast("long"))
+      .select(col("w1"), col("w2"), col("c"),
+        (col("pq").cast("double") / 1e6).as("p_kn"), col("pq"))
+  }
+
+  val llmLmKn: Q = (s, dir) =>
+    lmKnOf(Tables.t(s, dir, "documents"))
+      .orderBy(col("pq").desc, col("w1"), col("w2"))
+      .limit(20)
+      .drop("pq")
+
+  val llmTokenCount: Q = (s, dir) => {
+    val d = Tables.t(s, dir, "documents")
+    d.select(col("doc_id"),
+      size(split(col("text"), " ")).as("ws_tokens"),
+      regexp_count(col("text"), lit("[a-z]+|[0-9]+|[^a-z0-9 ]")).cast("int").as("bpe_tokens"),
+      length(col("text")).as("chars"),
+      (length(col("text")) - length(regexp_replace(col("text"), " ", ""))).as("spaces"))
+      .orderBy("doc_id")
+  }
+
+  /** Greedy longest-match wordpiece vocabulary, split by piece LENGTH.
+    * The split is load-bearing: a piece list holding only exact-length-l
+    * strings means a clamped end-of-word substring (shorter than l) can
+    * never equal a member, so the greedy matcher needs NO bounds checks —
+    * and single characters need no list at all, because an unmatched
+    * character advances 1 and counts 1 whether it's "in vocab" or [UNK]
+    * (identical arithmetic either way). Shared verbatim by the Spark
+    * fold, the DuckDB oracle (interpolated below), and the ScalaTest
+    * reference tokenizer. */
+  private[graft] val wpVocab4 = Seq("tion", "ment", "able", "ight", "ough", "ance")
+
+  private[graft] val wpVocab3 = Seq(
+    "ing", "ion", "ent", "ter", "est", "ers", "ate", "ive", "the", "and", "for", "ith")
+
+  private[graft] val wpVocab2 = Seq(
+    "th", "er", "on", "an", "re", "he", "in", "ed", "nd", "ha", "at", "en",
+    "es", "of", "or", "nt", "ea", "ti", "to", "it", "st", "io", "le", "is",
+    "ou", "ar", "as", "de", "rt", "ve")
+
+  // The no-bounds-check greedy scan is SOUND ONLY IF every piece has its
+  // list's exact length (a clamped end-of-word substring then can never
+  // equal a member). A misplaced piece would silently desynchronize the
+  // Spark scan from the DuckDB fold — fail fast at class load instead.
+  for ((vs, l) <- Seq((wpVocab4, 4), (wpVocab3, 3), (wpVocab2, 2)); v <- vs)
+    require(v.length == l && v.codePointCount(0, v.length) == l,
+      s"wpVocab$l piece '$v' must be exactly $l codepoints")
+
+  /** Greedy longest-match token count of one word ([[wpVocab4]]/3/2 +
+    * 1-char fallback) — the matcher the query's typed map runs per word,
+    * and the tests' reference. Set-backed lookups, O(1) per probe. */
+  private[graft] val wpSet4 = wpVocab4.toSet
+
+  private[graft] val wpSet3 = wpVocab3.toSet
+
+  private[graft] val wpSet2 = wpVocab2.toSet
+
+  private[graft] def wpTokenCountRef(w: String): Int = {
+    // Walk Unicode CODEPOINTS, not UTF-16 code units: DuckDB's
+    // length()/substr() are codepoint-based, so a supplementary-plane
+    // character (an emoji) must advance the scan by ONE position in both
+    // engines or wp_tokens diverges the moment a corpus leaves ASCII.
+    // (The vocab is ASCII, so piece strings are codepoint==unit; only
+    // the scan positions needed the fix.)
+    val cps = w.codePoints().toArray
+    val n = cps.length
+    def piece(i: Int, l: Int) = new String(cps, i, l)
+    var i = 0; var cnt = 0
+    while (i < n) {
+      val step =
+        if (i + 4 <= n && wpSet4.contains(piece(i, 4))) 4
+        else if (i + 3 <= n && wpSet3.contains(piece(i, 3))) 3
+        else if (i + 2 <= n && wpSet2.contains(piece(i, 2))) 2
+        else 1
+      i += step; cnt += 1
+    }
+    cnt
+  }
+
+  /** CTE chain ending in `spairs(id_a, id_b, cos)` — the SemDeDup
+    * thresholded within-cell pairs (DuckDB twin of [[semDedupPairs]]),
+    * shared by the keeper-rule and CC-resolved oracles so the two
+    * cannot drift. */
+  /** DuckDB wordpiece token count over `text` — the packed-state greedy
+    * fold, shared by the llm_tokenize and llm_tokenizer_fertility
+    * oracles so the tokenizer replay cannot drift between them. Same
+    * list_reduce + list_prepend(0) seed trick as llm_fingerprint; the
+    * prepended 0 is the initial accumulator (pos 0, count 0).
+    * Packing bound (cf. the 31-bit gram-id caveat on contamination):
+    * acc = pos·1e5 + count, so a single word yielding ≥ 100,000 pieces
+    * would wrap count into pos and diverge from the Spark Long count.
+    * Pieces ≥ len/4, so that needs a ~400,000-char single word —
+    * unreachable for fixture docs AND for any real tokenizer input
+    * (words are pre-split on spaces); the Spark side has no such
+    * bound. Documented, not widened. */
+  private lazy val wpTokensSql: String = {
+    def lst(vs: Seq[String]) = vs.map("'" + _ + "'").mkString("[", ",", "]")
+    s"""CAST(list_sum(list_transform(string_split(text, ' '), w ->
+       |    CASE WHEN length(w) = 0 THEN 0 ELSE
+       |      list_reduce(list_prepend(0::BIGINT, range(length(w))), (acc, i) ->
+       |        CASE WHEN i < acc // 100000 THEN acc
+       |             WHEN list_contains(${lst(wpVocab4)}, substr(w, CAST(i+1 AS INT), 4))
+       |               THEN (i+4)*100000 + acc % 100000 + 1
+       |             WHEN list_contains(${lst(wpVocab3)}, substr(w, CAST(i+1 AS INT), 3))
+       |               THEN (i+3)*100000 + acc % 100000 + 1
+       |             WHEN list_contains(${lst(wpVocab2)}, substr(w, CAST(i+1 AS INT), 2))
+       |               THEN (i+2)*100000 + acc % 100000 + 1
+       |             ELSE (i+1)*100000 + acc % 100000 + 1 END) % 100000
+       |    END)) AS BIGINT)""".stripMargin
+  }
+
+  /** Real subword tokenization beside [[llmTokenCount]]'s regex proxy:
+    * greedy longest-match wordpiece over a fixed vocabulary (the
+    * WordPiece/BPE-inference algorithm, Wu et al. 2016 arXiv:1609.08144
+    * §4.1 — at inference a trained BPE/wordpiece vocab is applied by
+    * exactly this deterministic longest-match scan; unmatched characters
+    * are the [UNK] fallback, counting 1 like any 1-char piece).
+    *
+    * Execution shape: a typed iterator→iterator `mapPartitions` (same
+    * pattern as [[llmMultimodalDecode]]) — tokenization is compute-bound
+    * per-row work that production pipelines run as JVM/native code over
+    * partition batches, and that is measurably the right call here too:
+    * the same greedy scan expressed as a Catalyst `aggregate` HOF fold
+    * (packed pos·100000+count state over character positions) was built
+    * first and measured 2.09 s at sf0.1 — HOF lambdas evaluate
+    * interpreted per element, and a per-char lambda with three membership
+    * probes is the worst case — vs ~0.3 s for the set-backed JVM scan.
+    * No shuffle either way; partitioning preserved. The DuckDB twin
+    * replays the identical fold via list_reduce, so the oracle compares
+    * real tokenizer semantics end-to-end against an INDEPENDENT
+    * implementation. */
+  val llmTokenize: Q = (s, dir) => {
+    import s.implicits._
+    Tables.t(s, dir, "documents")
+      .select(col("doc_id"), col("text")).as[(Long, String)]
+      .mapPartitions(_.map { case (id, text) =>
+        val ws = text.split(" ", -1)
+        var i = 0; var toks = 0L
+        while (i < ws.length) { toks += wpTokenCountRef(ws(i)); i += 1 }
+        (id, ws.length, toks)
+      })
+      .toDF("doc_id", "n_words", "wp_tokens")
+      .orderBy("doc_id")
+  }
+
+  /** Tokenizer fertility by language — tokens-per-word for the three
+    * tokenizers the engine carries (whitespace, the BPE-ish regex of
+    * [[llmTokenCount]], the greedy wordpiece of [[llmTokenize]]):
+    * THE multilingual-budget metric — a language whose fertility runs
+    * 2× pays 2× the context window and 2× the training compute per
+    * word, which is exactly what vocab allocation decisions (and the
+    * [[llmVocabCoverage]] curve per language) trade off.
+    *
+    * Scale shape: one corpus pass — the regex count rides the codegen'd
+    * `regexp_count` projection, the wordpiece fold a typed
+    * iterator→iterator mapPartitions (same core as llm_tokenize) —
+    * then a #langs-row aggregate. */
+  val llmTokenizerFertility: Q = (s, dir) => {
+    import s.implicits._
+    Tables.t(s, dir, "documents")
+      .select(col("lang"), col("text"),
+        regexp_count(col("text"), lit("[a-z]+|[0-9]+|[^a-z0-9 ]"))
+          .cast("long").as("bpe"))
+      .as[(String, String, Long)]
+      .mapPartitions(_.map { case (lang, text, bpe) =>
+        val ws = text.split(" ", -1)
+        var i = 0; var wp = 0L
+        while (i < ws.length) { wp += wpTokenCountRef(ws(i)); i += 1 }
+        (lang, ws.length.toLong, wp, bpe)
+      })
+      .toDF("lang", "n_words", "wp_tokens", "bpe_tokens")
+      .groupBy("lang")
+      .agg(count(lit(1)).as("n_docs"), sum("n_words").as("n_words"),
+        sum("wp_tokens").as("wp_tokens"), sum("bpe_tokens").as("bpe_tokens"))
+      .select(col("lang"), col("n_docs"), col("n_words"),
+        col("wp_tokens"), col("bpe_tokens"),
+        dround(col("wp_tokens").cast("double") / col("n_words"), 6)
+          .as("wp_fertility"),
+        dround(col("bpe_tokens").cast("double") / col("n_words"), 6)
+          .as("bpe_fertility"))
+      .orderBy("lang")
+  }
+
+  /** Lexical diversity battery — the vocabulary-richness quality axis
+    * the length/ratio scorers miss (template spam can pass every
+    * [[llmQualityScore]] gate while cycling 30 words): per doc,
+    * type-token ratio, hapax fraction (types seen once — low hapax =
+    * formulaic text), and Yule's K = 10⁴·(Σc² − N)/N² (Yule 1944;
+    * repeat-rate characteristic — HIGH K = concentrated reuse), all
+    * from exact integer counts (Σc² ride the same (doc, word) count
+    * table; the only doubles are three fixed-order divisions).
+    *
+    * Scale shape: one two-phase (doc, word) hash count, then a per-doc
+    * agg over the doc's TYPE rows (vocab-bounded per doc) — no windows,
+    * no global state. */
+  private[graft] def lexicalDiversityOf(docs: DataFrame): DataFrame =
+    docs
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
+      .groupBy("doc_id")
+      .agg(sum("c").as("n_tokens"), count(lit(1)).as("n_types"),
+        sum(col("c") * col("c")).as("sum_c2"),
+        sum(when(col("c") === 1, 1L).otherwise(0L)).as("n_hapax"))
+      .select(col("doc_id"), col("n_tokens"), col("n_types"), col("n_hapax"),
+        dround(col("n_types").cast("double") / col("n_tokens"), 6).as("ttr"),
+        dround(col("n_hapax").cast("double") / col("n_types"), 6)
+          .as("hapax_frac"),
+        dround(lit(10000.0) * (col("sum_c2") - col("n_tokens")) /
+          (col("n_tokens") * col("n_tokens")), 6).as("yules_k"))
+
+  val llmLexicalDiversity: Q = (s, dir) =>
+    lexicalDiversityOf(Tables.t(s, dir, "documents")).orderBy("doc_id")
+
+  /** RAKE keyword extraction (Rose, Engel, Cramer & Cowley 2010 —
+    * "Automatic keyword extraction from individual documents"):
+    * candidate phrases are maximal stopword-free word runs (≤ 3 words
+    * here), each word scores degree/frequency over all candidate
+    * occurrences, a phrase scores the sum of its member word scores —
+    * the zero-training keyword baseline every corpus-exploration pass
+    * starts from ([[llmTextrank]]'s graph-free sibling; collocations
+    * rank PAIRS, RAKE ranks variable-length phrases).
+    *
+    * Scale shape: phrase candidates are a pure per-row projection
+    * (stopword masking + split — no window, no join); word stats and
+    * phrase frequencies are two-phase counts; the scoring join runs on
+    * the word key and the final top-N is one TakeOrderedAndProject.
+    *
+    * Determinism: word score quantizes at 1e-9 before the exact
+    * per-phrase sum; the delimiter regex uses only literal space/pipe
+    * classes (RE2 == Java semantics). */
+  private[graft] def rakeKeywordsOf(docs: DataFrame, topN: Int = 20): DataFrame = {
+    val stops = Seq("a", "the", "of", "to", "and", "in", "is", "on",
+      "for", "with", "as", "by", "an", "at", "or", "be", "this",
+      "that", "it", "from")
+    val stopArr = array(stops.map(lit): _*)
+    val occ = docs
+      .select(split(col("text"), " ").as("ws"))
+      .select(explode(split(array_join(transform(col("ws"),
+        w => when(array_contains(stopArr, w), lit("|")).otherwise(w)),
+        " "), "[ ]*[|][ ]*")).as("phrase"))
+      .filter(length(col("phrase")) > 0)
+      .select(col("phrase"), split(col("phrase"), " ").as("pws"))
+      .filter(size(col("pws")) <= 3)
+    val wordStats = occ
+      .select(explode(col("pws")).as("w"), size(col("pws")).as("plen"))
+      .groupBy("w")
+      .agg(count(lit(1)).as("freq"), sum(col("plen")).as("deg"))
+    val pf = occ.groupBy("phrase").agg(count(lit(1)).as("occurrences"))
+    pf.select(col("phrase"), col("occurrences"),
+        explode(split(col("phrase"), " ")).as("w"))
+      .join(wordStats, "w")
+      .groupBy("phrase", "occurrences")
+      .agg(count(lit(1)).as("n_words"),
+        dsum(col("deg").cast("double") / col("freq"), 9).as("score_raw"))
+      .select(col("phrase"), col("n_words"), col("occurrences"),
+        dround(col("score_raw"), 6).as("score"))
+      .orderBy(col("score").desc, col("phrase"))
+      .limit(topN)
+  }
+
+  val llmRakeKeywords: Q = (s, dir) =>
+    rakeKeywordsOf(Tables.t(s, dir, "documents").select("text"))
+
+  /** Per-document perplexity under the corpus's own interpolated
+    * bigram LM (Jelinek-Mercer smoothing, λ = 0.9 bigram / 0.1 unigram
+    * — Chen & Goodman 1998's baseline): THE canonical quality filter
+    * (CCNet scores every doc against a KenLM; here the model is the
+    * corpus itself, so the score reads "how typical is this doc of the
+    * corpus" — outliers in either direction are cleaning candidates).
+    * [[lmQualityOf]] scores unigram surprise; this prices word ORDER.
+    *
+    * Scale shape: one bigram-explode pass (corpus-sized), two-phase
+    * model counts (c12, per-w1 totals, target unigrams), then ONE
+    * equi-join of doc bigrams against the model on (w1, w2) — the
+    * standard distributed LM-scoring shape; per-doc aggregation is the
+    * second corpus-sized pass. Docs with no bigram (< 2 words) carry
+    * no probability mass and are deliberately absent (unlike
+    * [[ndcgEvalOf]]'s eval contract, a doc without bigrams has no
+    * defined perplexity — documented drop, not an accident).
+    *
+    * Determinism: each ln p term quantizes at 1e-9 before the exact
+    * per-doc sum; p itself is a fixed-shape double chain over exact
+    * counts. */
+  private[graft] def lmPerplexityOf(docs: DataFrame): DataFrame = {
+    val lg = (c: Column) => org.apache.spark.sql.functions.log(c)
+    val big = docs
+      .select(col("doc_id"), split(col("text"), " ").as("ws"))
+      .filter(size(col("ws")) >= 2)
+      .select(col("doc_id"), explode(transform(
+        sequence(lit(1), size(col("ws")) - 1),
+        i => struct(element_at(col("ws"), i).as("w1"),
+          element_at(col("ws"), i + 1).as("w2")))).as("p"))
+      .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
+      // Persist barrier: the model side (three aggs) and the scoring
+      // side both consume this explode projection; the consumers'
+      // shapes differ enough that exchange reuse cannot dedup them
+      // (the lm_kn measured precedent).
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    big.count() // eager: concurrent consumers would race the cache
+    val c12 = big.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
+    val c1 = c12.groupBy("w1").agg(sum(col("c12")).as("c1"))
+    val cu = c12.groupBy("w2").agg(sum(col("c12")).as("cu"))
+    val t = c12.agg(sum(col("c12")).as("bt"))
+    val model = c12.join(c1, "w1").join(cu, "w2").crossJoin(broadcast(t))
+      .select(col("w1"), col("w2"),
+        (lit(0.9) * col("c12").cast("double") / col("c1")
+          + lit(0.1) * col("cu").cast("double") / col("bt")).as("p"))
+    big.join(model, Seq("w1", "w2"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_bigrams"),
+        dsum(-lg(col("p")), 9).as("h_raw"))
+      .select(col("doc_id"), col("n_bigrams"),
+        dround(col("h_raw") / col("n_bigrams"), 6).as("cross_entropy"),
+        dround(exp(col("h_raw") / col("n_bigrams")), 6).as("ppl"))
+      .orderBy("doc_id")
+  }
+
+  /** Shared r19-signal CTE chains (r20): the standalone oracles and the
+    * v3 capstone build from the SAME fragments with their own CTE names
+    * — one definition, no drift (the lmBitsCtes/gopher precedent).
+    * Each ends in the names given; callers add their own gate CTE. */
+  /** Jelinek-Mercer bigram LM ending in `<md>(w1, w2, p)` plus the
+    * doc-bigram stream `<bg>(doc_id, w1, w2)` ([[lmPerplexityOf]]). */
+  private[queries] def pplModelCtes(wt: String, bg: String, c12: String,
+      c1: String, cu: String, bt: String, md: String): String =
+    s"""$wt AS (SELECT doc_id, string_split(text, ' ') AS ws
+       |  FROM documents),
+       |$bg AS (SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2
+       |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws))) AS i
+       |        FROM $wt WHERE len(ws) >= 2) t),
+       |$c12 AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c12
+       |  FROM $bg GROUP BY 1, 2),
+       |$c1 AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1
+       |  FROM $c12 GROUP BY 1),
+       |$cu AS (SELECT w2, CAST(SUM(c12) AS BIGINT) AS cu
+       |  FROM $c12 GROUP BY 1),
+       |$bt AS (SELECT CAST(SUM(c12) AS BIGINT) AS bt FROM $c12),
+       |$md AS (SELECT $c12.w1, $c12.w2,
+       |    0.9 * CAST($c12.c12 AS DOUBLE) / $c1.c1
+       |      + 0.1 * CAST($cu.cu AS DOUBLE) / (SELECT bt FROM $bt) AS p
+       |  FROM $c12 JOIN $c1 USING (w1) JOIN $cu USING (w2))""".stripMargin
+
+  val llmLmPerplexity: Q = (s, dir) =>
+    lmPerplexityOf(Tables.t(s, dir, "documents").select("doc_id", "text"))
+
+  /** BPE merge-candidate counting (Sennrich/Haddow/Birch, ACL 2016 §3.2 —
+    * the first merge iteration a byte-pair-encoding tokenizer trainer
+    * runs): corpus word frequencies, then adjacent character-pair counts
+    * weighted by word frequency; the top pairs (count desc, pair asc on
+    * ties) are the head of the merge table.
+    *
+    * Scale shape: the pair explode runs over DISTINCT words (vocab-sized,
+    * Heaps'-law sublinear in corpus bytes), never the token stream — the
+    * only corpus-sized stage is the word-count groupBy with map-side
+    * partial aggregation; everything downstream is vocabulary-sized.
+    * Top-k lands in TakeOrderedAndProject (no global sort materializes). */
+  private[graft] def bpeMergesOf(docs: DataFrame, topK: Int = 20): DataFrame =
+    docs.select(explode(split(col("text"), " ")).as("w"))
+      .filter(length(col("w")) >= 2)
+      .groupBy("w").agg(count(lit(1)).as("wc"))
+      .select(col("wc"), explode(transform(
+        sequence(lit(1), length(col("w")) - 1),
+        i => col("w").substr(i, lit(2)))).as("pair"))
+      .groupBy("pair").agg(sum(col("wc")).as("cnt"))
+      .orderBy(col("cnt").desc, col("pair"))
+      .limit(topK)
+
+  val llmBpeMerges: Q = (s, dir) =>
+    bpeMergesOf(Tables.t(s, dir, "documents").select("text"))
+
+  /** Pair-key separator inside a candidate ("a\u0003b") — distinguishes
+    * the (sym_a, sym_b) boundary once symbols grow past one char. Same
+    * printable-text contract as the \u0001/\u0002 sentinels. */
+  private val bpeSep = "\u0003"
+
+  /** symbol list of a sentinel-wrapped form ("\u0001a\u0002\u0001b\u0002"
+    * → [a, b]). */
+  private def bpeSyms(s: Column): Column =
+    split(ltrim(rtrim(s, bpeClose), bpeOpen), s"$bpeClose$bpeOpen")
+
+  /** ITERATIVE BPE training — Sennrich §3.2's actual loop, not just its
+    * first iteration ([[bpeMergesOf]] keeps that single-pass statistic):
+    * count adjacent SYMBOL pairs over the frequency-weighted vocabulary,
+    * merge the argmax pair everywhere, recount — so merged symbols
+    * become candidates and later steps learn ≥3-char symbols ("th" + "e"
+    * → "the"), which a single char-pair pass never can. Each step's
+    * argmax is ONE collected row (cnt desc, pair asc tie-break —
+    * TakeOrderedAndProject, deterministic); the merge applies as the
+    * sentinel-literal replace [[bpeEncodeOf]] uses, so the training
+    * states and the apply step share one exact semantics.
+    *
+    * Scale shape: the corpus-sized work is the word-count groupBy, paid
+    * once into a persisted vocab (Heaps'-law sublinear); each of the
+    * `steps` iterations is one vocab-sized job (pair explode + two-phase
+    * agg + top-1) and one 1-row driver collect — the merge table IS the
+    * model artifact, built steps rows at a time, exactly how a
+    * production tokenizer trainer checkpoints. Returns (step, sym_a,
+    * sym_b, cnt). */
+  private[graft] def bpeTrainOf(docs: DataFrame, steps: Int = 10): DataFrame = {
+    val spark = docs.sparkSession
+    val vocab = reg(docs).select(explode(split(col("text"), " ")).as("w"))
+      .filter(length(col("w")) >= 2)
+      .groupBy("w").agg(count(lit(1)).as("wc"))
+      .select(col("wc"),
+        regexp_replace(col("w"), "(.)", s"$bpeOpen$$1$bpeClose").as("s"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    vocab.count() // eager: every iteration's job re-reads this base
+    val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
+    var cur = vocab
+    var step = 1
+    var dry = false
+    while (step <= steps && !dry) {
+      // r22: the adjacent-pair HOF `transform(sequence(1, size-1), i =>
+      // concat(syms[i], SEP, syms[i+1]))` is slice_join_grams(syms, 2,
+      // SEP) exactly — the native kernel with the pair sentinel as the
+      // join separator (the size>=2 guard folds in: empty below d); see
+      // [[graft.functions.TextHashOps.sliceJoinGrams]], pinned by
+      // TextHashExpressionsSpec's custom-separator case
+      val top = cur
+        .select(col("wc"), bpeSyms(col("s")).as("syms"))
+        .select(col("wc"), explode(call_function("slice_join_grams",
+          col("syms"), lit(2), lit(bpeSep))).as("pr"))
+        .groupBy("pr").agg(sum(col("wc")).as("cnt"))
+        .orderBy(col("cnt").desc, col("pr").asc)
+        .limit(1).collect()
+      if (top.isEmpty) dry = true
+      else {
+        val pr = top(0).getAs[String]("pr")
+        val cnt = top(0).getAs[Long]("cnt")
+        val Array(a, b) = pr.split(bpeSep)
+        merges += ((step, a, b, cnt))
+        cur = cur.withColumn("s", replace(col("s"),
+          lit(s"$bpeOpen$a$bpeClose$bpeOpen$b$bpeClose"),
+          lit(s"$bpeOpen$a$b$bpeClose")))
+        step += 1
+      }
+    }
+    import spark.implicits._
+    merges.toSeq.toDF("step", "sym_a", "sym_b", "cnt")
+  }
+
+  /** DuckDB twin of `llmAnnIvf`/`llmAnnIvfInt8`: same fixed-k md5-sample
+    * coarse quantizer (`ivfSeeds`), same quantized-csim + seed-rank
+    * argmax key (`cellKey`), nprobe=2 probe ranking, and rounded top-5
+    * scan — all deterministic arithmetic evaluated in the same order,
+    * so the replay is bit-exact (same approach as `llm_ann_lsh`'s
+    * planes). The window rank in `cents` evaluates BEFORE the
+    * ORDER BY/LIMIT, so r = global md5 rank of the kept k rows —
+    * identical to Spark ranking the post-limit seed set. `embCte`
+    * supplies the vector source CTE chain ending in `e(vec_id, v)` —
+    * raw doubles for the float path, the quantize→dequantize
+    * reconstruction for int8. */
+  /** Unrolled iterative-BPE training CTEs (`v0, p1, m1, v1, …, m<steps>`)
+    * — the DuckDB twin of [[bpeTrainOf]]'s loop. Each m{k} is the 1-row
+    * argmax merge (chr(3)-separated pair key) and v{k} the vocab with it
+    * applied; [[bpeTrainSql]] unions the m's into the merge table,
+    * [[bpeEncodeSql]] folds them over the distinct-word vocabulary. */
+  private def bpeTrainCtes(steps: Int): String = {
+    val sb = new StringBuilder
+    sb ++= """v0 AS (
+      |  SELECT COUNT(*) AS wc,
+      |    regexp_replace(w, '(.)', chr(1) || '\1' || chr(2), 'g') AS s
+      |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents) t
+      |  WHERE length(w) >= 2 GROUP BY w)""".stripMargin
+    for (k <- 1 to steps) {
+      sb ++= s""",
+        |p$k AS (
+        |  SELECT wc, unnest(list_transform(range(1, len(syms)),
+        |      i -> syms[i] || chr(3) || syms[i+1])) AS pr
+        |  FROM (SELECT wc,
+        |          string_split(ltrim(rtrim(s, chr(2)), chr(1)), chr(2) || chr(1)) AS syms
+        |        FROM v${k - 1})),
+        |m$k AS (SELECT pr, CAST(SUM(wc) AS BIGINT) AS cnt FROM p$k
+        |        GROUP BY pr ORDER BY cnt DESC, pr LIMIT 1),
+        |v$k AS (SELECT v.wc, replace(v.s,
+        |    chr(1) || replace(m.pr, chr(3), chr(2) || chr(1)) || chr(2),
+        |    chr(1) || replace(m.pr, chr(3), '') || chr(2)) AS s
+        |  FROM v${k - 1} v, m$k m)""".stripMargin
+    }
+    sb.toString
+  }
+
+  val llmBpeTrain: Q = (s, dir) =>
+    bpeTrainOf(Tables.t(s, dir, "documents").select("text")).orderBy("step")
+
+  /** BPE APPLY — encode the corpus vocabulary through the learned merge
+    * table (Sennrich §3.2's apply step): each symbol is wrapped in
+    * \u0001…\u0002 sentinels, so the merge of pair (a, b) is the
+    * LITERAL replace of "\u0001a\u0002\u0001b\u0002" with
+    * "\u0001ab\u0002" — the sentinels make whole-symbol matching exact
+    * (pair "a b" can never match inside a previously merged "aa b"),
+    * and because a replacement ends at a symbol boundary, left-to-right
+    * non-overlapping replace chains adjacent repeats ("a a a a" →
+    * "aa aa") exactly like the canonical one-pass merge. Replaying the
+    * learned merges in TRAINING order, one pass each, is precisely the
+    * canonical BPE apply (Sennrich §3.2) — training applied them to the
+    * vocabulary in that same order, so the states agree step for step.
+    * (Contract: input words must not contain the sentinel code points —
+    * true of any text that has been through [[llmPiiScrub]]-style
+    * printable normalization.)
+    *
+    * The merge table ([[bpeTrainOf]]'s iterative loop — merged symbols
+    * become candidates, so entries can carry ≥3-char symbols) is
+    * COLLECTED to the driver (10 rows — the trained tokenizer model
+    * artifact; same metadata-sized train/apply boundary as
+    * [[graft.queries.Maintenance]]'s touched-partition collect) and
+    * folded into the plan as 10 chained literal replaces, so encoding
+    * itself is a pure per-row projection.
+    *
+    * Scale shape: encoding runs over DISTINCT words (vocab-sized,
+    * Heaps'-law sublinear — the encode table is the artifact a
+    * tokenizer service ships), never the token stream; training costs
+    * [[bpeTrainOf]]'s per-step vocab jobs. The oracle replays the
+    * unrolled training CTEs and folds the same literal replaces. */
+  private val bpeOpen = "\u0001"
+
+  private val bpeClose = "\u0002"
+
+  private[graft] def bpeEncodeOf(docs: DataFrame, topK: Int = 10): DataFrame = {
+    val merges = bpeTrainOf(docs, topK).orderBy("step").collect()
+      .map(r => (r.getAs[String]("sym_a"), r.getAs[String]("sym_b")))
+    val start = regexp_replace(col("w"), "(.)", s"$bpeOpen$$1$bpeClose")
+    val folded = merges.foldLeft(start) { case (c, (a, b)) =>
+      replace(c,
+        lit(s"$bpeOpen$a$bpeClose$bpeOpen$b$bpeClose"),
+        lit(s"$bpeOpen$a$b$bpeClose"))
+    }
+    val encoded = ltrim(rtrim(replace(folded, lit(s"$bpeClose$bpeOpen"), lit(" ")),
+      bpeClose), bpeOpen)
+    docs.select(explode(split(col("text"), " ")).as("w"))
+      .filter(length(col("w")) >= 1).distinct()
+      .select(col("w"), encoded.as("encoded"))
+      .select(col("w"), col("encoded"),
+        size(split(col("encoded"), " ")).as("n_syms"))
+  }
+
+  val llmBpeEncode: Q = (s, dir) =>
+    bpeEncodeOf(Tables.t(s, dir, "documents").select("text")).orderBy("w")
+
+  private def bpeTrainSql(steps: Int): String = {
+    val union = (1 to steps).map { k =>
+      s"""SELECT CAST($k AS INT) AS step,
+         |  string_split(pr, chr(3))[1] AS sym_a,
+         |  string_split(pr, chr(3))[2] AS sym_b, cnt FROM m$k""".stripMargin
+    }.mkString("\nUNION ALL\n")
+    s"WITH ${bpeTrainCtes(steps)}\nSELECT * FROM (\n$union\n) ORDER BY step"
+  }
+
+  private def bpeEncodeSql(steps: Int): String = {
+    // fold the sentinel-wrapped word through m1..m<steps> in training
+    // order; each step's search/replace strings come from the 1-row
+    // m{k} scalar subqueries (same chr-literal construction as v{k})
+    val folded = (1 to steps).foldLeft(
+      "regexp_replace(w, '(.)', chr(1) || '\\1' || chr(2), 'g')") { (acc, k) =>
+      s"""replace($acc,
+         |  chr(1) || replace((SELECT pr FROM m$k), chr(3), chr(2) || chr(1)) || chr(2),
+         |  chr(1) || replace((SELECT pr FROM m$k), chr(3), '') || chr(2))""".stripMargin
+    }
+    s"""WITH ${bpeTrainCtes(steps)},
+       |vocab AS (
+       |  SELECT DISTINCT w
+       |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents) t
+       |  WHERE length(w) >= 1),
+       |fin AS (SELECT w,
+       |    ltrim(rtrim(replace($folded, chr(2) || chr(1), ' '), chr(2)), chr(1)) AS encoded
+       |  FROM vocab)
+       |SELECT w, encoded,
+       |  CAST(len(string_split(encoded, ' ')) AS INT) AS n_syms
+       |FROM fin ORDER BY w""".stripMargin
+  }
+
+  val defs: Seq[QueryDef] = Seq(
+    // ROUGE-1/2: clipped multiset matches = SUM(LEAST(cc, cr)) off the
+    // (pair_id, gram) two-phase counts; totals read off list lengths;
+    // P/R quantize at 1e-6 before the fixed-shape F1, zero denominators
+    // score 0.0 (the codeDetectOf convention).
+    QueryDef("llm_rouge_overlap", llmRougeOverlap, {
+      def gramsSql(src: String) =
+        s"CASE WHEN len($src) >= 2 THEN list_transform(range(len($src) - 1), i -> $src[i + 1] || ' ' || $src[i + 2]) ELSE [] END"
+      def prSql(m: String, tot: String) =
+        s"CASE WHEN $tot = 0 THEN 0.0 ELSE ${oRound(s"CAST($m AS DOUBLE) / $tot", 6)} END"
+      def f1Sql(p: String, r: String) =
+        s"CASE WHEN $p + $r = 0.0 THEN 0.0 ELSE ${oRound(s"2.0 * $p * $r / ($p + $r)", 6)} END"
+      s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws
+         |  FROM documents),
+         |p AS (SELECT a.doc_id AS pair_id, a.ws AS rws, b.ws AS cws
+         |  FROM w a JOIN w b ON b.doc_id = a.doc_id + 1
+         |  WHERE a.doc_id % 2 = 0),
+         |c1 AS (SELECT pair_id, g, COUNT(*) AS cc FROM
+         |  (SELECT pair_id, unnest(cws) AS g FROM p) t GROUP BY 1, 2),
+         |r1 AS (SELECT pair_id, g, COUNT(*) AS cr FROM
+         |  (SELECT pair_id, unnest(rws) AS g FROM p) t GROUP BY 1, 2),
+         |m1 AS (SELECT pair_id, CAST(SUM(LEAST(cc, cr)) AS BIGINT) AS m1
+         |  FROM c1 JOIN r1 USING (pair_id, g) GROUP BY 1),
+         |c2 AS (SELECT pair_id, g, COUNT(*) AS cc FROM
+         |  (SELECT pair_id, unnest(${gramsSql("cws")}) AS g FROM p) t
+         |  GROUP BY 1, 2),
+         |r2 AS (SELECT pair_id, g, COUNT(*) AS cr FROM
+         |  (SELECT pair_id, unnest(${gramsSql("rws")}) AS g FROM p) t
+         |  GROUP BY 1, 2),
+         |m2 AS (SELECT pair_id, CAST(SUM(LEAST(cc, cr)) AS BIGINT) AS m2
+         |  FROM c2 JOIN r2 USING (pair_id, g) GROUP BY 1),
+         |sz AS (SELECT p.pair_id,
+         |    CAST(len(cws) AS BIGINT) AS n_cand1,
+         |    CAST(GREATEST(len(cws) - 1, 0) AS BIGINT) AS n_cand2,
+         |    CAST(len(rws) AS BIGINT) AS n_ref1,
+         |    CAST(GREATEST(len(rws) - 1, 0) AS BIGINT) AS n_ref2,
+         |    CAST(COALESCE(m1.m1, 0) AS BIGINT) AS m1,
+         |    CAST(COALESCE(m2.m2, 0) AS BIGINT) AS m2
+         |  FROM p LEFT JOIN m1 USING (pair_id) LEFT JOIN m2 USING (pair_id)),
+         |pr AS (SELECT pair_id, n_cand1, n_ref1, m1, m2,
+         |    ${prSql("m1", "n_cand1")} AS r1_p,
+         |    ${prSql("m1", "n_ref1")} AS r1_r,
+         |    ${prSql("m2", "n_cand2")} AS r2_p,
+         |    ${prSql("m2", "n_ref2")} AS r2_r
+         |  FROM sz)
+         |SELECT pair_id, n_cand1, n_ref1, m1, m2,
+         |  r1_p, r1_r, ${f1Sql("r1_p", "r1_r")} AS r1_f,
+         |  r2_p, r2_r, ${f1Sql("r2_p", "r2_r")} AS r2_f
+         |FROM pr ORDER BY pair_id""".stripMargin
+    }),
+    // Integer log2 via bin-length on both engines (libm-free; see
+    // lmQualityOf). DuckDB bin(BIGINT) renders the same minimal binary
+    // string as Spark's bin(LONG), so bits(total) − bits(count) is
+    // bit-exact.
+    QueryDef("llm_lm_quality", llmLmQuality,
+      s"""WITH ${lmBitsCtes("ws", "f", "t", "b")}
+         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
+         |  $lmAvgBitsSql AS avg_bits,
+         |  ($lmAvgBitsSql >= 12.0) AS suspect
+         |FROM b GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_lm_trigram", llmLmTrigram,
+      s"""WITH wt AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+         |tp AS (SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2, ws[i + 2] AS w3
+         |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws) - 1)) AS i FROM wt) px),
+         |t3 AS (SELECT ('0x' || substr(md5(w1 || '_' || w2 || '_' || w3), 1, 4))::BIGINT AS b3,
+         |    CAST(COUNT(*) AS BIGINT) AS c3
+         |  FROM tp WHERE doc_id % 7 != 0 GROUP BY 1),
+         |t2 AS (SELECT ('0x' || substr(md5(ws[i] || '_' || ws[i + 1]), 1, 4))::BIGINT AS b2,
+         |    CAST(COUNT(*) AS BIGINT) AS c2
+         |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws))) AS i FROM wt) px
+         |  WHERE doc_id % 7 != 0 GROUP BY 1),
+         |t1 AS (SELECT ('0x' || substr(md5(w), 1, 4))::BIGINT AS b1,
+         |    CAST(COUNT(*) AS BIGINT) AS c1
+         |  FROM (SELECT doc_id, unnest(ws) AS w FROM wt) uw
+         |  WHERE doc_id % 7 != 0 GROUP BY 1),
+         |tot AS (SELECT CAST(SUM(c1) AS BIGINT) AS n FROM t1),
+         |pos AS (SELECT doc_id,
+         |    ('0x' || substr(md5(w1 || '_' || w2 || '_' || w3), 1, 4))::BIGINT AS b3,
+         |    ('0x' || substr(md5(w1 || '_' || w2), 1, 4))::BIGINT AS b2c,
+         |    ('0x' || substr(md5(w2 || '_' || w3), 1, 4))::BIGINT AS b2,
+         |    ('0x' || substr(md5(w2), 1, 4))::BIGINT AS b1c,
+         |    ('0x' || substr(md5(w3), 1, 4))::BIGINT AS b1w
+         |  FROM tp WHERE doc_id % 7 = 0),
+         |sc AS (SELECT p.doc_id,
+         |    COALESCE(t3.c3, 0) AS c3, COALESCE(a.c2, 0) AS c2ctx,
+         |    COALESCE(b.c2, 0) AS c2, COALESCE(x.c1, 0) AS c1ctx,
+         |    COALESCE(y.c1, 0) AS c1w, tot.n
+         |  FROM pos p
+         |  LEFT JOIN t3 ON t3.b3 = p.b3
+         |  LEFT JOIN t2 a ON a.b2 = p.b2c
+         |  LEFT JOIN t2 b ON b.b2 = p.b2
+         |  LEFT JOIN t1 x ON x.b1 = p.b1c
+         |  LEFT JOIN t1 y ON y.b1 = p.b1w, tot),
+         |bt AS (SELECT doc_id,
+         |    CASE WHEN c3 > 0 THEN GREATEST(0, length(bin(c2ctx + 1)) - length(bin(c3)))
+         |         WHEN c2 > 0 THEN GREATEST(0, length(bin(c1ctx + 1)) - length(bin(c2))) + 1
+         |         ELSE GREATEST(0, length(bin(n)) - length(bin(c1w + 1))) + 2 END AS bits,
+         |    CASE WHEN c3 = 0 THEN 1 ELSE 0 END AS backed
+         |  FROM sc)
+         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_trigrams,
+         |  ${oRound("CAST(SUM(bits) AS DOUBLE) / COUNT(*)", 6)} AS avg_bits,
+         |  ${oRound("CAST(SUM(backed) AS DOUBLE) / COUNT(*)", 6)} AS backoff_frac
+         |FROM bt GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_lm_bigram", llmLmBigram,
+      s"""WITH wt AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+         |pairs AS (
+         |  SELECT doc_id,
+         |    ('0x' || substr(md5(ws[i]), 1, 4))::BIGINT AS bp,
+         |    ('0x' || substr(md5(ws[i] || '_' || ws[i + 1]), 1, 4))::BIGINT AS bb
+         |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws))) AS i FROM wt) px),
+         |fu AS (SELECT $vocabBucketSql AS bp, COUNT(*) AS cp
+         |       FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents) raw_u
+         |       GROUP BY bp),
+         |fb AS (SELECT bb, COUNT(*) AS cb FROM pairs GROUP BY bb)
+         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+         |  ${oRound("CAST(SUM(greatest(0, length(bin(cp)) - length(bin(cb)))) AS DOUBLE) / COUNT(*)", 6)} AS avg_cond_bits
+         |FROM pairs JOIN fu USING (bp) JOIN fb USING (bb)
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_token_count", llmTokenCount,
+      """SELECT doc_id,
+        |CAST(len(string_split(text, ' ')) AS INT) AS ws_tokens,
+        |CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS INT) AS bpe_tokens,
+        |CAST(length(text) AS INT) AS chars,
+        |CAST(length(text) - length(replace(text, ' ', '')) AS INT) AS spaces
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_tokenize", llmTokenize,
+      s"""SELECT doc_id,
+         |  CAST(len(string_split(text, ' ')) AS INT) AS n_words,
+         |  $wpTokensSql AS wp_tokens
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_tfidf_top", llmTfidfTop,
+      s"""WITH wrd AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
+         |tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM wrd GROUP BY doc_id, w),
+         |dfc AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
+         |tot AS (SELECT COUNT(*) AS n FROM documents),
+         |scored AS (
+         |  SELECT t.doc_id, t.w, t.tf, d.df, t.tf * 1.0 * tot.n / d.df AS score
+         |  FROM tf t JOIN dfc d USING (w), tot),
+         |r AS (SELECT doc_id, w, tf, df, score,
+         |  row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, w) AS rnk
+         |  FROM scored)
+         |SELECT doc_id, CAST(rnk AS INT) AS rnk, w AS term,
+         |  CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df,
+         |  ${oRound("score", 6)} AS score
+         |FROM r WHERE rnk <= 5 ORDER BY doc_id, rnk""".stripMargin),
+    // BM25 with integer-bits idf; parenthesization mirrors the Spark
+    // expression term-for-term (fixed-order IEEE), and the per-pair sum
+    // goes through the quantized-long oSum.
+    QueryDef("llm_bm25_topk", llmBm25Topk,
+      s"""WITH wrd AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
+         |tf AS (SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS tf FROM wrd GROUP BY doc_id, w),
+         |dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM wrd GROUP BY doc_id),
+         |c AS (SELECT * FROM tf WHERE doc_id >= 3),
+         |q AS (SELECT DISTINCT doc_id AS q_id, w FROM tf WHERE doc_id < 3),
+         |dfc AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS df FROM c GROUP BY w),
+         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents WHERE doc_id >= 3),
+         |ad AS (SELECT CAST(SUM(dl) AS DOUBLE)/COUNT(*) AS avgdl FROM dl WHERE doc_id >= 3),
+         |ts AS (SELECT q.q_id, c.doc_id,
+         |  CAST(length(bin(nn.n)) - length(bin(dfc.df)) AS DOUBLE) *
+         |    ((c.tf * (1.2 + 1.0)) /
+         |      (c.tf + 1.2 * ((1.0 - 0.75) + 0.75 * (dl.dl / ad.avgdl)))) AS s
+         |  FROM q JOIN c USING (w) JOIN dfc USING (w)
+         |    JOIN dl ON c.doc_id = dl.doc_id, nn, ad),
+         |sc AS (SELECT q_id, doc_id, ${oSum("s", 6)} AS score,
+         |         CAST(COUNT(*) AS BIGINT) AS n_terms
+         |       FROM ts GROUP BY q_id, doc_id),
+         |r AS (SELECT q_id, doc_id, score, n_terms,
+         |  row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rnk
+         |  FROM sc)
+         |SELECT q_id, CAST(rnk AS INT) AS rnk, doc_id, score, n_terms
+         |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
+    // RRF fusion: the BM25 CTEs verbatim (pool 20) + a 64-dim hashed
+    // count-vector cosine ranker (integer dots/norms, IEEE sqrt), fused
+    // by 1/(60+rank) with NULL ranks contributing zero.
+    QueryDef("llm_rrf_fusion", llmRrfFusion,
+      s"""WITH wrd AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
+         |tf AS (SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS tf FROM wrd GROUP BY doc_id, w),
+         |dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM wrd GROUP BY doc_id),
+         |c AS (SELECT * FROM tf WHERE doc_id >= 3),
+         |q AS (SELECT DISTINCT doc_id AS q_id, w FROM tf WHERE doc_id < 3),
+         |dfc AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS df FROM c GROUP BY w),
+         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents WHERE doc_id >= 3),
+         |ad AS (SELECT CAST(SUM(dl) AS DOUBLE)/COUNT(*) AS avgdl FROM dl WHERE doc_id >= 3),
+         |ts AS (SELECT q.q_id, c.doc_id,
+         |  CAST(length(bin(nn.n)) - length(bin(dfc.df)) AS DOUBLE) *
+         |    ((c.tf * (1.2 + 1.0)) /
+         |      (c.tf + 1.2 * ((1.0 - 0.75) + 0.75 * (dl.dl / ad.avgdl)))) AS s
+         |  FROM q JOIN c USING (w) JOIN dfc USING (w)
+         |    JOIN dl ON c.doc_id = dl.doc_id, nn, ad),
+         |sc AS (SELECT q_id, doc_id, ${oSum("s", 6)} AS score
+         |       FROM ts GROUP BY q_id, doc_id),
+         |lr AS (SELECT q_id, doc_id,
+         |  row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS lex_rnk
+         |  FROM sc),
+         |ltop AS (SELECT * FROM lr WHERE lex_rnk <= 20),
+         |vec AS (SELECT doc_id,
+         |    (('0x' || substr(md5(w), 1, 4))::BIGINT % 64) AS dim,
+         |    CAST(COUNT(*) AS BIGINT) AS v
+         |  FROM wrd GROUP BY doc_id, dim),
+         |n2 AS (SELECT doc_id, CAST(SUM(v*v) AS BIGINT) AS n2 FROM vec GROUP BY doc_id),
+         |dot AS (SELECT qv.doc_id AS q_id, cv.doc_id,
+         |    CAST(SUM(qv.v * cv.v) AS BIGINT) AS dot
+         |  FROM vec qv JOIN vec cv USING (dim)
+         |  WHERE qv.doc_id < 3 AND cv.doc_id >= 3 GROUP BY qv.doc_id, cv.doc_id),
+         |cosr AS (SELECT d.q_id, d.doc_id,
+         |    ${oRound("d.dot / (sqrt(nq.n2) * sqrt(nc.n2))", 6)} AS cos
+         |  FROM dot d JOIN n2 nq ON nq.doc_id = d.q_id
+         |    JOIN n2 nc ON nc.doc_id = d.doc_id),
+         |dr AS (SELECT q_id, doc_id,
+         |  row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, doc_id) AS dense_rnk
+         |  FROM cosr),
+         |dtop AS (SELECT * FROM dr WHERE dense_rnk <= 20),
+         |fused AS (SELECT COALESCE(l.q_id, d.q_id) AS q_id,
+         |    COALESCE(l.doc_id, d.doc_id) AS doc_id, l.lex_rnk, d.dense_rnk,
+         |    ${oRound("COALESCE(1.0/(60 + l.lex_rnk), 0.0) + COALESCE(1.0/(60 + d.dense_rnk), 0.0)", 9)} AS rrf
+         |  FROM ltop l FULL OUTER JOIN dtop d
+         |    ON l.q_id = d.q_id AND l.doc_id = d.doc_id),
+         |fr AS (SELECT q_id, doc_id, lex_rnk, dense_rnk, rrf,
+         |  row_number() OVER (PARTITION BY q_id ORDER BY rrf DESC, doc_id) AS rnk
+         |  FROM fused)
+         |SELECT q_id, CAST(rnk AS INT) AS rnk, doc_id, rrf,
+         |  CAST(lex_rnk AS INT) AS lex_rnk, CAST(dense_rnk AS INT) AS dense_rnk
+         |FROM fr WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
+    // Zipf fit: two-phase wordcount, top-V ORDER/LIMIT, rank window
+    // over the V-row frame, quantized regression sums, closed-form
+    // slope/intercept/R² on identical doubles.
+    QueryDef("llm_zipf_fit", llmZipfFit,
+      s"""WITH tc AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
+         |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents) t
+         |  GROUP BY w ORDER BY c DESC, w LIMIT 1000),
+         |pts AS (SELECT
+         |    ln(CAST(row_number() OVER (ORDER BY c DESC, w) AS DOUBLE)) AS x,
+         |    ln(CAST(c AS DOUBLE)) AS y
+         |  FROM tc),
+         |sm AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
+         |    ${oSum("x", 9)} AS sx, ${oSum("y", 9)} AS sy,
+         |    ${oSum("x*x", 9)} AS sxx, ${oSum("x*y", 9)} AS sxy,
+         |    ${oSum("y*y", 9)} AS syy
+         |  FROM pts),
+         |bb AS (SELECT n, sx, sy, sxx, sxy, syy,
+         |    (n * sxy - sx * sy) / (n * sxx - sx * sx) AS b FROM sm)
+         |SELECT CAST(n AS BIGINT) AS n_fit,
+         |  ${oRound("-b", 6)} AS zipf_exponent,
+         |  ${oRound("(sy - b * sx) / n", 6)} AS intercept,
+         |  CASE WHEN n * syy - sy * sy <= 1e-9 THEN 0.0
+         |  ELSE ${oRound("(n * sxy - sx * sy) * (n * sxy - sx * sy)" +
+             " / ((n * sxx - sx * sx) * (n * syy - sy * sy))", 6)} END AS r2
+         |FROM bb""".stripMargin),
+    // Heaps fit: integer-exact ceil-division checkpoint buckets,
+    // word→min(doc) first-occurrence agg, cumulation + quantized
+    // regression over the 16-row checkpoint frame only.
+    QueryDef("llm_heaps_law", llmHeapsLaw,
+      s"""WITH m AS (SELECT MAX(doc_id) + 1 AS m FROM documents),
+         |dt AS (SELECT CAST(((doc_id + 1) * 16 + m - 1) // m AS INT) AS bkt,
+         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nt
+         |  FROM documents, m),
+         |tk AS (SELECT bkt, CAST(SUM(nt) AS BIGINT) AS toks
+         |  FROM dt GROUP BY bkt),
+         |fw AS (SELECT w, MIN(doc_id) AS fd
+         |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
+         |        FROM documents) t
+         |  GROUP BY w),
+         |nw AS (SELECT CAST(((fd + 1) * 16 + m - 1) // m AS INT) AS bkt,
+         |    CAST(COUNT(*) AS BIGINT) AS nw
+         |  FROM fw, m GROUP BY 1),
+         |cum AS (SELECT tk.bkt,
+         |    CAST(SUM(tk.toks) OVER (ORDER BY tk.bkt
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+         |      AS n_cum,
+         |    CAST(SUM(COALESCE(nw.nw, 0)) OVER (ORDER BY tk.bkt
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+         |      AS v_cum
+         |  FROM tk LEFT JOIN nw ON nw.bkt = tk.bkt),
+         |pts AS (SELECT ln(CAST(n_cum AS DOUBLE)) AS x,
+         |    ln(CAST(v_cum AS DOUBLE)) AS y, n_cum, v_cum FROM cum),
+         |sm AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
+         |    ${oSum("x", 9)} AS sx, ${oSum("y", 9)} AS sy,
+         |    ${oSum("x*x", 9)} AS sxx, ${oSum("x*y", 9)} AS sxy,
+         |    ${oSum("y*y", 9)} AS syy,
+         |    CAST(MAX(n_cum) AS BIGINT) AS tokens_total,
+         |    CAST(MAX(v_cum) AS BIGINT) AS vocab_total
+         |  FROM pts),
+         |bb AS (SELECT sm.*,
+         |    (n * sxy - sx * sy) / (n * sxx - sx * sx) AS b FROM sm)
+         |SELECT CAST(n AS BIGINT) AS n_fit,
+         |  ${oRound("b", 6)} AS heaps_beta,
+         |  ${oRound("(sy - b * sx) / n", 6)} AS intercept,
+         |  CASE WHEN n * syy - sy * sy <= 1e-9 THEN 0.0
+         |    ELSE ${oRound("(n * sxy - sx * sy) * (n * sxy - sx * sy)" +
+             " / ((n * sxx - sx * sx) * (n * syy - sy * sy))", 6)} END AS r2,
+         |  tokens_total, vocab_total
+         |FROM bb""".stripMargin),
+    // PMI association ratio, un-logged (monotone, libm-free), with the
+    // division interleaved into the products exactly as the Spark side
+    // parenthesizes it; cab >= 3 hapax guard; DuckDB range(1, len) is
+    // empty for 1-word docs, mirroring the Spark size >= 2 filter.
+    QueryDef("llm_collocations", llmCollocations,
+      s"""WITH wt AS (SELECT string_split(text, ' ') AS ws FROM documents),
+         |prs AS (SELECT ws[i] AS a, ws[i+1] AS b
+         |        FROM (SELECT ws, unnest(range(1, len(ws))) AS i FROM wt) t),
+         |cw AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
+         |       FROM (SELECT unnest(string_split(text, ' ')) AS w
+         |             FROM documents) wrd GROUP BY w),
+         |tw AS (SELECT CAST(SUM(c) AS BIGINT) AS tw FROM cw),
+         |cb AS (SELECT a, b, CAST(COUNT(*) AS BIGINT) AS cab
+         |       FROM prs GROUP BY a, b),
+         |tb AS (SELECT CAST(SUM(cab) AS BIGINT) AS tb FROM cb)
+         |SELECT cb.a, cb.b, cb.cab, wa.c AS ca, wb.c AS cbn,
+         |  ${oRound("((cb.cab * 1.0 * tw.tw / tb.tb) * (tw.tw * 1.0 / wa.c)) / wb.c", 6)} AS ratio
+         |FROM cb JOIN cw wa ON wa.w = cb.a JOIN cw wb ON wb.w = cb.b, tw, tb
+         |WHERE cb.cab >= 3
+         |ORDER BY ratio DESC, a, b LIMIT 20""".stripMargin),
+    // TextRank: undirected weighted word graph, 5 unrolled weighted-
+    // PageRank iterations with the same quantized-long sums as the Spark
+    // side; (score * wgt / ow) parenthesized identically (left-assoc).
+    QueryDef("llm_textrank", llmTextrank, {
+      def iterSql(prev: String, cur: String): String =
+        s"""$cur AS MATERIALIZED (
+           |  SELECT n.word,
+           |    ${oRound(s"0.15 + 0.85*(${oSum("COALESCE(c.c, 0.0)", 9)})", 9)} AS score
+           |  FROM nodes n LEFT JOIN (
+           |    SELECT e.b AS word, r.score * e.wgt / e.ow AS c
+           |    FROM e JOIN $prev r ON r.word = e.a) c
+           |  ON c.word = n.word
+           |  GROUP BY n.word)""".stripMargin
+      s"""WITH wt AS (SELECT string_split(text, ' ') AS ws FROM documents),
+         |prs AS (SELECT ws[i] AS a, ws[i+1] AS b
+         |        FROM (SELECT ws, unnest(range(1, len(ws))) AS i FROM wt) t
+         |        WHERE ws[i] <> ws[i+1]),
+         |und AS (SELECT a, b FROM prs UNION ALL SELECT b AS a, a AS b FROM prs),
+         |wgt AS (SELECT a, b, CAST(COUNT(*) AS BIGINT) AS wgt
+         |        FROM und GROUP BY a, b),
+         |outw AS (SELECT a, CAST(SUM(wgt) AS BIGINT) AS ow
+         |         FROM wgt GROUP BY a),
+         |e AS MATERIALIZED (SELECT wgt.a, wgt.b, wgt.wgt, outw.ow
+         |     FROM wgt JOIN outw USING (a)),
+         |nodes AS (SELECT a AS word FROM outw),
+         |r0 AS (SELECT word, 1.0 AS score FROM nodes),
+         |${(1 to 5).map(k => iterSql(s"r${k - 1}", s"r$k")).mkString(",\n")}
+         |SELECT word, score FROM r5
+         |ORDER BY score DESC, word LIMIT 10""".stripMargin
+    }),
+    // Zipf coverage curve: rank + running-sum windows over the vocab-
+    // sized count table; k > vocab saturates at total naturally.
+    QueryDef("llm_vocab_coverage", llmVocabCoverage,
+      s"""WITH cw AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
+         |  FROM (SELECT unnest(string_split(text, ' ')) AS w
+         |        FROM documents) wrd GROUP BY w),
+         |ranked AS (SELECT w, c,
+         |    row_number() OVER (ORDER BY c DESC, w) AS rnk,
+         |    CAST(SUM(c) OVER (ORDER BY c DESC, w
+         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+         |  FROM cw),
+         |t AS (SELECT CAST(SUM(c) AS BIGINT) AS total,
+         |        CAST(COUNT(*) AS BIGINT) AS vocab FROM cw),
+         |ks AS (SELECT unnest([10, 100, 1000, 10000]) AS k)
+         |SELECT ks.k, CAST(MAX(CASE WHEN r.rnk <= ks.k THEN r.cum END)
+         |    AS BIGINT) AS covered,
+         |  t.total, t.vocab,
+         |  ${oRound("CAST(MAX(CASE WHEN r.rnk <= ks.k THEN r.cum END) AS DOUBLE) / t.total", 6)} AS coverage
+         |FROM ks CROSS JOIN ranked r CROSS JOIN t
+         |GROUP BY ks.k, t.total, t.vocab
+         |ORDER BY ks.k""".stripMargin),
+    // Bin-length entropy surrogate over per-doc char counts; substr-
+    // over-range chars (no empty-delimiter split in DuckDB).
+    QueryDef("llm_char_entropy", llmCharEntropy,
+      s"""WITH chars AS (
+         |  SELECT doc_id, length(text) AS len, substr(text, i, 1) AS ch
+         |  FROM (SELECT doc_id, text, unnest(range(1, length(text) + 1)) AS i
+         |        FROM documents WHERE length(text) >= 1) t),
+         |cc AS (SELECT doc_id, len, ch, CAST(COUNT(*) AS BIGINT) AS c
+         |       FROM chars GROUP BY doc_id, len, ch)
+         |SELECT doc_id, CAST(len AS BIGINT) AS len,
+         |  CAST(COUNT(*) AS BIGINT) AS alphabet,
+         |  ${oRound("CAST(SUM(c * (length(bin(CAST(len AS BIGINT))) - length(bin(c)))) AS DOUBLE) / len", 6)} AS ent_bits
+         |FROM cc GROUP BY doc_id, len ORDER BY doc_id""".stripMargin),
+    // RAKE: stopword masking + literal-class split (RE2 == Java for
+    // [ ]*[|][ ]*); word deg/freq over candidate occurrences; per-word
+    // score quantized at 1e-9 before the exact per-phrase sum.
+    QueryDef("llm_rake_keywords", llmRakeKeywords,
+      s"""WITH po AS (SELECT phrase, string_split(phrase, ' ') AS pws FROM (
+         |    SELECT unnest(string_split_regex(array_to_string(
+         |      list_transform(string_split(text, ' '),
+         |        w -> CASE WHEN w IN ('a','the','of','to','and','in','is',
+         |          'on','for','with','as','by','an','at','or','be','this',
+         |          'that','it','from') THEN '|' ELSE w END), ' '),
+         |      '[ ]*[|][ ]*')) AS phrase
+         |    FROM documents) t
+         |  WHERE length(phrase) > 0 AND len(string_split(phrase, ' ')) <= 3),
+         |ws AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS freq,
+         |    CAST(SUM(plen) AS BIGINT) AS deg
+         |  FROM (SELECT unnest(pws) AS w, len(pws) AS plen FROM po) t
+         |  GROUP BY 1),
+         |pf AS (SELECT phrase, CAST(COUNT(*) AS BIGINT) AS occurrences
+         |  FROM po GROUP BY 1),
+         |m AS (SELECT phrase, occurrences,
+         |    unnest(string_split(phrase, ' ')) AS w FROM pf),
+         |sc AS (SELECT m.phrase, m.occurrences,
+         |    CAST(COUNT(*) AS BIGINT) AS n_words,
+         |    ${oSum("CAST(ws.deg AS DOUBLE) / ws.freq", 9)} AS score_raw
+         |  FROM m JOIN ws USING (w) GROUP BY 1, 2)
+         |SELECT phrase, n_words, occurrences,
+         |  ${oRound("score_raw", 6)} AS score
+         |FROM sc ORDER BY score DESC, phrase LIMIT 20""".stripMargin),
+    // Bigram perplexity: Jelinek-Mercer 0.9/0.1 over exact counts,
+    // CAST AS DOUBLE hoisted; -ln p quantized at 1e-9 before the exact
+    // per-doc sum; bt rides a scalar subquery.
+    QueryDef("llm_lm_perplexity", llmLmPerplexity,
+      s"""WITH ${pplModelCtes("wt", "bg", "c12", "c1", "cu", "bt", "md")}
+         |SELECT bg.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+         |  ${oRound(s"(${oSum("-ln(p)", 9)}) / COUNT(*)", 6)} AS cross_entropy,
+         |  ${oRound(s"exp((${oSum("-ln(p)", 9)}) / COUNT(*))", 6)} AS ppl
+         |FROM bg JOIN md USING (w1, w2) GROUP BY bg.doc_id
+         |ORDER BY doc_id""".stripMargin),
+    QueryDef("llm_bpe_merges", llmBpeMerges,
+      """WITH w0 AS (
+        |  SELECT w, COUNT(*) AS wc
+        |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents) t
+        |  WHERE length(w) >= 2 GROUP BY w),
+        |p AS (SELECT wc, unnest(list_transform(range(1, length(w)),
+        |        i -> substr(w, CAST(i AS INT), 2))) AS pair FROM w0)
+        |SELECT pair, CAST(SUM(wc) AS BIGINT) AS cnt
+        |FROM p GROUP BY pair ORDER BY cnt DESC, pair LIMIT 20""".stripMargin),
+    // Iterative trainer, unrolled: v0 = sentinel-wrapped weighted vocab;
+    // per step k, p{k} = adjacent symbol pairs (chr(3)-keyed), m{k} =
+    // the argmax merge, v{k} = the vocab with it applied (chr(1)/chr(2)
+    // sentinel-literal replace — same semantics as the Spark side).
+    QueryDef("llm_bpe_train", llmBpeTrain, bpeTrainSql(10)),
+    // Training = the same unrolled CTEs; the apply step folds the
+    // word's sentinel-wrapped form through the m1..m10 scalar
+    // subqueries in training order (left-to-right non-overlapping
+    // replace — the canonical BPE apply).
+    QueryDef("llm_bpe_encode", llmBpeEncode, bpeEncodeSql(10)),
+    // Interpolated Kneser-Ney: identical fixed-order double formula,
+    // quantized-long ordering for the cross-engine top-20.
+    QueryDef("llm_lm_kn", llmLmKn,
+      """WITH w AS (SELECT string_split(text, ' ') AS ws FROM documents
+        |           WHERE len(string_split(text, ' ')) >= 2),
+        |prs AS (SELECT ws[i] AS w1, ws[i+1] AS w2
+        |        FROM (SELECT ws, unnest(range(1, len(ws))) AS i FROM w) t),
+        |big AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c
+        |        FROM prs GROUP BY w1, w2),
+        |ctx AS (SELECT w1, CAST(SUM(c) AS BIGINT) AS cw1,
+        |          CAST(COUNT(*) AS BIGINT) AS n1f FROM big GROUP BY w1),
+        |cont AS (SELECT w2, CAST(COUNT(*) AS BIGINT) AS n1b
+        |         FROM big GROUP BY w2),
+        |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS bt FROM big),
+        |p AS (SELECT b.w1, b.w2, b.c,
+        |    CAST(FLOOR((greatest(b.c - 0.75, 0.0) / ctx.cw1
+        |      + 0.75 * ctx.n1f / ctx.cw1 * (cont.n1b * 1.0 / tot.bt))
+        |      * 1000000.0 + 0.5) AS BIGINT) AS pq
+        |  FROM big b JOIN ctx USING (w1) JOIN cont USING (w2)
+        |  CROSS JOIN tot)
+        |SELECT w1, w2, c, CAST(pq AS DOUBLE) / 1000000.0 AS p_kn
+        |FROM p ORDER BY pq DESC, w1, w2 LIMIT 20""".stripMargin),
+    // Lexical diversity: Σc² rides the same (doc, word) count table;
+    // three fixed-order divisions are the only doubles.
+    QueryDef("llm_lexical_diversity", llmLexicalDiversity,
+      s"""WITH cw AS (SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS c
+         |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
+         |        FROM documents) t GROUP BY doc_id, w),
+         |d AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
+         |        CAST(COUNT(*) AS BIGINT) AS n_types,
+         |        CAST(SUM(c * c) AS BIGINT) AS sum_c2,
+         |        CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT)
+         |          AS n_hapax
+         |      FROM cw GROUP BY doc_id)
+         |SELECT doc_id, n_tokens, n_types, n_hapax,
+         |  ${oRound("CAST(n_types AS DOUBLE) / n_tokens", 6)} AS ttr,
+         |  ${oRound("CAST(n_hapax AS DOUBLE) / n_types", 6)} AS hapax_frac,
+         |  ${oRound("10000.0 * (sum_c2 - n_tokens) / (n_tokens * n_tokens)", 6)} AS yules_k
+         |FROM d ORDER BY doc_id""".stripMargin),
+    // Fertility: shared wpTokensSql fold + the llm_token_count regex,
+    // summed per language.
+    QueryDef("llm_tokenizer_fertility", llmTokenizerFertility,
+      s"""WITH per AS (SELECT lang,
+         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
+         |    $wpTokensSql AS wp_tokens,
+         |    CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]'))
+         |      AS BIGINT) AS bpe_tokens
+         |  FROM documents)
+         |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+         |  CAST(SUM(n_words) AS BIGINT) AS n_words,
+         |  CAST(SUM(wp_tokens) AS BIGINT) AS wp_tokens,
+         |  CAST(SUM(bpe_tokens) AS BIGINT) AS bpe_tokens,
+         |  ${oRound("CAST(SUM(wp_tokens) AS DOUBLE) / SUM(n_words)", 6)} AS wp_fertility,
+         |  ${oRound("CAST(SUM(bpe_tokens) AS DOUBLE) / SUM(n_words)", 6)} AS bpe_fertility
+         |FROM per GROUP BY lang ORDER BY lang""".stripMargin)
+  )
+}

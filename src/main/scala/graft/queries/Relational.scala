@@ -1,10 +1,15 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.BloomFunctions
 import org.apache.spark.sql.functions._
 
 /** §2.1–§2.3, §2.6 core relational surface: scan / project / filter /
-  * aggregate / the full join-type matrix / set ops / sorts / limits.
+  * aggregate / the full join-type matrix / set ops / sorts / limits, plus
+  * subqueries (§4.1 HiveSubQueryRemoveRule's decorrelation, native in
+  * Catalyst as RewritePredicateSubquery), CTEs incl. WITH RECURSIVE,
+  * salted and UNIQUEJOIN joins, bloom-filter runtime pre-filtering and
+  * the local-relation fast path.
   *
   * Reference semantics: Hive 2.3.10 `TableScanOperator`, `SelectOperator`,
   * `FilterOperator`, `GroupByOperator`, `JoinOperator`/`MapJoinOperator`,
@@ -482,6 +487,149 @@ object Relational {
       .orderBy("o_orderkey")
   }
 
+  /** Local relation fast path: VALUES inline table, no file scan. */
+  val localValues: Q = (s, _) =>
+    s.sql(
+      """SELECT id, tag, id * 10 AS ten
+        |FROM VALUES (1, 'a'), (2, 'b'), (3, 'c') AS t(id, tag)
+        |ORDER BY id""".stripMargin)
+
+  /** Bloom-filter runtime pre-filter (GenericUDAFBloomFilter shape): a
+    * compact sketch of the supplier keys filters the fact table before
+    * any join — the Hive bloom runtime-filtering pattern. The sketch is
+    * a distributed `bloom_filter_agg` (partial sketches OR-merged), its
+    * bytes ship as a literal to every task (like a broadcast), and the
+    * probe is the native codegen'd `BloomFilterMightContain` — no Scala
+    * UDF serialization wall anywhere in the per-row path. */
+  val bloomPrefilter: Q = (s, dir) => {
+    BloomFunctions.register(s)
+    val sketch = Tables.t(s, dir, "supplier").filter(col("s_acctbal") > 0)
+      .select(call_function("bloom_filter_agg",
+        xxhash64(col("s_suppkey")), lit(1000L), lit(14378L)).as("bf"))
+      .head.getAs[Array[Byte]](0)
+    Tables.t(s, dir, "lineitem")
+      .filter(call_function("bloom_might_contain", lit(sketch), xxhash64(col("l_suppkey"))))
+      .join(broadcast(Tables.t(s, dir, "supplier").filter(col("s_acctbal") > 0)),
+        col("l_suppkey") === col("s_suppkey"), "left_semi")
+      .groupBy("l_returnflag")
+      .agg(count(lit(1)).as("cnt"), dsum(col("l_extendedprice")).as("price_sum"))
+      .orderBy("l_returnflag")
+  }
+
+  /** Salted join — the manual skew-mitigation pattern: the small side is
+    * replicated across `salts` buckets, the big side picks a deterministic
+    * salt, the join key becomes (key, salt) so one hot key spreads over
+    * `salts` reducers. Result is identical to the unsalted join (oracle
+    * checks that). */
+  val joinSalted: Q = (s, dir) => {
+    val salts = 4
+    val ordersRep = Tables.t(s, dir, "orders")
+      .withColumn("salt", explode(array((0 until salts).map(lit): _*)))
+    val liSalted = Tables.t(s, dir, "lineitem")
+      .withColumn("salt",
+        pmod(col("l_orderkey") + col("l_linenumber"), lit(salts)).cast("int"))
+    liSalted.join(ordersRep,
+      liSalted("l_orderkey") === ordersRep("o_orderkey") &&
+        liSalted("salt") === ordersRep("salt"))
+      .groupBy("o_orderstatus")
+      .agg(count(lit(1)).as("cnt"),
+        dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"))
+      .orderBy("o_orderstatus")
+  }
+
+  /** Uncorrelated IN subquery → left-semi rewrite. */
+  val subqIn: Q = (s, dir) => sqlOverViews(s, dir, subqInSql)
+  private val subqInSql =
+    """SELECT c_mktsegment, COUNT(*) AS cnt
+      |FROM customer
+      |WHERE c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 2)
+      |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin
+
+  /** Correlated EXISTS subquery → decorrelated semi join. */
+  val subqExists: Q = (s, dir) => sqlOverViews(s, dir, subqExistsSql)
+  private val subqExistsSql =
+    """SELECT o_orderpriority, COUNT(*) AS cnt
+      |FROM orders
+      |WHERE EXISTS (SELECT 1 FROM lineitem
+      |              WHERE l_orderkey = o_orderkey AND l_quantity >= 49)
+      |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
+
+  /** Scalar subquery (single-value, compared per row). */
+  val subqScalar: Q = (s, dir) => sqlOverViews(s, dir, subqScalarSql)
+  private val subqScalarSql =
+    s"""SELECT c_mktsegment, COUNT(*) AS rich_cnt
+       |FROM customer
+       |WHERE c_acctbal > (SELECT ${oAvg("c_acctbal", 4)} FROM customer)
+       |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin
+
+  /** NOT IN (null-aware anti join; fixture keys are non-null). */
+  val subqNotIn: Q = (s, dir) => sqlOverViews(s, dir, subqNotInSql)
+  private val subqNotInSql =
+    """SELECT CAST(c_nationkey AS INT) AS nationkey, COUNT(*) AS cnt
+      |FROM customer
+      |WHERE c_nationkey NOT IN (SELECT s_nationkey FROM supplier WHERE s_acctbal > 9000)
+      |GROUP BY c_nationkey ORDER BY nationkey""".stripMargin
+
+  /** WITH / chained CTEs. */
+  val cteChain: Q = (s, dir) => sqlOverViews(s, dir, cteChainSql)
+  private val cteChainSql =
+    s"""WITH big_orders AS (
+       |  SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+       |  WHERE o_totalprice > 200000),
+       |per_cust AS (
+       |  SELECT o_custkey, COUNT(*) AS n, ${oSum("o_totalprice", 2)} AS total
+       |  FROM big_orders GROUP BY o_custkey)
+       |SELECT n AS orders_bucket, COUNT(*) AS customers,
+       |  ${oSum("total", 2)} AS bucket_total
+       |FROM per_cust GROUP BY n ORDER BY n""".stripMargin
+
+  /** WITH RECURSIVE (Spark 4's UnionLoop operator — the SQL-surface gap
+    * recursive hierarchies used to force out to driver loops): ancestry
+    * walk over the deterministic user binary tree (parent = u DIV 2, a
+    * synthetic but total hierarchy over real fixture ids), reduced to
+    * the depth-to-root histogram. Each iteration is one filtered
+    * projection of the previous step's frame — the loop runs
+    * ⌈log₂(max id)⌉ rounds regardless of user count, and every round is
+    * fully distributed (no driver-side fixpoint). DuckDB replays the
+    * identical recursion (`//` for DIV). */
+  val cteRecursive: Q = (s, dir) => sqlOverViews(s, dir, cteRecursiveSql)
+  /** Also this query's SQL-surface text (`SqlSurface.overrides`). */
+  private[queries] val cteRecursiveSql =
+    """WITH RECURSIVE chain(u, a, depth) AS (
+      |  SELECT user_id, user_id, 0
+      |  FROM (SELECT DISTINCT user_id FROM events) t
+      |  UNION ALL
+      |  SELECT u, a DIV 2, depth + 1 FROM chain WHERE a > 0),
+      |d AS (SELECT u, MAX(depth) AS depth_to_root FROM chain GROUP BY u)
+      |SELECT depth_to_root, COUNT(*) AS n_users
+      |FROM d GROUP BY depth_to_root ORDER BY depth_to_root""".stripMargin
+
+  /** `UNIQUEJOIN PRESERVE a (k), PRESERVE b (k), c (k)` over per-nation
+    * aggregates: a = high-balance customers, b = high-balance suppliers
+    * (both PRESERVE'd and deliberately sparse → keys survive one-sided),
+    * c = nations of regions 0–1 (non-PRESERVE'd → null-fills, never adds
+    * keys). Full-outer on the preserved pair, coalesced key, left join
+    * the rest — the shuffle full-outer is the scale idiom (keys co-locate;
+    * the non-preserved dimension broadcasts). */
+  val joinUniquejoin: Q = (s, dir) => {
+    val a = Tables.t(s, dir, "customer")
+      .filter(col("c_acctbal") > 9000)
+      .groupBy(col("c_nationkey").cast("int").as("k"))
+      .agg(count(lit(1)).as("cust_cnt"))
+    val b = Tables.t(s, dir, "supplier")
+      .filter(col("s_acctbal") > 3000)
+      .groupBy(col("s_nationkey").cast("int").as("k"))
+      .agg(count(lit(1)).as("supp_cnt"))
+    val c = Tables.t(s, dir, "nation")
+      .filter(col("n_regionkey") <= 1)
+      .select(col("n_nationkey").cast("int").as("k"), col("n_name"))
+    a.as("a").join(b.as("b"), col("a.k") === col("b.k"), "full_outer")
+      .withColumn("nationkey", coalesce(col("a.k"), col("b.k")))
+      .join(broadcast(c.as("c")), col("nationkey") === col("c.k"), "left")
+      .select(col("nationkey"), col("cust_cnt"), col("supp_cnt"), col("n_name"))
+      .orderBy("nationkey")
+  }
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q1_pricing_summary", q1PricingSummary, q1PricingSummarySql),
     QueryDef("q5_local_supplier", q5LocalSupplier,
@@ -679,6 +827,46 @@ object Relational {
     QueryDef("sort_hashsample", sortHashsample,
       """SELECT o_orderkey, o_custkey FROM orders
         |WHERE substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1) IN ('0', '1')
-        |ORDER BY o_orderkey""".stripMargin)
+        |ORDER BY o_orderkey""".stripMargin),
+    QueryDef("local_values", localValues,
+      """SELECT id, tag, id * 10 AS ten
+        |FROM (VALUES (1, 'a'), (2, 'b'), (3, 'c')) t(id, tag)
+        |ORDER BY id""".stripMargin),
+    QueryDef("bloom_prefilter", bloomPrefilter,
+      s"""SELECT l_returnflag, COUNT(*) AS cnt, ${oSum("l_extendedprice")} AS price_sum
+         |FROM lineitem WHERE EXISTS (
+         |  SELECT 1 FROM supplier WHERE s_suppkey = l_suppkey AND s_acctbal > 0)
+         |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    QueryDef("join_salted", joinSalted,
+      s"""SELECT o_orderstatus, COUNT(*) AS cnt,
+         |${oSum("l_extendedprice*(1.0-l_discount)")} AS revenue
+         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    QueryDef("subq_in", subqIn, subqInSql),
+    QueryDef("subq_exists", subqExists, subqExistsSql),
+    QueryDef("subq_scalar", subqScalar, subqScalarSql),
+    QueryDef("subq_not_in", subqNotIn, subqNotInSql),
+    QueryDef("cte_chain", cteChain, cteChainSql),
+    // Identical recursion; DuckDB spells integer division `//`.
+    QueryDef("cte_recursive", cteRecursive,
+      """WITH RECURSIVE chain(u, a, depth) AS (
+        |  SELECT user_id, user_id, 0
+        |  FROM (SELECT DISTINCT user_id FROM events) t
+        |  UNION ALL
+        |  SELECT u, a // 2, depth + 1 FROM chain WHERE a > 0),
+        |d AS (SELECT u, MAX(depth) AS depth_to_root FROM chain GROUP BY u)
+        |SELECT depth_to_root, COUNT(*) AS n_users
+        |FROM d GROUP BY depth_to_root ORDER BY depth_to_root""".stripMargin),
+    QueryDef("join_uniquejoin", joinUniquejoin,
+      """WITH a AS (SELECT CAST(c_nationkey AS INT) AS k, COUNT(*) AS cust_cnt
+        |           FROM customer WHERE c_acctbal > 9000 GROUP BY 1),
+        |     b AS (SELECT CAST(s_nationkey AS INT) AS k, COUNT(*) AS supp_cnt
+        |           FROM supplier WHERE s_acctbal > 3000 GROUP BY 1),
+        |     c AS (SELECT CAST(n_nationkey AS INT) AS k, n_name
+        |           FROM nation WHERE n_regionkey <= 1)
+        |SELECT COALESCE(a.k, b.k) AS nationkey, a.cust_cnt, b.supp_cnt, c.n_name
+        |FROM a FULL JOIN b ON a.k = b.k
+        |LEFT JOIN c ON COALESCE(a.k, b.k) = c.k
+        |ORDER BY nationkey""".stripMargin)
   )
 }

@@ -1267,7 +1267,7 @@ object Sequences {
     * tie-averaged textbook variant is engine-unstable).
     *
     * Scale shape: per-user counts on the user_id shuffle; the global
-    * rank is [[Text.decomposedRank]]'s bucket decomposition (local
+    * rank is [[decomposedRank]]'s bucket decomposition (local
     * windows + one bounded bucket-offset frame — never a corpus-wide
     * window); Σx is an exact long sum, Σrx accumulates in decimal(38,0)
     * (rnk·cnt alone can exceed int64 once n_users passes ~10⁹ — ANSI-on
@@ -1279,7 +1279,7 @@ object Sequences {
   val seqGini: Q = (s, dir) => {
     val cnts = Tables.events(s, dir)
       .groupBy("user_id").agg(count(lit(1)).as("cnt"))
-    val ranked = Text.decomposedRank(
+    val ranked = decomposedRank(
         cnts.select(col("user_id").as("doc_id"), col("cnt").as("sq")), 4)
       .join(cnts.select(col("user_id").as("doc_id"), col("cnt")), "doc_id")
     ranked.agg(count(lit(1)).as("n"), sum("cnt").as("t"),

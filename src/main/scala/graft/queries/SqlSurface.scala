@@ -39,7 +39,7 @@ import scala.util.chaining._
   */
 object SqlSurface {
   /** Shared WITH-chain for the hyperplane-LSH candidate pairs
-    * ([[graft.queries.Text]] `lshCandidatePairs`): plane literals from
+    * ([[graft.queries.Vectors]] `lshCandidatePairs`): plane literals from
     * the same `(pi*73856093 + d*19349663) % 2000 / 1000 - 1` formula,
     * 4 tables x 8 planes -> bucket array, hot-bucket cap 1000, bucket
     * self-join, quantized cosine > 0.3. */
@@ -492,7 +492,7 @@ object SqlSurface {
     // bit-exact against the builder.
     "llm_random_proj" -> {
       val matrix = Seq.tabulate(16) { j =>
-        Seq.tabulate(64)(i => s"${graft.queries.Text.rpEntry(i, j)}L")
+        Seq.tabulate(64)(i => s"${graft.queries.Vectors.rpEntry(i, j)}L")
           .mkString("array(", ", ", ")")
       }.mkString("array(", ", ", ")")
       s"""WITH e AS (SELECT vec_id,
@@ -567,15 +567,7 @@ object SqlSurface {
         |  AS seg_initials
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
         |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "agg_listagg" ->
-      """SELECT o_orderpriority,
-        |  listagg(DISTINCT o_orderstatus, ',')
-        |    WITHIN GROUP (ORDER BY o_orderstatus) AS statuses,
-        |  listagg(CAST(o_orderkey AS STRING), '|')
-        |    WITHIN GROUP (ORDER BY o_totalprice DESC, o_orderkey)
-        |    FILTER (WHERE o_totalprice > 550000) AS top_keys
-        |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+    "agg_listagg" -> Aggregates.aggListaggSql,
     "fn_hash" ->
       """SELECT c_custkey,
         |md5(c_name) AS md5_v,
@@ -711,15 +703,7 @@ object SqlSurface {
         |  USING 'cat' AS (k STRING, v STRING)
         |  FROM orders WHERE o_orderkey < 2000
         |) t ORDER BY okey, prio""".stripMargin,
-    "gen_transform_delimited" ->
-      """SELECT CAST(k AS BIGINT) AS okey, v AS prio FROM (
-        |  SELECT TRANSFORM(o_orderkey, o_orderstatus, o_orderpriority)
-        |    ROW FORMAT DELIMITED FIELDS TERMINATED BY '#'
-        |    USING 'cut -d"#" -f1,3'
-        |    AS (k STRING, v STRING)
-        |    ROW FORMAT DELIMITED FIELDS TERMINATED BY '#'
-        |  FROM orders WHERE o_orderkey < 2000
-        |) t ORDER BY okey, prio""".stripMargin,
+    "gen_transform_delimited" -> Generators.genTransformDelimitedSql,
     "win_lead_lag" ->
       """SELECT o_custkey, o_orderkey,
         |lag(o_totalprice, 1) OVER w AS prev_price,
@@ -743,15 +727,7 @@ object SqlSurface {
         |WINDOW wh AS (PARTITION BY user_id ORDER BY ts
         |              RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
         |ORDER BY user_id, tsu, event_id""".stripMargin,
-    "cte_recursive" ->
-      """WITH RECURSIVE chain(u, a, depth) AS (
-        |  SELECT user_id, user_id, 0
-        |  FROM (SELECT DISTINCT user_id FROM events) t
-        |  UNION ALL
-        |  SELECT u, a DIV 2, depth + 1 FROM chain WHERE a > 0),
-        |d AS (SELECT u, MAX(depth) AS depth_to_root FROM chain GROUP BY u)
-        |SELECT depth_to_root, COUNT(*) AS n_users
-        |FROM d GROUP BY depth_to_root ORDER BY depth_to_root""".stripMargin,
+    "cte_recursive" -> Relational.cteRecursiveSql,
     "llm_exact_dedup" ->
       """SELECT sha2(text, 256) AS content_hash,
         |MIN(doc_id) AS keeper, COUNT(*) AS copies
@@ -796,7 +772,7 @@ object SqlSurface {
         |schema_of_variant(parse_json(props)) AS schema_v,
         |is_variant_null(parse_json('null')) AS vnull_v
         |FROM events WHERE event_id < 300 ORDER BY event_id""".stripMargin,
-    // builder: Extras2.fnString2 — sentences/str_to_map/space/length trio
+    // builder: Scalars.fnString2 — sentences/str_to_map/space/length trio
     "fn_string2" ->
       """SELECT doc_id,
         |size(flatten(sentences(text))) AS sent_words,
@@ -808,7 +784,7 @@ object SqlSurface {
         |octet_length(lang) AS olen_v,
         |bit_length(lang) AS blen_v
         |FROM documents WHERE doc_id < 300 ORDER BY doc_id""".stripMargin,
-    // builder: Text.llmTextNormalize — unicode_normalize comes from the
+    // builder: Quality.llmTextNormalize — unicode_normalize comes from the
     // compat registration (the same JDK Normalizer expression)
     "llm_text_normalize" ->
       """WITH n AS (SELECT doc_id, text,
@@ -819,7 +795,7 @@ object SqlSurface {
         |SELECT doc_id, length(text) AS raw_len, length(norm) AS norm_len,
         |  norm != text AS changed, md5(norm) AS h
         |FROM n ORDER BY doc_id""".stripMargin,
-    // builder: Text.llmPiiScrub — Java-regex spellings of the planted
+    // builder: Quality.llmPiiScrub — Java-regex spellings of the planted
     // PII patterns (the oracle's RE2 forms are what diverged)
     "llm_pii_scrub" ->
       """WITH p AS (SELECT doc_id,
@@ -840,14 +816,14 @@ object SqlSurface {
         |    '\\+[0-9]{1,2}-[0-9]{3}-[0-9]{4}', '[PHONE]'),
         |    '\\b([0-9]{1,3}\\.){3}[0-9]{1,3}\\b', '[IP]')) AS scrub_hash
         |FROM p ORDER BY doc_id""".stripMargin,
-    // builder: Text.llmFingerprint — rolling-hash fold as a SQL lambda
+    // builder: Dedup.llmFingerprint — rolling-hash fold as a SQL lambda
     "llm_fingerprint" ->
       """SELECT doc_id,
         |aggregate(transform(split(text, ' '),
         |    w -> CAST(length(w) AS BIGINT) * 256 + ascii(substring(w, 1, 1))),
         |  CAST(0 AS BIGINT), (acc, c) -> (acc * 31 + c) % 2147483647) AS fingerprint
         |FROM documents ORDER BY doc_id""".stripMargin,
-    // builder: Text.gopherRulesOf (paper defaults minWords=50, minStops=2)
+    // builder: Quality.gopherRulesOf (paper defaults minWords=50, minStops=2)
     "llm_gopher_rules" ->
       """WITH b AS (SELECT doc_id, text,
         |  split(text, ' ') AS ws, split(text, '\\n') AS ls FROM documents),
@@ -868,7 +844,7 @@ object SqlSurface {
         |    AND bullet_ratio <= 0.1 AND ellipsis_ratio <= 0.3
         |    AND alpha_word_ratio >= 0.8 AND stop_words >= 2 AS keep
         |FROM r ORDER BY doc_id""".stripMargin,
-    // builder: Text.llmMediaManifest — frame-sampling manifest; the
+    // builder: Multimodal.llmMediaManifest — frame-sampling manifest; the
     // oracle reconstructs byte 0 by string indexing, the builder (and
     // this spelling) read it with ascii(substring(...))
     "llm_media_manifest" ->
@@ -892,7 +868,7 @@ object SqlSurface {
          |LATERAL VIEW posexplode(transform(sequence(0, k - 1),
          |  j -> CAST(floor(j * frames / k) AS INT))) p AS j, frame_idx
          |ORDER BY doc_id, j""".stripMargin,
-    // builder: Text.chunkRows → llmChunkSplit (50-word windows, stride 40)
+    // builder: Sampling.chunkRows → llmChunkSplit (50-word windows, stride 40)
     "llm_chunk_split" ->
       """WITH w AS (SELECT doc_id, split(text, ' ') AS ws FROM documents),
         |c AS (SELECT doc_id, chunk_idx, chunk FROM w
@@ -901,7 +877,7 @@ object SqlSurface {
         |    i -> array_join(slice(ws, i * 40 + 1, 50), ' '))) p AS chunk_idx, chunk)
         |SELECT doc_id, chunk_idx, size(split(chunk, ' ')) AS n_tokens, chunk
         |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-    // builder: Text.llmPackSequences — running-sum window over the same
+    // builder: Sampling.llmPackSequences — running-sum window over the same
     // chunk rows, 2048-token bins
     "llm_pack_sequences" ->
       """WITH w AS (SELECT doc_id, lang, split(text, ' ') AS ws FROM documents),
@@ -917,7 +893,7 @@ object SqlSurface {
         |  CAST(floor((cum - n_tokens) / 2048) AS INT) AS bin,
         |  CAST((cum - n_tokens) % 2048 AS INT) AS bin_offset
         |FROM s ORDER BY lang, doc_id, chunk_idx""".stripMargin,
-    // builder: Text.fimOf — PSM fill-in-the-middle cuts
+    // builder: Sampling.fimOf — PSM fill-in-the-middle cuts
     "llm_fim" ->
       """WITH w AS (SELECT doc_id, split(text, ' ') AS ws FROM documents),
         |n AS (SELECT doc_id, ws, size(ws) AS n FROM w),
@@ -937,7 +913,7 @@ object SqlSurface {
         |    ' <MID> ', array_join(slice(ws, CAST(p1 + 1 AS INT), CAST(p2 - p1 AS INT)), ' '))
         |  ELSE array_join(ws, ' ') END AS psm
         |FROM c2 ORDER BY doc_id""".stripMargin,
-    // builder: Text.llmDomainMix — epoch explosion + md5 shard keys
+    // builder: Sampling.llmDomainMix — epoch explosion + md5 shard keys
     "llm_domain_mix" ->
       """WITH keyed AS (SELECT doc_id, lang, epoch,
         |  md5(concat_ws('_', doc_id, epoch)) AS k
@@ -993,7 +969,7 @@ object SqlSurface {
     // builder: Graph.triangles — the oracle's lateral-unnest vertex
     // explosion re-spelled as LATERAL VIEW; edges/dst derivation matches
     // the rewritten graph_pagerank oracle idiom
-    // builder: Text.llmMultimodal — binary payload + typed metadata
+    // builder: Multimodal.llmMultimodal — binary payload + typed metadata
     // struct (the decode STAGE stays builder-only: typed mapPartitions)
     "llm_multimodal" ->
       """WITH d AS (SELECT doc_id, CAST(text AS BINARY) AS payload,
@@ -1003,7 +979,7 @@ object SqlSurface {
         |  hex(substring(payload, 1, 4)) AS magic,
         |  meta.lang AS lang, meta.n_chars AS n_chars
         |FROM d ORDER BY doc_id""".stripMargin,
-    // builder: Text.spanCorruptOf (rate=15) — T5 span corruption with
+    // builder: Sampling.spanCorruptOf (rate=15) — T5 span corruption with
     // sentinel run-ids from the two-window flag/run derivation
     "llm_span_corrupt" ->
       """WITH t AS (SELECT doc_id, pos, w FROM documents
@@ -1040,7 +1016,7 @@ object SqlSurface {
         |SELECT user_id, CAST(size(ms) AS BIGINT) AS n_matches,
         |  CAST(aggregate(transform(ms, x -> length(x)), 0, (a, b) -> a + b) AS BIGINT) AS n_steps_total
         |FROM m WHERE size(ms) > 0 ORDER BY user_id""".stripMargin,
-    // builder: Text.winnowOf (w=4; B1/B2/B3 mod-P gram arithmetic)
+    // builder: Dedup.winnowOf (w=4; B1/B2/B3 mod-P gram arithmetic)
     "llm_winnow" ->
       """WITH b AS (SELECT doc_id, split(text, ' ') AS wsx FROM documents),
         |f AS (SELECT doc_id, wsx FROM b WHERE size(wsx) >= 6),
@@ -1055,7 +1031,7 @@ object SqlSurface {
         |  aggregate(fps, CAST(0 AS BIGINT), (a, x) -> a + x) AS fp_sum,
         |  array_min(fps) AS fp_min, array_max(fps) AS fp_max
         |FROM fp ORDER BY doc_id""".stripMargin,
-    // builder: Text.dupChunksOf (20-word windows; flag form)
+    // builder: Dedup.dupChunksOf (20-word windows; flag form)
     "llm_dup_chunks" ->
       s"""WITH b AS (SELECT doc_id, split(text, ' ') AS ws FROM documents),
          |c AS (SELECT doc_id, array_distinct(transform(
@@ -1074,7 +1050,7 @@ object SqlSurface {
          |  ${oRound("n_dup_chunks * 1.0 / n_chunks", 6)} AS dup_chunk_frac,
          |  n_dup_chunks * 1.0 / n_chunks > 0.3 AS dup_heavy
          |FROM a ORDER BY doc_id""".stripMargin,
-    // builder: Text.chunkScrubOf (removal form: strip cross-doc chunks,
+    // builder: Dedup.chunkScrubOf (removal form: strip cross-doc chunks,
     // reassemble survivors in position order)
     "llm_chunk_scrub" ->
       """WITH b AS (SELECT doc_id, split(text, ' ') AS ws FROM documents),
@@ -1096,24 +1072,16 @@ object SqlSurface {
     // explosion re-spelled as LATERAL VIEW; edges/dst derivation matches
     // the rewritten graph_pagerank oracle idiom
     "graph_triangles" ->
-      """WITH ids AS (SELECT doc_id FROM documents),
-        |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ids),
-        |raw AS (
-        |  SELECT ids.doc_id AS src,
-        |    CAST(conv(substr(md5(ids.doc_id || ':' || t.i), 1, 8), 16, 10) AS BIGINT)
-        |      % (SELECT n FROM nn) AS dst
-        |  FROM ids, (VALUES (1), (2), (3)) AS t(i)),
-        |edges AS (
-        |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-        |  FROM raw WHERE LEAST(src, dst) < GREATEST(src, dst)),
-        |tris AS (
-        |  SELECT e1.a, e1.b, e2.b AS c
-        |  FROM edges e1
-        |  JOIN edges e2 ON e2.a = e1.b
-        |  JOIN edges e3 ON e3.a = e1.a AND e3.b = e2.b)
-        |SELECT v AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_triangles
-        |FROM tris LATERAL VIEW explode(array(a, b, c)) u AS v
-        |GROUP BY v ORDER BY doc_id""".stripMargin,
+      s"""WITH ${Graph.linksSql(spark = true)},
+         |${Graph.simpleEdgesSql(materialized = false)},
+         |tris AS (
+         |  SELECT e1.a, e1.b, e2.b AS c
+         |  FROM edges e1
+         |  JOIN edges e2 ON e2.a = e1.b
+         |  JOIN edges e3 ON e3.a = e1.a AND e3.b = e2.b)
+         |SELECT v AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_triangles
+         |FROM tris LATERAL VIEW explode(array(a, b, c)) u AS v
+         |GROUP BY v ORDER BY doc_id""".stripMargin,
     // r17: rewritten oracle texts whose ONLY builder divergence was Spark
     // parsing bare numeric literals as DECIMAL where the builder used
     // lit(double) — `12.0` is DECIMAL(3,1) to Spark's SQL parser, and a

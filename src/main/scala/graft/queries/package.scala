@@ -70,6 +70,17 @@ package object queries {
       QueryDef(name, build, Some(oracle))
   }
 
+  /** Runs one SQL text over the standard fixture views that
+    * [[graft.Tables.registerAll]] registers, as `SqlSurface.run` does —
+    * for the builders whose operation IS a SQL text, so the builder and
+    * its oracle or surface entry run the same text. Registers no compat
+    * functions: `SqlSurface.registerCompat` changes session-wide
+    * optimizer settings. */
+  def sqlOverViews(s: SparkSession, dir: String, text: String): DataFrame = {
+    graft.Tables.registerAll(s, dir)
+    s.sql(text)
+  }
+
   /** Eager lineage-truncating checkpoint for the iterative operators
     * (connected components, k-core, BFS, centrality rounds): persist
     * alone caches results but leaves the logical plan nested, so the
@@ -137,5 +148,24 @@ package object queries {
     // planned partition count, even on the at-scale pass-through branch)
     if (df.queryExecution.toRdd.getNumPartitions * 2 >= target) df
     else df.repartition(target)
+  }
+
+  /** Scale-safe exact global ranking of (doc_id, sq: quantized-long
+    * score) by (sq asc, doc_id asc): scores bucket by their high bits,
+    * each bucket ranks locally (bucket-partitioned window), and bucket
+    * offsets come from ONE running total over the bucket-count frame —
+    * bounded by the score RANGE (≤ range/2^shift rows), never the
+    * corpus (the tokenBudget posture; a bare global row_number would
+    * single-partition every doc at 100 TB). */
+  private[graft] def decomposedRank(df: DataFrame, shift: Int = 10): DataFrame = {
+    val b = df.withColumn("bk", expr(s"sq DIV ${1 << shift}"))
+    val wb = org.apache.spark.sql.expressions.Window.orderBy("bk")
+    val offsets = b.groupBy("bk").agg(count(lit(1)).as("bn"))
+      .withColumn("off", sum(col("bn")).over(wb) - col("bn"))
+    val wd = org.apache.spark.sql.expressions.Window
+      .partitionBy("bk").orderBy(col("sq"), col("doc_id"))
+    b.join(broadcast(offsets.select("bk", "off")), "bk")
+      .withColumn("rnk", col("off") + row_number().over(wd))
+      .select(col("doc_id"), col("rnk"))
   }
 }

@@ -238,8 +238,8 @@ class AnnScaleProbeSpec extends SparkSpec {
       .collect().groupBy(_.getAs[Long]("q_id"))
       .map { case (q, rs) => q -> rs.map(_.getAs[Long]("vec_id")).toSet }
     def recallAt(k: Int): Double = {
-      val got = graft.queries.Text.ivfTopk(
-          graft.queries.Text.int8ReconstructedEmb(raw), k)
+      val got = graft.queries.Vectors.ivfTopk(
+          graft.queries.Vectors.int8ReconstructedEmb(raw), k)
         .collect().groupBy(_.getAs[Long]("q_id"))
         .map { case (q, rs) => q -> rs.map(_.getAs[Long]("vec_id")).toSet }
       truth.map { case (q, t) =>
@@ -286,7 +286,7 @@ class AnnScaleProbeSpec extends SparkSpec {
     val emb = spark.read.parquet(s"$clusteredDir/embeddings.parquet")
       .select(col("vec_id"),
         transform(col("embedding"), (x: org.apache.spark.sql.Column) => x.cast("double")).as("v"))
-    val got = graft.queries.Text.ivfPqTopk(emb).collect()
+    val got = graft.queries.Vectors.ivfPqTopk(emb).collect()
       .groupBy(_.getAs[Long]("q_id"))
       .map { case (q, rs) => q -> rs.map(_.getAs[Long]("vec_id")).toSet }
     val recall = truth.map { case (q, t) =>
@@ -330,7 +330,7 @@ class AnnScaleProbeSpec extends SparkSpec {
     val emb = spark.read.parquet(s"$clusteredDir/embeddings.parquet")
       .select(col("vec_id"),
         transform(col("embedding"), (x: org.apache.spark.sql.Column) => x.cast("double")).as("v"))
-    val got = graft.queries.Text.pqTopk(emb).collect()
+    val got = graft.queries.Vectors.pqTopk(emb).collect()
       .groupBy(_.getAs[Long]("q_id"))
       .map { case (q, rs) => q -> rs.map(_.getAs[Long]("vec_id")).toSet }
     val recall = truth.map { case (q, t) =>

@@ -100,7 +100,7 @@ class DedupScaleProbeSpec extends SparkSpec {
     // the shared session only changes where later CC tests materialize.
     val ckptDir = Files.createTempDirectory("graft_ckpt").toFile.getAbsolutePath
     spark.sparkContext.setCheckpointDir(ckptDir)
-    val got = graft.queries.Text.connectedComponents(
+    val got = graft.queries.Dedup.connectedComponents(
         (1L to 6L).toDF("doc_id"),
         Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("doc_a", "doc_b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

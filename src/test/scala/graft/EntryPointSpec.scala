@@ -19,6 +19,9 @@ class EntryPointSpec extends SparkSpec {
   test("surface: exactly the registry minus the exclusions") {
     assert(SparkEntry.sqlQueries.keySet ==
       SparkEntry.queries.keySet -- SqlSurface.excluded.keySet)
+    // an exclusion for a renamed or deleted query would otherwise linger
+    val stale = SqlSurface.excluded.keySet -- SparkEntry.queries.keySet
+    assert(stale.isEmpty, s"exclusions naming no registered query: ${stale.toSeq.sorted.mkString(", ")}")
   }
 
   test("surface: every override names a registered, non-excluded query") {

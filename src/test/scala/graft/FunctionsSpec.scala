@@ -205,7 +205,7 @@ class UnicodeNormalizeSpec extends SparkSpec {
     import spark.implicits._
     val got = Seq("  café  xy\tz \r\n")
       .toDF("text")
-      .select(queries.Text.normTextCol(col("text")))
+      .select(queries.Quality.normTextCol(col("text")))
       .collect().head.getString(0)
     assert(got == "café xy z")
   }

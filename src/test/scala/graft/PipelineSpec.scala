@@ -568,9 +568,9 @@ class PipelineSpec extends SparkSpec {
     val got = Pipeline.rhoSelect(corpus).collect()
       .map(r => r.getLong(0) -> ((r.getDouble(2), r.getDouble(3),
         r.getDouble(4)))).toMap
-    val uni = graft.queries.Text.lmQualityOf(corpus).collect()
+    val uni = graft.queries.LmStats.lmQualityOf(corpus).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val bi = graft.queries.Text.lmBigramOf(corpus).collect()
+    val bi = graft.queries.LmStats.lmBigramOf(corpus).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     def r6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
     Seq(1L, 2L).foreach { d =>
@@ -706,7 +706,7 @@ class PipelineSpec extends SparkSpec {
       mk(21L, 1, Seq(0.1f, 0.9f)),
       mk(22L, 2, Seq(0.5f, 0.5f))
     ).toDF("vec_id", "label", "embedding")
-    val rows = graft.queries.Text.ndcgEvalOf(emb).collect()
+    val rows = graft.queries.Vectors.ndcgEvalOf(emb).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(5))))
       .toMap
     assert(rows.keySet == Set(0L, 1L), s"both eval queries owed a row: $rows")
@@ -970,7 +970,7 @@ class PipelineSpec extends SparkSpec {
         r.getAs[Int]("y").toDouble, r.toString)
     }
     // epoch-2/3 invariance on separable data: 1 epoch ≡ 3 epochs
-    val oneEpoch = graft.queries.Text
+    val oneEpoch = graft.queries.Quality
       .qualityClassifierOf(corpus, epochs = 1, positive = col("lang") === "en")
       .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
     rows.foreach(r => assert(oneEpoch(r.getAs[Long]("doc_id")) ==
@@ -1039,14 +1039,14 @@ class PipelineSpec extends SparkSpec {
       val r = math.toRadians(d)
       (i.toLong, Seq(math.cos(r).toFloat, math.sin(r).toFloat))
     }.toDF("vec_id", "embedding")
-    val edges = graft.queries.Text.knnGraphOf(emb, k = 1, cells = 1)
+    val edges = graft.queries.Vectors.knnGraphOf(emb, k = 1, cells = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(edges.map(e => (e._1, e._2)).toSet === Set((0L, 1L), (2L, 3L)))
     // both kept edges span 5° — cos ≈ 0.996195 after dround(6)
     edges.foreach(e => assert(math.abs(e._3 - 0.996195) < 2e-6))
     // with k = 3 every node ranks every other (4 candidates): complete
     // mutual graph on 5 nodes = 10 edges
-    assert(graft.queries.Text.knnGraphOf(emb, k = 4, cells = 1)
+    assert(graft.queries.Vectors.knnGraphOf(emb, k = 4, cells = 1)
       .count() === 10L)
   }
 
@@ -1430,7 +1430,7 @@ class PipelineSpec extends SparkSpec {
         (0 until 400).map(i => s"only${sl}_$i")
       (sl.toLong, ws.mkString(" "))
     }.toDF("doc_id", "text")
-    val e = graft.queries.Text.sketchSetopsOf(docs).collect()(0)
+    val e = graft.queries.CorpusStats.sketchSetopsOf(docs).collect()(0)
     assert(e.getLong(2) == 1000L && e.getLong(6) == 1400L &&
       e.getLong(9) == 600L)
     assert(e.getDouble(1) != 1000.0, "estimator branch did not fire")
@@ -1449,7 +1449,7 @@ class PipelineSpec extends SparkSpec {
     val docs = Seq(
       "big data of fast scan",
       "the big data").toDF("text")
-    val got = graft.queries.Text.rakeKeywordsOf(docs).collect()
+    val got = graft.queries.LmStats.rakeKeywordsOf(docs).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     // word stats: big(freq 2, deg 4), data(2, 4), fast(1, 2), scan(1, 2)
     // scores: big 2.0, data 2.0, fast 2.0, scan 2.0
@@ -1466,7 +1466,7 @@ class PipelineSpec extends SparkSpec {
       ("codey", "def f(x) { return x; } class y import z"),
       ("prose", "the quick brown fox jumps over the lazy dog again")
     ).toDF("source", "text")
-    val got = graft.queries.Text.codeDetectOf(docs).collect()
+    val got = graft.queries.Quality.codeDetectOf(docs).collect()
       .map(r => r.getString(0) -> ((r.getLong(2), r.getDouble(3)))).toMap
     assert(got("codey") == ((1L, 1.0)), s"code doc must flag: $got")
     assert(got("prose") == ((0L, 0.0)), s"prose must not flag: $got")
@@ -1485,7 +1485,7 @@ class PipelineSpec extends SparkSpec {
       (2L, "s", "customer customer"),     // no lexicon hits -> other
       (3L, "s", "hash hash join")         // execution 2 > relational 1
     ).toDF("doc_id", "source", "text")
-    val got = graft.queries.Text.topicMixOf(docs).collect()
+    val got = graft.queries.Quality.topicMixOf(docs).collect()
       .map(r => (r.getString(1), r.getLong(2)))
     assert(got.toSet == Set(("execution", 1L), ("other", 1L), ("relational", 1L)),
       s"got ${got.toSeq}")
@@ -1533,9 +1533,9 @@ class PipelineSpec extends SparkSpec {
     val base = (1 to 20).map(i => s"w$i").mkString(" ")
     val docs = Seq((1L, base), (2L, (1 to 6).map(i => s"w$i").mkString(" ")))
       .toDF("doc_id", "text")
-    val hashed = graft.queries.Text.hashedWordsOf(docs)
+    val hashed = graft.queries.Dedup.hashedWordsOf(docs)
     val pairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")
-    val r = graft.queries.Text.ngramContainmentFromHashed(hashed, pairs)
+    val r = graft.queries.Dedup.ngramContainmentFromHashed(hashed, pairs)
       .collect()(0)
     assert((r.getLong(2), r.getLong(3), r.getLong(4)) == ((19L, 5L, 5L)),
       s"sizes: $r")
@@ -1578,11 +1578,11 @@ class PipelineSpec extends SparkSpec {
     def q9l(x: Double) = math.floor(x * 1e9 + 0.5).toLong
     // identical distributions -> JS = 0
     val same = Seq((0L, "x y"), (1L, "x y")).toDF("doc_id", "text")
-    val r0 = graft.queries.Text.jsDivergenceOf(same).collect()(0)
+    val r0 = graft.queries.CorpusStats.jsDivergenceOf(same).collect()(0)
     assert(r0.getDouble(3) == 0.0 && r0.getDouble(4) == 0.0)
     // disjoint vocab -> JS = ln 2 (the upper bound), js_norm = 1
     val disj = Seq((0L, "x x"), (1L, "y y")).toDF("doc_id", "text")
-    val r1 = graft.queries.Text.jsDivergenceOf(disj).collect()(0)
+    val r1 = graft.queries.CorpusStats.jsDivergenceOf(disj).collect()(0)
     assert(math.abs(r1.getDouble(3) - math.log(2.0)) < 1e-6)
     assert(math.abs(r1.getDouble(4) - 1.0) < 1e-6)
     assert((r1.getLong(0), r1.getLong(1), r1.getLong(2)) == ((1L, 1L, 0L)))
@@ -1659,5 +1659,54 @@ class PipelineSpec extends SparkSpec {
     val feats = Pipeline.multimodalFeatures(
       Seq(queries.MmRow(1L, img, "en")).toDS()).collect()
     assert((feats(0).width, feats(0).height) === ((8, 6)))
+  }
+
+  test("facade methods return their registry twins' rows") {
+    // one row per facade method that no other test calls: the method
+    // over the frame and arguments its registered twin passes must give
+    // the twin's rows (as a multiset — some twins add an ORDER BY). A
+    // forwarder routed to another family's like-named core still
+    // compiles; this is where it shows.
+    import graft.queries.{Dedup, Vectors}
+    def docs = Tables.t(spark, sfDir, "documents")
+    def emb = Tables.t(spark, sfDir, "embeddings")
+    def docText = docs.select("doc_id", "text")
+    val cases: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "llm_chunk_scrub" -> (() => Pipeline.chunkScrub(docText)),
+      "llm_corpus_diff" -> (() => Pipeline.corpusDiff(docText)),
+      "llm_quality_calibrate" ->
+        (() => Pipeline.qualityCalibrate(docs.select("doc_id", "source", "text"))),
+      "llm_heaps_law" -> (() => Pipeline.heapsLaw(docText)),
+      "llm_unimax" -> (() => Pipeline.unimax(docs.select("lang", "text"))),
+      "llm_bootstrap_ci" -> (() => Pipeline.bootstrapCi(docText)),
+      "llm_weighted_sample" -> (() => Pipeline.weightedSample(docs)),
+      "llm_url_dedup" -> (() => Pipeline.urlDedup(
+        docs.withColumn("url", expr(Dedup.syntheticUrlSql("STRING"))))),
+      "llm_suffix_scrub" -> (() => Pipeline.suffixScrub(docText)),
+      "llm_lexical_diversity" -> (() => Pipeline.lexicalDiversity(docs)),
+      "llm_embed_outliers" -> (() => Pipeline.embedOutliers(emb)),
+      "llm_knn_graph" -> (() => Pipeline.knnGraph(emb)),
+      "llm_ann_ivfpq" -> { () =>
+        val e = Vectors.withNorm(emb.select(col("vec_id"), Vectors.embeddingV))
+        Pipeline.ivfPqSearch(e.filter(col("vec_id") >= 20),
+          e.filter(col("vec_id") < 20), Vectors.ivfSeeds(e))
+      },
+      "llm_hard_negatives" -> (() => Pipeline.hardNegatives(emb, _ < 20)),
+      "llm_split_leakage" -> (() => Pipeline.splitLeakage(docs)),
+      "llm_matryoshka_recall" -> (() => Pipeline.matryoshkaRecall(emb, _ < 20)),
+      "llm_score_agreement" -> (() => Pipeline.scoreAgreement(docs)),
+      "llm_span_corrupt" -> (() => Pipeline.spanCorrupt(docs)),
+      "llm_blocklist_filter" -> (() => Pipeline.blocklistFilter(docs)))
+    def bag(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
+      df.collect().toSeq.map(_.toString).groupBy(identity).map { case (r, rs) => r -> rs.size }
+    try {
+      val wrong = cases.flatMap { case (twin, facade) =>
+        val got = bag(facade())
+        val want = bag(SparkEntry.queries(twin)(spark, sfDir))
+        if (got == want) None
+        else Some(s"$twin: facade ${got.values.sum} rows vs twin ${want.values.sum}")
+      }
+      assert(wrong.isEmpty, wrong.mkString("; "))
+    } finally Pipeline.releaseCaches(spark)
   }
 }

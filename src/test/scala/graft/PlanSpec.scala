@@ -376,7 +376,7 @@ class PlanSpec extends SparkSpec {
     // the oracle's total-order orderBy, whose range Exchange is contract
     // noise, and AQE's AdaptiveSparkPlanExec would hide it from the
     // string assert anyway
-    val win = graft.queries.Text.winnowOf(
+    val win = graft.queries.Dedup.winnowOf(
       spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text"))
     assert(!win.queryExecution.sparkPlan.toString.contains("Exchange"),
       "winnowOf is no longer shuffle-free")

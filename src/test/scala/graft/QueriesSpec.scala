@@ -268,7 +268,7 @@ class QueriesSpec extends SparkSpec {
     val edges = Seq(
       (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L), (7L, 8L),
       (10L, 11L), (11L, 12L), (10L, 12L)).toDF("doc_a", "doc_b")
-    val got = graft.queries.Text.connectedComponents(nodes, edges)
+    val got = graft.queries.Dedup.connectedComponents(nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expect = (1L to 8L).map(_ -> 1L).toMap ++
       Seq(10L, 11L, 12L).map(_ -> 10L).toMap + (20L -> 20L)
@@ -277,7 +277,7 @@ class QueriesSpec extends SparkSpec {
 
   test("connected components: empty edge list yields all singletons") {
     import spark.implicits._
-    val (labels, rounds) = graft.queries.Text.connectedComponentsWithRounds(
+    val (labels, rounds) = graft.queries.Dedup.connectedComponentsWithRounds(
       (1L to 5L).toDF("doc_id"),
       Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -294,7 +294,7 @@ class QueriesSpec extends SparkSpec {
     val nodes = (1L to n).toDF("doc_id")
     val edges = (1L until n).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val (labels, rounds) =
-      graft.queries.Text.connectedComponentsWithRounds(nodes, edges)
+      graft.queries.Dedup.connectedComponentsWithRounds(nodes, edges)
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === (1L to n).map(_ -> 1L).toMap)
     // log2(59) ≈ 5.9; measured 7 — anything near O(d) (≈30+) is a
@@ -319,7 +319,7 @@ class QueriesSpec extends SparkSpec {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val expect = (0 until n).map(i => i.toLong -> find(i).toLong).toMap
-      val (labelsDf, rounds) = graft.queries.Text.connectedComponentsWithRounds(
+      val (labelsDf, rounds) = graft.queries.Dedup.connectedComponentsWithRounds(
         (0L until n.toLong).toDF("doc_id"),
         edges.toDF("doc_a", "doc_b"))
       val got = labelsDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -339,7 +339,7 @@ class QueriesSpec extends SparkSpec {
       (4L, 0, "b"), (5L, 0, "b"),               // at cap → kept
       (6L, 1, "a")                              // singleton → kept
     ).toDF("doc_id", "band", "sig")
-    val kept = graft.queries.Text.capBuckets(buckets, 2)
+    val kept = graft.queries.Dedup.capBuckets(buckets, 2)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept === Set(4L, 5L, 6L))
   }
@@ -376,7 +376,7 @@ class QueriesSpec extends SparkSpec {
       graft.queries.MmRow(2L, png(640, 480), "en"),
       graft.queries.MmRow(3L, "not a png at all".getBytes("UTF-8"), "en"),
       graft.queries.MmRow(4L, Array.emptyByteArray, "en"))
-    val feats = rows.toDS().mapPartitions(_.map(graft.queries.Text.decodeFeatures))
+    val feats = rows.toDS().mapPartitions(_.map(graft.queries.Multimodal.decodeFeatures))
       .collect().map(f => f.doc_id -> f).toMap
     assert((feats(1L).width, feats(1L).height, feats(1L).frames) === ((37, 23, 1)))
     assert((feats(2L).width, feats(2L).height, feats(2L).frames) === ((640, 480, 1)))
@@ -390,16 +390,16 @@ class QueriesSpec extends SparkSpec {
       0, 0, 0, 13, 'I', 'H', 'D', 'R',
       0, 1, 2, 3, /* width  0x00010203 */
       0, 0, 1, 0 /* height 0x00000100 */ )
-    assert(graft.queries.Text.pngDims(hand) === Some((0x00010203, 0x00000100)))
-    assert(graft.queries.Text.pngDims("shorty".getBytes) === None)
+    assert(graft.queries.Multimodal.pngDims(hand) === Some((0x00010203, 0x00000100)))
+    assert(graft.queries.Multimodal.pngDims("shorty".getBytes) === None)
     // crafted IHDR with width >= 2^31 (invalid per spec) must fall back
     // to the stub, not emit a negative dimension
     val hostile = hand.clone()
     hostile(16) = 0x80.toByte // width 0x80010203 -> negative as Int
-    assert(graft.queries.Text.pngDims(hostile) === None)
+    assert(graft.queries.Multimodal.pngDims(hostile) === None)
     val zeroW = hand.clone()
     zeroW(16) = 0; zeroW(17) = 0; zeroW(18) = 0; zeroW(19) = 0
-    assert(graft.queries.Text.pngDims(zeroW) === None)
+    assert(graft.queries.Multimodal.pngDims(zeroW) === None)
   }
 
   test("embed quantization error stays inside the analytic bound") {
@@ -448,7 +448,7 @@ class QueriesSpec extends SparkSpec {
     assert(sortedR.last < 3.0, s"worst-pair blowup ${sortedR.last}")
     // the ternary matrix itself: ~2/3 zeros (Achlioptas density), and
     // deterministic — a fixed spot value pinned against the md5 rule
-    val m = Seq.tabulate(16, 64)((j, i) => graft.queries.Text.rpEntry(i, j))
+    val m = Seq.tabulate(16, 64)((j, i) => graft.queries.Vectors.rpEntry(i, j))
     val zeros = m.flatten.count(_ == 0L)
     assert(zeros > 512 && zeros < 820, s"zero count $zeros of 1024")
   }
@@ -506,11 +506,11 @@ class QueriesSpec extends SparkSpec {
     // built FROM a merged symbol, which the old single-pass table could
     // never learn (it would have picked the stale char pair (a,b)).
     val docs = Seq("aab aab aaaa").toDF("text")
-    val table = graft.queries.Text.bpeTrainOf(docs, steps = 2).collect()
+    val table = graft.queries.LmStats.bpeTrainOf(docs, steps = 2).collect()
       .map(r => (r.getAs[Int]("step"), r.getAs[String]("sym_a"),
         r.getAs[String]("sym_b"), r.getAs[Long]("cnt"))).toSeq
     assert(table == Seq((1, "a", "a", 5L), (2, "aa", "b", 2L)), table.toString)
-    val got = graft.queries.Text.bpeEncodeOf(docs, topK = 2).collect()
+    val got = graft.queries.LmStats.bpeEncodeOf(docs, topK = 2).collect()
       .map(r => r.getAs[String]("w") ->
         (r.getAs[String]("encoded"), r.getAs[Int]("n_syms"))).toMap
     // "aab": merge 1 -> [aa, b], merge 2 joins the merged symbol with its
@@ -535,12 +535,12 @@ class QueriesSpec extends SparkSpec {
     // — this checks the composition WIRING; the semantics have their
     // own oracles)
     val d = Tables.t(spark, sfDir, "documents").select("doc_id", "text")
-    val contaminated = graft.queries.Text
+    val contaminated = graft.queries.Dedup
       .contaminationOf(d, id => id % 97 === 0)
       .filter(col("n_shared") > 0)
       .collect().map(_.getAs[Long]("doc_id")).toSet
     assert(kept.intersect(contaminated).isEmpty)
-    val repetitive = graft.queries.Text.repetitionOf(d)
+    val repetitive = graft.queries.Dedup.repetitionOf(d)
       .filter(col("repetitive"))
       .collect().map(_.getAs[Long]("doc_id")).toSet
     assert(kept.intersect(repetitive).isEmpty)
@@ -585,7 +585,7 @@ class QueriesSpec extends SparkSpec {
       .toDF("doc_id", "text")
     def md5hex(s: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val out = graft.queries.Text.chunkScrubOf(docs)
+    val out = graft.queries.Dedup.chunkScrubOf(docs)
       .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(out(1L).getAs[Long]("n_chunks") === 2L)
     assert(out(1L).getAs[Long]("n_kept") === 1L)
@@ -631,7 +631,7 @@ class QueriesSpec extends SparkSpec {
       ("blog", "en", "a unique essay about spark plans"),
       ("blog", "en", "another unique essay entirely now")
     ).toDF("source", "lang", "text")
-    val stats = graft.queries.Text.sourceStatsOf(syn)
+    val stats = graft.queries.CorpusStats.sourceStatsOf(syn)
       .collect().map(r => r.getAs[String]("source") -> r).toMap
     assert(stats("spamfarm").getAs[Long]("dup_docs") === 3L)
     assert(stats("spamfarm").getAs[Boolean]("keep") === false)
@@ -645,16 +645,16 @@ class QueriesSpec extends SparkSpec {
     //   "the" -> ["the"]; "thing" -> ["th","ing"] (longest-match wins at
     //   i=0: "thin"∉v4, "thi"∉v3, "th"∈v2); "q" -> ["q"] ([UNK]-style
     //   1-char fallback); "mention" -> ["ment","ion"]
-    assert(graft.queries.Text.wpTokenCountRef("the") === 1)
-    assert(graft.queries.Text.wpTokenCountRef("thing") === 2)
-    assert(graft.queries.Text.wpTokenCountRef("q") === 1)
-    assert(graft.queries.Text.wpTokenCountRef("mention") === 2)
-    assert(graft.queries.Text.wpTokenCountRef("") === 0)
+    assert(graft.queries.LmStats.wpTokenCountRef("the") === 1)
+    assert(graft.queries.LmStats.wpTokenCountRef("thing") === 2)
+    assert(graft.queries.LmStats.wpTokenCountRef("q") === 1)
+    assert(graft.queries.LmStats.wpTokenCountRef("mention") === 2)
+    assert(graft.queries.LmStats.wpTokenCountRef("") === 0)
     // codepoint semantics: a supplementary-plane char (2 UTF-16 units)
     // is ONE scan position, matching DuckDB's length()/substr(); a
     // UTF-16-unit walk would count 😀 as 2 and misalign piece matches
-    assert(graft.queries.Text.wpTokenCountRef("😀") === 1)
-    assert(graft.queries.Text.wpTokenCountRef("th😀e") === 3)
+    assert(graft.queries.LmStats.wpTokenCountRef("😀") === 1)
+    assert(graft.queries.LmStats.wpTokenCountRef("th😀e") === 3)
     // then pin the distributed fold against the reference over the REAL
     // fixture corpus — every doc, not a sample
     val docs = Tables.t(spark, sfDir, "documents")
@@ -666,7 +666,7 @@ class QueriesSpec extends SparkSpec {
       val text = docs(r.getAs[Long]("doc_id"))
       val words = text.split(" ", -1)
       assert(r.getAs[Int]("n_words") === words.length)
-      val expect = words.map(graft.queries.Text.wpTokenCountRef).map(_.toLong).sum
+      val expect = words.map(graft.queries.LmStats.wpTokenCountRef).map(_.toLong).sum
       assert(r.getAs[Long]("wp_tokens") === expect,
         s"doc ${r.getAs[Long]("doc_id")}")
     }
@@ -689,7 +689,7 @@ class QueriesSpec extends SparkSpec {
     val corpus = df(
       1L -> "the quick brown fox jumps over the lazy dog today",
       2L -> "completely different corpus text about spark shuffles and joins")
-    graft.queries.Text.dedupStateOf(corpus)
+    graft.queries.Dedup.dedupStateOf(corpus)
       .coalesce(1).write.mode("overwrite").parquet(statePath)
     // round 1: C/D are fresh, X is an exact copy of corpus doc 1, S is a
     // SHORT doc (2 words — no 3-shingle, exact-layer-only state row)
@@ -698,7 +698,7 @@ class QueriesSpec extends SparkSpec {
       11L -> "a genuinely novel document with its own words entirely",
       12L -> "the quick brown fox jumps over the lazy dog today",
       13L -> "hi there")
-    val surv1 = graft.queries.Text
+    val surv1 = graft.queries.Dedup
       .incrementalDedupRound(spark, batch1, statePath, append = true)
       .collect().map(_.getLong(0)).toSet
     assert(surv1 === Set(10L, 11L, 13L))
@@ -720,7 +720,7 @@ class QueriesSpec extends SparkSpec {
       21L -> wsoup,
       22L -> "another brand new document closing out the second batch",
       23L -> "hi there")
-    val surv2 = graft.queries.Text
+    val surv2 = graft.queries.Dedup
       .incrementalDedupRound(spark, batch2, statePath, append = true)
       .collect().map(_.getLong(0)).toSet
     assert(surv2 === Set(22L),
@@ -743,7 +743,7 @@ class QueriesSpec extends SparkSpec {
     val rows = Seq(
       graft.queries.MmRow(1L, jpeg(41, 29), "en"),
       graft.queries.MmRow(2L, jpeg(1280, 720), "en"))
-    val feats = rows.toDS().mapPartitions(_.map(graft.queries.Text.decodeFeatures))
+    val feats = rows.toDS().mapPartitions(_.map(graft.queries.Multimodal.decodeFeatures))
       .collect().map(f => f.doc_id -> f).toMap
     assert((feats(1L).width, feats(1L).height, feats(1L).frames) === ((41, 29, 1)))
     assert((feats(2L).width, feats(2L).height, feats(2L).frames) === ((1280, 720, 1)))
@@ -757,21 +757,21 @@ class QueriesSpec extends SparkSpec {
       0xff, 0xc2, 0x00, 0x0b, 0x08,       // SOF2, len 11, precision 8
       0x03, 0x04, /* height 0x0304 */ 0x01, 0x02, /* width 0x0102 */
       0x01, 0x11, 0x00, 0x00)
-    assert(graft.queries.Text.jpegDims(sof2) === Some((0x0102, 0x0304)))
+    assert(graft.queries.Multimodal.jpegDims(sof2) === Some((0x0102, 0x0304)))
     // DHT (0xC4) is in the SOF numeric range but is NOT a frame header —
     // its payload must be hopped, not misread as dimensions
     val dhtFirst = b(0xff, 0xd8,
       0xff, 0xc4, 0x00, 0x04, 0x00, 0x00, // DHT, len 4
       0xff, 0xc0, 0x00, 0x0b, 0x08, 0x00, 0x10, 0x00, 0x20, 0x01, 0x11, 0x00, 0x00)
-    assert(graft.queries.Text.jpegDims(dhtFirst) === Some((0x20, 0x10)))
+    assert(graft.queries.Multimodal.jpegDims(dhtFirst) === Some((0x20, 0x10)))
     // hostile shapes fall back rather than misparse
-    assert(graft.queries.Text.jpegDims("not a jpeg".getBytes) === None)
-    assert(graft.queries.Text.jpegDims(b(0xff, 0xd8, 0xff, 0xda, 0, 4, 0, 0)) === None) // SOS before SOF
-    assert(graft.queries.Text.jpegDims(b(0xff, 0xd8, 0xff, 0xc0, 0x00, 0x01)) === None) // undersized len
-    assert(graft.queries.Text.jpegDims(b(0xff, 0xd8, 0x00, 0xc0, 0, 11, 8, 0, 1, 0, 1, 1, 0x11, 0, 0)) === None) // desynced marker
+    assert(graft.queries.Multimodal.jpegDims("not a jpeg".getBytes) === None)
+    assert(graft.queries.Multimodal.jpegDims(b(0xff, 0xd8, 0xff, 0xda, 0, 4, 0, 0)) === None) // SOS before SOF
+    assert(graft.queries.Multimodal.jpegDims(b(0xff, 0xd8, 0xff, 0xc0, 0x00, 0x01)) === None) // undersized len
+    assert(graft.queries.Multimodal.jpegDims(b(0xff, 0xd8, 0x00, 0xc0, 0, 11, 8, 0, 1, 0, 1, 1, 0x11, 0, 0)) === None) // desynced marker
     val zeroH = b(0xff, 0xd8, 0xff, 0xc0, 0x00, 0x0b, 0x08,
       0x00, 0x00, /* height 0 = DNL-deferred */ 0x00, 0x20, 0x01, 0x11, 0x00, 0x00)
-    assert(graft.queries.Text.jpegDims(zeroH) === None)
+    assert(graft.queries.Multimodal.jpegDims(zeroH) === None)
   }
 
   test("image header parsers never throw on arbitrary bytes") {
@@ -781,8 +781,8 @@ class QueriesSpec extends SparkSpec {
     val rnd = new scala.util.Random(42)
     (1 to 2000).foreach { _ =>
       val p = Array.fill(rnd.nextInt(64))(rnd.nextInt().toByte)
-      graft.queries.Text.pngDims(p)
-      graft.queries.Text.jpegDims(p)
+      graft.queries.Multimodal.pngDims(p)
+      graft.queries.Multimodal.jpegDims(p)
     }
     // single-byte mutations of REAL files hit the deep parse paths
     // (valid magic, corrupted structure) that pure-random bytes miss
@@ -794,8 +794,8 @@ class QueriesSpec extends SparkSpec {
     }
     for (fmt <- Seq("png", "jpg"); base = enc(fmt); i <- base.indices.take(200)) {
       val mutated = base.clone(); mutated(i) = (mutated(i) ^ 0xff).toByte
-      graft.queries.Text.pngDims(mutated)
-      graft.queries.Text.jpegDims(mutated)
+      graft.queries.Multimodal.pngDims(mutated)
+      graft.queries.Multimodal.jpegDims(mutated)
     }
   }
 
@@ -1089,13 +1089,13 @@ class QueriesSpec extends SparkSpec {
     // identical distributions → PSI ≈ 0 (only smoothing-count noise)
     val same = (0L until 700L).map(i => (i, 100L + (i % 5) * 100))
       .toDF("doc_id", "n_chars")
-    val psiSame = graft.queries.Text.driftPsiOf(same).collect().map(_.getDouble(5)).sum
+    val psiSame = graft.queries.CorpusStats.driftPsiOf(same).collect().map(_.getDouble(5)).sum
     assert(math.abs(psiSame) < 1e-4, s"identical slices scored $psiSame")
     // planted shift: candidate slice (id % 7 == 0) all short, rest all
     // long → PSI far above the 0.25 alert line
     val shifted = (0L until 700L).map(i =>
       (i, if (i % 7 == 0) 50L else 500L)).toDF("doc_id", "n_chars")
-    val psiShift = graft.queries.Text.driftPsiOf(shifted).collect().map(_.getDouble(5)).sum
+    val psiShift = graft.queries.CorpusStats.driftPsiOf(shifted).collect().map(_.getDouble(5)).sum
     assert(psiShift > 0.25, s"planted shift scored only $psiShift")
   }
 
@@ -1120,7 +1120,7 @@ class QueriesSpec extends SparkSpec {
     // disjoint supports → D = 1 at the planted boundary
     val split = (0L until 700L).map(i =>
       (i, if (i % 7 == 0) 10L else 1000L)).toDF("doc_id", "n_chars")
-    val r2 = graft.queries.Text.driftKsOf(split).collect().head
+    val r2 = graft.queries.CorpusStats.driftKsOf(split).collect().head
     assert(r2.getDouble(0) == 1.0 && r2.getLong(1) == 10L)
   }
 
@@ -1207,7 +1207,7 @@ class QueriesSpec extends SparkSpec {
     val zipfDocs = (1 to 200).flatMap(r =>
       Seq.fill(1000000 / r)(s"w$r")).grouped(5000)
       .map(_.mkString(" ")).toSeq.toDF("text")
-    val p = graft.queries.Text.zipfFitOf(zipfDocs).collect().head
+    val p = graft.queries.LmStats.zipfFitOf(zipfDocs).collect().head
     assert(math.abs(p.getDouble(1) - 1.0) < 0.01, s"exp ${p.getDouble(1)}")
     assert(p.getDouble(3) > 0.999, s"r2 ${p.getDouble(3)}")
     // the synthetic fixture vocabulary is deliberately NON-Zipfian —
@@ -1252,7 +1252,7 @@ class QueriesSpec extends SparkSpec {
       .grouped(500).zipWithIndex
       .map { case (ws, d) => (d.toLong, ws.mkString(" ")) }
       .toSeq.toDF("doc_id", "text")
-    val p = graft.queries.Text.heapsLawOf(planted).collect().head
+    val p = graft.queries.LmStats.heapsLawOf(planted).collect().head
     assert(math.abs(p.getDouble(1) - 0.6) < 0.03, s"beta ${p.getDouble(1)}")
     assert(p.getDouble(3) > 0.999, s"r2 ${p.getDouble(3)}")
     // the synthetic fixture vocabulary is closed (~31 words) — the gate
@@ -1263,7 +1263,7 @@ class QueriesSpec extends SparkSpec {
     // impossible R² from the quantization residue
     val flat = (0 until 64).map(d => (d.toLong, "w w w"))
       .toDF("doc_id", "text")
-    val f = graft.queries.Text.heapsLawOf(flat).collect().head
+    val f = graft.queries.LmStats.heapsLawOf(flat).collect().head
     assert(f.getLong(5) == 1L && f.getDouble(1) == 0.0 &&
       f.getDouble(3) == 0.0, s"flat-vocab fit $f")
   }
@@ -1336,7 +1336,7 @@ class QueriesSpec extends SparkSpec {
     import spark.implicits._
     val tiny = Seq((1L, "alpha beta"), (2L, "gamma delta epsilon"))
       .toDF("doc_id", "text")
-    val t = graft.queries.Text.bootstrapCiOf(tiny).collect().head
+    val t = graft.queries.CorpusStats.bootstrapCiOf(tiny).collect().head
     assert(!t.getDouble(3).isNaN && !t.getDouble(4).isNaN &&
       t.getDouble(3) <= t.getDouble(4), s"tiny-frame CI $t")
   }

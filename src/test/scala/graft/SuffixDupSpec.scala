@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.Text
+import graft.queries.Dedup
 import org.apache.spark.sql.functions._
 
 /** Semantic pins for exact duplicated-substring detection via bounded
@@ -13,7 +13,7 @@ class SuffixDupSpec extends SparkSpec {
 
   private def run(docs: Seq[(Long, String)]) = {
     import spark.implicits._
-    Text.suffixDupOf(docs.toDF("doc_id", "text"))
+    Dedup.suffixDupOf(docs.toDF("doc_id", "text"))
       .collect()
       .map(r => r.getLong(0) ->
         (r.getLong(1), r.getInt(2), r.getLong(3), r.getLong(4)))
@@ -62,7 +62,7 @@ class SuffixDupSpec extends SparkSpec {
 
   private def runScrub(docs: Seq[(Long, String)]) = {
     import spark.implicits._
-    Text.suffixScrubOf(docs.toDF("doc_id", "text"))
+    Dedup.suffixScrubOf(docs.toDF("doc_id", "text"))
       .collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getString(3)))
       .toMap

@@ -30,7 +30,7 @@ class TextQualityProbeSpec extends SparkSpec {
       (1001L, cleanText),
       (1002L, partial)   // 10-word eval prefix → 7 shared 4-grams
     ).toDF("doc_id", "text")
-    val out = graft.queries.Text.contaminationOf(docs, id => id < 100)
+    val out = graft.queries.Dedup.contaminationOf(docs, id => id < 100)
       .collect().map(r => r.getLong(0) -> r).toMap
     assert(out.keySet == Set(1000L, 1002L), s"flagged ${out.keySet}")
     assert(out(1000L).getAs[Double]("contam_ratio") == 1.0)
@@ -44,7 +44,7 @@ class TextQualityProbeSpec extends SparkSpec {
       (1000L until 1500L).map { id =>
         (id, s"$hot " + (0 until 20).map(i => s"d${id}w$i").mkString(" "))
       }).toDF("doc_id", "text")
-    val out = graft.queries.Text.contaminationOf(docs, id => id < 100).collect()
+    val out = graft.queries.Dedup.contaminationOf(docs, id => id < 100).collect()
     // one row per corpus doc, each sharing exactly the one hot gram — the
     // bridging grams (hot3 + doc-unique words) differ per doc
     assert(out.length == 500)
@@ -57,7 +57,7 @@ class TextQualityProbeSpec extends SparkSpec {
       (1L, Array.fill(60)("spam").mkString(" ")),
       (2L, (0 until 60).map(i => s"w$i").mkString(" "))
     ).toDF("doc_id", "text")
-    val out = graft.queries.Text.repetitionOf(docs)
+    val out = graft.queries.Dedup.repetitionOf(docs)
       .collect().map(r => r.getLong(0) -> r).toMap
     val spam = out(1L)
     assert(spam.getAs[Boolean]("repetitive"), "boilerplate doc not flagged")
@@ -79,7 +79,7 @@ class TextQualityProbeSpec extends SparkSpec {
       (4L, s"$header"),             // pure template → frac 1.0
       (5L, s"$header")
     ).toDF("doc_id", "text")
-    val out = graft.queries.Text.dupChunksOf(docs)
+    val out = graft.queries.Dedup.dupChunksOf(docs)
       .collect().map(r => r.getLong(0) -> r).toMap
     assert(out(1L).getAs[Boolean]("dup_heavy") &&
       out(1L).getAs[Double]("dup_chunk_frac") == 0.5)
@@ -94,10 +94,10 @@ class TextQualityProbeSpec extends SparkSpec {
   test("repetition and contamination exclude docs below the gram width") {
     val docs = Seq((1L, "solo"), (2L, "two words"),
       (3L, "three word doc"), (4L, "four word doc here")).toDF("doc_id", "text")
-    assert(graft.queries.Text.repetitionOf(docs)
+    assert(graft.queries.Dedup.repetitionOf(docs)
       .collect().map(_.getLong(0)).toSet == Set(2L, 3L, 4L))
     // docs 1-3 are under 4 words: no grams on either side, no output
-    val contam = graft.queries.Text.contaminationOf(docs, id => id === 4L)
+    val contam = graft.queries.Dedup.contaminationOf(docs, id => id === 4L)
     assert(contam.collect().isEmpty)
   }
 
@@ -107,7 +107,7 @@ class TextQualityProbeSpec extends SparkSpec {
     // continuations: N1+(·a)=2, N1+(·b)=1, N1+(·c)=1.
     val docs = Seq((1L, "a b a b a c"), (2L, "b a"), (3L, "c a"))
       .toDF("doc_id", "text")
-    val rows = graft.queries.Text.lmKnOf(docs).collect()
+    val rows = graft.queries.LmStats.lmKnOf(docs).collect()
     val p = rows.map(r => (r.getString(0), r.getString(1)) ->
       r.getAs[Double]("p_kn")).toMap
     assert(math.abs(p(("a", "b")) - 0.541667) < 1e-6) // (2-.75)/3+.75·(2/3)·(1/4)
@@ -134,14 +134,14 @@ class TextQualityProbeSpec extends SparkSpec {
     val body = (1 to 200).map(i => s"w$i").mkString(" ")
     val docs = Seq((1L, body), (2L, "inserted words here " + body))
       .toDF("doc_id", "text")
-    val cdc = graft.queries.Text.cdcChunksOf(docs).collect()
+    val cdc = graft.queries.Dedup.cdcChunksOf(docs).collect()
       .map(r => r.getLong(0) -> r).toMap
     val d1 = cdc(1L)
     assert(d1.getAs[Long]("n_chunks") >= 5, "mod-16 boundaries must fire")
     assert(d1.getAs[Long]("n_dup_chunks") >= d1.getAs[Long]("n_chunks") - 1,
       s"CDC lost alignment: ${d1}")
     // the fixed-window operator on the same pair finds nothing
-    val fixed = graft.queries.Text.dupChunksOf(docs).collect()
+    val fixed = graft.queries.Dedup.dupChunksOf(docs).collect()
       .map(r => r.getLong(0) -> r.getAs[Long]("n_dup_chunks")).toMap
     assert(fixed(1L) == 0L)
   }
@@ -150,7 +150,7 @@ class TextQualityProbeSpec extends SparkSpec {
     val a = (1 to 20).map(i => s"a$i").mkString(" ")
     val b = (1 to 20).map(i => s"b$i").mkString(" ")
     val docs = Seq((1L, a), (2L, a), (3L, b)).toDF("doc_id", "text")
-    val nv = graft.queries.Text.ngramNoveltyOf(docs).collect()
+    val nv = graft.queries.Dedup.ngramNoveltyOf(docs).collect()
       .map(r => r.getLong(0) -> r.getAs[Double]("novelty")).toMap
     assert(nv == Map(1L -> 1.0, 2L -> 0.0, 3L -> 1.0))
   }
@@ -160,7 +160,7 @@ class TextQualityProbeSpec extends SparkSpec {
     val docs = Seq((1L, template), (2L, template + " tail"),
       (3L, (1 to 30).map(i => s"other$i").mkString(" ")))
       .toDF("doc_id", "text")
-    val r = graft.queries.Text.minhashCalibrationOf(docs).collect().head
+    val r = graft.queries.Dedup.minhashCalibrationOf(docs).collect().head
     assert(r.getLong(0) >= 1L) // the planted near-dup pair is a candidate
     val mae = r.getAs[Double]("mae")
     assert(mae >= 0.0 && mae <= 1.0)
@@ -181,7 +181,7 @@ class TextQualityProbeSpec extends SparkSpec {
       (i, v(0, i), if (i == 0L) 1 else 0)) ++
       (10L until 20L).map(i => (i, v(1, i), 1)))
       .toDF("vec_id", "embedding", "label")
-    val acc = graft.queries.Text.knnClassifyOf(emb, k = 3, cells = 1)
+    val acc = graft.queries.Vectors.knnClassifyOf(emb, k = 3, cells = 1)
       .collect().map(r => r.getInt(0) -> r.getAs[Double]("acc")).toMap
     assert(acc(0) == 1.0)
     assert(math.abs(acc(1) - 10.0 / 11) < 1e-4)
@@ -201,7 +201,7 @@ class TextQualityProbeSpec extends SparkSpec {
     val docs = Seq((trainId, template), (valId, template + " tail"),
       (9999L, (1 to 30).map(i => s"zz$i").mkString(" ")))
       .toDF("doc_id", "text")
-    val rows = graft.queries.Text.splitLeakageOf(docs).collect()
+    val rows = graft.queries.Dedup.splitLeakageOf(docs).collect()
     val tv = rows.find(_.getString(0) == "train-val")
     assert(tv.isDefined, s"no train-val row in ${rows.mkString(", ")}")
     assert(tv.get.getAs[Long]("n_neardup") >= 1L)
@@ -223,7 +223,7 @@ class TextQualityProbeSpec extends SparkSpec {
       (2L to 9L).map(i => (i, e(0, i), 0)) ++
       (11L to 19L).map(i => (i, e(1, i), 1)))
       .toDF("vec_id", "embedding", "label")
-    val rows = graft.queries.Text.hardNegativesOf(emb, _ < 2).collect()
+    val rows = graft.queries.Vectors.hardNegativesOf(emb, _ < 2).collect()
     val byQ = rows.groupBy(_.getLong(0))
     // q0: positive is an e1 neighbor; the planted near-e1 wrong-label
     // vector outranks every true e2 negative, and the margin stays
@@ -259,7 +259,7 @@ class TextQualityProbeSpec extends SparkSpec {
       (30L to 34L).map(i => (i, vec(2, 18))) ++
       (40L to 44L).map(i => (i, vec(2, 17))))
       .toDF("vec_id", "embedding")
-    val got = graft.queries.Text.matryoshkaRecallOf(emb, _ < 2)
+    val got = graft.queries.Vectors.matryoshkaRecallOf(emb, _ < 2)
       .collect().map(r => r.getLong(0) -> r.getAs[Double]("recall_at_k")).toMap
     assert(got == Map(0L -> 1.0, 1L -> 0.0))
   }
@@ -269,7 +269,7 @@ class TextQualityProbeSpec extends SparkSpec {
     // back to the doc_id tie-break -> d = 0 for every doc, rho = 1
     val same = (1L to 4L).map(i => (i, "alpha beta gamma delta"))
       .toDF("doc_id", "text")
-    val r1 = graft.queries.Text.scoreAgreementOf(same).collect().head
+    val r1 = graft.queries.Quality.scoreAgreementOf(same).collect().head
     assert(r1.getLong(0) == 4L && r1.getLong(1) == 0L)
     assert(r1.getAs[Double]("rho") == 1.0)
     // disjoint-vocab distinct words, every count 1 -> lm bits tie (rank
@@ -278,7 +278,7 @@ class TextQualityProbeSpec extends SparkSpec {
     def words(tag: String, n: Int) = (1 to n).map(i => s"$tag$i").mkString(" ")
     val rev = Seq((1L, words("a", 30)), (2L, words("b", 20)),
       (3L, words("c", 10))).toDF("doc_id", "text")
-    val r2 = graft.queries.Text.scoreAgreementOf(rev).collect().head
+    val r2 = graft.queries.Quality.scoreAgreementOf(rev).collect().head
     assert(r2.getLong(0) == 3L && r2.getLong(1) == 8L,
       s"expected full reversal, got sum_d2=${r2.getLong(1)}")
     assert(r2.getAs[Double]("rho") == -1.0)
@@ -292,7 +292,7 @@ class TextQualityProbeSpec extends SparkSpec {
       (3L, s"slow crash $filler"),// 2 hits -> count gate fails
       (4L, filler))               // clean -> keep
       .toDF("doc_id", "text")
-    val got = graft.queries.Text.blocklistOf(docs).collect()
+    val got = graft.queries.Quality.blocklistOf(docs).collect()
       .map(r => r.getLong(0) -> r.getAs[Boolean]("keep")).toMap
     assert(got == Map(1L -> true, 2L -> false, 3L -> false, 4L -> true))
   }
@@ -302,7 +302,7 @@ class TextQualityProbeSpec extends SparkSpec {
     val docs = graft.Tables.t(spark, sfDir, "documents")
       .filter(col("doc_id") < 50)
     val texts = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val rows = graft.queries.Text.spanCorruptOf(docs).collect()
+    val rows = graft.queries.Sampling.spanCorruptOf(docs).collect()
     assert(rows.length == texts.size)
     assert(rows.exists(_.getLong(2) > 0), "no masking happened at 15%")
     rows.foreach { r =>
@@ -323,7 +323,7 @@ class TextQualityProbeSpec extends SparkSpec {
   test("fim: PSM segments reorder back to the original text") {
     val docs = Seq((1L, "a b c d e f g h"), (2L, "x y"), (3L, "one two three"))
       .toDF("doc_id", "text")
-    val rows = graft.queries.Text.fimOf(docs).collect()
+    val rows = graft.queries.Sampling.fimOf(docs).collect()
     val byId = rows.map(r => r.getLong(0) -> r).toMap
     // 2-word doc passes through unsplit
     assert(!byId(2L).getAs[Boolean]("is_split"))
@@ -345,7 +345,7 @@ class TextQualityProbeSpec extends SparkSpec {
 
   test("lexical diversity: hand-computed TTR/hapax/Yule's K") {
     val docs = Seq((1L, "a a a b")).toDF("doc_id", "text")
-    val r = graft.queries.Text.lexicalDiversityOf(docs).collect().head
+    val r = graft.queries.LmStats.lexicalDiversityOf(docs).collect().head
     assert(r.getLong(1) == 4L && r.getLong(2) == 2L && r.getLong(3) == 1L)
     assert(r.getAs[Double]("ttr") == 0.5)
     assert(r.getAs[Double]("hapax_frac") == 0.5)
@@ -360,7 +360,7 @@ class TextQualityProbeSpec extends SparkSpec {
     // between the 0 and the 1s, so exactly the orthogonal one flags
     val emb = ((0L until 19L).map(i => (i, Seq(1.0f, 0.0f))) :+
       (19L, Seq(0.0f, 1.0f))).toDF("vec_id", "embedding")
-    val out = graft.queries.Text.embedOutliersOf(emb, k = 1).collect()
+    val out = graft.queries.Vectors.embedOutliersOf(emb, k = 1).collect()
     // the k=1 seed is the md5-min vec_id = 6 (an e1 vector) — pin that
     // so a fixture-id reshuffle can't silently make the OUTLIER the
     // centroid and vacuously pass
@@ -372,7 +372,7 @@ class TextQualityProbeSpec extends SparkSpec {
 
   test("readability battery on a hand-countable doc") {
     val docs = Seq((1L, "Hello world. Nice day!"), (2L, "")).toDF("doc_id", "text")
-    val r = graft.queries.Text.readabilityOf(docs).collect()
+    val r = graft.queries.Quality.readabilityOf(docs).collect()
       .map(x => x.getLong(0) -> x).toMap
     val d1 = r(1L)
     assert(d1.getInt(1) == 2, "sentences") // "Hello world" / " Nice day"

@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.Text
+import graft.queries.Dedup
 import org.apache.spark.sql.functions._
 
 /** Semantic pins for URL canonicalization + URL-level dedup
@@ -29,7 +29,7 @@ class UrlDedupSpec extends SparkSpec {
       "https://ex.com:80/p" -> "https://ex.com:80/p")
     import spark.implicits._
     val got = cases.map(_._1).toDF("url")
-      .select(Text.canonicalUrl(col("url")).as("c")).collect().map(_.getString(0))
+      .select(Dedup.canonicalUrl(col("url")).as("c")).collect().map(_.getString(0))
     cases.map(_._2).zip(got).foreach { case (want, g) =>
       assert(g == want, s"canonicalization mismatch: got $g want $want")
     }
