@@ -2,41 +2,43 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{DotProduct, ParseUrlTupleGen}
+import graft.functions._
 
-/** SparkSessionExtensions entry point (SURVEY.md §2.10): installs graft's
-  * native expressions/generators into every session built with
-  * `spark.sql.extensions=graft.GraftExtensions` — the packaged-library
-  * equivalent of Hive's `CREATE TEMPORARY FUNCTION`, done once per
-  * cluster config instead of per query.
+/** SparkSessionExtensions entry point (SURVEY.md §2.10) and the one way a
+  * graft SQL function enters a session: every session that runs graft
+  * queries must be built with `spark.sql.extensions=graft.GraftExtensions`
+  * ([[GraftSession.local]] sets it). The extension injects
+  * [[GraftExtensions.catalog]] — the packaged-library equivalent of
+  * Hive's `CREATE TEMPORARY FUNCTION`, done once per session instead of
+  * per query — plus the grouped top-k rewrite.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 2, "dot_product(arrayA, arrayB)")
-        DotProduct(exprs.head, exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("parse_url_tuple"),
-      new ExpressionInfo(classOf[ParseUrlTupleGen].getName, "parse_url_tuple"),
-      (exprs: Seq[Expression]) => ParseUrlTupleGen(exprs)))
-    // native text-hash kernels (word_hashes/hash_grams/minhash_sig/...):
-    // the codegen replacements for the interpreted HOF lambdas in the
-    // dedup/signature family — see graft.functions.TextHashOps
-    graft.functions.TextHashFunctions.builders.foreach { case (name, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.TextHashOps", name),
-        builder))
+    GraftExtensions.catalog.foreach { case (name, info, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
     // grouped top-k pushdown: optimizer rewrite + planner strategy
     // (the full custom-operator ladder — see graft.plans.TopKPerKey)
     ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
   }
+}
+
+object GraftExtensions {
+  /** Every graft SQL function, concatenated from each function module's
+    * own table. */
+  val catalog: Seq[SqlFunction] = DotProduct.sqlFunctions ++
+    ParseUrlTupleGen.sqlFunctions ++
+    TextHashFunctions.sqlFunctions ++ // native text-hash kernels, see TextHashOps
+    UnicodeNormalize.sqlFunctions ++
+    BloomFunctions.sqlFunctions ++
+    EwahBitmap.sqlFunctions ++
+    GapFunctions.sqlFunctions ++
+    DuckCompat.sqlFunctions
+
+  // a name in two tables would otherwise silently resolve to the last one
+  private val twice = catalog.map(_._1).groupBy(identity).collect {
+    case (name, fns) if fns.size > 1 => name }
+  require(twice.isEmpty, s"SQL functions declared by two modules: ${twice.mkString(", ")}")
 }

@@ -9,6 +9,12 @@ import graft.queries.{CorpusStats, Dedup, LmStats, MmFeat, MmRow, Multimodal, Qu
   * same cores to the fixture layout for the oracle gate; this facade is
   * what an application imports to run them on its own tables.
   *
+  * Session contract: the session must be built with
+  * `spark.sql.extensions=graft.GraftExtensions` (as [[GraftSession.local]]
+  * does) — the operators call graft's SQL functions (`word_hashes_text`,
+  * `dot_product`, `unicode_normalize`, …) by name, and the extension is
+  * the only place they enter a session.
+  *
   * Input contracts (column names are positional requirements, extra
   * columns are ignored unless noted):
   *  - `docs`: `doc_id: long`, `text: string` — plus `lang` where a
@@ -32,7 +38,7 @@ import graft.queries.{CorpusStats, Dedup, LmStats, MmFeat, MmRow, Multimodal, Qu
   * CacheManager). Nothing unpersists either kind when your terminal
   * action completes. Long-lived sessions invoking these in a loop
   * should call [[releaseCaches]] between invocations, as graft's own
-  * Bench, Verify and Profile mains do between queries — a bare
+  * Bench, Verify, Profile, PlanDump and SurfaceProbe mains do between queries — a bare
   * `clearCache()` is NOT sufficient for the checkpointing operators
   * and accumulates block-manager blocks without bound.
   */

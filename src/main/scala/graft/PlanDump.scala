@@ -19,6 +19,7 @@ object PlanDump {
         .queryExecution.explainString(ExplainMode.fromString("formatted"))
       Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
       println(s"wrote $outDir/${name}_$suffix.txt")
+      Pipeline.releaseCaches(spark)
     }
     spark.stop()
   }

@@ -32,7 +32,7 @@ object SurfaceProbe {
         case e: Throwable =>
           bad += 1
           println(s"ERR  $name: ${String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse(e.getClass.getName).take(200)}")
-      }
+      } finally Pipeline.releaseCaches(spark)
     }
     spark.stop()
     if (bad > 0) sys.exit(1)

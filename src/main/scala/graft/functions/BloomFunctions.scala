@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
-/** SQL registration for Spark's native bloom-filter sketch expressions
+/** SQL names for Spark's native bloom-filter sketch expressions
   * (the codegen'd pair behind runtime bloom-filter joins; reference:
   * Hive GenericUDAFBloomFilter / in_bloom_filter — SURVEY.md §2.4).
   *
@@ -13,24 +12,16 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   * Catalyst expressions — the probe stays inside whole-stage codegen,
   * unlike a Scala UDF wrapping `BloomFilter.mightContain` (per-row
   * serialization wall). Spark keeps them out of the public registry
-  * (they back `InjectRuntimeFilter`), so this injects them the same way
-  * VectorExpressions registers `dot_product`. Idempotent.
+  * (they back `InjectRuntimeFilter`), so graft's catalog names them.
   */
 object BloomFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_filter_agg",
-      { exprs =>
-        require(exprs.size == 3, "bloom_filter_agg(xxhash64(col), estItems, numBits)")
-        new BloomFilterAggregate(exprs.head, exprs(1), exprs(2), 0, 0)
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      { exprs =>
-        require(exprs.size == 2, "bloom_might_contain(sketch, xxhash64(col))")
-        BloomFilterMightContain(exprs.head, exprs(1))
-      },
-      "scala_udf")
-  }
+  val sqlFunctions: Seq[SqlFunction] = table(getClass.getName)(
+    "bloom_filter_agg" -> { exprs =>
+      require(exprs.size == 3, "bloom_filter_agg(xxhash64(col), estItems, numBits)")
+      new BloomFilterAggregate(exprs.head, exprs(1), exprs(2), 0, 0)
+    },
+    "bloom_might_contain" -> { exprs =>
+      require(exprs.size == 2, "bloom_might_contain(sketch, xxhash64(col))")
+      BloomFilterMightContain(exprs.head, exprs(1))
+    })
 }

@@ -1,14 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, If, LessThan, Literal, Subtract}
 import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** ANSI-gap compat pack for the oracle dialect (SURVEY §3.4): the scalar
-  * names DuckDB-flavoured SQL texts use, registered as NATIVE temp
-  * functions that delegate to Spark's own builtin expression builders —
+  * names DuckDB-flavoured SQL texts use, as NATIVE functions that
+  * delegate to Spark's own builtin expression builders —
   * each call site becomes the underlying Catalyst expression (full
   * codegen, usable inside generators like `explode`, type-generic),
   * which a `CREATE TEMPORARY FUNCTION` SQL macro cannot do (Spark
@@ -18,9 +17,10 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   * This is the packaged-library half of the reference's UDF lifecycle
   * (`/root/reference/README.md:1-4` hosts Hive 2.3.10, whose engine
   * resolves `CREATE TEMPORARY FUNCTION` names through its own
-  * FunctionRegistry the same way): a session that loads the library gets
-  * the dialect names; every semantic equivalence claimed here is pinned
-  * by the `SqlSurfaceSpec` exact-row gate on the texts that use it.
+  * FunctionRegistry the same way): a session built with
+  * [[graft.GraftExtensions]] gets the dialect names; every semantic
+  * equivalence claimed here is pinned by the `SqlSurfaceSpec` exact-row
+  * gate on the texts that use it.
   */
 object DuckCompat {
   private def builtin(name: String): Seq[Expression] => Expression = {
@@ -37,9 +37,9 @@ object DuckCompat {
       builtin("sequence")(Seq(lo, Cast(Subtract(hi, Literal(1L)), LongType))),
       Literal.create(Seq.empty[Long], ArrayType(LongType, containsNull = false)))
 
-  /** name → builder; kept in one map so registration and the doc table
-    * in COVERAGE.md stay in sync. */
-  private val fns: Map[String, Seq[Expression] => Expression] = Map(
+  /** The dialect names; kept in one table so the catalog and the doc
+    * table in COVERAGE.md stay in sync. */
+  val sqlFunctions: Seq[SqlFunction] = table(getClass.getName)(
     // epoch_us(ts) = microseconds since epoch
     "epoch_us" -> builtin("unix_micros"),
     // sha256(s) = sha2(s, 256)
@@ -102,11 +102,4 @@ object DuckCompat {
       require(es.size == 1, "nfc_normalize(str)")
       UnicodeNormalize(es.head, java.text.Normalizer.Form.NFC)
     }))
-
-  /** Idempotent: session-scoped temp functions, safe to re-run. */
-  def register(spark: SparkSession): Unit =
-    fns.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
 }

@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.{encoderFor, ExpressionEncoder}
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
 import org.apache.spark.sql.expressions.Aggregator
 
 /** EWAH-compressed bitmap index aggregate + combinators
@@ -161,14 +162,15 @@ object EwahBitmap {
     override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  /** Register `ewah_bitmap` + the And/Or/Empty/cardinality combinators for
-    * SQL-text use (the reference's `CREATE TEMPORARY FUNCTION` path). */
-  def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.functions.udaf
-    spark.udf.register("ewah_bitmap", udaf(new EwahBitmapAgg, Encoders.scalaLong))
-    spark.udf.register("ewah_bitmap_and", (a: Array[Byte], b: Array[Byte]) => bitmapAnd(a, b))
-    spark.udf.register("ewah_bitmap_or", (a: Array[Byte], b: Array[Byte]) => bitmapOr(a, b))
-    spark.udf.register("ewah_bitmap_empty", (a: Array[Byte]) => isEmpty(a))
-    spark.udf.register("ewah_cardinality", (a: Array[Byte]) => cardinality(a))
-  }
+  private val agg = new EwahBitmapAgg
+
+  /** `ewah_bitmap` + the And/Or/Empty/cardinality combinators (the
+    * reference's `GenericUDAFEWAHBitmap` / `GenericUDFEWAHBitmap*`). */
+  val sqlFunctions: Seq[SqlFunction] = table(getClass.getName)(
+    "ewah_bitmap" -> (es => ScalaAggregator(es, agg, encoderFor(Encoders.scalaLong),
+      encoderFor(agg.bufferEncoder), aggregatorName = Some("ewah_bitmap"))),
+    scalaUdf("ewah_bitmap_and", (a: Array[Byte], b: Array[Byte]) => bitmapAnd(a, b)),
+    scalaUdf("ewah_bitmap_or", (a: Array[Byte], b: Array[Byte]) => bitmapOr(a, b)),
+    scalaUdf("ewah_bitmap_empty", (a: Array[Byte]) => isEmpty(a)),
+    scalaUdf("ewah_cardinality", (a: Array[Byte]) => cardinality(a)))
 }

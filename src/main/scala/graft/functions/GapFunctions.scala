@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Hive 2.3.10 builtins with no direct Spark 4.1.2 equivalent, implemented
@@ -20,9 +20,6 @@ object GapFunctions {
     }
     coalesce(hits :+ lit(0): _*)
   }
-
-  /** Hive `elt(n, s1, s2, …)` exists natively in Spark; kept here only as
-    * the registration helper for SQL usage. */
 
   private def maskCol(c: Column): Column = call_function("mask", c)
 
@@ -102,15 +99,14 @@ object GapFunctions {
   /** Hive `extract_union(u, i)` field accessor (null unless tagged i). */
   def extractUnion(u: Column, i: Int): Column = u.getField(s"field$i")
 
-  /** Register SQL-callable names (Hive CREATE TEMPORARY FUNCTION path ≈
-    * spark.udf.register, SURVEY.md §2.10). */
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("field_str",
+  /** The two Scala UDFs behind `fn_udf_registry` (the Hive CREATE
+    * TEMPORARY FUNCTION path, SURVEY.md §2.10). */
+  val sqlFunctions: Seq[SqlFunction] = table(getClass.getName)(
+    scalaUdf("field_str",
       (needle: String, opts: Seq[String]) =>
-        if (needle == null || opts == null) 0 else opts.indexOf(needle) + 1)
-    spark.udf.register("shingle_words",
+        if (needle == null || opts == null) 0 else opts.indexOf(needle) + 1),
+    scalaUdf("shingle_words",
       (words: Seq[String], k: Int) =>
         if (words == null || words.size < k) Seq.empty[String]
-        else words.sliding(k).map(_.mkString(" ")).toSeq)
-  }
+        else words.sliding(k).map(_.mkString(" ")).toSeq))
 }

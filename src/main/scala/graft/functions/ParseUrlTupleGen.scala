@@ -2,7 +2,6 @@ package graft.functions
 
 import java.net.URI
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -15,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `GenericUDTFParseUrlTuple` in the hive-exec jar, SURVEY.md §2.7 URL
   * family). One input row → one output row with N named string fields,
   * usable in `LATERAL VIEW parse_url_tuple(url, 'HOST', 'QUERY:k') t AS
-  * host, qk` after [[ParseUrlTupleGen.register]].
+  * host, qk` in any session carrying [[graft.GraftExtensions]].
   *
   * Part names follow Hive: HOST, PATH, QUERY, REF, PROTOCOL, FILE,
   * AUTHORITY, USERINFO, and QUERY:<key>.
@@ -85,9 +84,6 @@ case class ParseUrlTupleGen(children: Seq[Expression])
 }
 
 object ParseUrlTupleGen {
-  /** Register as a SQL-callable temp function (Hive CREATE TEMPORARY
-    * FUNCTION equivalent via FunctionRegistry injection, SURVEY.md §2.10). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "parse_url_tuple", exprs => ParseUrlTupleGen(exprs), "scala_udf")
+  val sqlFunctions: Seq[SqlFunction] = table(classOf[ParseUrlTupleGen].getName)(
+    "parse_url_tuple" -> (exprs => ParseUrlTupleGen(exprs)))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -14,9 +13,8 @@ import org.apache.spark.sql.types._
   * whole-stage codegen; these evaluate as one static call per ROW inside
   * it (the DotProduct ladder, SURVEY.md §2.10).
   *
-  * Registered session-wide by [[graft.GraftExtensions]]; sessions built
-  * without the extension (the Pipeline library path) get them via
-  * [[TextHashFunctions.register]], idempotently.
+  * Injected session-wide by [[graft.GraftExtensions]] from
+  * [[TextHashFunctions.sqlFunctions]].
   */
 private object TextHashExpr {
   val longArray: DataType = ArrayType(LongType, containsNull = true)
@@ -289,9 +287,8 @@ object TextHashFunctions {
       s"$what must be a boolean literal, got $other")
   }
 
-  /** (name, builder) for every native text-hash function — shared by the
-    * GraftExtensions injection and the temp-function fallback below. */
-  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  /** Every native text-hash function (see [[graft.functions.TextHashOps]]). */
+  val sqlFunctions: Seq[SqlFunction] = table("graft.functions.TextHashOps")(
     "word_hashes" -> { es: Seq[Expression] =>
       require(es.size == 1, "word_hashes(words)"); WordHashes(es.head) },
     "word_hashes_text" -> { es: Seq[Expression] =>
@@ -328,18 +325,4 @@ object TextHashFunctions {
           s"sep must be a string literal, got $other")
       } else " "
       SliceJoinGrams(es.head, es(1), sep) })
-
-  /** Register every text-hash function as a session temp function —
-    * the no-extensions path ([[graft.Pipeline]] over caller sessions);
-    * idempotent: names already bound (GraftExtensions sessions, or a
-    * prior call) are left alone, so repeated helper entry does not spam
-    * "replaced a previously registered function" warnings. */
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, builder) =>
-      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      if (!spark.sessionState.functionRegistry.functionExists(id)) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name, builder, "scala_udf")
-      }
-    }
 }

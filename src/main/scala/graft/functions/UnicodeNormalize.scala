@@ -2,7 +2,6 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -48,23 +47,19 @@ case class UnicodeNormalize(child: Expression, form: Normalizer.Form)
 }
 
 object UnicodeNormalize {
-  /** Register `unicode_normalize(str, 'NFC'|'NFD'|'NFKC'|'NFKD')` as a
-    * SQL-callable function. The form argument must be a foldable string
-    * literal (it selects a compile-time constant in the generated code).
-    * Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unicode_normalize",
-      { exprs =>
-        require(exprs.size == 2, "unicode_normalize(str, form)")
-        val formName = exprs(1) match {
-          case lit if lit.foldable =>
-            lit.eval(null).asInstanceOf[UTF8String].toString.toUpperCase
-          case other =>
-            throw new IllegalArgumentException(
-              s"unicode_normalize form must be a literal, got $other")
-        }
-        UnicodeNormalize(exprs.head, Normalizer.Form.valueOf(formName))
-      },
-      "scala_udf")
+  /** `unicode_normalize(str, 'NFC'|'NFD'|'NFKC'|'NFKD')`. The form
+    * argument must be a foldable string literal (it selects a
+    * compile-time constant in the generated code). */
+  val sqlFunctions: Seq[SqlFunction] = table(classOf[UnicodeNormalize].getName)(
+    "unicode_normalize" -> { exprs =>
+      require(exprs.size == 2, "unicode_normalize(str, form)")
+      val formName = exprs(1) match {
+        case lit if lit.foldable =>
+          lit.eval(null).asInstanceOf[UTF8String].toString.toUpperCase
+        case other =>
+          throw new IllegalArgumentException(
+            s"unicode_normalize form must be a literal, got $other")
+      }
+      UnicodeNormalize(exprs.head, Normalizer.Form.valueOf(formName))
+    })
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -76,16 +75,10 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object VectorExpressions {
-  /** Register `dot_product` as a SQL-callable function (FunctionRegistry
-    * injection — the CREATE TEMPORARY FUNCTION equivalent for native
-    * expressions). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product",
-      { exprs =>
-        require(exprs.size == 2, "dot_product(arrayA, arrayB)")
-        DotProduct(exprs.head, exprs(1))
-      },
-      "scala_udf")
+object DotProduct {
+  val sqlFunctions: Seq[SqlFunction] = table(classOf[DotProduct].getName)(
+    "dot_product" -> { es =>
+      require(es.size == 2, "dot_product(arrayA, arrayB)")
+      DotProduct(es.head, es(1))
+    })
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.{ContextNGramsAgg, EwahBitmap, NGramsAgg}
+import graft.functions.{ContextNGramsAgg, NGramsAgg}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
@@ -440,7 +440,6 @@ object Aggregates {
     * `and_empty` is engine-computed via ewah_bitmap_empty and
     * oracle-recomputed as `and_card = 0`. */
   val aggEwahBitmap: Q = (s, dir) => {
-    EwahBitmap.register(s)
     Tables.t(s, dir, "orders")
       .agg(
         expr("ewah_bitmap(CASE WHEN o_orderpriority = '1-URGENT' " +

@@ -29,17 +29,6 @@ import org.apache.spark.sql.functions._
 object Dedup {
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Native text-hash functions resolve via the session registry —
-    * GraftExtensions sessions have them; the Pipeline library path over a
-    * caller-built session gets them here. Idempotent, one registry put
-    * per name — call at every helper entry that uses wordHashCol /
-    * hashGramCol / the other [[graft.functions.TextHashOps]] kernels
-    * (same defensive-registration precedent as Pipeline's dot_product). */
-  private[queries] def reg(df: DataFrame): DataFrame = {
-    graft.functions.TextHashFunctions.register(df.sparkSession)
-    df
-  }
-
   // single definition with the native kernels (graft.functions.TextHashOps):
   // a base/seed change lands in the Column twins, the codegen kernels and
   // the DuckDB oracle SQL together or not at all
@@ -157,7 +146,7 @@ object Dedup {
     // parallelism bought. fanOut pays only where a SINGLE stage is
     // multi-second single-task (suffix_dedup's gram build, ann_pq's
     // encode argmin).
-    reg(docs).select(col("doc_id"), wordHashCol.as("hs"))
+    docs.select(col("doc_id"), wordHashCol.as("hs"))
 
   /** [[signaturesOf]] from a pre-built [[hashedWordsOf]] frame: shingle
     * ids and all 12 minhash values are per-row array arithmetic above
@@ -171,7 +160,7 @@ object Dedup {
     // 12 times, so CollapseProject keeps the pass in its own projection.
     val mhCols = seeds.indices.map(i =>
       element_at(col("mhs"), i + 1).as(s"mh$i"))
-    reg(hashed)
+    hashed
       .filter(size(col("hs")) >= 3)
       .select(col("doc_id"), shingleSetCol.as("sh"))
       .select(col("doc_id"), col("sh"),
@@ -453,7 +442,7 @@ object Dedup {
     * one two-phase min-agg on the gram id, one co-partitioned join on
     * the same key. */
   private[graft] def ngramNoveltyOf(docs: DataFrame): DataFrame = {
-    val grams = reg(docs)
+    val grams = docs
       .select(col("doc_id"), wordHashCol.as("hs"))
       .filter(size(col("hs")) >= 4)
       .select(col("doc_id"), explode(hashGramCol(4)).as("g"))
@@ -658,7 +647,7 @@ object Dedup {
     // stage is fast enough that the extra exchange is a wash here
     // (simhash 1.02/0.66 fanned vs 0.96/0.71 plain; neardup 2.31/1.97
     // vs 2.19/1.87 [med/min]).
-    val words = reg(Tables.t(s, dir, "documents"))
+    val words = Tables.t(s, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       // r22: same scalar md5-prefix chain -> native kernel (md5_prefix)
       .withColumn("h", call_function("md5_prefix", col("w"), lit(7)))
@@ -748,7 +737,7 @@ object Dedup {
   private[graft] def ngramJaccardFromHashed(hashed: DataFrame, pairs: DataFrame): DataFrame = {
     val gramSet = when(size(col("hs")) >= 2, hashGramCol(2))
       .otherwise(array().cast("array<long>"))
-    val g = reg(hashed).select(col("doc_id"), gramSet.as("g"))
+    val g = hashed.select(col("doc_id"), gramSet.as("g"))
     val sizes = g.select(col("doc_id"), size(col("g")).as("n"))
     val p = pairs.select(col("doc_a"), col("doc_b"))
     val ex = g.select(col("doc_id"), explode(col("g")).as("g"))
@@ -826,7 +815,7 @@ object Dedup {
       pairs: DataFrame): DataFrame = {
     val gramSet = when(size(col("hs")) >= 2, hashGramCol(2))
       .otherwise(array().cast("array<long>"))
-    val g = reg(hashed).select(col("doc_id"), gramSet.as("g"))
+    val g = hashed.select(col("doc_id"), gramSet.as("g"))
     val sizes = g.select(col("doc_id"), size(col("g")).as("n"))
     val p = pairs.select(col("doc_a"), col("doc_b"))
     val ex = g.select(col("doc_id"), explode(col("g")).as("g"))
@@ -1213,7 +1202,7 @@ object Dedup {
     // CollapseProject multi-reference guard does not protect filter
     // pushdown substitution). Caching (doc_id, gram-ids) is also the
     // honest 100 TB shape: 8-byte ids, reused by both branches.
-    val g = reg(docs)
+    val g = docs
       .select(col("doc_id"), wordHashCol.as("hs"))
       .filter(size(col("hs")) >= 4)
       .select(col("doc_id"), gram4.as("g"))
@@ -1253,7 +1242,7 @@ object Dedup {
   private[graft] def contaminationStream(stream: DataFrame,
       evalDocs: DataFrame): DataFrame = {
     val gram4 = hashGramCol(4)
-    val evalGrams = reg(evalDocs)
+    val evalGrams = evalDocs
       .select(col("doc_id"), wordHashCol.as("hs"))
       .filter(size(col("hs")) >= 4)
       .select(gram4.as("g"))
@@ -1296,7 +1285,7 @@ object Dedup {
     // pathology as llmContamination (see the comment there): without the
     // cache barrier the explode branch's inferred size(bg) > 0 filter
     // inlines the md5 word-hash array per bigram element at the scan.
-    val base = reg(docs)
+    val base = docs
       .select(col("doc_id"), wordHashCol.as("hs"))
       .filter(size(col("hs")) >= 2)
       .select(col("doc_id"), size(col("hs")).as("n_words"),
@@ -1447,7 +1436,7 @@ object Dedup {
     // arguments at [[graft.functions.TextHashOps.wordHashes]] /
     // [[graft.functions.TextHashOps.cdcFlags]] (D = CDC_D = 16, same
     // b1/b2/b3/P), pinned by TextHashExpressionsSpec
-    val base = reg(docs)
+    val base = docs
       .filter(size(split(col("text"), " ")) >= 1)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .withColumn("hs", call_function("word_hashes", col("ws")))
@@ -1568,7 +1557,7 @@ object Dedup {
   private val winnowW = 4
 
   private[graft] def winnowOf(docs: DataFrame): DataFrame =
-    reg(docs)
+    docs
       // length gate on the SPLIT, not the hash array: size(hs) would push
       // the whole md5 word-hash transform into the scan filter and pay
       // the hash pass twice per row (size(split) ≡ size(hs) — the
@@ -1648,7 +1637,7 @@ object Dedup {
     // slice array + interpreted join per position. The `when(size >= d,
     // ...).otherwise(array())` guard folds in: the kernel yields empty
     // below d.
-    val keyed = reg(docs)
+    val keyed = docs
       .select(col("doc_id"), split(col("text"), " ").as("ws"),
         explode(array(sfxDepths.map(lit): _*)).as("d"))
       .select(col("doc_id"), col("d"),
@@ -1713,7 +1702,7 @@ object Dedup {
     * `doc_id*1e6+pos` key would silently collide once a document
     * exceeds 1M words; struct comparison is exact at any size). */
   private[graft] def suffixScrubOf(docs: DataFrame, spanW: Int = 8): DataFrame = {
-    val wsDocs = reg(docs).select(col("doc_id"), split(col("text"), " ").as("ws"))
+    val wsDocs = docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
     // r22: same slice-key HOF → native kernel swap as [[suffixDupOf]]
     // (see [[graft.functions.TextHashOps.sliceJoinGrams]])
     val grams = wsDocs

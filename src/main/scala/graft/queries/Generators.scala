@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.ParseUrlTupleGen
 import org.apache.spark.sql.functions._
 
 /** §2.1 rows 13–15: UDTF/generator surface — explode / posexplode /
@@ -115,7 +114,6 @@ object Generators {
 
   /** Custom Catalyst Generator in a LATERAL VIEW (parse_url_tuple UDTF). */
   val genParseUrlTuple: Q = (s, dir) => {
-    ParseUrlTupleGen.register(s)
     Tables.t(s, dir, "documents").filter(col("doc_id") < 300)
       .select(col("doc_id"),
         concat(lit("https://u:p@example.com:8080/api/"), col("source"),

@@ -15,7 +15,6 @@ import org.apache.spark.sql.functions._
   * `vocabBucketSql`, which the quality scorers reuse.
   */
 object LmStats {
-  import Dedup.reg
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Fixed 2^16 hashed vocabulary bucket of a word — the DSIR paper's
@@ -43,7 +42,7 @@ object LmStats {
     * same measured rule as ngramJaccardOf's gram sets); 16 bytes/row,
     * MEMORY_AND_DISK. */
   private[queries] def bucketedWords(docs: DataFrame): DataFrame = {
-    val words = reg(docs)
+    val words = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .select(col("doc_id"), vocabBucket(col("w")).as("b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -223,7 +222,7 @@ object LmStats {
     // Spark is the DESCENDING [1, 0] (not empty like DuckDB's range), so
     // an unguarded transform would element_at index 2 of a 1-word array
     // and crash the job. The filter keeps the documented drop-semantics.
-    val ws = reg(docs).select(col("doc_id"), split(col("text"), " ").as("ws"))
+    val ws = docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
       .filter(size(col("ws")) >= 2)
     val pairs = ws
       .select(col("doc_id"), explode(transform(
@@ -287,7 +286,7 @@ object LmStats {
     * no position and are absent. */
   private[graft] def lmTrigramOf(docs: DataFrame,
       isTrain: Column => Column): DataFrame = {
-    val train = reg(docs).filter(isTrain(col("doc_id")))
+    val train = docs.filter(isTrain(col("doc_id")))
     val t3 = trigramPositions(train)
       .select(vocabBucket(concat_ws("_", col("p.w1"), col("p.w2"), col("p.w3"))).as("b3"))
       .groupBy("b3").agg(count(lit(1)).as("c3"))
@@ -485,7 +484,7 @@ object LmStats {
       poolK: Int = 20, topK: Int = 5): DataFrame = {
     val lex = bm25Of(docs, isQuery, poolK)
       .select(col("q_id"), col("doc_id"), col("rnk").as("lex_rnk"))
-    val vecs = reg(docs)
+    val vecs = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .select(col("doc_id"), (vocabBucket(col("w")) % 64).as("dim"))
       .groupBy("doc_id", "dim").agg(count(lit(1)).as("v"))
@@ -1285,7 +1284,7 @@ object LmStats {
     * sym_b, cnt). */
   private[graft] def bpeTrainOf(docs: DataFrame, steps: Int = 10): DataFrame = {
     val spark = docs.sparkSession
-    val vocab = reg(docs).select(explode(split(col("text"), " ")).as("w"))
+    val vocab = docs.select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) >= 2)
       .groupBy("w").agg(count(lit(1)).as("wc"))
       .select(col("wc"),

@@ -12,7 +12,6 @@ import org.apache.spark.sql.functions._
   * readability and blocklist filtering.
   */
 object Quality {
-  import Dedup.reg
   import LmStats.{bucketedWords, lmAvgBitsSql, lmBigramOf, lmBitsCtes, lmQualityOf, vocabBucket,
     vocabBucketSql, wordBits}
 
@@ -331,7 +330,7 @@ object Quality {
   private[graft] def qualityClassifierOf(docs: DataFrame,
       epochs: Int = 3,
       positive: Column = col("lang") === "en"): DataFrame = {
-    val labeled = reg(docs).select(col("doc_id"),
+    val labeled = docs.select(col("doc_id"),
       when(positive, 1L).otherwise(-1L).as("y"))
     val postings = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
@@ -499,7 +498,7 @@ object Quality {
       minWords: Int = 50, minStops: Int = 2): DataFrame = {
     val ws = split(col("text"), " ")
     val lines = split(col("text"), "\n")
-    reg(docs)
+    docs
       .select(col("doc_id"), col("text"), ws.as("ws"), lines.as("ls"))
       .select(col("doc_id"),
         size(col("ws")).as("n_words"),
@@ -665,7 +664,7 @@ object Quality {
     // per-row work, NO char-stream shuffle — window-lead shuffles every
     // char, substr-over-range is O(len²)/row) minus the interpreted
     // per-element eval and the char-array materialization.
-    val grams = reg(docs)
+    val grams = docs
       .filter(length(col("text")) >= 3)
       .select(col("doc_id"), col("lang"),
         explode(call_function("char_trigrams", col("text"))).as("g"))
@@ -724,9 +723,7 @@ object Quality {
     * (utf8proc) implements the same UAX#15 algorithm as the JDK's
     * normalizer, so the hash comparison is exact. */
   /** The normalization chain itself (NFC → control strip → whitespace
-    * collapse → trim), reusable ahead of any content-hash stage. The
-    * caller must have run [[graft.functions.UnicodeNormalize.register]]
-    * on the session. */
+    * collapse → trim), reusable ahead of any content-hash stage. */
   private[graft] def normTextCol(c: Column): Column =
     trim(regexp_replace(
       regexp_replace(
@@ -735,7 +732,6 @@ object Quality {
       "[ \\t\\r\\n]+", " "))
 
   val llmTextNormalize: Q = (s, dir) => {
-    graft.functions.UnicodeNormalize.register(s)
     Tables.t(s, dir, "documents")
       .select(col("doc_id"), col("text"), normTextCol(col("text")).as("norm"))
       .select(col("doc_id"),

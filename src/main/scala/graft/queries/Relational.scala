@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.BloomFunctions
 import org.apache.spark.sql.functions._
 
 /** §2.1–§2.3, §2.6 core relational surface: scan / project / filter /
@@ -502,7 +501,6 @@ object Relational {
     * probe is the native codegen'd `BloomFilterMightContain` — no Scala
     * UDF serialization wall anywhere in the per-row path. */
   val bloomPrefilter: Q = (s, dir) => {
-    BloomFunctions.register(s)
     val sketch = Tables.t(s, dir, "supplier").filter(col("s_acctbal") > 0)
       .select(call_function("bloom_filter_agg",
         xxhash64(col("s_suppkey")), lit(1000L), lit(14378L)).as("bf"))

@@ -387,9 +387,9 @@ object Scalars {
   private val maskOracle: String => String = e =>
     s"regexp_replace(regexp_replace(regexp_replace($e,'[A-Z]','X','g'),'[a-z]','x','g'),'[0-9]','n','g')"
 
-  /** SQL-registered scalar UDFs (spark.udf.register path). */
+  /** SQL-callable scalar UDFs from the function catalog
+    * ([[graft.functions.GapFunctions]]). */
   val fnUdfRegistry: Q = (s, dir) => {
-    GapFunctions.registerAll(s)
     Tables.t(s, dir, "documents").createOrReplaceTempView("documents_udf")
     s.sql(
       """SELECT doc_id,

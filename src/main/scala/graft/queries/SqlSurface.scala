@@ -118,7 +118,7 @@ object SqlSurface {
         |    AS offsets_in_file
         |FROM parquet.`${graft.dir}/lineitem.parquet`""".stripMargin,
     // r17: the §2.4 EWAH index UDAF family as SQL text — runs the actual
-    // registered ewah_bitmap/and/or/empty functions (registerCompat), not
+    // ewah_bitmap/and/or/empty functions of the catalog, not
     // the oracle's COUNT DISTINCT reconstruction, mirroring the builder
     // expression for expression.
     "agg_ewah_bitmap" ->
@@ -784,8 +784,8 @@ object SqlSurface {
         |octet_length(lang) AS olen_v,
         |bit_length(lang) AS blen_v
         |FROM documents WHERE doc_id < 300 ORDER BY doc_id""".stripMargin,
-    // builder: Quality.llmTextNormalize — unicode_normalize comes from the
-    // compat registration (the same JDK Normalizer expression)
+    // builder: Quality.llmTextNormalize — the same unicode_normalize
+    // catalog function (JDK Normalizer expression)
     "llm_text_normalize" ->
       """WITH n AS (SELECT doc_id, text,
         |  trim(regexp_replace(regexp_replace(
@@ -1384,15 +1384,9 @@ object SqlSurface {
     out.toSeq
   }
 
-  /** Library function registrations a SQL-only session needs before the
-    * texts resolve: the [[graft.functions.DuckCompat]] native compat
-    * pack (epoch_us, sha256, string_split, range, quantile_cont, … —
-    * each delegating to Spark's builtin expression builders so codegen
-    * and generator use survive), the custom codegen Expression behind
-    * nfc_normalize, the scalar UDF pair behind fn_udf_registry, and the
-    * ngrams/context_ngrams typed Aggregators as SQL-callable UDAFs —
-    * the CREATE TEMPORARY FUNCTION half of the reference's UDF
-    * lifecycle. Idempotent. */
+  /** The session setting the SQL texts need beyond a graft session's own
+    * (the functions they call come with [[graft.GraftExtensions]]): the
+    * `InferFiltersFromGenerate` exclusion below. */
   def registerCompat(spark: SparkSession): Unit = {
     // The SQL-text path has no persist-barrier defense against
     // InferFiltersFromGenerate (r10/r11: the inferred size(arr) > 0
@@ -1416,17 +1410,6 @@ object SqlSurface {
       .getOrElse(Seq.empty)
     spark.conf.set("spark.sql.optimizer.excludedRules",
       (existing :+ inferRule).distinct.mkString(","))
-    graft.functions.UnicodeNormalize.register(spark)
-    graft.functions.GapFunctions.registerAll(spark)
-    graft.functions.DuckCompat.register(spark)
-    import org.apache.spark.sql.functions.udaf
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    spark.udf.register("ngrams_topk",
-      udaf(new graft.functions.NGramsAgg(2, 20), ExpressionEncoder[Seq[String]]()))
-    spark.udf.register("context_ngrams_topk",
-      udaf(new graft.functions.ContextNGramsAgg(Seq("data"), 10),
-        ExpressionEncoder[Seq[String]]()))
-    graft.functions.EwahBitmap.register(spark)
   }
 
   /** Registered queries deliberately NOT in the SQL surface, each with
@@ -1513,11 +1496,9 @@ object SqlSurface {
       syntax).toMap
   }
 
-  /** Execute one surface query: register the fixture views and the
-    * compat functions/macros, then run the text. */
+  /** Execute one surface query over the fixture views. */
   def run(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    graft.Tables.registerAll(spark, sfDir)
     registerCompat(spark)
-    spark.sql(sql(name))
+    sqlOverViews(spark, sfDir, sql(name))
   }
 }

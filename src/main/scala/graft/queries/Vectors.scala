@@ -42,12 +42,9 @@ object Vectors {
 
   /** Unit-vector prep: adds `nrm` = ‖v‖ to a frame carrying `v`, once per
     * vector, so a cosine costs one [[dot]] per pair
-    * (`dot(a, b) / (nrm_a * nrm_b)`). Registers `dot_product` for
-    * sessions built without [[graft.GraftExtensions]] (idempotent). */
-  private[graft] def withNorm(df: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
+    * (`dot(a, b) / (nrm_a * nrm_b)`). */
+  private[graft] def withNorm(df: DataFrame): DataFrame =
     df.withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-  }
 
   /** Brute-force cosine top-k (oracle baseline; scale path = llm_ann_lsh).
     * Query set is small (20 vecs) and broadcast against all candidates.

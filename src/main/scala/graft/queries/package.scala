@@ -71,11 +71,11 @@ package object queries {
   }
 
   /** Runs one SQL text over the standard fixture views that
-    * [[graft.Tables.registerAll]] registers, as `SqlSurface.run` does —
-    * for the builders whose operation IS a SQL text, so the builder and
-    * its oracle or surface entry run the same text. Registers no compat
-    * functions: `SqlSurface.registerCompat` changes session-wide
-    * optimizer settings. */
+    * [[graft.Tables.registerAll]] registers — `SqlSurface.run`'s path
+    * and the one for the builders whose operation IS a SQL text, so the
+    * builder and its oracle or surface entry run the same text. Changes
+    * no optimizer setting: `SqlSurface.run` adds
+    * `SqlSurface.registerCompat`'s rule exclusion first. */
   def sqlOverViews(s: SparkSession, dir: String, text: String): DataFrame = {
     graft.Tables.registerAll(s, dir)
     s.sql(text)

@@ -231,7 +231,6 @@ class AnnScaleProbeSpec extends SparkSpec {
     // rather than cliffing. Floors are measured-then-pinned
     // (deterministic md5 seed sample, no RNG).
     import org.apache.spark.sql.functions.col
-    graft.functions.VectorExpressions.register(spark)
     val raw = spark.read.parquet(s"$clusteredDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val truth = SparkEntry.queries("llm_cosine_topk")(spark, clusteredDir)
@@ -282,7 +281,6 @@ class AnnScaleProbeSpec extends SparkSpec {
         .sortBy(c => (l2(vecs(q), vecs(c)), c)).take(5).toSet
     }.toMap
     import org.apache.spark.sql.functions.{col, transform}
-    graft.functions.VectorExpressions.register(spark)
     val emb = spark.read.parquet(s"$clusteredDir/embeddings.parquet")
       .select(col("vec_id"),
         transform(col("embedding"), (x: org.apache.spark.sql.Column) => x.cast("double")).as("v"))

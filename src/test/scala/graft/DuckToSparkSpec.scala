@@ -80,7 +80,6 @@ class DuckToSparkSpec extends AnyFunSuite {
 
   test("every surface text is parseable Spark SQL (parse-only, no exec)") {
     val parser = SparkSpec.session.sessionState.sqlParser
-    graft.queries.SqlSurface.registerCompat(SparkSpec.session)
     SparkEntry.sqlQueries.foreach { case (name, text) =>
       try parser.parsePlan(text)
       catch { case e: Throwable =>

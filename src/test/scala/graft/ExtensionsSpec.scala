@@ -9,6 +9,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * resolve by name with no per-query registration. */
 class ExtensionsSpec extends SparkSpec {
 
+  test("function catalog: unique names, each in the session, none a Spark builtin") {
+    val names = GraftExtensions.catalog.map(_._1)
+    assert(names.distinct == names, s"declared twice: ${names.diff(names.distinct)}")
+    val session = spark.sessionState.functionRegistry
+    val builtin = org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
+    names.foreach { n =>
+      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(n)
+      assert(session.functionExists(id), s"$n does not resolve in the session")
+      assert(!builtin.functionExists(id), s"$n shadows a Spark builtin")
+    }
+  }
+
   test("extensions inject dot_product and parse_url_tuple session-wide") {
     val dot = spark.sql("SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .collect().head.getDouble(0)

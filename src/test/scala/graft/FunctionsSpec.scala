@@ -146,7 +146,6 @@ class VectorExpressionsSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
 
   test("dot_product matches the higher-order fold bit-for-bit") {
-    graft.functions.VectorExpressions.register(spark)
     val df = Tables.t(spark, sfDir, "embeddings")
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     val cmp = df.select(
@@ -156,7 +155,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("dot_product nulls and length mismatch propagate like zip_with") {
-    graft.functions.VectorExpressions.register(spark)
     val r = spark.sql(
       """SELECT dot_product(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d)) AS n,
         |       dot_product(array(1.0d, 2.0d), array(3.0d)) AS shorter,
@@ -177,7 +175,6 @@ class UnicodeNormalizeSpec extends SparkSpec {
     spark.range(1).select(c).collect().head.get(0)
 
   test("unicode_normalize composes NFD to NFC and folds NFKC compat") {
-    graft.functions.UnicodeNormalize.register(spark)
     // decomposed e + COMBINING ACUTE -> composed é (one code point)
     assert(one(call_function("unicode_normalize",
       lit("café"), lit("NFC"))) == "café")
@@ -193,7 +190,6 @@ class UnicodeNormalizeSpec extends SparkSpec {
   }
 
   test("unicode_normalize rejects a non-literal form") {
-    graft.functions.UnicodeNormalize.register(spark)
     intercept[Exception] {
       spark.sql("SELECT unicode_normalize('x', lower('NFC' || rand()))")
         .collect()
@@ -201,7 +197,6 @@ class UnicodeNormalizeSpec extends SparkSpec {
   }
 
   test("normTextCol chain: NFC + control strip + whitespace collapse + trim") {
-    graft.functions.UnicodeNormalize.register(spark)
     import spark.implicits._
     val got = Seq("  café  xy\tz \r\n")
       .toDF("text")

@@ -677,6 +677,10 @@ class PlanSpec extends SparkSpec {
     // FileScan-line counts across all 222 texts: ≤ 4.
     spark.catalog.clearCache()
     graft.Tables.registerAll(spark, sfDir)
+    // the surface's optimizer setting, undone below: the shared session
+    // must plan later suites' builders as Bench and Verify do
+    val excluded = "spark.sql.optimizer.excludedRules"
+    val priorExcluded = spark.conf.getOption(excluded)
     graft.queries.SqlSurface.registerCompat(spark)
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
@@ -709,6 +713,9 @@ class PlanSpec extends SparkSpec {
       assert(failures.isEmpty,
         s"${failures.size} SQL-surface plan-class violations:\n  " +
           failures.mkString("\n  "))
-    } finally pool.shutdown()
+    } finally {
+      pool.shutdown()
+      priorExcluded.fold(spark.conf.unset(excluded))(spark.conf.set(excluded, _))
+    }
   }
 }

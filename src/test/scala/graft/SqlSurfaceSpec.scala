@@ -71,6 +71,10 @@ class SqlSurfaceSpec extends SparkSpec {
       selected.filterNot(heavyFirst.contains)
     spark.catalog.clearCache()
     graft.Tables.registerAll(spark, sfDir)
+    // the surface's optimizer setting, undone below: the shared session
+    // must plan later suites' builders as Bench and Verify do
+    val excluded = "spark.sql.optimizer.excludedRules"
+    val priorExcluded = spark.conf.getOption(excluded)
     graft.queries.SqlSurface.registerCompat(spark)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(12)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -106,6 +110,7 @@ class SqlSurfaceSpec extends SparkSpec {
     } finally {
       pool.shutdown()
       spark.catalog.clearCache()
+      priorExcluded.fold(spark.conf.unset(excluded))(spark.conf.set(excluded, _))
     }
   }
 }

@@ -16,7 +16,6 @@ class TextHashExpressionsSpec extends SparkSpec {
     graft.functions.TextHashOps.B2, graft.functions.TextHashOps.B3)
 
   private def corpus: DataFrame = {
-    graft.functions.TextHashFunctions.register(spark)
     val docs = Tables.t(spark, sfDir, "documents").select("doc_id", "text")
     val edge = spark.createDataFrame(Seq(
       (100001L, ""),
