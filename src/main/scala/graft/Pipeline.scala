@@ -23,7 +23,8 @@ import graft.queries.{CorpusStats, Dedup, LmStats, MmFeat, MmRow, Multimodal, Qu
   *    scale-shaped as documented on their cores in
   *    the `graft.queries` family modules: banded/bucketed candidate generation with
   *    hot-bucket caps, two-phase aggregation, O(log d) star-contraction
-  *    clustering, broadcast-sized state joins.
+  *    clustering, and incremental-state joins that broadcast only the
+  *    bounded batch.
   *
   * Cache contract: the dedup/contamination/repetition/chunk operators —
   * and, since r13, [[lmQuality]], [[dsirSelect]], [[ngramJaccard]] and
@@ -103,16 +104,20 @@ object Pipeline {
     * persisted signature state at `statePath` (exact content-hash layer
     * + banded near layer), returning survivor ids; `append = true` folds
     * the survivors' state rows back in so the next batch dedups against
-    * corpus ∪ survivors. Initialize the state with [[writeDedupState]]. */
+    * corpus ∪ survivors. Initialize the state with [[writeDedupState]].
+    * Each batch document is hashed once; the batch is broadcast and the
+    * state streams, so the state may outgrow broadcast range while the
+    * batch stays bounded. */
   def incrementalDedup(spark: SparkSession, batch: DataFrame,
       statePath: String, append: Boolean = true): DataFrame =
     Dedup.incrementalDedupRound(spark, batch, statePath, append)
 
   /** Build and write the initial dedup state (signatures + content
-    * hashes) for a corpus. Output parallelism follows the corpus scan
-    * with a per-file record cap, so a TB-scale corpus lands as many
-    * bounded shards and a fixture corpus as a handful of files — never
-    * the single-reducer bottleneck a coalesce(1) would force at scale. */
+    * hashes) for a corpus: one shuffle-free projection per document, so
+    * output parallelism follows the corpus scan. A per-file record cap
+    * lands a TB-scale corpus as many bounded shards and a fixture corpus
+    * as a handful of files — never the single-reducer bottleneck a
+    * coalesce(1) would force at scale. */
   def writeDedupState(corpus: DataFrame, statePath: String): Unit =
     Dedup.dedupStateOf(corpus)
       .write.mode("overwrite").option("maxRecordsPerFile", 1000000)
@@ -143,8 +148,8 @@ object Pipeline {
 
   /** FULL streaming twin of the incremental-dedup loop — exact AND near
     * layers: each micro-batch runs the same core as [[incrementalDedup]]
-    * (state hash anti-join, band-bucket candidates against the static
-    * state, exact-Jaccard verify), its survivors land in `outPath`
+    * (the static state's hashes and band rows streamed against the
+    * broadcast micro-batch, exact-Jaccard verify), its survivors land in `outPath`
     * (parquet, stamped with the micro-batch id) and, when `append`, fold
     * back into the state so later micro-batches dedup against
     * corpus ∪ earlier survivors.
@@ -174,9 +179,9 @@ object Pipeline {
     * make that last window LOSE the batch's output: the retry
     * anti-joins the batch against its own just-appended hashes and
     * overwrites the partition with nothing.) A double state append in
-    * the middle window duplicates state rows, which is harmless: the
-    * exact layer anti-joins on hash and the near layer's candidates
-    * collapse under its final distinct; compaction is out-of-band
+    * the middle window duplicates state rows, which is harmless: both
+    * layers' matches collapse under the dups' distinct before the
+    * anti-join; compaction is out-of-band
     * ([[writeDedupState]]'s contract). */
   def incrementalDedupStream(stream: DataFrame, statePath: String,
       outPath: String, checkpoint: String, append: Boolean = true)
@@ -185,19 +190,19 @@ object Pipeline {
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (b: DataFrame, id: Long) =>
-        val s = b.sparkSession
-        // survivors vs state-at-batch-start; pinned before any writes
-        val ids = Dedup.incrementalDedupRound(s, b, statePath, append = false)
+        // survivors' state rows vs state-at-batch-start; pinned before
+        // any writes, and the state append writes these same rows
+        val survivors = Dedup.survivorStateOf(b.sparkSession, b, statePath)
           .localCheckpoint()
         // dynamic overwrite scoped to THIS write (DataFrameWriter
         // option, not a session-conf toggle): a conf set/restore here
         // would leak 'dynamic' to any concurrent query on the shared
         // session during the micro-batch, and the restore could clobber
         // a value another thread set meanwhile.
-        ids.withColumn("batch_id", lit(id))
+        survivors.select(col("doc_id")).withColumn("batch_id", lit(id))
           .write.option("partitionOverwriteMode", "dynamic")
           .mode("overwrite").partitionBy("batch_id").parquet(outPath)
-        if (append) Dedup.appendSurvivorState(b, ids, statePath)
+        if (append) Dedup.appendSurvivorState(survivors, statePath)
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()

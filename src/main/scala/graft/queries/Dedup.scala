@@ -156,17 +156,20 @@ object Dedup {
     // (a*sid + b) % P))` passes became ONE native pass over `sh`
     // ([[graft.functions.TextHashOps.minHashSig]] — same seeds, same
     // arithmetic, same array_min null/empty semantics; equivalence pinned
-    // by TextHashExpressionsSpec). `mhs` is a non-cheap alias referenced
-    // 12 times, so CollapseProject keeps the pass in its own projection.
-    val mhCols = seeds.indices.map(i =>
-      element_at(col("mhs"), i + 1).as(s"mh$i"))
+    // by TextHashExpressionsSpec).
     hashed
       .filter(size(col("hs")) >= 3)
       .select(col("doc_id"), shingleSetCol.as("sh"))
       .select(col("doc_id"), col("sh"),
         call_function("minhash_sig", col("sh")).as("mhs"))
-      .select(col("doc_id") +: col("sh") +: mhCols: _*)
+      .select(col("doc_id") +: col("sh") +: minhashCols: _*)
   }
+
+  /** mh0..mh11 from the `minhash_sig` array column `mhs`. `mhs` is a
+    * non-cheap alias referenced 12 times, so CollapseProject keeps the
+    * pass in its own projection. */
+  private def minhashCols: Seq[Column] = seeds.indices.map(i =>
+    element_at(col("mhs"), i + 1).as(s"mh$i"))
 
   /** (band, sig) struct per LSH band, built from mh0..mh11 columns. */
   private def bandStructs: Seq[Column] = (0 until bands).map { j =>
@@ -174,11 +177,13 @@ object Dedup {
       concat_ws("_", (0 until rowsPerBand).map(r => col(s"mh${j * rowsPerBand + r}")): _*).as("sig"))
   }
 
-  /** (doc_id, band, sig) LSH bucket rows from a signature table. */
-  private def bucketsOf(sets: DataFrame): DataFrame =
+  /** (doc_id, carry…, band, sig) LSH bucket rows from a signature table. */
+  private def bucketsOf(sets: DataFrame, carry: String*): DataFrame = {
+    val keep = ("doc_id" +: carry).map(col)
     sets
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.sig").as("sig"))
+      .select(keep :+ explode(array(bandStructs: _*)).as("bk"): _*)
+      .select(keep ++ Seq(col("bk.band").as("band"), col("bk.sig").as("sig")): _*)
+  }
 
   /** Hot-bucket guard: a degenerate (band, sig) bucket with B members
     * yields B² candidate pairs — one templated/boilerplate cluster can
@@ -953,20 +958,20 @@ object Dedup {
 
   /** Incremental dedup — the production shape: a NEW batch (doc_id ≥ 250)
     * dedups against an EXISTING corpus (doc_id < 250), not against itself.
-    * Exact layer: anti-join on content hash. Near layer: minhash band
+    * Exact layer: content-hash matches. Near layer: minhash band
     * buckets computed per side, candidates only where a new doc shares a
     * bucket with a corpus doc, verified by exact sid-set Jaccard ≥ 0.5.
     * Survivors = new docs passing both layers.
     *
     * The corpus side is a PRECOMPUTED artifact, not inline work: its
-    * signature + content-hash tables are built once and persisted as
-    * parquet (the maintained state of a production dedup pipeline — at
-    * 100 TB it's the only viable shape), then every batch run just reads
-    * them back. Only the batch slice is shingled/hashed per run, and the
-    * batch-docs filter is pushed into the documents scan. The corpus
-    * tables are broadcast-sized relative to a batch (here literally
-    * broadcast by AQE), so the bucket join and both anti-joins run
-    * shuffle-free on the corpus side. */
+    * state table (content hash + signature + sid set per doc) is built
+    * once and persisted as parquet (the maintained state of a production
+    * dedup pipeline — at 100 TB it's the only viable shape), then every
+    * batch run just reads it back. Only the batch slice is hashed per
+    * run, once, and the batch-docs filter is pushed into the documents
+    * scan. The batch is the broadcast side and the state streams through
+    * both layers' joins, so the state may grow past broadcast range
+    * (see [[survivorStateOf]]). */
   val llmDedupIncremental: Q = (s, dir) => {
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     // State path is keyed by a fingerprint of the SOURCE data (per-file
@@ -983,7 +988,7 @@ object Dedup {
         srcFile.listFiles().filter(f => f.isFile && !f.getName.startsWith("_"))
           .sortBy(_.getName).toSeq
       else Seq(srcFile)
-    val schemeVersion = "v4" // v4: hash rows for ALL docs (left-join state)
+    val schemeVersion = "v4" // v4: hash rows for ALL docs
     // 64-bit sha-256 prefix (not String.hashCode: 32 bits collide too
     // easily to key correctness-bearing state).
     val srcDigest = java.security.MessageDigest.getInstance("SHA-256")
@@ -1007,8 +1012,8 @@ object Dedup {
     val docs = Tables.t(s, dir, "documents")
     if (!new java.io.File(sigPath, "_SUCCESS").exists()) {
       // One state table: minhash signature + sid set + content hash per
-      // corpus doc. KB-scale state → one file (a TB-scale corpus table
-      // would instead be partitioned/bucketed on the join keys).
+      // corpus doc. KB-scale state → one file (a TB-scale state lands as
+      // many bounded shards; see Pipeline.writeDedupState).
       dedupStateOf(docs.filter(col("doc_id") < 250))
         .coalesce(1).write.mode("overwrite").parquet(sigPath)
     }
@@ -1021,27 +1026,72 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** State-table rows for `docs` — content hash for EVERY doc, minhash
-    * signature + sid set where one exists (docs under 3 words have no
-    * 3-shingle: their signature columns are null and they participate in
-    * the exact layer only). The hash side is a LEFT join base, not an
-    * inner join — an inner join silently dropped short docs from the
-    * state, so an exact byte-for-byte copy of a short doc was never
-    * deduplicated (the DuckDB oracle always hashed every doc; the join
-    * direction here was the divergent side, latent only because the
-    * fixtures carry no short docs). */
   /** The exact-dedup content hash — ONE definition for the state table,
     * the batch exact layer, and the streaming twin in [[graft.Pipeline]];
     * a scheme change lands everywhere or the join keys stop matching. */
   private[graft] def contentHashCol: Column = sha2(col("text"), 256)
 
+  /** State-table rows for `docs`, one per input row: content hash for
+    * EVERY doc, minhash signature + sid set where one exists (docs under
+    * 3 words have no 3-shingle: their `sh` and `mh*` columns are null and
+    * they participate in the exact layer only — an exact byte-for-byte
+    * copy of a short doc must still dedup). One projection, one pass per
+    * document: `hs` and `sh` are non-cheap aliases referenced twice or
+    * more, so CollapseProject keeps each in its own step and the md5 word
+    * hashes run once per row. `minhash_sig` passes a NULL `sh` through,
+    * so NULL text also yields a hash-only row. */
   private[graft] def dedupStateOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), contentHashCol.as("h"))
-      .join(signaturesOf(docs), Seq("doc_id"), "left")
+    docs.select(col("doc_id"), contentHashCol.as("h"), wordHashCol.as("hs"))
+      .select(col("doc_id"), col("h"),
+        when(size(col("hs")) >= 3, shingleSetCol).as("sh"))
+      .select(col("doc_id"), col("h"), col("sh"),
+        call_function("minhash_sig", col("sh")).as("mhs"))
+      .select(Seq(col("doc_id"), col("h"), col("sh")) ++ minhashCols: _*)
+
+  /** The state rows of `batch`'s survivors against the state at
+    * `statePath`: exact content-hash layer + banded minhash near layer
+    * (Jaccard ≥ 0.5). Lazy over the state; the batch's own state rows are
+    * computed once and pinned, and every layer (and the append) reads
+    * that checkpoint. The pin is also the boundary that keeps the
+    * md5/shingle/minhash chain out of any scan filter: the band explode
+    * below sits over checkpointed rows, so there is no projection chain
+    * for inferred filters to substitute down to a scan.
+    *
+    * Only the batch is broadcast — the incremental contract bounds it —
+    * and the state, the side that grows every round, streams once per
+    * layer through the broadcast joins: its hashes against the batch
+    * hashes, its signature-bearing band rows (with `sh` carried) against
+    * the batch band rows. Survivors are the batch rows minus those dups.
+    * The dups are batch-bounded but come out of the state stream, so
+    * that last anti-join is a shuffled hash join: no table derived from
+    * the state is ever broadcast. */
+  private[graft] def survivorStateOf(s: org.apache.spark.sql.SparkSession,
+      batch: DataFrame, statePath: String): DataFrame = {
+    val rows = dedupStateOf(batch).localCheckpoint()
+    // the schema is the batch's own state schema: no inference job over
+    // the state's growing file list
+    val state = s.read.schema(rows.schema).parquet(statePath)
+    // Signature-bearing rows only for the NEAR layer: short docs carry
+    // null signature columns, and letting them through would concat_ws
+    // null minhashes into a shared "" band signature — fabricating one
+    // giant bucket of all short docs.
+    def bandRows(df: DataFrame) = bucketsOf(df.filter(col("mh0").isNotNull), "sh")
+    val exactDups = state.select(col("h"))
+      .join(broadcast(rows.select(col("doc_id"), col("h"))), "h")
+      .select(col("doc_id"))
+    val nearDups = bandRows(state)
+      .select(col("band"), col("sig"), col("sh").as("sh_c"))
+      .join(broadcast(bandRows(rows)), Seq("band", "sig"))
+      .withColumn("ni", size(array_intersect(col("sh"), col("sh_c"))))
+      .filter(col("ni") * lit(1.0) /
+        (size(col("sh")) + size(col("sh_c")) - col("ni")) >= 0.5)
+      .select(col("doc_id"))
+    val dups = exactDups.union(nearDups).distinct()
+    rows.join(dups.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
+  }
 
   /** One round of the production incremental-dedup loop: dedup `batch`
-    * (doc_id, text) against the persisted state at `statePath` (exact
-    * content-hash layer + banded minhash near layer, Jaccard ≥ 0.5),
+    * (doc_id, text) against the persisted state at `statePath` and
     * return the survivor ids — and, when `append`, fold the survivors'
     * state rows back into `statePath` so the NEXT batch dedups against
     * corpus ∪ survivors(batch₁) ∪ … (the shape a production pipeline
@@ -1050,76 +1100,29 @@ object Dedup {
     * out of scope here — that is the self-dedup operators' job
     * ([[llmExactDedup]] / [[minhashDupPairs]]), run per batch upstream.
     *
-    * Scale notes as [[llmDedupIncremental]]: the state side is
-    * broadcast-sized relative to a batch, so the bucket join and both
-    * anti-joins run shuffle-free on the state side; past broadcast range
-    * flip to llmMinhashLsh's id-only bucket-join shape. The append write
-    * localCheckpoints the survivor ids first — the write would otherwise
-    * plan a read of the very path it appends to. */
+    * Scale notes at [[survivorStateOf]]: the batch broadcasts and the
+    * state streams. The append pins the survivor rows first, so the
+    * survivor set is decided before the state gains this batch's rows
+    * and the write does not plan a read of the path it appends to. */
   private[graft] def incrementalDedupRound(s: org.apache.spark.sql.SparkSession,
       batch: DataFrame, statePath: String, append: Boolean): DataFrame = {
-    val corpusAll = s.read.parquet(statePath)
-    // Signature-bearing state rows only for the NEAR layer: short docs
-    // carry null signature columns (see dedupStateOf), and letting them
-    // through would concat_ws null minhashes into a shared "" band
-    // signature — fabricating one giant bucket of all short docs. The
-    // exact layer below uses the UNFILTERED hash column, so short docs
-    // still dedup byte-for-byte.
-    val corpusSets = corpusAll.filter(col("mh0").isNotNull)
-    // exact layer: batch docs whose content hash is unseen in the state
-    val exactSurvivors = batch
-      .select(col("doc_id"), contentHashCol.as("h"))
-      .join(corpusAll.select(col("h")), Seq("h"), "left_anti")
-      .select(col("doc_id"))
-    // Near layer: the batch streams once through a broadcast join against
-    // the state bucket table; the sid set rides along (free under a
-    // broadcast — the batch side never shuffles), so no persist/second
-    // pass over the batch is needed. Verification happens per candidate
-    // row, duplicates collapsed by the final distinct on doc_id alone.
-    //
-    // The batch side is signaturesOf DIRECTLY, not dedupStateOf: the
-    // state-row left join belongs only in the append write below.
-    // Exploding band structs above filter(mh0 notNull)-over-the-join let
-    // InferFiltersFromGenerate substitute the inferred not-null filters
-    // through the join into the signature projection — recomputing the
-    // md5/shingle/minhash chain at the scan, the SAME pushdown pathology
-    // as llmContamination's (measured: 46 s at sf0.1 in that shape vs
-    // ~1.1 s in this one; signaturesOf output is signature-bearing by
-    // construction, so the join bought nothing the near layer needed).
-    val nearDups = signaturesOf(batch)
-      .select(col("doc_id"), col("sh"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("doc_id"), col("sh"), col("bk.band").as("band"), col("bk.sig").as("sig"))
-      .join(bucketsOf(corpusSets).withColumnRenamed("doc_id", "corpus_id"),
-        Seq("band", "sig"))
-      .join(corpusSets.select(col("doc_id").as("corpus_id"), col("sh").as("sh_c")),
-        "corpus_id")
-      .withColumn("ni", size(array_intersect(col("sh"), col("sh_c"))))
-      .filter(col("ni") * lit(1.0) /
-        (size(col("sh")) + size(col("sh_c")) - col("ni")) >= 0.5)
-      .select(col("doc_id")).distinct()
-    val survivors = exactSurvivors.join(nearDups, Seq("doc_id"), "left_anti")
-    if (!append) survivors
+    val survivors = survivorStateOf(s, batch, statePath)
+    if (!append) survivors.select(col("doc_id"))
     else {
-      // materialize the id list so the append's write plan no longer
-      // references statePath (and the survivor set is decided BEFORE the
-      // state gains this batch's rows)
-      val ids = survivors.localCheckpoint()
-      appendSurvivorState(batch, ids, statePath)
-      ids
+      val pinned = survivors.localCheckpoint()
+      appendSurvivorState(pinned, statePath)
+      pinned.select(col("doc_id"))
     }
   }
 
-  /** Fold `survivorIds`' state rows back into `statePath` — the
-    * state-append half of the incremental-dedup loop, shared by the
-    * batch round above and the streaming twin (which must sequence it
-    * AFTER its output commit; see [[graft.Pipeline.incrementalDedupStream]]).
-    * The state-row left join runs only here, in the write job — no
-    * explode above it, so the pushdown pathology documented on the near
-    * layer cannot reach it. */
-  private[graft] def appendSurvivorState(batch: DataFrame,
-      survivorIds: DataFrame, statePath: String): Unit =
-    dedupStateOf(batch).join(survivorIds, Seq("doc_id"), "left_semi")
-      .coalesce(1).write.mode("append").parquet(statePath)
+  /** Fold pinned survivor state rows (a localCheckpoint of
+    * [[survivorStateOf]]) into `statePath` — the state-append half of the
+    * incremental-dedup loop, shared by the batch round above and the
+    * streaming twin (which must sequence it AFTER its output commit; see
+    * [[graft.Pipeline.incrementalDedupStream]]). */
+  private[graft] def appendSurvivorState(survivors: DataFrame,
+      statePath: String): Unit =
+    survivors.coalesce(1).write.mode("append").parquet(statePath)
 
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)

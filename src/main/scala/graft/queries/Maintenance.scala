@@ -94,14 +94,11 @@ object Maintenance {
         coalesce(col("u_price"), col("o_totalprice")).as("o_totalprice"))
       .unionByName(inserts)
 
-    val saved = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.repartition(col("o_orderstatus"))
-      .write.mode("overwrite").partitionBy("o_orderstatus").parquet(targetPath)
-    finally saved match {
-      case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // dynamic overwrite scoped to this write (DataFrameWriter option, not
+    // a session-conf toggle that would leak to concurrent queries)
+    merged.repartition(col("o_orderstatus"))
+      .write.option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite").partitionBy("o_orderstatus").parquet(targetPath)
   }
 
   /** Materialized view build → use → rebuild (parser KWs

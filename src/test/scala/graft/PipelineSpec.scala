@@ -79,6 +79,60 @@ class PipelineSpec extends SparkSpec {
     assert(surv === Set(11L))
   }
 
+  /** Jobs started by `body` on this thread (and the broadcast and AQE
+    * stage threads that inherit its local properties). A sentinel job
+    * flushes the listener bus: events arrive in order, so once the
+    * sentinel's start is seen every job of `body` has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.jobcount"
+    val tag = java.util.UUID.randomUUID.toString
+    val counted = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some(`tag`) => counted.incrementAndGet()
+          case Some(t) if t == s"$tag-flush" => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      body
+      sc.setLocalProperty(key, s"$tag-flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not flush")
+      counted.get
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("dedup state write and one incremental round stay within their job budgets") {
+    // Load-independent pins for the one-pass state shape: the state write
+    // is one projection (no self-join stage), and a round hashes its
+    // batch once, broadcasts only the batch and appends the rows it
+    // already pinned.
+    val fixture = Tables.t(spark, sfDir, "documents").select("doc_id", "text")
+    val statePath = java.nio.file.Files
+      .createTempDirectory("graft_pipe_jobs").toFile.getAbsolutePath + "/st"
+    val writeJobs = jobsOf(
+      Pipeline.writeDedupState(fixture.filter(col("doc_id") < 250), statePath))
+    assert(writeJobs <= 1, s"writeDedupState ran $writeJobs jobs")
+    var ids: org.apache.spark.sql.DataFrame = null
+    val roundJobs = jobsOf {
+      ids = Pipeline.incrementalDedup(spark, fixture.filter(col("doc_id") >= 250),
+        statePath, append = true)
+    }
+    assert(roundJobs <= 9, s"one incremental round ran $roundJobs jobs before its collect")
+    assert(ids.count() > 0)
+    Pipeline.releaseCaches(spark)
+  }
+
   test("contamination, repetition, dupChunks, sourceStats run on caller frames") {
     val contam = Pipeline.contamination(docs.select("doc_id", "text"),
       id => id === 1L).collect()

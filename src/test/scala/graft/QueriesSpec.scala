@@ -677,6 +677,28 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
+  test("dedup state has one row per input row, each hashed from its own text") {
+    import spark.implicits._
+    // A repeated doc_id must not cross its rows' hashes and signatures:
+    // each state row's h and mh0 come from that row's own text.
+    val texts = Seq(
+      "the quick brown fox jumps over the lazy dog today",
+      "completely different text about spark shuffles and joins",
+      "hi there")
+    val docs = texts.map(7L -> _).toDF("doc_id", "text")
+    val got = graft.queries.Dedup.dedupStateOf(docs).collect()
+      .map(r => (r.getAs[String]("h"), Option(r.getAs[java.lang.Long]("mh0")).map(_.longValue)))
+    val want = texts.map { t =>
+      val one = Seq(1L -> t).toDF("doc_id", "text")
+      val mh0 = graft.queries.Dedup.signaturesOf(one).select("mh0").collect()
+        .headOption.map(_.getLong(0))
+      (one.select(sha2(col("text"), 256)).head.getString(0), mh0)
+    }
+    assert(got.length === texts.length)
+    assert(got.toSet === want.toSet)
+    assert(want.count(_._2.isEmpty) === 1, "the 2-word doc keeps a hash-only row")
+  }
+
   test("incremental dedup folds batch survivors back into the corpus state") {
     import spark.implicits._
     // Two-batch production loop: batch2 must drop duplicates OF BATCH-1
