@@ -92,12 +92,10 @@ object Bench {
       val times =
         if (first.exists(_ < 0) || median(first) >= 0.5 || repeats != 3) first
         else first ++ Seq(once(), once())
-      // Release this query's persisted intermediates before the next one:
-      // several queries persist (doc_id, gram/sid) frames that nothing
-      // unpersists (the load-bearing cache barriers in contaminationOf /
-      // repetitionOf / dupChunksOf / llmNgramJaccard / minhashDupPairs),
-      // so without this every such query leaves MEMORY_AND_DISK entries
-      // in the CacheManager for the rest of the session. Clearing BETWEEN
+      // Release this query's cached intermediates before the next one:
+      // operators pin frames (`pin`) and checkpoint lineage (`ckpt`)
+      // that nothing unpersists, so without this every such query leaves
+      // its blocks behind for the rest of the session. Clearing BETWEEN
       // queries (not between repeats) bounds the accumulation to one
       // query's caches while keeping per-repeat semantics identical to
       // prior rounds (repeats 2+ reuse the canonical-plan cache entry, so

@@ -26,22 +26,16 @@ import graft.queries.{CorpusStats, Dedup, LmStats, MmFeat, MmRow, Multimodal, Qu
   *    clustering, and incremental-state joins that broadcast only the
   *    bounded batch.
   *
-  * Cache contract: the dedup/contamination/repetition/chunk operators —
-  * and, since r13, [[lmQuality]], [[dsirSelect]], [[ngramJaccard]] and
-  * [[minhashCandidatePairs]] — materialize small id/bucket-only
-  * intermediates via `persist` (load-bearing barriers against a
-  * filter-pushdown recompute pathology and against multi-consumer
-  * re-hashing — measured, see [[graft.queries.Dedup]]), and the
-  * iterative operators ([[connectedComponents]], [[nearDupClusters]],
-  * [[semDedupClusters]], [[clusterSample]]) additionally leave
-  * RDD-level `localCheckpoint()` blocks that `spark.catalog
-  * .clearCache()` alone never frees (it empties only the Dataset
-  * CacheManager). Nothing unpersists either kind when your terminal
-  * action completes. Long-lived sessions invoking these in a loop
-  * should call [[releaseCaches]] between invocations, as graft's own
-  * Bench, Verify, Profile, PlanDump and SurfaceProbe mains do between queries — a bare
-  * `clearCache()` is NOT sufficient for the checkpointing operators
-  * and accumulates block-manager blocks without bound.
+  * Cache contract: operators pin their multi-consumed intermediates
+  * through `graft.queries.pin` (a MEMORY_AND_DISK persist with one eager
+  * count) and cut iterative lineage through `graft.queries.ckpt`, whose
+  * local form leaves RDD-level `localCheckpoint()` blocks that
+  * `spark.catalog.clearCache()` alone never frees (it empties only the
+  * Dataset CacheManager). Nothing unpersists either kind when your
+  * terminal action completes. Long-lived sessions invoking operators in
+  * a loop should call [[releaseCaches]], which frees both, between
+  * invocations, as graft's own Bench, Verify, Profile, PlanDump and
+  * SurfaceProbe mains do between queries.
   */
 object Pipeline {
 

@@ -640,10 +640,10 @@ object CorpusStats {
       // counts, the both-slices membership frame) re-derive this
       // distinct frame; below it sits an exchange, but the consumers'
       // differing projections break canonical equality for stage reuse
-      // (the lm_kn measured case), so the cache barrier wins.
+      // (the lm_kn measured case), so the cache barrier wins. A bare
+      // persist, not `pin`: the parity gate below is its eager action.
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Eager materialization (concurrent consumers race the cache), doubled
-    // as the precondition gate (r19 ADVICE): the documented all-one-parity
+    // The precondition gate (r19 ADVICE): the documented all-one-parity
     // edge used to fail DIFFERENTLY per engine — the Spark crossJoin of an
     // empty slice frame emits zero rows while the DuckDB oracle's scalar
     // subqueries emit one row of NULLs. Fail loudly instead, the

@@ -326,13 +326,10 @@ object Dedup {
     * edge list shared by `llm_minhash_lsh` and the cluster builder. */
   private[graft] def minhashDupPairs(docs: DataFrame): DataFrame = {
     // One row per doc: signature + sid set. Feeds three consumers (buckets
-    // + both sides of the verification join); persisted so the corpus scan
+    // + both sides of the verification join); pinned so the corpus scan
     // happens once — the checkpointed intermediate a production dedup
-    // pipeline materializes anyway (MEMORY_AND_DISK spills, never OOMs).
-    val sets = signaturesOf(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sets.count() // eager: downstream stages run concurrently and would
-                 // otherwise race to populate the cache, tripling the work
+    // pipeline materializes anyway.
+    val sets = signaturesOf(docs).transform(pin)
     val cand = minhashCandidates(sets)
     val sh = sets.select(col("doc_id"), col("sh"))
     // |A∪B| = |A|+|B|-|A∩B|: one intersect per pair, never a union array
@@ -353,7 +350,7 @@ object Dedup {
     * through the bucket self-join; verification stages re-join features
     * by id. At 100 TB this is the difference between shuffling doc
     * contents 4x and 16-byte rows. Callers own the persistence of
-    * `sets` (both registered consumers persist+count it — the cache
+    * `sets` (both registered consumers [[pin]] it — the cache
     * barrier against the filter-pushdown recompute pathology). */
   private[graft] def minhashCandidates(sets: DataFrame): DataFrame = {
     val buckets = capBuckets(bucketsOf(sets), maxBucket)
@@ -386,9 +383,7 @@ object Dedup {
     // the cache's fattest column (it scales with doc length where the 12
     // mh longs are fixed); caching it inflated the materialization job
     // and every single-task consumer scan of the 1-partition cache
-    val sets = signaturesOf(docs).drop("sh")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sets.count()
+    val sets = signaturesOf(docs).drop("sh").transform(pin)
     minhashCandidates(sets)
   }
 
@@ -407,9 +402,8 @@ object Dedup {
     * LSH dedup already pays; per-pair work is two 12-element array
     * folds and one set intersect; output is ONE row. */
   private[graft] def minhashCalibrationOf(docs: DataFrame): DataFrame = {
-    val sets = signaturesOf(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sets.count() // eager: bucket join + both feature joins share it
+    // bucket join + both feature joins share it
+    val sets = signaturesOf(docs).transform(pin)
     val feat = sets.select(col("doc_id"), col("sh"),
       array((0 until bands * rowsPerBand).map(i => col(s"mh$i")): _*).as("mhs"))
     minhashCandidates(sets)
@@ -451,8 +445,7 @@ object Dedup {
       .select(col("doc_id"), wordHashCol.as("hs"))
       .filter(size(col("hs")) >= 4)
       .select(col("doc_id"), explode(hashGramCol(4)).as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    grams.count() // eager: two consumers would race the cache
+      .transform(pin)
     val first = grams.groupBy("g").agg(min("doc_id").as("first_doc"))
     grams.join(first, "g")
       .groupBy("doc_id")
@@ -476,9 +469,7 @@ object Dedup {
     // its anti-join probe side would otherwise EACH recompute the full
     // signature projection (md5 word hashes + shingles + 12 minhashes)
     // — measured 2.7 s at sf0.1 un-persisted, ~1.3 s with the barrier.
-    val b = bucketsOf(signaturesOf(Tables.t(s, dir, "documents")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    b.count() // eager, same cache-race rationale as llmMinhashLsh
+    val b = bucketsOf(signaturesOf(Tables.t(s, dir, "documents"))).transform(pin)
     capBuckets(b, 2)
       .select(col("band"), col("sig"), col("doc_id"))
       .orderBy("band", "sig", "doc_id")
@@ -728,9 +719,7 @@ object Dedup {
     * sizes — shuffling only (doc, gram-id) long pairs for the
     * intersection, never bigram strings. */
   private[graft] def ngramJaccardOf(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val hashed = hashedWordsOf(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    hashed.count() // eager for the same cache-race reason as llmMinhashLsh
+    val hashed = hashedWordsOf(docs).transform(pin)
     ngramJaccardFromHashed(hashed, pairs)
   }
 
@@ -778,8 +767,7 @@ object Dedup {
 
   /** The shared-persist shape behind every verified-candidate operator:
     * `verify(hashed, candidates)` over one [[hashedWordsOf]] persist and
-    * the LSH candidates of a persisted signature frame, both
-    * materialized eagerly (concurrent consumers would race the caches).
+    * the LSH candidates of a signature frame, both [[pin]]ned.
     * r22: `sh` is projected OUT before the signature persist — the
     * candidate join's three consumers read only the (doc_id, mh*) band
     * columns, and the shingle array is the cache's fattest column (it
@@ -789,12 +777,8 @@ object Dedup {
     * from `hashed`, never from sh. */
   private[queries] def verifiedCandidates(docs: DataFrame)(
       verify: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val hashed = hashedWordsOf(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    hashed.count()
-    val sets = signaturesFromHashed(hashed).drop("sh")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sets.count()
+    val hashed = hashedWordsOf(docs).transform(pin)
+    val sets = signaturesFromHashed(hashed).drop("sh").transform(pin)
     verify(hashed, minhashCandidates(sets))
   }
 
@@ -1209,8 +1193,7 @@ object Dedup {
       .select(col("doc_id"), wordHashCol.as("hs"))
       .filter(size(col("hs")) >= 4)
       .select(col("doc_id"), gram4.as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    g.count() // eager, same cache-race rationale as llmNgramJaccard
+      .transform(pin)
     val evalGrams = g.filter(isEval(col("doc_id")))
       .select(explode(col("g")).as("gm")).distinct()
     val corpus = g.filter(!isEval(col("doc_id")))
@@ -1294,8 +1277,7 @@ object Dedup {
       .select(col("doc_id"), size(col("hs")).as("n_words"),
         size(array_distinct(col("hs"))).as("n_distinct"),
         bigram.as("bg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count() // eager, same cache-race rationale as llmNgramJaccard
+      .transform(pin)
     val topBigram = base
       .select(col("doc_id"), explode(col("bg")).as("g"))
       .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
@@ -1345,8 +1327,7 @@ object Dedup {
     val base = docs
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .select(col("doc_id"), array_distinct(chunks).as("ch"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count() // eager, same cache-race rationale as llmNgramJaccard
+      .transform(pin)
     val byChunk = base.select(explode(col("ch")).as("h"))
       .groupBy("h").agg(count(lit(1)).as("n_docs"))
     base.select(col("doc_id"), size(col("ch")).as("n_chunks"),
@@ -1385,8 +1366,7 @@ object Dedup {
     val base = docs
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .select(col("doc_id"), chunkCol(20).as("ch"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count() // eager, same cache-race rationale as llmNgramJaccard
+      .transform(pin)
     val occurrences = base.select(col("doc_id"),
       posexplode(col("ch")).as(Seq("idx", "chunk")))
       .withColumn("h", md5(col("chunk")))
@@ -1445,8 +1425,7 @@ object Dedup {
       .withColumn("hs", call_function("word_hashes", col("ws")))
       .withColumn("fl", call_function("cdc_flags", col("hs")))
       .select(col("doc_id"), col("ws"), col("fl"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count() // eager, same cache-race rationale as llmNgramJaccard
+      .transform(pin)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("pos")
     val chunks = base
@@ -1466,8 +1445,7 @@ object Dedup {
       // second barrier (plan audit): byChunk's DISTINCT rewrites the
       // pre-exchange subtree, so AQE stage reuse can't dedup it and the
       // unbarriered plan ran the explode+window+collect chain TWICE
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    chunks.count() // eager: two consumers would race the cache
+      .transform(pin)
     val byChunk = chunks.select("doc_id", "h").distinct()
       .groupBy("h").agg(count(lit(1)).as("n_docs"))
     chunks.join(byChunk, "h")
@@ -1722,10 +1700,8 @@ object Dedup {
       // the slice-and-join string materialization — without the barrier
       // the gram pass runs twice. A/B (7-repeat sf0.1 micros, 2 runs
       // each): persisted [0.971, 0.888, —] / [1.181, 1.100, —] vs
-      // recompute [1.884, 1.724, —] / [1.764, …]. Eager count() per the
-      // multi-consumer race rule.
-      .persist()
-    grams.count()
+      // recompute [1.884, 1.724, —] / [1.764, …].
+      .transform(pin)
     val stats = grams.groupBy("g")
       .agg(count(lit(1)).as("cnt"),
         min(struct(col("doc_id"), col("p"))).as("firstocc"))
@@ -1772,9 +1748,7 @@ object Dedup {
     * shuffled to re-fetch corpus shingle sets. */
   private[graft] def fuzzyContaminationOf(docs: DataFrame,
       isEval: Column => Column): DataFrame = {
-    val sets = signaturesOf(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sets.count() // eager, same cache-race rationale as llmMinhashLsh
+    val sets = signaturesOf(docs).transform(pin)
     val buckets = capBuckets(bucketsOf(sets), maxBucket)
     val cand = buckets.filter(!isEval(col("doc_id"))).alias("c")
       .join(broadcast(buckets.filter(isEval(col("doc_id"))).alias("e")),

@@ -107,18 +107,16 @@ object Graph {
     * exchange below → nothing for AQE stage reuse to dedup) consumed
     * once per iteration — unpersisted, the executed plan re-scans the
     * corpus 11× for 5 pagerank iterations (the catalogued
-    * multi-consumed-projection barrier rule). Eager count: concurrent
-    * iteration stages would race the cache population. N rides as a
+    * multi-consumed-projection barrier rule). N rides as a
     * broadcast-joined column: no driver-side collect at any corpus
     * size. */
   private def linkGraph(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val ids = Tables.t(s, dir, "documents").select(col("doc_id"))
     val nDf = ids.agg(count(lit(1)).cast("double").as("n"))
+    // a bare persist, not `pin`: its cache fills inside edges' eager count
     val base = ids.crossJoin(broadcast(nDf))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edges = linksOf(base)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    edges.count()
+    val edges = linksOf(base).transform(pin)
     (base, edges)
   }
 
@@ -251,8 +249,7 @@ object Graph {
     val edges = simpleEdges(raw)
       // consumed 4x (two wedge sides, the anti-join, degrees) — pure
       // projection below, the catalogued multi-consumer barrier
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    edges.count()
+      .transform(pin)
     val und = symmetric(edges)
     val deg = und.groupBy("u").agg(count(lit(1)).as("d"))
     val common = und.select(col("u"), col("v").as("m"))
@@ -302,8 +299,7 @@ object Graph {
     val und = symmetric(edges)
       // consumed once per round over a pure projection chain — the
       // catalogued multi-consumer barrier (same rationale as linkpred)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count()
+      .transform(pin)
     val wBest = org.apache.spark.sql.expressions.Window
       .partitionBy("u").orderBy(col("c").desc, col("lbl"))
     var lab = ids.select(col("doc_id").as("v"), col("doc_id").as("lbl"))
@@ -450,9 +446,7 @@ object Graph {
     // tasks per round), but it measured WORSE same-window (kcore
     // 6.44/4.73 vs 4.93/4.34 [med/min]) — the wider distinct costs more
     // than the halved task count saves. Negative result recorded.
-    val und = symmetric(simpleEdges(raw))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count()
+    val und = symmetric(simpleEdges(raw)).transform(pin)
     var alive = und.select(col("u")).distinct()
     for (_ <- 1 to 4) {
       alive = ckpt(und
@@ -488,9 +482,7 @@ object Graph {
     * join, never a driver-side set. */
   val bfs: Q = (s, dir) => {
     val (ids, _, raw) = docLinks(s, dir)
-    val und = symmetric(simpleEdges(raw))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count()
+    val und = symmetric(simpleEdges(raw)).transform(pin)
     var dist = ids.filter(col("doc_id") < 3)
       .select(col("doc_id").as("u"), lit(0).as("d"))
     for (_ <- 1 to 4) {
@@ -527,9 +519,7 @@ object Graph {
     * as doubles and rounds at 1e-6. */
   val harmonicCentrality: Q = (s, dir) => {
     val (ids, _, raw) = docLinks(s, dir)
-    val und = symmetric(simpleEdges(raw))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count()
+    val und = symmetric(simpleEdges(raw)).transform(pin)
     val seeds = ids
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
       .limit(5).select(col("doc_id").as("sd"))
@@ -579,9 +569,7 @@ object Graph {
     * the final per-node score rounds at 1e-6. */
   val betweennessSampled: Q = (s, dir) => {
     val (ids, _, raw) = docLinks(s, dir)
-    val und = symmetric(simpleEdges(raw))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count()
+    val und = symmetric(simpleEdges(raw)).transform(pin)
     val seeds = ids
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
       .limit(5).select(col("doc_id").as("sd"))
@@ -672,9 +660,7 @@ object Graph {
     * oracle. */
   val clusteringCoeff: Q = (s, dir) => {
     val (_, _, raw) = docLinks(s, dir)
-    val edges = simpleEdges(raw)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    edges.count()
+    val edges = simpleEdges(raw).transform(pin)
     val wedges = edges.as("e1")
       .join(edges.select(col("a").as("b"), col("b").as("c")).as("e2"), "b")
       .select(col("a"), col("b"), col("c"))

@@ -34,21 +34,15 @@ object LmStats {
 
   private[queries] val vocabBucketSql: String = "('0x' || substr(md5(w), 1, 4))::BIGINT"
 
-  /** (doc_id, b) vocab-bucket occurrences of `docs`' words, persisted
-    * and materialized eagerly (concurrent consumers would race the
-    * cache). Persist barrier: each consumer (bucket-count agg + scoring
-    * join) would otherwise recompute the per-occurrence md5 — a pure
-    * projection, so there is no exchange for ReuseExchange to dedup (the
-    * same measured rule as ngramJaccardOf's gram sets); 16 bytes/row,
-    * MEMORY_AND_DISK. */
-  private[queries] def bucketedWords(docs: DataFrame): DataFrame = {
-    val words = docs
+  /** (doc_id, b) vocab-bucket occurrences of `docs`' words, [[pin]]ned:
+    * each consumer (bucket-count agg + scoring join) would otherwise
+    * recompute the per-occurrence md5 — a pure projection, so there is
+    * no exchange for ReuseExchange to dedup (the same measured rule as
+    * ngramJaccardOf's gram sets); 16 bytes/row. */
+  private[queries] def bucketedWords(docs: DataFrame): DataFrame =
+    pin(docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .select(col("doc_id"), vocabBucket(col("w")).as("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    words.count()
-    words
-  }
+      .select(col("doc_id"), vocabBucket(col("w")).as("b")))
 
   /** Per-occurrence surprise (doc_id, bits): −log₂ p(w) as the integer
     * bits(corpus total) − bits(bucket count), over [[bucketedWords]] —
@@ -96,8 +90,7 @@ object LmStats {
       .select(col("doc_id").as("pair_id"), col("ws").as("rws"))
       .join(w.select((col("doc_id") - 1).as("pair_id"), col("ws").as("cws")),
         "pair_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count() // eager: the five consumers would race the cache
+      .transform(pin)
     def grams(c: Column, n: Int): Column =
       if (n == 1) c
       else when(size(c) >= n, transform(sequence(lit(1), size(c) - (n - 1)),
@@ -232,8 +225,7 @@ object LmStats {
       .select(col("doc_id"),
         vocabBucket(col("p.wp")).as("bp"),
         vocabBucket(concat(col("p.wp"), lit("_"), col("p.wc"))).as("bb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count() // eager: concurrent consumers would race the cache
+      .transform(pin)
     val freqU = docs
       .select(explode(split(col("text"), " ")).as("w"))
       .select(vocabBucket(col("w")).as("bp"))
@@ -875,8 +867,7 @@ object LmStats {
       // global count, the final join) pruning breaks canonical equality
       // for at least one, so the exchange is not reused everywhere and
       // the cache barrier wins here.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    big.count() // eager: four consumers would race the cache
+      .transform(pin)
     val ctx = big.groupBy("w1")
       .agg(sum("c").as("cw1"), count(lit(1)).as("n1f"))
     val cont = big.groupBy("w2").agg(count(lit(1)).as("n1b"))
@@ -1181,8 +1172,7 @@ object LmStats {
       // side both consume this explode projection; the consumers'
       // shapes differ enough that exchange reuse cannot dedup them
       // (the lm_kn measured precedent).
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    big.count() // eager: concurrent consumers would race the cache
+      .transform(pin)
     val c12 = big.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     val c1 = c12.groupBy("w1").agg(sum(col("c12")).as("c1"))
     val cu = c12.groupBy("w2").agg(sum(col("c12")).as("cu"))
@@ -1289,8 +1279,8 @@ object LmStats {
       .groupBy("w").agg(count(lit(1)).as("wc"))
       .select(col("wc"),
         regexp_replace(col("w"), "(.)", s"$bpeOpen$$1$bpeClose").as("s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    vocab.count() // eager: every iteration's job re-reads this base
+      // every iteration's job re-reads this base
+      .transform(pin)
     val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
     var cur = vocab
     var step = 1

@@ -73,13 +73,14 @@ object Maintenance {
     * Schemas: target at `targetPath` = (o_orderkey, o_orderstatus,
     * o_totalprice) partitioned by o_orderstatus; `updates` =
     * (o_orderkey, u_price); `deletes` = (o_orderkey); `inserts` = full
-    * target schema. DELETE precedes UPDATE on overlap (Hive MERGE clause
-    * order). */
+    * target schema, so the target is read with it (a bare parquet read
+    * spends a job inferring the schema). DELETE precedes UPDATE on
+    * overlap (Hive MERGE clause order). */
   def cowMerge(s: org.apache.spark.sql.SparkSession, targetPath: String,
       updates: org.apache.spark.sql.DataFrame,
       deletes: org.apache.spark.sql.DataFrame,
       inserts: org.apache.spark.sql.DataFrame): Unit = {
-    val target = s.read.parquet(targetPath)
+    val target = s.read.schema(inserts.schema).parquet(targetPath)
     val touched = target
       .join(updates.select("o_orderkey").union(deletes), "o_orderkey")
       .select("o_orderstatus")

@@ -427,12 +427,8 @@ object Quality {
     // projection) diverge by FILTERS above the classifier's final
     // exchange, so AQE stage reuse only partially dedups the train
     // pipeline (measured at sf0.1: 3.70 s in-suite unbarriered vs
-    // 0.98 s median cold micro with the barrier); eager count because
-    // the kq/eval stages run concurrently and would race the cache
-    // population.
-    val scored = qualityClassifierOf(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    scored.count()
+    // 0.98 s median cold micro with the barrier).
+    val scored = qualityClassifierOf(docs).transform(pin)
     // The k-th-smallest calibration nonconformity is computed on the
     // VALUE-level frame (groupBy a → cumulative counts), never by
     // ranking calibration ROWS: a row-level rank window would funnel
@@ -668,8 +664,7 @@ object Quality {
       .filter(length(col("text")) >= 3)
       .select(col("doc_id"), col("lang"),
         explode(call_function("char_trigrams", col("text"))).as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    grams.count() // eager: concurrent consumers would race the cache
+      .transform(pin)
     val profW = org.apache.spark.sql.expressions.Window
       .partitionBy("plang").orderBy(col("c").desc, col("g"))
     val profile = grams.groupBy(col("lang").as("plang"), col("g"))

@@ -253,8 +253,7 @@ object Vectors {
     // same materialize-once barrier minhashDupPairs uses for `sets`.
     val sigs = emb
       .withColumn("buckets", array((0 until lshTables).map(sig): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigs.count() // eager, same cache-race rationale as llmMinhashLsh
+      .transform(pin)
     val bucketed = capBuckets(
       sigs.select(col("vec_id"), col("v"), col("nrm"),
         explode(col("buckets")).as("bucket")),
@@ -474,9 +473,7 @@ object Vectors {
     // reuse cannot fire across the union's column swap). `und` is the
     // cell-bounded pair frame any kNN builder materializes; `top` is
     // the N·k edge list.
-    val und = semDedupPairs(raw, cells, minCos = None)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count() // eager: the union's branches would race the cache
+    val und = semDedupPairs(raw, cells, minCos = None).transform(pin)
     val dirAll = und
       .select(col("id_a").as("src"), col("id_b").as("dst"), col("cos"))
       .unionAll(und
@@ -486,8 +483,7 @@ object Vectors {
     val top = dirAll.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select("src", "dst", "cos")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    top.count() // eager: the mutual join reads it twice
+      .transform(pin) // the mutual join reads it twice
     val reversed = top.select(col("dst").as("src"), col("src").as("dst"))
     top.join(reversed, Seq("src", "dst"))
       .filter(col("src") < col("dst"))
@@ -513,8 +509,7 @@ object Vectors {
       cells: Int = ivfK): DataFrame = {
     val und = semDedupPairs(raw.select("vec_id", "embedding"), cells,
       minCos = None)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count() // eager: the direction-union would race the cache
+      .transform(pin) // both directions of the union read it
     val dirAll = und
       .select(col("id_a").as("src"), col("id_b").as("dst"), col("cos"))
       .unionAll(und
@@ -1556,8 +1551,7 @@ object Vectors {
       .select(posexplode(col("embedding")))
       .select(col("pos").cast("long").as("dim"),
         col("col").cast("double").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    vals.count() // eager: concurrent consumers would race the cache
+      .transform(pin)
     val stats = vals.groupBy("dim").agg(
       dround(expr("percentile(v, 0.05)"), 6).as("lo"),
       dround(expr("percentile(v, 0.95)"), 6).as("hi"),

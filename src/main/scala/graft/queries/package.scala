@@ -97,6 +97,23 @@ package object queries {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint()
 
+  /** Eager cache for an intermediate that two or more consumers read:
+    * persists at MEMORY_AND_DISK (spills, never OOMs) and runs one
+    * `count()` before returning the frame. The eager count is the point:
+    * a lazily persisted frame is filled by whichever consumer stage
+    * runs first, and consumer stages run concurrently, so each would
+    * race to populate the cache and recompute the subtree itself. Pin
+    * only over expensive multi-consumed projections — over a subtree
+    * that ends in an exchange, AQE stage reuse already computes it once
+    * and a pin only adds a materialization job.
+    * [[graft.Pipeline.releaseCaches]] frees what this pins, along with
+    * what [[ckpt]] leaves. */
+  def pin(df: DataFrame): DataFrame = {
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    df.count()
+    df
+  }
+
   /** Scale-adaptive scan fan-out for CPU-heavy per-row derivations
     * (guide §2: make partitioning scale-adaptive, derive it from the
     * input, never a local-mode constant).

@@ -18,13 +18,20 @@ class MaintenanceSpec extends SparkSpec {
       }.toMap
   }
 
-  test("cowMerge rewrites only the touched partition") {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_cow_spec"
+  private def orders = Tables.t(spark, sfDir, "orders")
+    .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
+
+  /** A fresh partitioned copy of the fixture orders at a tmp path. */
+  private def target(name: String): String = {
+    val out = s"${System.getProperty("java.io.tmpdir")}/$name"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-    val orders = Tables.t(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
     orders.repartition(col("o_orderstatus"))
       .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
+    out
+  }
+
+  test("cowMerge rewrites only the touched partition") {
+    val out = target("graft_cow_spec")
     val before = partFiles(out)
     assert(before.keySet == Set("o_orderstatus=F", "o_orderstatus=O", "o_orderstatus=P"))
 
@@ -57,5 +64,21 @@ class MaintenanceSpec extends SparkSpec {
     assert(merged.filter(col("o_orderkey") === pKeys(1)).count() == 0)
     assert(merged.filter(col("o_orderkey") === 90000001L).count() == 1)
     assert(merged.count() == orders.count()) // -1 delete +1 insert
+  }
+
+  test("cowMerge reads the target with the inserts' schema and stays within its job budget") {
+    // Load-independent check: the target is read with the schema the call
+    // already holds, so no job goes to inferring it (an inferring read
+    // makes it 8 jobs on this fixture).
+    val out = target("graft_cow_jobs")
+    val updates = orders.filter(col("o_orderkey") % 97 === 0)
+      .select(col("o_orderkey"), (col("o_totalprice") + 1.0).as("u_price"))
+    val deletes = orders.filter(col("o_orderkey") % 89 === 0).select(col("o_orderkey"))
+    val inserts = orders.filter(col("o_orderkey") % 101 === 0)
+      .withColumn("o_orderkey", col("o_orderkey") + 20000000L)
+    val jobs = jobsOf(Maintenance.cowMerge(spark, out, updates, deletes, inserts))
+    assert(jobs <= 7, s"cowMerge ran $jobs jobs")
+    assert(spark.read.parquet(out).count() ==
+      orders.count() - deletes.count() + inserts.count())
   }
 }

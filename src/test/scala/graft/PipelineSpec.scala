@@ -79,39 +79,6 @@ class PipelineSpec extends SparkSpec {
     assert(surv === Set(11L))
   }
 
-  /** Jobs started by `body` on this thread (and the broadcast and AQE
-    * stage threads that inherit its local properties). A sentinel job
-    * flushes the listener bus: events arrive in order, so once the
-    * sentinel's start is seen every job of `body` has been counted. */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val key = "graft.test.jobcount"
-    val tag = java.util.UUID.randomUUID.toString
-    val counted = new java.util.concurrent.atomic.AtomicInteger
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some(`tag`) => counted.incrementAndGet()
-          case Some(t) if t == s"$tag-flush" => flushed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      body
-      sc.setLocalProperty(key, s"$tag-flush")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not flush")
-      counted.get
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("dedup state write and one incremental round stay within their job budgets") {
     // Load-independent pins for the one-pass state shape: the state write
     // is one projection (no self-join stage), and a round hashes its
@@ -1699,6 +1666,32 @@ class PipelineSpec extends SparkSpec {
     Pipeline.releaseCaches(spark)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "releaseCaches left RDD-level blocks behind")
+  }
+
+  test("pin caches with one eager count, later actions read the cache, releaseCaches frees it") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    Pipeline.releaseCaches(spark)
+    val df = Tables.t(spark, sfDir, "documents")
+      .select(col("doc_id"), length(col("text")).as("n_chars"))
+    val countJobs = jobsOf(df.count())
+    var pinned: org.apache.spark.sql.DataFrame = null
+    val pinJobs = jobsOf { pinned = graft.queries.pin(df) }
+    // one count, plus the stage job that AQE runs to build the cache
+    assert(pinJobs == countJobs + 1, s"pin ran $pinJobs jobs, a count $countJobs")
+    val cache = spark.sharedState.cacheManager
+    assert(cache.lookupCachedData(pinned.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .isDefined, "pin left the frame out of the CacheManager")
+    // eager: the next action finds the cache built and runs no build job
+    val recount = jobsOf(pinned.count())
+    assert(recount == countJobs, s"a count after pin ran $recount jobs, not $countJobs")
+    val second = pinned.agg(sum("n_chars"))
+    second.collect()
+    assert(second.queryExecution.withCachedData.collectFirst { case r: InMemoryRelation => r }
+      .isDefined, "a second action did not read the pinned cache")
+    Pipeline.releaseCaches(spark)
+    assert(cache.isEmpty, "releaseCaches left a pinned frame in the CacheManager")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      "releaseCaches left the pinned frame's blocks behind")
   }
 
   test("wordpieceTokenCount and multimodalFeatures expose the typed cores") {

@@ -9,6 +9,39 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
   override def afterAll(): Unit = () // shared session, never stopped per-suite
+
+  /** Jobs started by `body` on this thread (and the broadcast and AQE
+    * stage threads that inherit its local properties). A sentinel job
+    * flushes the listener bus: events arrive in order, so once the
+    * sentinel's start is seen every job of `body` has been counted. */
+  protected def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.jobcount"
+    val tag = java.util.UUID.randomUUID.toString
+    val counted = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some(`tag`) => counted.incrementAndGet()
+          case Some(t) if t == s"$tag-flush" => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      body
+      sc.setLocalProperty(key, s"$tag-flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not flush")
+      counted.get
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 /** Driver-contract formatting: the bench line must be strict JSON AND fit
