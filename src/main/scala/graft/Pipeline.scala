@@ -27,8 +27,8 @@ import graft.queries.{CorpusStats, Dedup, LmStats, MmFeat, MmRow, Multimodal, Qu
   *    bounded batch.
   *
   * Cache contract: operators pin their multi-consumed intermediates
-  * through `graft.queries.pin` (a MEMORY_AND_DISK persist with one eager
-  * count) and cut iterative lineage through `graft.queries.ckpt`, whose
+  * through `graft.queries.pin` (a MEMORY_AND_DISK persist filled by one eager
+  * noop write) and cut iterative lineage through `graft.queries.ckpt`, whose
   * local form leaves RDD-level `localCheckpoint()` blocks that
   * `spark.catalog.clearCache()` alone never frees (it empties only the
   * Dataset CacheManager). Nothing unpersists either kind when your
@@ -208,11 +208,11 @@ object Pipeline {
   def contamination(docs: DataFrame, isEval: Column => Column): DataFrame =
     Dedup.contaminationOf(docs, isEval)
 
-  /** Streaming twin of [[contamination]]: score a STREAMING (doc_id,
-    * text) frame against a STATIC eval-doc frame (broadcast gram set).
-    * Run the result in UPDATE output mode — each doc's row finalizes in
-    * its own micro-batch; see the core's scaladoc for the state-growth
-    * caveat. */
+  /** [[contamination]] over a STREAMING (doc_id, text) frame scored
+    * against a STATIC eval-doc frame (broadcast gram set): the same gram
+    * chain and scoring tail, without the batch side's pin. Run the result
+    * in UPDATE output mode — each doc's row finalizes in its own
+    * micro-batch; see the core's scaladoc for the state-growth caveat. */
   def contaminationStream(stream: DataFrame, evalDocs: DataFrame): DataFrame =
     Dedup.contaminationStream(stream, evalDocs)
 

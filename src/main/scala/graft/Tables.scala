@@ -70,9 +70,9 @@ object Tables {
   def events(spark: SparkSession, sfDir: String): DataFrame =
     normalizeEventTs(t(spark, sfDir, "events"))
 
-  /** The encoding-dispatch itself, reusable for streaming sources (the
-    * `readStream` twins in [[graft.streaming.Events]] read the same files
-    * and must apply the identical normalization). */
+  /** The encoding-dispatch itself, reusable for streaming sources
+    * ([[graft.streaming.Events.eventsStream]] reads the same files and
+    * must apply the identical normalization). */
   def normalizeEventTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

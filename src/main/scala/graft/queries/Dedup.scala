@@ -957,7 +957,7 @@ object Dedup {
     * both layers' joins, so the state may grow past broadcast range
     * (see [[survivorStateOf]]). */
   val llmDedupIncremental: Q = (s, dir) => {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
+    val tag = dirTag(dir)
     // State path is keyed by a fingerprint of the SOURCE data (per-file
     // size + mtime over the resolved file list, so a Spark-written
     // DIRECTORY source fingerprints its data files, not the directory
@@ -1178,8 +1178,7 @@ object Dedup {
     * the frame into the held-out eval set and the scanned corpus. */
   private[graft] def contaminationOf(docs: DataFrame,
       isEval: Column => Column): DataFrame = {
-    val gram4 = hashGramCol(4)
-    // The persist is load-bearing, not a tuning knob: the eval and corpus
+    // The pin is load-bearing, not a tuning knob: the eval and corpus
     // branches both explode `g`, and InferFiltersFromGenerate plants
     // `size(g) > 0` filters below each Generate. Without a cache barrier,
     // predicate pushdown substitutes the alias chain into those filters
@@ -1189,34 +1188,43 @@ object Dedup {
     // CollapseProject multi-reference guard does not protect filter
     // pushdown substitution). Caching (doc_id, gram-ids) is also the
     // honest 100 TB shape: 8-byte ids, reused by both branches.
-    val g = docs
+    val g = gram4Of(docs).transform(pin)
+    contaminationScore(g.filter(!isEval(col("doc_id"))), g.filter(isEval(col("doc_id"))))
+      .orderBy("doc_id")
+  }
+
+  /** (doc_id, g): the distinct word 4-gram ids of each doc with at least
+    * four words — the one gram chain of both contamination paths. */
+  private def gram4Of(docs: DataFrame): DataFrame =
+    docs
       .select(col("doc_id"), wordHashCol.as("hs"))
       .filter(size(col("hs")) >= 4)
-      .select(col("doc_id"), gram4.as("g"))
-      .transform(pin)
-    val evalGrams = g.filter(isEval(col("doc_id")))
-      .select(explode(col("g")).as("gm")).distinct()
-    val corpus = g.filter(!isEval(col("doc_id")))
+      .select(col("doc_id"), hashGramCol(4).as("g"))
+
+  /** Scoring tail of both contamination paths: each corpus doc's shared
+    * gram count and ratio against the broadcast eval gram set. */
+  private def contaminationScore(corpus: DataFrame, eval: DataFrame): DataFrame = {
+    val evalGrams = eval.select(explode(col("g")).as("gm")).distinct()
+    corpus
       .select(col("doc_id"), size(col("g")).as("n_grams"), explode(col("g")).as("gm"))
-    corpus.join(broadcast(evalGrams), "gm")
+      .join(broadcast(evalGrams), "gm")
       // per-doc gram sets are distinct, so plain count = distinct overlap
       .groupBy("doc_id", "n_grams").agg(count(lit(1)).as("n_shared"))
       .select(col("doc_id"), col("n_shared"),
         col("n_grams").cast("int").as("n_grams"),
         dround(col("n_shared") * lit(1.0) / col("n_grams"), 6).as("contam_ratio"))
-      .orderBy("doc_id")
   }
 
   val llmContamination: Q = (s, dir) =>
     contaminationOf(Tables.t(s, dir, "documents").select("doc_id", "text"),
       id => id % 97 === 0)
 
-  /** Streaming twin of [[contaminationOf]]: score STREAMING (doc_id,
-    * text) docs against a STATIC eval-doc frame as they arrive — the
-    * production shape when a crawler feed must be checked against a
-    * fixed benchmark suite. The stream side is the stateless gram
-    * projection with ONE consumer (no persist barrier is possible on a
-    * stream, and none is needed: the 174 s pathology was pushdown
+  /** [[contaminationOf]] over STREAMING (doc_id, text) docs scored
+    * against a STATIC eval-doc frame as they arrive — the production
+    * shape when a crawler feed must be checked against a fixed benchmark
+    * suite. Same gram chain and scoring tail; the stream side is the
+    * stateless gram projection with ONE consumer (no pin is possible on
+    * a stream, and none is needed: the 174 s pathology was pushdown
     * recompute across TWO explode branches of one cached frame); the
     * eval gram set is static and broadcast, so each micro-batch pays
     * one batch-side hash pass and zero shuffles on the eval side. Run
@@ -1226,24 +1234,8 @@ object Dedup {
     * note: ids never recur here, so state grows with the stream —
     * a real deployment ages state with a watermark on arrival time. */
   private[graft] def contaminationStream(stream: DataFrame,
-      evalDocs: DataFrame): DataFrame = {
-    val gram4 = hashGramCol(4)
-    val evalGrams = evalDocs
-      .select(col("doc_id"), wordHashCol.as("hs"))
-      .filter(size(col("hs")) >= 4)
-      .select(gram4.as("g"))
-      .select(explode(col("g")).as("gm")).distinct()
-    stream
-      .select(col("doc_id"), wordHashCol.as("hs"))
-      .filter(size(col("hs")) >= 4)
-      .select(col("doc_id"), gram4.as("g"))
-      .select(col("doc_id"), size(col("g")).as("n_grams"), explode(col("g")).as("gm"))
-      .join(broadcast(evalGrams), "gm")
-      .groupBy("doc_id", "n_grams").agg(count(lit(1)).as("n_shared"))
-      .select(col("doc_id"), col("n_shared"),
-        col("n_grams").cast("int").as("n_grams"),
-        dround(col("n_shared") * lit(1.0) / col("n_grams"), 6).as("contam_ratio"))
-  }
+      evalDocs: DataFrame): DataFrame =
+    contaminationScore(gram4Of(stream), gram4Of(evalDocs))
 
   /** Intra-document repetition scoring — the Gopher-rule quality filter
     * that drops template/boilerplate docs BEFORE cross-doc dedup ever sees

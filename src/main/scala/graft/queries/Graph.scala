@@ -113,7 +113,7 @@ object Graph {
   private def linkGraph(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val ids = Tables.t(s, dir, "documents").select(col("doc_id"))
     val nDf = ids.agg(count(lit(1)).cast("double").as("n"))
-    // a bare persist, not `pin`: its cache fills inside edges' eager count
+    // a bare persist, not `pin`: its cache fills inside edges' pin
     val base = ids.crossJoin(broadcast(nDf))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val edges = linksOf(base).transform(pin)

@@ -16,11 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Maintenance {
 
-  private def tmp(name: String, dir: String): String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_sink/$tag/$name"
-  }
-
   /** MERGE INTO target USING batch — one statement's worth of
     * WHEN MATCHED DELETE / WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT,
     * applied copy-on-write:
@@ -41,7 +36,7 @@ object Maintenance {
     *     recomputes the same merge declaratively).
     */
   val mergeUpsert: Q = (s, dir) => {
-    val out = tmp("orders_cow", dir)
+    val out = sinkPath("orders_cow", dir)
     val orders = Tables.t(s, dir, "orders")
     val base = orders.select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
     base.repartition(col("o_orderstatus"))
@@ -122,7 +117,7 @@ object Maintenance {
     * Output = both uses, version-tagged, so the stale→fresh transition
     * is visible and oracle-checkable. */
   val mvRebuild: Q = (s, dir) => {
-    val mvRoot = tmp("mv_revenue", dir)
+    val mvRoot = sinkPath("mv_revenue", dir)
     val orders = Tables.t(s, dir, "orders")
     val customer = Tables.t(s, dir, "customer")
     val nation = Tables.t(s, dir, "nation")

@@ -517,6 +517,10 @@ object Sequences {
   val seqDid: Q = (s, dir) =>
     didOf(Tables.events(s, dir).select("user_id", "ts", "value"))
 
+  /** The Holt folds' quantization grids: 1e-9 per step, 1e-6 on output. */
+  private def r9(x: Double) = math.floor(x * 1e9 + 0.5) / 1e9
+  private def r6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
+
   /** Holt linear-trend forecast (Holt 1957 / Hyndman & Athanasopoulos
     * FPP) per event-type daily-count series — the capacity-planning
     * read the monitoring family (seq_anomaly / seq_changepoint /
@@ -541,8 +545,6 @@ object Sequences {
   private[graft] def forecastHoltOf(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    def r9(x: Double) = math.floor(x * 1e9 + 0.5) / 1e9
-    def r6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
     events
       .select(col("event_type"),
         expr("unix_micros(ts) DIV 86400000000").as("day"))
@@ -597,8 +599,6 @@ object Sequences {
   private[graft] def holtWintersOf(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    def r9(x: Double) = math.floor(x * 1e9 + 0.5) / 1e9
-    def r6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
     events
       .select(col("event_type"),
         expr("unix_micros(ts) DIV 86400000000").as("day"))

@@ -81,6 +81,15 @@ package object queries {
     s.sql(text)
   }
 
+  /** A fixture directory as a name fragment (every non-alphanumeric
+    * char becomes `_`): keys the per-dataset sinks, state and tables. */
+  def dirTag(dir: String): String = dir.replaceAll("[^a-zA-Z0-9]", "_")
+
+  /** Scratch sink path for `name` under java.io.tmpdir, one subtree per
+    * fixture directory. */
+  def sinkPath(name: String, dir: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_sink/${dirTag(dir)}/$name"
+
   /** Eager lineage-truncating checkpoint for the iterative operators
     * (connected components, k-core, BFS, centrality rounds): persist
     * alone caches results but leaves the logical plan nested, so the
@@ -98,11 +107,14 @@ package object queries {
     else df.localCheckpoint()
 
   /** Eager cache for an intermediate that two or more consumers read:
-    * persists at MEMORY_AND_DISK (spills, never OOMs) and runs one
-    * `count()` before returning the frame. The eager count is the point:
-    * a lazily persisted frame is filled by whichever consumer stage
-    * runs first, and consumer stages run concurrently, so each would
-    * race to populate the cache and recompute the subtree itself. Pin
+    * persists at MEMORY_AND_DISK (spills, never OOMs) and materializes
+    * the frame once through the `noop` sink before returning it. The
+    * eager fill is the point: a lazily persisted frame is filled by
+    * whichever consumer stage runs first, and consumer stages run
+    * concurrently, so each would race to populate the cache and
+    * recompute the subtree itself. The `noop` write fills the cache in
+    * one job on a shuffle-free frame, where a `count()` under AQE runs
+    * a cache-build stage job plus its own two (3 jobs). Pin
     * only over expensive multi-consumed projections — over a subtree
     * that ends in an exchange, AQE stage reuse already computes it once
     * and a pin only adds a materialization job.
@@ -110,7 +122,7 @@ package object queries {
     * what [[ckpt]] leaves. */
   def pin(df: DataFrame): DataFrame = {
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df.count()
+    df.write.format("noop").mode("overwrite").save()
     df
   }
 

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.Tables
-import graft.queries.{dsum, oSum, Q, QueryDef}
+import graft.queries.{dirTag, dsum, oSum, Q, QueryDef, sinkPath}
 import org.apache.spark.sql.functions._
 
 /** §2.2 sources/sinks beyond plain parquet reads: CSV/JSON/text/regex
@@ -18,15 +18,10 @@ import org.apache.spark.sql.functions._
   */
 object WritePaths {
 
-  private def tmp(name: String, dir: String): String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_sink/$tag/$name"
-  }
-
   /** CSV round-trip (LazySimpleSerDe ≈ delimited text): write nation as
     * custom-delimited csv, read back with explicit schema. */
   val srcCsvRoundtrip: Q = (s, dir) => {
-    val out = tmp("nation_csv", dir)
+    val out = sinkPath("nation_csv", dir)
     // dim-table write → one file (32 near-empty task files would cost a
     // commit round-trip each; same discipline as the sized shard export)
     Tables.t(s, dir, "nation").coalesce(1)
@@ -45,7 +40,7 @@ object WritePaths {
     * columns re-cast on read (XML carries no types); name column is
     * plain uppercase text so whitespace-trim options cannot bite. */
   val srcXmlRoundtrip: Q = (s, dir) => {
-    val out = tmp("nation_xml", dir)
+    val out = sinkPath("nation_xml", dir)
     Tables.t(s, dir, "nation")
       .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
       .coalesce(1)
@@ -71,7 +66,7 @@ object WritePaths {
     * catalog instead of re-inferring per query — the read here is the
     * capability check, not the steady-state pattern. */
   val srcParquetEvolution: Q = (s, dir) => {
-    val out = tmp("region_evo", dir)
+    val out = sinkPath("region_evo", dir)
     val r = Tables.t(s, dir, "region")
       .select(col("r_regionkey").cast("int").as("r_regionkey"), col("r_name"))
     r.coalesce(1).write.mode("overwrite").parquet(s"$out/batch=1")
@@ -86,7 +81,7 @@ object WritePaths {
 
   /** JSON round-trip + from_json/to_json (DelimitedJSONSerDe shape). */
   val srcJsonRoundtrip: Q = (s, dir) => {
-    val out = tmp("region_json", dir)
+    val out = sinkPath("region_json", dir)
     Tables.t(s, dir, "region").coalesce(1).write.mode("overwrite").json(out)
     s.read.json(out)
       .select(col("r_regionkey").cast("int").as("r_regionkey"), col("r_name"))
@@ -96,7 +91,7 @@ object WritePaths {
   /** Text source + RegexSerDe shape: write `key|name` lines, read as raw
     * text, regexp_extract the fields back. */
   val srcRegexText: Q = (s, dir) => {
-    val out = tmp("supplier_txt", dir)
+    val out = sinkPath("supplier_txt", dir)
     Tables.t(s, dir, "supplier")
       .select(concat(col("s_suppkey"), lit("|"), col("s_name")).as("value"))
       .coalesce(2).write.mode("overwrite").text(out)
@@ -112,7 +107,7 @@ object WritePaths {
     * garbage text, read back with an explicit schema under PERMISSIVE
     * mode. The oracle recomputes the same counts from the clean source. */
   val srcCsvMalformed: Q = (s, dir) => {
-    val out = tmp("supplier_bad", dir)
+    val out = sinkPath("supplier_bad", dir)
     Tables.t(s, dir, "supplier")
       .select(when(col("s_suppkey") % 10 === 0, lit("###garbage###"))
         .otherwise(concat_ws("|", col("s_suppkey"), col("s_name"), col("s_acctbal")))
@@ -135,7 +130,7 @@ object WritePaths {
     * written by one task as one file. A skewed/huge partition value would
     * add a salt term (`repartition(n, col, salt)`) to spread it. */
   val sinkPartitionedParquet: Q = (s, dir) => {
-    val out = tmp("orders_part", dir)
+    val out = sinkPath("orders_part", dir)
     Tables.t(s, dir, "orders")
       .repartition(col("o_orderstatus"))
       .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
@@ -156,7 +151,7 @@ object WritePaths {
     * KB-scale; a production export targets ~256 MiB. `maxRecordsPerFile`
     * stays only as a safety cap against estimate drift. */
   val sinkShardedExport: Q = (s, dir) => {
-    val out = tmp("doc_shards", dir)
+    val out = sinkPath("doc_shards", dir)
     val src = new java.io.File(s"$dir/documents.parquet")
     val targetShardBytes = 256L * 1024
     val nShards = math.max(1L, (src.length() + targetShardBytes - 1) / targetShardBytes).toInt
@@ -181,7 +176,7 @@ object WritePaths {
     * shortest string form, which re-parses exactly. */
   val srcSequenceFile: Q = (s, dir) => {
     import s.implicits._
-    val out = tmp("supplier_seq", dir)
+    val out = sinkPath("supplier_seq", dir)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
     Tables.t(s, dir, "supplier")
       .select(col("s_suppkey"),
@@ -215,7 +210,7 @@ object WritePaths {
     import org.apache.avro.mapreduce.{AvroJob, AvroKeyInputFormat, AvroKeyOutputFormat}
     import org.apache.hadoop.io.NullWritable
     import org.apache.hadoop.mapreduce.Job
-    val out = tmp("supplier_avro", dir)
+    val out = sinkPath("supplier_avro", dir)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
     val schemaJson =
       """{"type":"record","name":"supplier","fields":[
@@ -274,7 +269,7 @@ object WritePaths {
     import org.apache.hadoop.hive.serde2.columnar.{BytesRefArrayWritable, BytesRefWritable}
     import org.apache.hadoop.io.LongWritable
     import org.apache.hadoop.mapred.JobConf
-    val out = tmp("nation_rcfile", dir)
+    val out = sinkPath("nation_rcfile", dir)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
     val jc = new JobConf(s.sparkContext.hadoopConfiguration)
     RCFileOutputFormat.setColumnNumber(jc, 3)
@@ -314,7 +309,7 @@ object WritePaths {
 
   /** ORC write + read-back (predicate pushdown capable source). */
   val sinkOrcRoundtrip: Q = (s, dir) => {
-    val out = tmp("customer_orc", dir)
+    val out = sinkPath("customer_orc", dir)
     // bound output files: a 15k-row table does not need 32 ORC files
     Tables.t(s, dir, "customer").coalesce(4).write.mode("overwrite").orc(out)
     s.read.orc(out)
@@ -333,7 +328,7 @@ object WritePaths {
     * key join into a zero-shuffle merge. The `merge` hint pins the SMJ
     * strategy so the showcase isn't silently broadcast. */
   val joinSmb: Q = (s, dir) => {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
+    val tag = dirTag(dir)
     val li = s"graft_li_smb_$tag"; val or = s"graft_or_smb_$tag"
     // Bucketing is the operator's PRECONDITION, not the operator: in
     // production the fact tables are bucketed once and every subsequent

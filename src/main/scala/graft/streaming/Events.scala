@@ -18,9 +18,12 @@ case class UserStats(user_id: Long, n_events: Long, n_sessions: Long, total_valu
 /** §2.8 streaming extension (north-star addition — the reference has no
   * event-time processing; SURVEY.md §1.1/§2.8).
   *
-  * Batch-equivalent window aggregations run through the oracle gate; the
-  * identical queries execute over `readStream` in the ScalaTest smoke
-  * (StreamingSpec), proving the operators are Structured-Streaming-ready.
+  * Each streamed operator is ONE `DataFrame => DataFrame` body: the
+  * registry query applies it to [[Tables.events]] (oracle-gated) and
+  * StreamingSpec applies it to [[eventsStream]], so the stream is the
+  * batch query run incrementally. A body carries its stream-side
+  * watermark; on a batch frame the analyzer drops it
+  * (`EliminateEventTimeWatermark`), so batch plans are watermark-free.
   *
   * Scale: event-time windows groupBy (window, key) — hash-partitioned
   * state, watermark bounds it; no global ordering anywhere.
@@ -28,14 +31,15 @@ case class UserStats(user_id: Long, n_events: Long, n_sessions: Long, total_valu
 object Events {
 
   /** Tumbling 1-hour windows per event_type. */
-  val streamTumbling: Q = (s, dir) => {
-    Tables.events(s, dir)
+  val tumbling: DataFrame => DataFrame =
+    _.withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("val_sum"))
       .select(col("w.start").cast("timestamp_ntz").as("win_start"),
         col("event_type"), col("cnt"), col("val_sum"))
-      .orderBy("win_start", "event_type")
-  }
+
+  val streamTumbling: Q = (s, dir) =>
+    tumbling(Tables.events(s, dir)).orderBy("win_start", "event_type")
 
   /** Sliding 1-hour windows every 30 minutes. */
   val streamSliding: Q = (s, dir) => {
@@ -61,23 +65,28 @@ object Events {
 
   /** Trending detection: top-2 event types per 6-hour tumbling window
     * (the dashboard staple — "what's hot right now"). The STATEFUL part
-    * is the windowed count (watermark-bounded in the streaming twin,
-    * [[topkCountsStream]]); the rank is a per-window post-processing
-    * step over the #types-per-window frame — tiny by construction, the
-    * shape a foreachBatch consumer (or the memory-sink reader in the
-    * spec) applies identically. */
-  val streamTopkTypes: Q = (s, dir) => {
-    val counts = Tables.events(s, dir)
+    * is the watermark-bounded windowed count, [[topkCounts]]; the rank,
+    * [[topkRank]], is a per-window post-processing step over the
+    * #types-per-window frame — tiny by construction, the shape a
+    * foreachBatch consumer (or the memory-sink reader in the spec)
+    * applies to the streamed counts. */
+  val topkCounts: DataFrame => DataFrame =
+    _.withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "6 hours").as("w"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
+      .select(col("w.start").cast("timestamp_ntz").as("win_start"),
+        col("event_type"), col("cnt"))
+
+  val topkRank: DataFrame => DataFrame = counts => {
     val rk = org.apache.spark.sql.expressions.Window
-      .partitionBy("w").orderBy(col("cnt").desc, col("event_type"))
+      .partitionBy("win_start").orderBy(col("cnt").desc, col("event_type"))
     counts.withColumn("rnk", row_number().over(rk))
       .filter(col("rnk") <= 2)
-      .select(col("w.start").cast("timestamp_ntz").as("win_start"),
-        col("rnk"), col("event_type"), col("cnt"))
-      .orderBy("win_start", "rnk")
+      .select("win_start", "rnk", "event_type", "cnt")
   }
+
+  val streamTopkTypes: Q = (s, dir) =>
+    topkRank(topkCounts(Tables.events(s, dir))).orderBy("win_start", "rnk")
 
   /** Deterministic stateful dedup shape: first event per (user, type) by
     * event time (streaming twin: dropDuplicatesWithinWatermark). */
@@ -105,59 +114,69 @@ object Events {
       .orderBy("user_id")
   }
 
-  /** The custom-state update function shared by the batch query and the
-    * streaming twin: per-user event/session counts with a 10-minute gap
-    * rule. State carries (counts, exact value sum, last event time) across
-    * micro-batches; in batch mode it starts empty and each group is
-    * processed exactly once, which is what makes this oracle-checkable. */
-  private[streaming] val sessionStats:
+  private val noSession = SessState(0L, 0L, 0L, Long.MinValue)
+
+  /** The one session fold behind both state APIs: per-user event/session
+    * counts with a 10-minute gap rule. State carries (counts, exact value
+    * sum, last event time) across micro-batches; in batch mode it starts
+    * empty and each group is processed exactly once, which is what makes
+    * this oracle-checkable. */
+  private def foldSession(user: Long, st0: SessState,
+      events: Iterator[UserEvent]): (SessState, UserStats) = {
+    val evs = events.toArray.sortBy(e => (e.ts_us, e.event_id))
+    var (n, sess, qsum, last) = (st0.nEvents, st0.nSessions, st0.qSum, st0.lastTs)
+    evs.foreach { e =>
+      n += 1; qsum += e.q_value
+      if (last == Long.MinValue || e.ts_us - last > 600000000L) sess += 1
+      last = e.ts_us
+    }
+    (SessState(n, sess, qsum, last), UserStats(user, n, sess, qsum / 1e4))
+  }
+
+  private val sessionStats:
       (Long, Iterator[UserEvent], GroupState[SessState]) => Iterator[UserStats] =
     (user, it, state) => {
-      val evs = it.toArray.sortBy(e => (e.ts_us, e.event_id))
-      val st0 = state.getOption.getOrElse(SessState(0L, 0L, 0L, Long.MinValue))
-      var (n, sess, qsum, last) = (st0.nEvents, st0.nSessions, st0.qSum, st0.lastTs)
-      evs.foreach { e =>
-        n += 1; qsum += e.q_value
-        if (last == Long.MinValue || e.ts_us - last > 600000000L) sess += 1
-        last = e.ts_us
-      }
-      state.update(SessState(n, sess, qsum, last))
-      Iterator.single(UserStats(user, n, sess, qsum / 1e4))
+      val (st, out) = foldSession(user, state.getOption.getOrElse(noSession), it)
+      state.update(st)
+      Iterator.single(out)
     }
 
-  private def typedEvents(s: SparkSession, df: DataFrame) = {
+  private def eventsByUser(df: DataFrame) = {
+    val s = df.sparkSession
     import s.implicits._
     df.select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"),
         floor(col("value") * 10000 + 0.5).cast("long").as("q_value"))
       .as[UserEvent]
+      .groupByKey(_.user_id)
   }
 
   /** §2.8 custom state: `KeyValueGroupedDataset.flatMapGroupsWithState`
     * (the API the survey names for arbitrary stateful processing). Scale:
-    * state is hash-partitioned by user_id and bounded by the key space;
-    * the same function runs over readStream in StreamingSpec. */
-  val streamStatefulSessions: Q = (s, dir) => {
+    * state is hash-partitioned by user_id and bounded by the key space. */
+  val statefulSessions: DataFrame => DataFrame = df => {
+    val s = df.sparkSession
     import s.implicits._
-    typedEvents(s, Tables.events(s, dir))
-      .groupByKey(_.user_id)
+    eventsByUser(df)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(sessionStats)
       .toDF()
-      .orderBy("user_id")
   }
 
-  /** Stream-stream interval join, batch-equivalent form: purchases
-    * attributed to the same user's clicks within the preceding hour.
-    * Equi-join on user_id with an event-time band — in streaming the
-    * band + watermarks bound the join state (Spark evicts rows once
-    * they can no longer match); the identical query runs over two
-    * readStream sources in StreamingSpec. */
-  val streamIntervalJoin: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
+  val streamStatefulSessions: Q = (s, dir) =>
+    statefulSessions(Tables.events(s, dir)).orderBy("user_id")
+
+  /** Stream-stream interval join: purchases attributed to the same
+    * user's clicks within the preceding hour. Equi-join on user_id with
+    * an event-time band — over a stream, watermarks on BOTH sides plus
+    * the band bound the join state (each side's rows are evicted once the
+    * other side's watermark passes their match window). */
+  val intervalJoin: DataFrame => DataFrame = e => {
     val clicks = e.filter(col("event_type") === "click")
       .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("cts"))
+      .withWatermark("cts", "2 hours")
     val purchases = e.filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
         col("ts").as("pts"), col("value"))
+      .withWatermark("pts", "2 hours")
     clicks.join(purchases,
       col("user_id") === col("p_user") &&
         col("pts") >= col("cts") &&
@@ -166,8 +185,10 @@ object Events {
         expr("(unix_micros(pts) - unix_micros(cts)) DIV 60000000")
           .as("mins_between"),
         col("value"))
-      .orderBy("user_id", "click_id", "purchase_id")
   }
+
+  val streamIntervalJoin: Q = (s, dir) =>
+    intervalJoin(Tables.events(s, dir)).orderBy("user_id", "click_id", "purchase_id")
 
   /** The static dimension for the stream-static enrichment join — the
     * lookup table every event pipeline carries (type → reporting
@@ -184,20 +205,22 @@ object Events {
     * join surface beside stream-stream: fact stream ⋈ broadcast
     * dimension, no state, no watermark needed on the static side):
     * events enrich with category/weight, then the windowed weighted
-    * rollup. Batch form here; [[enrichStream]] runs the identical plan
-    * over `readStream` (StreamingSpec pins equality). */
-  val streamEnrich: Q = (s, dir) => {
+    * rollup. */
+  val enrich: DataFrame => DataFrame = events => {
+    val s = events.sparkSession
     import s.implicits._
     val dim = typeDim.toDF("event_type", "category", "weight")
-    Tables.events(s, dir)
+    events.withWatermark("ts", "2 hours")
       .join(broadcast(dim), "event_type")
       .groupBy(window(col("ts"), "6 hours").as("w"), col("category"))
       .agg(count(lit(1)).as("cnt"),
         dsum(col("value") * col("weight"), 2).as("wsum"))
       .select(col("w.start").cast("timestamp_ntz").as("win_start"),
         col("category"), col("cnt"), col("wsum"))
-      .orderBy("win_start", "category")
   }
+
+  val streamEnrich: Q = (s, dir) =>
+    enrich(Tables.events(s, dir)).orderBy("win_start", "category")
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("stream_interval_join", streamIntervalJoin,
@@ -294,27 +317,15 @@ object Events {
     * rounds) — so sniff the real schema from the parquet footer via a
     * one-off batch read, then run the exact same normalization the batch
     * table loader applies ([[Tables.normalizeEventTs]]). */
-  private def eventsStream(spark: SparkSession, eventsDir: String): DataFrame = {
+  def eventsStream(spark: SparkSession, eventsDir: String): DataFrame = {
     val actualSchema = spark.read.parquet(eventsDir).schema
     Tables.normalizeEventTs(
       spark.readStream.schema(actualSchema).parquet(eventsDir))
   }
 
-  /** Streaming twin of [[streamStatefulSessions]]: the same custom-state
-    * function over a file-source stream. */
-  def statefulStream(spark: SparkSession, eventsDir: String): DataFrame = {
-    import spark.implicits._
-    typedEvents(spark, eventsStream(spark, eventsDir))
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(sessionStats)
-      .toDF()
-  }
-
-  /** Spark 4 arbitrary-state v2 (`transformWithState`): the same session
-    * logic as [[sessionStats]] re-expressed as a `StatefulProcessor` with
-    * a typed `ValueState` variable over the RocksDB state store (the only
-    * provider the v2 API supports). StreamingSpec asserts it reproduces
-    * the oracle-checked batch result exactly. */
+  /** Spark 4 arbitrary-state v2 (`transformWithState`): [[foldSession]]
+    * as a `StatefulProcessor` with a typed `ValueState` variable over the
+    * RocksDB state store (the only provider the v2 API supports). */
   class SessionStatsProcessor extends StatefulProcessor[Long, UserEvent, UserStats] {
     @transient private var st: ValueState[SessState] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
@@ -322,105 +333,35 @@ object Events {
         org.apache.spark.sql.Encoders.product[SessState], TTLConfig.NONE)
     override def handleInputRows(user: Long, rows: Iterator[UserEvent],
         tv: TimerValues): Iterator[UserStats] = {
-      val evs = rows.toArray.sortBy(e => (e.ts_us, e.event_id))
-      val st0 = if (st.exists()) st.get() else SessState(0L, 0L, 0L, Long.MinValue)
-      var (n, sess, qsum, last) = (st0.nEvents, st0.nSessions, st0.qSum, st0.lastTs)
-      evs.foreach { e =>
-        n += 1; qsum += e.q_value
-        if (last == Long.MinValue || e.ts_us - last > 600000000L) sess += 1
-        last = e.ts_us
-      }
-      st.update(SessState(n, sess, qsum, last))
-      Iterator.single(UserStats(user, n, sess, qsum / 1e4))
+      val (next, out) = foldSession(user, if (st.exists()) st.get() else noSession, rows)
+      st.update(next)
+      Iterator.single(out)
     }
   }
 
-  /** Streaming twin of [[streamStatefulSessions]] on the v2 API. */
-  def statefulStreamTws(spark: SparkSession, eventsDir: String): DataFrame = {
-    import spark.implicits._
-    typedEvents(spark, eventsStream(spark, eventsDir))
-      .groupByKey(_.user_id)
+  /** [[statefulSessions]] on the v2 state API: the same fold, keyed the
+    * same way. */
+  val statefulSessionsV2: DataFrame => DataFrame = df => {
+    val s = df.sparkSession
+    import s.implicits._
+    eventsByUser(df)
       .transformWithState(new SessionStatsProcessor, TimeMode.None(), OutputMode.Append())
       .toDF()
   }
 
-  /** Streaming twin of [[streamIntervalJoin]]: a genuine stream-stream
-    * inner join — two file-source streams, watermarks on BOTH sides plus
-    * the time-band condition let Spark bound the join state (each side's
-    * rows are evicted once the other side's watermark passes their match
-    * window). */
-  def intervalJoinStream(spark: SparkSession, eventsDir: String): DataFrame = {
-    def src = eventsStream(spark, eventsDir)
-    val clicks = src.filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("cts"))
-      .withWatermark("cts", "2 hours")
-    val purchases = src.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("pts"), col("value"))
-      .withWatermark("pts", "2 hours")
-    clicks.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("pts") >= col("cts") &&
-        col("pts") < col("cts") + expr("INTERVAL 1 HOUR"))
-      .select(col("user_id"), col("click_id"), col("purchase_id"),
-        expr("(unix_micros(pts) - unix_micros(cts)) DIV 60000000")
-          .as("mins_between"),
-        col("value"))
-  }
-
-  /** Streaming twin of [[streamTumbling]] for the readStream smoke test:
-    * same aggregation over a file-source stream. */
-  def tumblingStream(spark: SparkSession, eventsDir: String): DataFrame = {
-    eventsStream(spark, eventsDir)
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("val_sum"))
-      .select(col("w.start").cast("timestamp_ntz").as("win_start"),
-        col("event_type"), col("cnt"), col("val_sum"))
-  }
-
-  /** Streaming twin of [[streamDedupFirst]]'s dedup DECISION via the
+  /** The streaming form of [[streamDedupFirst]]'s dedup DECISION via the
     * dedicated state-TTL'd operator: `dropDuplicatesWithinWatermark`
     * keeps one row per (user_id, event_type) and — unlike plain
     * streaming `dropDuplicates`, whose key state grows forever — drops
     * a key's state once the watermark passes its last-seen event time,
     * so unbounded streams run in bounded state (the 100 TB/∞-stream
-    * requirement). Which physical row survives is arrival-order
-    * dependent by contract, so the twin projects the KEY — the dedup
-    * decision itself — which must match the batch distinct exactly. */
+    * requirement). It has its own body because it keeps an arbitrary
+    * row per key while the oracle query keeps the first by `ts`; so it
+    * projects the KEY — the dedup decision itself — which must match
+    * the batch distinct exactly. */
   def dedupWithinWatermarkStream(spark: SparkSession, eventsDir: String): DataFrame =
     eventsStream(spark, eventsDir)
       .withWatermark("ts", "24 hours")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select(col("user_id"), col("event_type"))
-
-  /** Streaming twin of [[streamTopkTypes]]'s STATEFUL stage: the
-    * watermark-bounded 6-hour windowed counts. The per-window rank is a
-    * consumer-side step over the tiny per-window frame (StreamingSpec
-    * applies it to the memory sink and compares to the batch query). */
-  def topkCountsStream(spark: SparkSession, eventsDir: String): DataFrame = {
-    eventsStream(spark, eventsDir)
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "6 hours").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("w.start").cast("timestamp_ntz").as("win_start"),
-        col("event_type"), col("cnt"))
-  }
-
-  /** Streaming twin of [[streamEnrich]]: the stream-static join — each
-    * micro-batch joins the broadcast dimension with NO state and no
-    * watermark requirement on the static side (the dimension is re-read
-    * per batch in real deployments; here it is a literal frame). */
-  def enrichStream(spark: SparkSession, eventsDir: String): DataFrame = {
-    import spark.implicits._
-    val dim = typeDim.toDF("event_type", "category", "weight")
-    eventsStream(spark, eventsDir)
-      .withWatermark("ts", "2 hours")
-      .join(broadcast(dim), "event_type")
-      .groupBy(window(col("ts"), "6 hours").as("w"), col("category"))
-      .agg(count(lit(1)).as("cnt"),
-        dsum(col("value") * col("weight"), 2).as("wsum"))
-      .select(col("w.start").cast("timestamp_ntz").as("win_start"),
-        col("category"), col("cnt"), col("wsum"))
-  }
 }

@@ -74,22 +74,11 @@ class DeterminismSpec extends SparkSpec {
   /** Per-commit wall-clock bound (r19, verdict item 7 — the suite's
     * second-largest sink at ~116 s ran BOTH full halves every commit):
     * unless SPARK_GRAFT_DETERMINISM=full, each guard runs a stable
-    * md5-keyed QUARTER of its half plus every entry added this round
-    * (the SqlSurfaceSpec convention exactly — the subset never rotates
-    * silently, and a new query must not dodge the per-commit gate by
-    * md5 luck). Close-of-round runs set the env var for the complete
-    * both-halves sweep, so full coverage still gates every round. */
-  private val fullSweep =
-    sys.env.get("SPARK_GRAFT_DETERMINISM").contains("full")
-  private def commitSample(names: Seq[String]): Seq[String] =
-    if (fullSweep) names
-    else {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      names.filter { n =>
-        ((md.digest(n.getBytes("UTF-8"))(2) & 0xff) % 4) == 0 ||
-          graft.queries.SqlSurface.recentAdditions.contains(n)
-      }
-    }
+    * md5-keyed QUARTER of its half (keyed on byte 2, independent of the
+    * halves) plus every entry added this round. Close-of-round runs set
+    * the env var for the complete both-halves sweep, so full coverage
+    * still gates every round. */
+  private val sampled = CommitSample("SPARK_GRAFT_DETERMINISM", byte = 2, modulus = 4)
 
   test("the two guard halves cover the whole registry") {
     val all = SparkEntry.queries.keys.toSeq
@@ -103,9 +92,9 @@ class DeterminismSpec extends SparkSpec {
     // output depends on the adaptive re-plan (a rank over an
     // arrival-ordered frame, a cache keyed on a plan shape) fails here.
     val all = SparkEntry.queries.keys.toSeq
-    val sample = commitSample(
-      stableHalf(all, 1) ++ overlapSlice(stableHalf(all, 0)))
-    assert(sample.size >= (if (fullSweep) 90 else 25),
+    val sample = (stableHalf(all, 1) ++ overlapSlice(stableHalf(all, 0)))
+      .filter(sampled)
+    assert(sample.size >= (if (sampled.full) 90 else 25),
       s"sample unexpectedly small: ${sample.size}")
     val prior = spark.conf.get("spark.sql.adaptive.enabled")
     val baseline = collectAll(sample)
@@ -120,9 +109,9 @@ class DeterminismSpec extends SparkSpec {
 
   test("sampled queries are partition-count invariant") {
     val all = SparkEntry.queries.keys.toSeq
-    val sample = commitSample(
-      stableHalf(all, 0) ++ overlapSlice(stableHalf(all, 1)))
-    assert(sample.size >= (if (fullSweep) 90 else 25),
+    val sample = (stableHalf(all, 0) ++ overlapSlice(stableHalf(all, 1)))
+      .filter(sampled)
+    assert(sample.size >= (if (sampled.full) 90 else 25),
       s"sample unexpectedly small: ${sample.size}")
     val prior = spark.conf.get("spark.sql.shuffle.partitions")
     val baseline = collectAll(sample)

@@ -68,18 +68,10 @@ class ScaleCurveProbeSpec extends SparkSpec {
   // Per-commit wall-clock bound (r19, verdict item 7 — at 12 curves ×
   // 8 timed runs this was the suite's LARGEST sink, ~170 s): unless
   // SPARK_GRAFT_SCALE_PROBE=full, run a stable md5-keyed third of the
-  // curve list (the SqlSurfaceSpec sampling convention — never rotates
-  // silently); close-of-round runs set the env var for the complete
+  // curve list; close-of-round runs set the env var for the complete
   // sweep, so every curve still gates every round. A curve for a query
   // TOUCHED this round belongs in recentAdditions, which always runs.
-  private val fullCurves =
-    sys.env.get("SPARK_GRAFT_SCALE_PROBE").contains("full")
-  private def curveSampled(name: String): Boolean =
-    fullCurves || {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      ((md.digest(name.getBytes("UTF-8"))(3) & 0xff) % 3) == 0 ||
-        graft.queries.SqlSurface.recentAdditions.contains(name)
-    }
+  private val curveSampled = CommitSample("SPARK_GRAFT_SCALE_PROBE", byte = 3, modulus = 3)
 
   Seq("llm_dedup_cc", "llm_semdedup_cc", "llm_ngram_jaccard",
       "llm_ann_ivf", "llm_ann_pq", "llm_ann_ivfpq",

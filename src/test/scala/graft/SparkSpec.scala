@@ -10,6 +10,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir = "/root/testdata/sf0.001"
   override def afterAll(): Unit = () // shared session, never stopped per-suite
 
+  /** Per-commit sample of a name list, bounding a suite's wall clock: a
+    * stable md5-keyed slice (md5 byte `byte` mod `modulus` is 0, so the
+    * subset never silently rotates out a regression) plus every
+    * `SqlSurface.recentAdditions` entry (a new name must never dodge the
+    * per-commit gate by md5 luck). With env var `fullVar` set to `full`
+    * (close-of-round runs) every name is sampled. */
+  protected case class CommitSample(fullVar: String, byte: Int, modulus: Int)
+      extends (String => Boolean) {
+    val full: Boolean = sys.env.get(fullVar).contains("full")
+    def apply(name: String): Boolean = full || {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      ((md.digest(name.getBytes("UTF-8"))(byte) & 0xff) % modulus) == 0 ||
+        graft.queries.SqlSurface.recentAdditions.contains(name)
+    }
+  }
+
   /** Jobs started by `body` on this thread (and the broadcast and AQE
     * stage threads that inherit its local properties). A sentinel job
     * flushes the listener bus: events arrive in order, so once the

@@ -35,27 +35,16 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("sql surface round-trip: every entry matches its builder") {
     // Suite-wall-clock bound (r18, verdict item 5): the per-commit run
-    // exercises a STABLE md5-keyed quarter of the surface (~56 texts —
-    // the same fixed-sample convention DeterminismSpec uses, so the
-    // subset never silently rotates out a regression), and close-of-
-    // round runs set SPARK_GRAFT_SQL_SURFACE=full for the complete
-    // sweep. A NEW surface entry must be gated by one full run before
-    // it ships — the close protocol's full `sbt test` provides that.
+    // exercises a stable md5-keyed quarter of the surface (~56 texts),
+    // and close-of-round runs set SPARK_GRAFT_SQL_SURFACE=full for the
+    // complete sweep. A NEW surface entry must be gated by one full run
+    // before it ships — the close protocol's full `sbt test` provides that.
     val all = SparkEntry.sqlQueries.keys.toSeq.sorted
-    val selected =
-      if (sys.env.get("SPARK_GRAFT_SQL_SURFACE").contains("full")) all
-      else {
-        val md = java.security.MessageDigest.getInstance("MD5")
-        // stable quarter PLUS every entry added this round — a new
-        // entry must never dodge the per-commit gate by md5 luck
-        val quarter = all.filter { n =>
-          ((md.digest(n.getBytes("UTF-8"))(0) & 0xff) % 4) == 0 ||
-            graft.queries.SqlSurface.recentAdditions.contains(n)
-        }
-        info(s"sampled quarter: ${quarter.size}/${all.size} texts " +
-          "(SPARK_GRAFT_SQL_SURFACE=full for the complete sweep)")
-        quarter
-      }
+    val sampled = CommitSample("SPARK_GRAFT_SQL_SURFACE", byte = 0, modulus = 4)
+    val selected = all.filter(sampled)
+    if (!sampled.full)
+      info(s"sampled quarter: ${selected.size}/${all.size} texts " +
+        "(SPARK_GRAFT_SQL_SURFACE=full for the complete sweep)")
     // Longest-first submission: the measured tail (multi-job iterative
     // builders — PCA's driver-side power iteration, the LSH/knn
     // families, the n-gram LM trio) each run 60–120 s under pool

@@ -4,17 +4,23 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** readStream smoke: the tumbling-window aggregation produces identical
-  * results via Structured Streaming (file source, one micro-batch) and
-  * the batch query (SURVEY.md §5.2 item 5). */
+/** readStream smoke: each streamed operator's one body, applied to
+  * `Events.eventsStream` (file source, one micro-batch), produces the
+  * rows of its registry query, which applies the same body to
+  * `Tables.events` (SURVEY.md §5.2 item 5). */
 class StreamingSpec extends SparkSpec {
+  import graft.streaming.Events
 
-  test("tumbling window: streaming result == batch result") {
-    val streamDir = Files.createTempDirectory("graft_stream")
+  /** The events fixture as a file-source stream over a private copy. */
+  private def eventsStreamCopy(prefix: String) = {
+    val streamDir = Files.createTempDirectory(prefix)
     Files.copy(Paths.get(s"$sfDir/events.parquet"),
       streamDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    Events.eventsStream(spark, streamDir.toString)
+  }
 
-    val stream = graft.streaming.Events.tumblingStream(spark, streamDir.toString)
+  test("tumbling window: streaming result == batch result") {
+    val stream = Events.tumbling(eventsStreamCopy("graft_stream"))
     val q = stream.writeStream
       .format("memory").queryName("tumbling_smoke")
       .outputMode("complete")
@@ -24,17 +30,13 @@ class StreamingSpec extends SparkSpec {
 
     val streamed = spark.table("tumbling_smoke")
       .orderBy("win_start", "event_type").collect()
-    val batch = graft.streaming.Events.streamTumbling(spark, sfDir).collect()
+    val batch = Events.streamTumbling(spark, sfDir).collect()
     assert(streamed.length == batch.length)
     assert(streamed.map(_.toString).sameElements(batch.map(_.toString)))
   }
 
   test("stream-static enrichment join: streaming result == batch result") {
-    val streamDir = Files.createTempDirectory("graft_enrich_stream")
-    Files.copy(Paths.get(s"$sfDir/events.parquet"),
-      streamDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-
-    val stream = graft.streaming.Events.enrichStream(spark, streamDir.toString)
+    val stream = Events.enrich(eventsStreamCopy("graft_enrich_stream"))
     val q = stream.writeStream
       .format("memory").queryName("enrich_smoke")
       .outputMode("complete")
@@ -44,17 +46,13 @@ class StreamingSpec extends SparkSpec {
 
     val streamed = spark.table("enrich_smoke")
       .orderBy("win_start", "category").collect()
-    val batch = graft.streaming.Events.streamEnrich(spark, sfDir).collect()
+    val batch = Events.streamEnrich(spark, sfDir).collect()
     assert(streamed.length == batch.length && streamed.nonEmpty)
     assert(streamed.map(_.toString).sameElements(batch.map(_.toString)))
   }
 
   test("windowed top-k: streamed counts + consumer rank == batch result") {
-    val streamDir = Files.createTempDirectory("graft_topk_stream")
-    Files.copy(Paths.get(s"$sfDir/events.parquet"),
-      streamDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-
-    val stream = graft.streaming.Events.topkCountsStream(spark, streamDir.toString)
+    val stream = Events.topkCounts(eventsStreamCopy("graft_topk_stream"))
     val q = stream.writeStream
       .format("memory").queryName("topk_smoke")
       .outputMode("complete")
@@ -63,24 +61,15 @@ class StreamingSpec extends SparkSpec {
     assert(q.awaitTermination(120000), "stream did not finish in 120s")
 
     // the consumer-side rank over the tiny per-window frame
-    val rk = org.apache.spark.sql.expressions.Window
-      .partitionBy("win_start").orderBy(col("cnt").desc, col("event_type"))
-    val streamed = spark.table("topk_smoke")
-      .withColumn("rnk", org.apache.spark.sql.functions.row_number().over(rk))
-      .filter(col("rnk") <= 2)
-      .select("win_start", "rnk", "event_type", "cnt")
+    val streamed = Events.topkRank(spark.table("topk_smoke"))
       .orderBy("win_start", "rnk").collect()
-    val batch = graft.streaming.Events.streamTopkTypes(spark, sfDir).collect()
+    val batch = Events.streamTopkTypes(spark, sfDir).collect()
     assert(streamed.length == batch.length)
     assert(streamed.map(_.toString).sameElements(batch.map(_.toString)))
   }
 
   test("flatMapGroupsWithState: streaming result == batch result") {
-    val streamDir = Files.createTempDirectory("graft_state_stream")
-    Files.copy(Paths.get(s"$sfDir/events.parquet"),
-      streamDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-
-    val stream = graft.streaming.Events.statefulStream(spark, streamDir.toString)
+    val stream = Events.statefulSessions(eventsStreamCopy("graft_state_stream"))
     val q = stream.writeStream
       .format("memory").queryName("stateful_smoke")
       .outputMode("append")
@@ -89,19 +78,15 @@ class StreamingSpec extends SparkSpec {
     assert(q.awaitTermination(120000), "stream did not finish in 120s")
 
     val streamed = spark.table("stateful_smoke").orderBy("user_id").collect()
-    val batch = graft.streaming.Events
-      .streamStatefulSessions(spark, sfDir).collect()
+    val batch = Events.streamStatefulSessions(spark, sfDir).collect()
     assert(streamed.length == batch.length)
     assert(streamed.map(_.toString).sameElements(batch.map(_.toString)))
   }
 
   test("foreachBatch sink: streamed micro-batches land in parquet and match batch") {
-    val streamDir = Files.createTempDirectory("graft_feb_stream")
-    Files.copy(Paths.get(s"$sfDir/events.parquet"),
-      streamDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val outDir = Files.createTempDirectory("graft_feb_out").toString
 
-    val stream = graft.streaming.Events.tumblingStream(spark, streamDir.toString)
+    val stream = Events.tumbling(eventsStreamCopy("graft_feb_stream"))
     val q = stream.writeStream
       .outputMode("complete")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -113,17 +98,13 @@ class StreamingSpec extends SparkSpec {
 
     val landed = spark.read.parquet(outDir)
       .orderBy("win_start", "event_type").collect()
-    val batch = graft.streaming.Events.streamTumbling(spark, sfDir).collect()
+    val batch = Events.streamTumbling(spark, sfDir).collect()
     assert(landed.length == batch.length)
     assert(landed.map(_.toString).sameElements(batch.map(_.toString)))
   }
 
   test("update output mode: per-key aggregate streams with watermark") {
-    val streamDir = Files.createTempDirectory("graft_upd_stream")
-    Files.copy(Paths.get(s"$sfDir/events.parquet"),
-      streamDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-
-    val stream = graft.streaming.Events.tumblingStream(spark, streamDir.toString)
+    val stream = Events.tumbling(eventsStreamCopy("graft_upd_stream"))
     val q = stream.writeStream
       .format("memory").queryName("update_smoke")
       .outputMode("update")
@@ -134,17 +115,13 @@ class StreamingSpec extends SparkSpec {
     // one micro-batch → update mode emits every changed (= every) group
     val streamed = spark.table("update_smoke")
       .orderBy("win_start", "event_type").collect()
-    val batch = graft.streaming.Events.streamTumbling(spark, sfDir).collect()
+    val batch = Events.streamTumbling(spark, sfDir).collect()
     assert(streamed.length == batch.length)
     assert(streamed.map(_.toString).sameElements(batch.map(_.toString)))
   }
 
   test("stream-stream interval join: streaming result == batch result") {
-    val streamDir = Files.createTempDirectory("graft_ssj_stream")
-    Files.copy(Paths.get(s"$sfDir/events.parquet"),
-      streamDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-
-    val stream = graft.streaming.Events.intervalJoinStream(spark, streamDir.toString)
+    val stream = Events.intervalJoin(eventsStreamCopy("graft_ssj_stream"))
     val q = stream.writeStream
       .format("memory").queryName("ssj_smoke")
       .outputMode("append")
@@ -154,13 +131,31 @@ class StreamingSpec extends SparkSpec {
 
     val streamed = spark.table("ssj_smoke")
       .orderBy("user_id", "click_id", "purchase_id").collect()
-    val batch = graft.streaming.Events.streamIntervalJoin(spark, sfDir).collect()
+    val batch = Events.streamIntervalJoin(spark, sfDir).collect()
     assert(streamed.length == batch.length)
     assert(streamed.map(_.toString).sameElements(batch.map(_.toString)))
   }
 
+  test("shared stream bodies: batch queries carry no watermark, the stream side does") {
+    import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+    def watermarks(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collect { case w: EventTimeWatermark => w }.size
+    // the analyzer drops a watermark over a batch frame, so the registry
+    // queries built from the shared bodies keep their watermark-free plans
+    Seq("stream_tumbling", "stream_enrich", "stream_topk_types",
+        "stream_stateful_sessions", "stream_interval_join").foreach { n =>
+      assert(watermarks(SparkEntry.queries(n)(spark, sfDir)) == 0, n)
+    }
+    val src = eventsStreamCopy("graft_wm_stream")
+    Seq("tumbling" -> Events.tumbling, "enrich" -> Events.enrich,
+        "topkCounts" -> Events.topkCounts).foreach { case (n, body) =>
+      assert(watermarks(body(src)) == 1, n)
+    }
+    assert(watermarks(Events.intervalJoin(src)) == 2, "intervalJoin")
+  }
+
   test("stateful dedup twin: dropDuplicates over stream equals batch first-rows count") {
-    val batch = graft.streaming.Events.streamDedupFirst(spark, sfDir).count()
+    val batch = Events.streamDedupFirst(spark, sfDir).count()
     val direct = Tables.events(spark, sfDir)
       .select("user_id", "event_type").distinct().count()
     assert(batch == direct)
@@ -170,8 +165,7 @@ class StreamingSpec extends SparkSpec {
     val streamDir = Files.createTempDirectory("graft_ddww_stream")
     Files.copy(Paths.get(s"$sfDir/events.parquet"),
       streamDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-    val q = graft.streaming.Events
-      .dedupWithinWatermarkStream(spark, streamDir.toString)
+    val q = Events.dedupWithinWatermarkStream(spark, streamDir.toString)
       .writeStream.format("memory").queryName("ddww_smoke")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     assert(q.awaitTermination(120000), "stream did not finish in 120s")
@@ -180,23 +174,20 @@ class StreamingSpec extends SparkSpec {
     // survives is arrival-order dependent by the operator's contract
     val streamed = spark.table("ddww_smoke")
       .orderBy("user_id", "event_type").collect().map(_.toString)
-    val batch = graft.streaming.Events.streamDedupFirst(spark, sfDir)
+    val batch = Events.streamDedupFirst(spark, sfDir)
       .select("user_id", "event_type").collect().map(_.toString)
     assert(streamed.length == batch.length)
     assert(streamed.sameElements(batch))
   }
 
   test("transformWithState twin: session stats match the batch result") {
-    val streamDir = Files.createTempDirectory("graft_tws_stream")
-    Files.copy(Paths.get(s"$sfDir/events.parquet"),
-      streamDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     // the v2 state API requires the RocksDB provider
     val key = "spark.sql.streaming.stateStore.providerClass"
     val saved = spark.conf.getOption(key)
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val q = graft.streaming.Events.statefulStreamTws(spark, streamDir.toString)
+      val q = Events.statefulSessionsV2(eventsStreamCopy("graft_tws_stream"))
         .writeStream.format("memory").queryName("tws_smoke")
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       assert(q.awaitTermination(120000), "stream did not finish in 120s")
@@ -229,7 +220,7 @@ class StreamingSpec extends SparkSpec {
       .withColumn("tsu", unix_micros(col("ts")))
     val cut = raw.stat.approxQuantile("tsu", Array(0.5), 0.0).head.toLong
     def run(): Unit = {
-      val q = graft.streaming.Events.statefulStream(spark, streamDir)
+      val q = Events.statefulSessions(Events.eventsStream(spark, streamDir))
         .writeStream
         .option("checkpointLocation", ckpt)
         .outputMode("append")
